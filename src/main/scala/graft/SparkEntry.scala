@@ -21,16 +21,19 @@ object SparkEntry {
   // LRU-bounded (the RelCache discipline, r11 verdict #6): a long-lived
   // driver sweeping many sf dirs/sessions otherwise pins every scan —
   // and cacheTables-persisted relations' storage — for the session
-  // lifetime; the evictee is unpersisted (a plain scan's unpersist is a
-  // no-op, a cacheTables-pinned one releases its blocks and would
-  // simply re-persist on the next cacheTables call).
+  // lifetime. The cached relation behind a path is ONE CacheManager
+  // entry shared by every session's alias of that path, so the evictee is
+  // unpersisted only when no remaining alias holds its path (a plain
+  // scan's unpersist is a no-op, a cacheTables-pinned one releases its
+  // blocks and would simply re-persist on the next cacheTables call).
   private[graft] val TableCacheMax = 32
   private val tableCache =
     new java.util.LinkedHashMap[(SparkSession, String), DataFrame](16, 0.75f, true) {
       override def removeEldestEntry(
           e: java.util.Map.Entry[(SparkSession, String), DataFrame]): Boolean = {
         val evict = size() > TableCacheMax
-        if (evict) e.getValue.unpersist()
+        if (evict && !keySet.stream.anyMatch(k => k != e.getKey && k._2 == e.getKey._2))
+          e.getValue.unpersist()
         evict
       }
     }

@@ -30,6 +30,12 @@ object QuantileBins extends org.apache.spark.internal.Logging {
     * threshold otherwise with no signal). */
   final case class QuantileAxis(axis: Variable, exact: Boolean)
 
+  // quantile-edge memo: BOTH exact and auto paths run eager jobs at
+  // axis-construction time (a stats pass, then a range-partitioned sort +
+  // zipWithIndex + collect on the exact branch). Axis `name` is applied
+  // after lookup.
+  private val axisMemo = new graft.util.RelCache.Store[QuantileAxis](64)
+
   /** Default public path: exact rank edges below `exactThreshold` rows,
     * Greenwald-Khanna sketch edges above it. The exact path's global sort
     * is the right trade only while the column fits a quick distributed
@@ -39,25 +45,10 @@ object QuantileBins extends org.apache.spark.internal.Logging {
     * fraction). The exact path stays available (and oracle-gated, q59)
     * for reproducibility-critical use. Logs and reports (via the returned
     * flag) which path was taken. */
-  // quantile-edge memo (the kmeansCentroids discipline): BOTH exact and
-  // auto paths run eager jobs at axis-construction time (a stats pass,
-  // then a range-partitioned sort + zipWithIndex + collect on the exact
-  // branch) — re-run per invocation before this memo; keyed on the
-  // value-relation plan + every parameter, single-flight so concurrent
-  // axis builders share one pass. Axis `name` is applied after lookup.
-  private val axisMemo =
-    new java.util.LinkedHashMap[Any, AnyRef](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[Any, AnyRef]): Boolean = size() > 64
-    }
-
   def autoAxisTagged(df: DataFrame, x: Column, name: String, nBins: Int,
       exactThreshold: Long = 10000000L, relativeError: Double = 1e-4): QuantileAxis = {
     val vals = df.select(x.cast("double").as("v")).filter(col("v").isNotNull)
-    val key = ("autoAxis", df.sparkSession,
-      vals.queryExecution.analyzed.canonicalized, nBins, exactThreshold,
-      relativeError)
-    val built = graft.util.SingleFlight(axisMemo, key) {
+    val built = axisMemo("autoAxis", vals)(nBins, exactThreshold, relativeError) {
       // one stats pass decides the path AND feeds the exact branch (its
       // count/min/max are exactly what quantileAxis needs) — no
       // decide-then-recompute double scan
@@ -73,7 +64,7 @@ object QuantileBins extends org.apache.spark.internal.Logging {
         QuantileAxis(sketchAxis(vals, "v", name, nBins, relativeError),
           exact = false)
       }
-    }.asInstanceOf[QuantileAxis]
+    }
     QuantileAxis(Variable(name, built.axis.allEdges), built.exact)
   }
 
@@ -86,13 +77,11 @@ object QuantileBins extends org.apache.spark.internal.Logging {
     * collect. */
   def quantileAxis(df: DataFrame, x: Column, name: String, nBins: Int): Variable = {
     val vals = df.select(x.cast("double").as("v")).filter(col("v").isNotNull)
-    val key = ("quantileAxis", df.sparkSession,
-      vals.queryExecution.analyzed.canonicalized, nBins)
-    val built = graft.util.SingleFlight(axisMemo, key) {
+    val built = axisMemo("quantileAxis", vals)(nBins) {
       val stats = vals.agg(count(lit(1)), min(col("v")), max(col("v"))).head()
-      exactAxis(vals, stats, name, nBins)
-    }.asInstanceOf[Variable]
-    Variable(name, built.allEdges)
+      QuantileAxis(exactAxis(vals, stats, name, nBins), exact = true)
+    }
+    Variable(name, built.axis.allEdges)
   }
 
   private def exactAxis(vals: DataFrame, stats: org.apache.spark.sql.Row,
@@ -113,24 +102,15 @@ object QuantileBins extends org.apache.spark.internal.Logging {
   }
 
   // sketchAxis edge memo: the GK pass is an EAGER driver collect per
-  // axis, re-run on every invocation of a sketch-binned query (q313
-  // pays two per call); keyed on the input plan + every parameter (the
-  // kmeansCentroids discipline), single-flight so concurrent callers
-  // share one pass. `name` is applied after lookup — it names the axis
-  // without affecting the edges.
-  private val sketchEdgeMemo =
-    new java.util.LinkedHashMap[Any, Array[Double]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[Any, Array[Double]]): Boolean = size() > 64
-    }
+  // axis, re-run on every invocation of a sketch-binned query (q313 pays
+  // two per call). `name` is applied after lookup.
+  private val sketchEdgeMemo = new graft.util.RelCache.Store[Array[Double]](64)
 
   /** Sketch-based edges for the 100 TB path (no global sort; not
     * oracle-exact by construction). */
   def sketchAxis(df: DataFrame, xCol: String, name: String, nBins: Int,
       relativeError: Double = 1e-4): Variable = {
-    val key = ("sketchAxis", df.sparkSession,
-      df.queryExecution.analyzed.canonicalized, xCol, nBins, relativeError)
-    val qs = graft.util.SingleFlight(sketchEdgeMemo, key) {
+    val qs = sketchEdgeMemo("sketchAxis", df)(xCol, nBins, relativeError) {
       val probs = (0 to nBins).map(_.toDouble / nBins).toArray
       df.stat.approxQuantile(xCol, probs, relativeError).distinct.sorted
     }

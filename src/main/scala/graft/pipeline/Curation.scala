@@ -692,11 +692,10 @@ object Curation {
         when(col("__n") === 1L, lit(0.0))
           .otherwise((col("__r") - 1).cast("double") /
             (col("__n") - 1).cast("double")).as("pctl"))
-    // keyed memo (the cumBeforeCounts discipline): zipWithIndex runs its
-    // per-partition count job at CONSTRUCTION time and the output is a
-    // LogicalRDD — every invocation re-ran the global order-statistic sort
-    val globalRanked = graft.util.RelCache.memo(("quantileCalibrateRank",
-        spark, base.queryExecution.analyzed.canonicalized)) {
+    // keyed memo: zipWithIndex runs its per-partition count job at
+    // CONSTRUCTION time and the output is a LogicalRDD — every invocation
+    // re-ran the global order-statistic sort
+    val globalRanked = graft.util.RelCache.memo("quantileCalibrateRank", base)() {
       graft.util.RelCache.persist(base
         .select(struct(col("__s"), col("doc_id")).as("__k"))
         .orderBy(col("__k")).select(col("__k.__s")).as[Double].rdd

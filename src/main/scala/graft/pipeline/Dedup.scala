@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -710,24 +710,15 @@ object Dedup extends org.apache.spark.internal.Logging {
   // decision memo: the guard's sizing aggregate is one cheap job over the
   // pinned band relation, but pipelines call minhashLsh many times on one
   // corpus (nearDupPairs, nearDupKeep, dupComponents share it) — decide once
-  // per (session, banded plan, budget). LRU-bounded: keys retain the
-  // analyzed plan tree, which must not accumulate across corpora in a
-  // long-lived driver (the RelCache discipline).
-  private val capDecisions = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(SparkSession, Any, Long), Option[Int]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, Any, Long), Option[Int]]): Boolean =
-        size() > 64
-    })
+  // per (banded relation, budget).
+  private val capDecisions = new graft.util.RelCache.Store[Option[Int]](64)
 
   /** Measures the blocking cost of a pinned band relation (the q273
     * blocking-report metric: Σ s(s−1)/2 over band buckets) and returns the
     * bucketCap to apply — None when the uncapped join fits `budget`. */
   private def decideAutoCap(banded: DataFrame, rowNames: Seq[String],
       budget: Long): Option[Int] = {
-    val key = (banded.sparkSession,
-      banded.queryExecution.analyzed.canonicalized, budget)
-    capDecisions.computeIfAbsent(key, _ => {
+    capDecisions("autoCap", banded)(budget) {
       val sizes = banded
         .groupBy(("band" +: rowNames).map(col): _*)
         .agg(count(lit(1)).as("__s"))
@@ -753,7 +744,7 @@ object Dedup extends org.apache.spark.internal.Logging {
           "the exact join.")
         Some(chosen)
       }
-    })
+    }
   }
 
   /** The bipartite form of [[decideAutoCap]] for [[crossNearDup]]: the
@@ -762,10 +753,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     * and the capped candidates are Σ min(sA,c)·min(sB,c). */
   private def decideAutoCapCross(bandedA: DataFrame, bandedB: DataFrame,
       rowNames: Seq[String], budget: Long): Option[Int] = {
-    val key = (bandedA.sparkSession,
-      (bandedA.queryExecution.analyzed.canonicalized,
-        bandedB.queryExecution.analyzed.canonicalized): Any, budget)
-    capDecisions.computeIfAbsent(key, _ => {
+    capDecisions("autoCapCross", bandedA, bandedB)(budget) {
       val keyCols = ("band" +: rowNames).map(col)
       def sizes(banded: DataFrame, out: String) = banded
         .groupBy(keyCols: _*).agg(count(lit(1)).as(out))
@@ -792,7 +780,7 @@ object Dedup extends org.apache.spark.internal.Logging {
           "force the exact join.")
         Some(chosen)
       }
-    })
+    }
   }
 
   /** LSH blocking-quality report — the entity-resolution diagnostic a
@@ -1363,20 +1351,12 @@ object Dedup extends org.apache.spark.internal.Logging {
     *   deleted as soon as the next round is materialized. */
   def components(nodes: DataFrame, pairs: DataFrame, maxIter: Int = 50,
       checkpointDir: Option[String] = None): DataFrame = {
-    // Keyed memo (the knnGraph discipline): the labels relation is a
-    // localCheckpoint-backed LogicalRDD, so plan-keyed RelCache.persist
-    // can never dedupe two runs — consumers sharing one (nodes, pairs)
-    // graph (the exact-dup components behind q85 and the leak-free
-    // split, plus repeated bench passes) re-ran the full pointer-jumping
-    // iteration without this. Keyed on the canonicalized plan OBJECTS
-    // (structural equality — the r14 verdict's hardening: two graphs
-    // colliding on a 32-bit semanticHash pair would have silently
-    // shared labels); a failed build propagates and is NOT cached.
-    val key = ("components", System.identityHashCode(nodes.sparkSession),
-      nodes.queryExecution.analyzed.canonicalized,
-      pairs.queryExecution.analyzed.canonicalized,
-      maxIter, checkpointDir)
-    graft.util.RelCache.memo(key) {
+    // Keyed memo: the labels relation is a localCheckpoint-backed
+    // LogicalRDD, so plan-keyed RelCache.persist can never dedupe two
+    // runs — consumers sharing one (nodes, pairs) graph (the exact-dup
+    // components behind q85 and the leak-free split, plus repeated bench
+    // passes) re-ran the full pointer-jumping iteration without this.
+    graft.util.RelCache.memo("components", nodes, pairs)(maxIter, checkpointDir) {
       val run = componentsRun(nodes, pairs, maxIter, checkpointDir)
       if (!run.converged)
         throw new IllegalStateException(

@@ -36,16 +36,14 @@ object RankStats {
     * eagerly by sortBy, so partition boundaries cannot drift between
     * the totals pass and the offset pass). */
   private[graft] def cumBeforeCounts(counts: DataFrame): DataFrame =
-    // Keyed memo (the knnGraph discipline): the output is a LogicalRDD
-    // (toDF over the prefix-summed RDD), invisible to plan-keyed
-    // caching, and the build runs TWO eager RDD jobs + a collect — so
+    // Keyed memo: the output is a LogicalRDD (toDF over the prefix-summed
+    // RDD), and the build runs TWO eager RDD jobs + a collect — so
     // every AUC-family consumer of one (table, score, class) relation
     // (auc/aucCi/mannWhitney/bestThreshold/prCurve on the same counts,
     // and every repeated bench pass) re-ran the sort + offset passes.
     // One build per distinct counts plan; the pinned result relation is
     // distinct-score-sized (tiny next to its corpus).
-    graft.util.RelCache.memo(("cumBefore", counts.sparkSession,
-        counts.queryExecution.analyzed.canonicalized)) {
+    graft.util.RelCache.memo("cumBefore", counts)() {
       graft.util.RelCache.persist(cumBeforeCountsBuild(counts))
     }
 
@@ -599,8 +597,7 @@ object RankStats {
     // relation — ~10 blocking jobs per call that q310 (the fit gate)
     // and q312 (calibratedEval's inner fit) re-ran per invocation.
     // The distinct-score plan captures (df, scoreCol, isPos) exactly.
-    graft.util.RelCache.memo(("logisticFit", spark,
-        counts.queryExecution.analyzed.canonicalized, iters, lr)) {
+    graft.util.RelCache.memo("logisticFit", counts)(iters, lr) {
       logisticFitBuild(counts, iters, lr)
     }
   }

@@ -35,20 +35,8 @@ object Similarity {
     dot(a, b) / (normA * normB)
 
   // annLsh sign-guard memo: sampled positive-coordinate fraction per
-  // (session, corpus plan hash, hashed width). Hash-keyed like
-  // centroidMemo (never the plan object — LocalRelation plans embed the
-  // corpus rows); LRU-bounded like Dedup.capDecisions. Accessed through
-  // SingleFlight, NOT computeIfAbsent under a synchronizedMap: the guard
-  // runs an eager Spark job, and building under the map's global mutex
-  // would serialize concurrent annLsh calls over DIFFERENT corpora
-  // through one lock (the exact pattern RelCache.memo exists to avoid) —
-  // with the rendezvous only same-key callers wait.
-  private val signGuardDecisions =
-    new java.util.LinkedHashMap[Any, java.lang.Double](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[Any, java.lang.Double]): Boolean =
-        size() > 64
-    }
+  // (corpus, hashed width)
+  private val signGuardDecisions = new graft.util.RelCache.Store[java.lang.Double](64)
 
   /** Corpus with a precomputed norm column. */
   def withNorm(emb: DataFrame): DataFrame =
@@ -175,11 +163,8 @@ object Similarity {
       s"bad knnGraph shape: k=$k rounds=$rounds tables=$tables bits=$bits")
     // memoized per (corpus, parameters): the build is the expensive
     // artifact every graph consumer (q315 contract, q317 search, q327
-    // diversify+search) shares — a checkpointed result's plan hides the
-    // input, so the explicit key does what plan-keyed RelCache can't
-    graft.util.RelCache.memo(("knnGraph", emb.sparkSession,
-      emb.queryExecution.analyzed.canonicalized,
-      k, rounds, tables, bits, initDegree)) {
+    // diversify+search) shares
+    graft.util.RelCache.memo("knnGraph", emb)(k, rounds, tables, bits, initDegree) {
       knnGraphBuild(emb, k, rounds, tables, bits, initDegree)
     }
   }
@@ -511,13 +496,11 @@ object Similarity {
     //
     // The checkpointed seed scores are GRAPH-INDEPENDENT — a pure
     // function of (corpus, queries, beam, tables, bits) — so they go
-    // through the keyed memo (the knnGraph discipline; the checkpoint
-    // hides the inputs from plan-keyed caching): searches over one
-    // corpus with different graphs (q317's raw vs q327's pruned) and
-    // repeated searches skip the ~8-stage seed-scoring job entirely.
-    var seen = graft.util.RelCache.memo(("graphSearchSeeds", emb.sparkSession,
-        emb.queryExecution.analyzed.canonicalized,
-        queries.queryExecution.analyzed.canonicalized, beam, tables, bits)) {
+    // through the keyed memo: searches over one corpus with different
+    // graphs (q317's raw vs q327's pruned) and repeated searches skip the
+    // ~8-stage seed-scoring job entirely.
+    var seen = graft.util.RelCache.memo("graphSearchSeeds", emb, queries)(
+        beam, tables, bits) {
       score(lshSeeds.union(chainSeeds).union(headSeeds)
           .union(globalSeeds).distinct())
         .localCheckpoint(true)
@@ -605,44 +588,14 @@ object Similarity {
     * hash-sampled subset and the rounds are the same two jobs. */
   def kmeansCentroids(corpus: DataFrame, nCells: Int,
       iters: Int): Seq[(Long, Array[Double])] = {
-    // Memoized like the derived relations (RelCache): cluster,
-    // clusterBalancedSample and annIvf over one corpus share ONE
-    // training run instead of re-running Lloyd per operator. Keyed by the
-    // session UUID + the canonicalized plan's SEMANTIC HASH + params —
-    // NOT the plan object: canonicalized LocalRelation plans embed every
-    // literal row, so object keys would pin up to 16 full in-memory
-    // corpora (and their sessions) in a process-global map. The hash key
-    // retains only ints/strings; with the handful of live entries a
-    // 32-bit semantic-hash collision is ~1e-8 — negligible against the
-    // retention cost of object keys. Staleness contract (same as
-    // RelCache and Spark's own table cache): an identical plan over
-    // REWRITTEN underlying files returns the previously-trained
-    // centroids — call clearCentroidCache() between corpus rewrites in
-    // long-lived drivers.
-    // "kmeans" tag: SingleFlight's in-flight table is shared across all
-    // memos, so keys must be globally distinct (its own scaladoc rule —
-    // an untagged 4-int tuple here could collide with a future untagged
-    // key in another memo and hand a waiter the wrong cache's value)
-    val key = ("kmeans", System.identityHashCode(corpus.sparkSession),
-      corpus.queryExecution.analyzed.canonicalized, nCells, iters)
-    graft.util.SingleFlight(centroidMemo, key)(
+    // Memoized: cluster, clusterBalancedSample and annIvf over one corpus
+    // share ONE training run instead of re-running Lloyd per operator.
+    centroidMemo("kmeans", corpus)(nCells, iters)(
       trainCentroids(corpus, nCells, iters))
   }
 
-  /** Drop memoized trained centroids (see kmeansCentroids' staleness
-    * contract: identical plan over rewritten files returns stale
-    * centroids until cleared). */
-  def clearCentroidCache(): Unit = {
-    centroidMemo.synchronized(centroidMemo.clear())
-    pqMemo.synchronized(pqMemo.clear())
-  }
-
-  private val centroidMemo =
-    new java.util.LinkedHashMap[Any, Seq[(Long, Array[Double])]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[Any, Seq[(Long, Array[Double])]]): Boolean =
-        size() > 16 // centroid sets are tiny (nCells x dim doubles)
-    }
+  // centroid sets are tiny (nCells x dim doubles)
+  private val centroidMemo = new graft.util.RelCache.Store[Seq[(Long, Array[Double])]](16)
 
   private def trainCentroids(corpus: DataFrame, nCells: Int,
       iters: Int): Seq[(Long, Array[Double])] = {
@@ -1191,17 +1144,13 @@ object Similarity {
   def annLsh(corpus: DataFrame, queries: DataFrame, k: Int, tables: Int = 4,
       bits: Int = 16, probeHamming: Int = 2,
       signGuard: Boolean = true): DataFrame = {
-    // the guard is one eager sampled aggregate — memoized per
-    // (session, corpus plan, hashed width) so repeated searches over one
-    // corpus pay it once (the capDecisions discipline), and skipped for
-    // a streaming corpus (no eager job is legal there; the batch gates
-    // carry the guard for the shared geometry)
+    // the guard is one eager sampled aggregate — memoized per (corpus,
+    // hashed width) so repeated searches over one corpus pay it once, and
+    // skipped for a streaming corpus (no eager job is legal there; the
+    // batch gates carry the guard for the shared geometry)
     if (signGuard && !corpus.isStreaming) {
       val d = tables * bits
-      val guardKey = ("annLshGuard",
-        System.identityHashCode(corpus.sparkSession),
-        corpus.queryExecution.analyzed.canonicalized, d)
-      graft.util.SingleFlight(signGuardDecisions, guardKey) {
+      signGuardDecisions("annLshGuard", corpus)(d) {
         val frac = corpus
           .filter(pmod(hash(col("vec_id")), lit(101)) === 0 &&
             col("embedding").isNotNull && size(col("embedding")) > 0)
@@ -1724,14 +1673,10 @@ object Similarity {
   private[graft] def residualPqCodebook(corpus: DataFrame,
       cents: Seq[(Long, Array[Double])], m: Int,
       k: Int): Seq[(Int, Long, Array[Double])] = {
-    // memoized + single-flight like kmeansCentroids (shares pqMemo under
-    // a distinct key prefix): the residual codebook keys on the corpus
-    // plan AND the coarse-centroid CONTENT (centroids are training
+    // memoized like kmeansCentroids: the residual codebook keys on the
+    // corpus plan AND the coarse-centroid CONTENT (centroids are training
     // output, so the plan alone does not determine the residuals)
-    val key = ("ivfpq", System.identityHashCode(corpus.sparkSession),
-      corpus.queryExecution.analyzed.canonicalized, m, k,
-      cents.map { case (cid, v) => (cid, v.toSeq) })
-    graft.util.SingleFlight(pqMemo, key)(
+    pqMemo("ivfpq", corpus)(m, k, cents.map { case (cid, v) => (cid, v.toSeq) })(
       trainResidualPqCodebook(corpus, cents, m, k))
   }
 
@@ -1848,20 +1793,13 @@ object Similarity {
     * operator surface. */
   private[graft] def pqCodebook(corpus: DataFrame, m: Int, k: Int,
       iters: Int): Seq[(Int, Long, Array[Double])] = {
-    // memoized like kmeansCentroids (same key discipline and staleness
-    // contract): encode, search and the error report over one corpus
-    // share ONE training run
-    val key = ("pq", System.identityHashCode(corpus.sparkSession),
-      corpus.queryExecution.analyzed.canonicalized, m, k, iters)
-    graft.util.SingleFlight(pqMemo, key)(trainPqCodebook(corpus, m, k, iters))
+    // memoized like kmeansCentroids: encode, search and the error
+    // report over one corpus share ONE training run
+    pqMemo("pq", corpus)(m, k, iters)(trainPqCodebook(corpus, m, k, iters))
   }
 
-  private val pqMemo =
-    new java.util.LinkedHashMap[Any, Seq[(Int, Long, Array[Double])]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[Any, Seq[(Int, Long, Array[Double])]]): Boolean =
-        size() > 16 // codebooks are tiny (m x k x sub doubles)
-    }
+  // codebooks are tiny (m x k x sub doubles)
+  private val pqMemo = new graft.util.RelCache.Store[Seq[(Int, Long, Array[Double])]](16)
 
   private def trainPqCodebook(corpus: DataFrame, m: Int, k: Int,
       iters: Int): Seq[(Int, Long, Array[Double])] = {

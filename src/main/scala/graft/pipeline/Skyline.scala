@@ -46,12 +46,10 @@ object Skyline {
     val dx = base.groupBy(col(xCol).cast("double").as("__x"))
       .agg(max(col(yCol).cast("double")).as("__my"))
       .orderBy(col("__x").desc)
-    // Keyed memo (the cumBeforeCounts discipline): the staircase runs a
-    // range-partitioned sort plus an eager per-partition maxima collect
-    // at CONSTRUCTION time, and its output is a LogicalRDD — invisible
-    // to plan-keyed caching, so every invocation re-ran both passes.
-    val survivors = graft.util.RelCache.memo(("skyline2d", spark,
-        dx.queryExecution.analyzed.canonicalized)) {
+    // Keyed memo: the staircase runs a range-partitioned sort plus an
+    // eager per-partition maxima collect at CONSTRUCTION time, and its
+    // output is a LogicalRDD — every invocation re-ran both passes.
+    val survivors = graft.util.RelCache.memo("skyline2d", dx)() {
       val pairs = dx.select(col("__x"), col("__my")).as[(Double, Double)].rdd
       // pass 1: per-partition running-max summaries (#partitions rows)
       val partMax = pairs

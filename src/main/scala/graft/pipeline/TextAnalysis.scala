@@ -197,19 +197,15 @@ object TextAnalysis {
     * map-combine + one bounded collect.
     *
     * The learned merge table (driver data, nMerges rows) is MEMOIZED
-    * per (session, corpus plan, nMerges, batchCap) with single-flight
-    * (the kmeansCentroids discipline, incl. its staleness contract):
-    * the trainer and every encode-with-learned-table consumer over one
-    * corpus share ONE training loop — under the concurrent bench q124
-    * and q125 were two simultaneous full trainings of the same table. */
+    * per (corpus, nMerges, batchCap): the trainer and every
+    * encode-with-learned-table consumer over one corpus share ONE
+    * training loop — under the concurrent bench q124 and q125 were two
+    * simultaneous full trainings of the same table. */
   def bpeTrain(docs: DataFrame, nMerges: Int, batchCap: Int = 16): DataFrame = {
     require(nMerges >= 1, "nMerges must be positive")
     require(batchCap >= 1, "batchCap must be positive")
     val spark = docs.sparkSession
-    val key = ("bpeTrain", System.identityHashCode(spark),
-      docs.queryExecution.analyzed.canonicalized,
-      nMerges, batchCap)
-    val trained = graft.util.SingleFlight(bpeMemo, key)(
+    val trained = bpeMemo("bpeTrain", docs)(nMerges, batchCap)(
       bpeTrainRun(docs, nMerges, batchCap))
     import spark.implicits._
     trained.toDF("rank", "lhs", "rhs", "pair_count")
@@ -217,16 +213,7 @@ object TextAnalysis {
 
   // merge tables are tiny (nMerges rows of strings); 32 corpora ×
   // parameterizations is far beyond any session's live set
-  private val bpeMemo =
-    new java.util.LinkedHashMap[Any, Seq[(Int, String, String, Long)]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[Any, Seq[(Int, String, String, Long)]]): Boolean =
-        size() > 32
-    }
-
-  /** Drop memoized BPE merge tables (staleness contract: an identical
-    * plan over rewritten files returns the stale table until cleared). */
-  def clearBpeCache(): Unit = bpeMemo.synchronized(bpeMemo.clear())
+  private val bpeMemo = new graft.util.RelCache.Store[Seq[(Int, String, String, Long)]](32)
 
   private def bpeTrainRun(docs: DataFrame, nMerges: Int,
       batchCap: Int): Seq[(Int, String, String, Long)] = {
@@ -1062,11 +1049,10 @@ object TextAnalysis {
     val vocab = docs.filter(col("text").isNotNull)
       .select(explode(expr("""regexp_extract_all(text, '\\S+', 0)""")).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("__f"))
-    // keyed memo (the cumBeforeCounts discipline): zipWithIndex runs its
-    // per-partition count job at CONSTRUCTION time and the output is a
-    // LogicalRDD — every invocation re-ran the vocabulary sort
-    val ranked = graft.util.RelCache.memo(("zipfRank", sp,
-        vocab.queryExecution.analyzed.canonicalized)) {
+    // keyed memo: zipWithIndex runs its per-partition count job at
+    // CONSTRUCTION time and the output is a LogicalRDD — every invocation
+    // re-ran the vocabulary sort
+    val ranked = graft.util.RelCache.memo("zipfRank", vocab)() {
       graft.util.RelCache.persist(
         vocab.orderBy(col("__f").desc, col("term"))
           .select(col("__f")).as[Long].rdd

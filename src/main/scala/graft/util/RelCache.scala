@@ -1,26 +1,23 @@
 package graft.util
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.{CompletableFuture, CompletionException, ConcurrentHashMap}
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-/** Bounded derived-relation memo shared by the pipeline operators.
-  *
-  * Signature / gram-set / bucket relations are pinned and REUSED across
-  * operators on the same input (minhashLsh, nearDupPairs and nearDupKeep
-  * over one corpus share one signature pass). Keyed by the canonicalized
-  * analyzed plan, so cache equality means semantically-identical input +
-  * parameters. These relations are exactly the artifacts a production
-  * pipeline checkpoints.
-  *
-  * The memo is an LRU bounded at [[MaxEntries]]: the eldest relation is
-  * unpersisted when a distinct (corpus, parameters) combination would
-  * otherwise pin storage for the session lifetime. Long-lived drivers
-  * (Bench, notebooks) should still call [[clear]] between corpora — an
-  * identical plan string over REWRITTEN underlying files would return the
-  * stale pinned relation, the usual contract of Spark's own table cache.
+/** The artifact store. Every memoized artifact — pinned relations
+  * ([[persist]]), keyed relations ([[memo]]) and the driver-side values
+  * the operators train or decide once per input (centroids, codebooks,
+  * quantile edges, skew-guard caps…) — lives in one [[Store]]: an
+  * access-ordered LRU behind one single-flight loop, keyed by one rule.
+  * [[clear]] empties every store; after rewriting an input in place,
+  * call it (README, "Artifact caching").
   */
 object RelCache {
   private val logger = org.slf4j.LoggerFactory.getLogger("graft.util.RelCache")
+  // value-store builds keep their established logger name and line
+  // format: build-log readers (perfbench's trace) select on both
+  private val valueLogger = org.slf4j.LoggerFactory.getLogger("graft.util.SingleFlight")
   // 320, up from 96 (r13): the full 352-query bench surface now pins
   // MORE than 96 distinct derived relations per pass (31 persist call
   // sites × per-corpus inputs), so at 96 the LRU churned CYCLICALLY —
@@ -33,95 +30,112 @@ object RelCache {
   // above 60% used heap), not this cap.
   private[graft] val MaxEntries = 320
 
-  // Keyed by the canonicalized plan OBJECT, not its string rendering: plan
-  // equality is structural and includes literal data (LocalRelation rows),
-  // while toString truncates — two different in-memory corpora with the
-  // same schema would otherwise alias to one entry and return stale data.
-  private val cache =
-    new java.util.LinkedHashMap[(SparkSession, Any), DataFrame](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, Any), DataFrame]): Boolean = {
-        val evict = size() > MaxEntries
-        if (evict) e.getValue.unpersist()
+  private val stores = new java.util.concurrent.CopyOnWriteArrayList[Store[_]]()
+
+  /** An LRU of at most `cap` artifacts; `release` runs on every entry
+    * that leaves it (eviction or [[clear]]).
+    *
+    * Key rule: the tag, then each input's (SparkSession, canonicalized
+    * analyzed plan), then the params. Plan OBJECTS, not strings or
+    * hashes: plan equality is structural and includes literal data
+    * (LocalRelation rows), where toString truncates and 32-bit hashes
+    * collide.
+    *
+    * Single flight: a build runs outside every lock (it launches Spark
+    * jobs), and concurrent callers of the same key wait for the one
+    * builder instead of building twice. A failed build is never cached:
+    * its caller sees the exception and its waiters retry the build.
+    * Different keys build fully concurrently. */
+  final class Store[V <: AnyRef](cap: Int, release: V => Unit = (_: V) => (),
+      log: (String, Any, Double) => Unit = logValueBuild) {
+    private val entries = new java.util.LinkedHashMap[Any, V](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[Any, V]): Boolean = {
+        val evict = size() > cap
+        if (evict) release(e.getValue)
         evict
       }
     }
+    private val inflight = new ConcurrentHashMap[Any, CompletableFuture[V]]()
+    stores.add(this)
 
-  // SINGLE-FLIGHT in-flight table for persist(): a pinned relation is
-  // MATERIALIZED (count) by exactly one caller before being published.
-  // Lazily-pinned relations were the r15 cold-wall finding: a query
-  // plan holding several exchanges over one UNCACHED pinned relation
-  // materializes them concurrently under AQE, and every task convoys on
-  // the cache's per-partition loading locks (measured on the 200k
-  // knnGraph init: 21.6 s lazy vs 9.2 s pre-materialized, SOLO — worse
-  // under the bench's 16-way concurrency, where the same convoy put
-  // q341's first pass at 479 s). One eager count per distinct relation
-  // replaces the duplicated/serialized partition loads; the count runs
-  // OUTSIDE the global lock (it launches Spark jobs), and concurrent
-  // callers of the same plan rendezvous on the builder's future.
-  private val persistInflight = new java.util.concurrent.ConcurrentHashMap[
-    Any, java.util.concurrent.CompletableFuture[DataFrame]]()
-
-  def persist(df: DataFrame): DataFrame = {
-    val key = (df.sparkSession, df.queryExecution.analyzed.canonicalized)
-    while (true) {
-      val hit = synchronized(cache.get(key))
-      if (hit != null) return hit
-      val fut = new java.util.concurrent.CompletableFuture[DataFrame]()
-      val prior = persistInflight.putIfAbsent(key, fut)
-      if (prior != null) {
-        try return prior.join()
-        catch { case _: java.util.concurrent.CompletionException => () }
-        // builder failed — loop: re-check the cache, then race to build
-      } else {
-        try {
-          val pinned = df.persist(StorageLevel.MEMORY_AND_DISK)
-          val t0 = System.nanoTime()
-          pinned.count()
-          val wall = (System.nanoTime() - t0) / 1e9
-          // the memo-build logging discipline, capped to slow builds so
-          // the ~300 pins/session don't drown the log
-          if (wall > 0.25)
-            logger.warn(f"persist build (key#${key.hashCode()}%08x) took $wall%.3f s")
-          synchronized(cache.put(key, pinned))
-          fut.complete(pinned)
-          return pinned
-        } catch {
-          case e: Throwable =>
-            // never publish a half-materialized pin
-            try df.unpersist() catch { case _: Throwable => () }
-            fut.completeExceptionally(e)
-            throw e
-        } finally persistInflight.remove(key, fut)
+    def apply(tag: String, inputs: DataFrame*)(params: Any*)(build: => V): V = {
+      val key = (tag, inputs.map(i =>
+        (i.sparkSession, i.queryExecution.analyzed.canonicalized)), params)
+      while (true) {
+        val hit = synchronized(entries.get(key))
+        if (hit != null) return hit
+        val fut = new CompletableFuture[V]()
+        val prior = inflight.putIfAbsent(key, fut)
+        if (prior != null) {
+          try return prior.join()
+          catch { case _: CompletionException => () }
+          // builder failed — loop: re-check the store, then race to build
+        } else {
+          try {
+            val t0 = System.nanoTime()
+            val built = build
+            log(tag, key, (System.nanoTime() - t0) / 1e9)
+            synchronized(entries.put(key, built))
+            fut.complete(built)
+            return built
+          } catch {
+            case e: Throwable => fut.completeExceptionally(e); throw e
+          } finally inflight.remove(key, fut)
+        }
       }
+      throw new IllegalStateException("unreachable")
     }
-    throw new IllegalStateException("unreachable")
+
+    def clear(): Unit = synchronized {
+      entries.values.forEach(v => release(v))
+      entries.clear()
+    }
   }
 
-  def clear(): Unit = synchronized {
-    cache.values.forEach(_.unpersist())
-    cache.clear()
-    keyed.clear()
+  // keys embed plan objects: log the tag and the key's hash, never the
+  // key (a LocalRelation plan would print the whole corpus)
+  private def logValueBuild(tag: String, key: Any, wall: Double): Unit =
+    valueLogger.warn(f"single-flight build: key=($tag,key#${key.hashCode()}%08x) " +
+      f"took $wall%.3f s")
+
+  /** Pinned relations, materialized (counted) by exactly one caller
+    * before they are published. Lazily-pinned relations were the r15
+    * cold-wall finding: a plan holding several exchanges over one
+    * UNCACHED pin materializes them concurrently under AQE, and every
+    * task convoys on the cache's per-partition loading locks (200k
+    * knnGraph init: 21.6 s lazy vs 9.2 s pre-materialized, solo). */
+  private[graft] val pins = new Store[DataFrame](MaxEntries, _.unpersist(),
+    (_, key, wall) =>
+      // only slow builds: ~300 pins per session would drown the log
+      if (wall > 0.25)
+        logger.warn(f"persist build (key#${key.hashCode()}%08x) took $wall%.3f s"))
+
+  def persist(df: DataFrame): DataFrame = pins("persist", df)() {
+    try {
+      val pinned = df.persist(StorageLevel.MEMORY_AND_DISK)
+      pinned.count()
+      pinned
+    } catch {
+      case e: Throwable =>
+        // never publish a half-materialized pin
+        try df.unpersist() catch { case _: Throwable => () }
+        throw e
+    }
   }
 
   /** Storage blocks behind a localCheckpoint'd relation: its plan's
-    * LogicalRDD leaves. Released EXPLICITLY on eviction — GC + the
-    * ContextCleaner reap unreferenced blocks eventually, but a
-    * long-lived driver building >MaxEntries distinct graphs can exhaust
-    * executor storage before a full GC runs. A released relation is NOT
-    * recomputable (checkpointing truncated its lineage), which is why
-    * only entries LEAVING the memo are released, never live ones.
+    * LogicalRDD leaves. Released EXPLICITLY when the entry leaves the
+    * store — GC + the ContextCleaner reap unreferenced blocks
+    * eventually, but a long-lived driver building >MaxEntries distinct
+    * graphs can exhaust executor storage before a full GC runs.
     *
-    * DOCUMENTED TRADEOFF: a caller that retained a memoized DataFrame
-    * across >MaxEntries intervening inserts holds a reference whose
-    * blocks this eviction released — post-eviction use fails (missing
-    * RDD blocks) instead of recomputing. At [[MaxEntries]] (320) live
-    * entries the evictee is cold by construction; a caller needing an
-    * artifact to outlive the
-    * memo must own its lifecycle (write it to a table / re-memo it),
-    * not expect an LRU to pin it forever. Reference-counting handed-out
-    * relations would trade this rare loud failure for unbounded
-    * storage growth — the wrong side of the trade for a cache. */
+    * DOCUMENTED TRADEOFF: a released relation is NOT recomputable
+    * (checkpointing truncated its lineage), so a caller that retained a
+    * memoized DataFrame across its eviction or a [[clear]] fails loudly
+    * (missing RDD blocks) on later use. A caller needing an artifact to
+    * outlive the store must own its lifecycle (write it to a table /
+    * re-memo it); reference-counting handed-out relations would trade
+    * this rare loud failure for unbounded storage growth. */
   private def releaseBlocks(df: DataFrame): Unit =
     df.queryExecution.analyzed.collectLeaves().foreach {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
@@ -129,75 +143,18 @@ object RelCache {
       case _ => ()
     }
 
-  // Explicit-key memo for relations whose OUTPUT plan hides their input
-  // (localCheckpoint'd iterative builds like knnGraph: the result scans
-  // an RDD, so plan-keyed equality can never dedupe two builds). Keys
-  // must embed the session, the input's canonicalized plan, and every
-  // parameter. Eviction unpersists the evictee's checkpoint blocks
-  // (mirroring the plan-keyed cache) — the eldest of MaxEntries live
-  // graph builds is cold by construction.
-  private val keyed =
-    new java.util.LinkedHashMap[Any, DataFrame](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[Any, DataFrame]): Boolean = {
-        val evict = size() > MaxEntries
-        if (evict) releaseBlocks(e.getValue)
-        evict
-      }
-    }
+  /** Keyed relations: results whose OUTPUT plan hides their input
+    * (localCheckpoint'd iterative builds like knnGraph, zipWithIndex
+    * ranks — the result scans an RDD, so plan-keyed [[persist]] can
+    * never dedupe two builds). Every build is logged: the first query
+    * to arrive carries the whole build, and the line makes a tripled
+    * solo time attributable to cold-build ordering without re-runs. */
+  val memo = new Store[DataFrame](MaxEntries, releaseBlocks,
+    (tag, key, wall) =>
+      logger.warn(f"memo build: $tag (key#${key.hashCode()}%08x) took $wall%.3f s"))
 
-  // SINGLE-FLIGHT rendezvous for memo(): concurrent callers of the SAME
-  // key wait for the first builder instead of duplicating the build.
-  // Duplicate builds were the r12 concurrent-bench wall: the 200k-vector
-  // scale gates race the SAME graph/index builds in the first pass
-  // (q340+q341 = two simultaneous 200k NN-Descent runs), so "build
-  // outside the lock" must mean outside the GLOBAL lock, not key-blind.
-  // Builds of DIFFERENT keys still run fully concurrently.
-  private val inflight = new java.util.concurrent.ConcurrentHashMap[
-    Any, java.util.concurrent.CompletableFuture[DataFrame]]()
-
-  /** Memoize `build` under `key`. The build runs OUTSIDE the global lock
-    * (it launches Spark jobs; holding the memo lock would serialize
-    * concurrent Bench queries through one build); concurrent callers of
-    * the same key rendezvous on a per-key future — one builds, the rest
-    * wait for its result. If the builder FAILS, its waiters fall through
-    * and attempt the build themselves (the failure might be transient;
-    * the original caller still sees its own exception). */
-  def memo(key: Any)(build: => DataFrame): DataFrame = {
-    while (true) {
-      val hit = synchronized(keyed.get(key))
-      if (hit != null) return hit
-      val fut = new java.util.concurrent.CompletableFuture[DataFrame]()
-      val prior = inflight.putIfAbsent(key, fut)
-      if (prior != null) {
-        try return prior.join()
-        catch { case _: java.util.concurrent.CompletionException => () }
-        // builder failed — loop: re-check the memo, then race to build
-      } else {
-        try {
-          // build-wall log (the SingleFlight discipline): localCheckpoint'd
-          // builds like knnGraph run their jobs HERE, so the first query to
-          // arrive carries the whole build — the line makes a tripled solo
-          // time attributable to cold-build ordering without re-runs
-          val t0 = System.nanoTime()
-          val built = build
-          // keys embed canonicalized plan OBJECTS — render only the
-          // operator tag + key hash, never the plan (a LocalRelation key
-          // would print the whole corpus)
-          val tag = key match {
-            case p: Product if p.productArity > 0 => p.productElement(0)
-            case other => other.getClass.getSimpleName
-          }
-          logger.warn(f"memo build: $tag (key#${key.hashCode()}%08x) took " +
-            f"${(System.nanoTime() - t0) / 1e9}%.3f s")
-          synchronized(keyed.put(key, built))
-          fut.complete(built)
-          return built
-        } catch {
-          case e: Throwable => fut.completeExceptionally(e); throw e
-        } finally inflight.remove(key, fut)
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+  /** Empties every store: pins are unpersisted, keyed relations release
+    * their checkpoint blocks, values are dropped. Inputs pinned by
+    * SparkEntry.cacheTables are not artifacts and stay pinned. */
+  def clear(): Unit = stores.forEach(_.clear())
 }

@@ -149,7 +149,7 @@ class ScaleGateSpec extends SparkSpec {
 
   test("RelCache keyed memo: eviction and race-loser release checkpoint blocks") {
     graft.util.RelCache.clear()
-    val first = graft.util.RelCache.memo(("sgs-evict", 0)) {
+    val first = graft.util.RelCache.memo("sgs-evict")(0) {
       spark.range(0, 10).toDF("x").localCheckpoint(true)
     }
     def level(df: org.apache.spark.sql.DataFrame) =
@@ -159,7 +159,7 @@ class ScaleGateSpec extends SparkSpec {
     assert(level(first) != StorageLevel.NONE)
     // flood the memo past MaxEntries: the eldest must be released
     (1 to graft.util.RelCache.MaxEntries).foreach { i =>
-      graft.util.RelCache.memo(("sgs-evict", i)) {
+      graft.util.RelCache.memo("sgs-evict")(i) {
         spark.range(0, 2).toDF("x").localCheckpoint(true)
       }
     }
@@ -168,44 +168,62 @@ class ScaleGateSpec extends SparkSpec {
     graft.util.RelCache.clear()
   }
 
-  test("RelCache memo + SingleFlight: concurrent same-key callers share ONE build") {
-    graft.util.RelCache.clear()
-    // 8 threads race one memo key whose build blocks until all racers
-    // are inside memo(); exactly ONE build must run (duplicate builds
-    // were the r12 concurrent-wall tax), and every caller must get the
-    // same relation back
-    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
-    val entered = new java.util.concurrent.CountDownLatch(1)
-    val results = new java.util.concurrent.CopyOnWriteArrayList[AnyRef]()
-    val threads = (1 to 8).map { _ =>
-      new Thread(() => {
-        val df = graft.util.RelCache.memo(("sgs-flight", 1)) {
-          builds.incrementAndGet()
-          entered.await()
-          spark.range(0, 5).toDF("x").localCheckpoint(true)
-        }
-        results.add(df)
-      })
-    }
-    threads.foreach(_.start())
-    Thread.sleep(300) // let every racer reach the rendezvous
-    entered.countDown()
-    threads.foreach(_.join(30000))
-    assert(builds.get() == 1, s"expected one build, got ${builds.get()}")
-    assert(results.size == 8 && results.toArray.distinct.length == 1)
-    // a FAILED build must not poison the key: waiters/retriers rebuild
-    val failOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
-    intercept[RuntimeException] {
-      graft.util.RelCache.memo(("sgs-flight", 2)) {
-        if (failOnce.getAndSet(false)) throw new RuntimeException("boom")
-        spark.range(0, 3).toDF("x").localCheckpoint(true)
+  test("RelCache stores: one build per key, failures uncached, session+tag keys") {
+    import graft.util.RelCache
+    RelCache.clear()
+    // the keyed-relation store, the pin store and a value store share one
+    // single-flight loop and one key rule; each must keep every property
+    def check[V <: AnyRef](store: RelCache.Store[V], make: () => V): Unit = {
+      val input = spark.range(0, 7).toDF("sgs_store_probe")
+      // 8 threads race one key whose build blocks until all racers are
+      // inside the store; exactly ONE build must run (duplicate builds
+      // were the r12 concurrent-wall tax), and every caller must get the
+      // same value back
+      val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+      val entered = new java.util.concurrent.CountDownLatch(1)
+      val results = new java.util.concurrent.CopyOnWriteArrayList[AnyRef]()
+      val threads = (1 to 8).map { _ =>
+        new Thread(() => {
+          results.add(store("sgs-flight", input)(1) {
+            builds.incrementAndGet()
+            entered.await()
+            make()
+          })
+        })
       }
+      threads.foreach(_.start())
+      Thread.sleep(300) // let every racer reach the rendezvous
+      entered.countDown()
+      threads.foreach(_.join(30000))
+      assert(builds.get() == 1, s"expected one build, got ${builds.get()}")
+      assert(results.size == 8 && results.toArray.distinct.length == 1)
+      // a FAILED build must not poison the key: retriers rebuild
+      val failOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
+      intercept[RuntimeException] {
+        store("sgs-flight", input)(2) {
+          if (failOnce.getAndSet(false)) throw new RuntimeException("boom")
+          make()
+        }
+      }
+      var rebuilt = false
+      store("sgs-flight", input)(2) { rebuilt = true; make() }
+      assert(rebuilt, "a failed build was cached")
+      // the same plan in another session is another key
+      val other = spark.newSession().range(0, 7).toDF("sgs_store_probe")
+      builds.set(0)
+      Seq(input, other, input, other).foreach { in =>
+        store("sgs-session", in)(1) { builds.incrementAndGet(); make() }
+      }
+      assert(builds.get() == 2, s"two sessions built ${builds.get()} times")
+      // equal inputs and params under different tags never share
+      val x = store("sgs-tag-a", input)(1)(make())
+      val y = store("sgs-tag-b", input)(1)(make())
+      assert(!(x eq y), "different tags shared one entry")
     }
-    val recovered = graft.util.RelCache.memo(("sgs-flight", 2)) {
-      spark.range(0, 3).toDF("x").localCheckpoint(true)
-    }
-    assert(recovered.count() == 3)
-    graft.util.RelCache.clear()
+    check(RelCache.memo, () => spark.range(0, 5).toDF("x").localCheckpoint(true))
+    check(RelCache.pins, () => spark.range(0, 3).toDF("y"))
+    check(new RelCache.Store[Array[Double]](4), () => Array(1.0))
+    RelCache.clear()
   }
 
   test("unimax: waterfilling hand case — capped prefix exact, uncapped split equally") {
