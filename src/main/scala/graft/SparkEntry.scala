@@ -336,7 +336,7 @@ object SparkEntry {
     "q52_ann_ivf" -> { (s, dir) =>
       // trained coarse quantizer: 64 cells, 2 deterministic Lloyd rounds,
       // 8-probe queries (cell count ~ sqrt(N) is the scale rule; nprobe
-      // picked from the measured StressVec recall curve — see SURVEY §6d)
+      // picked from the measured recall curve — see SURVEY §6d "Trained IVF")
       implicit val sp: SparkSession = s
       val emb = t(dir, "embeddings")
       Similarity.annIvf(emb, emb.filter(col("vec_id") < 10), 3,

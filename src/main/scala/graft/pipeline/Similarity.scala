@@ -140,7 +140,8 @@ object Similarity {
     * Output: (query_id, neighbor_id, cosine, rank) — k rows per node
     * (fewer for nodes whose candidate closure is smaller).
     *
-    * ROUNDS SIZING (measured in StressGraph): NN-Descent converges in
+    * ROUNDS SIZING (measured, SURVEY.md §6d round-11 graph-ANN
+    * findings): NN-Descent converges in
     * O(log n) rounds from a local init — on a 1000-cluster 50k-vector
     * corpus, edge recall vs exact top-k goes 0.29 → 0.85 from
     * rounds = 2 → 4; a FIXED small default silently under-converges as
@@ -211,9 +212,9 @@ object Similarity {
       df.queryExecution.analyzed.collectLeaves().collect {
         case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
       }
-    // AUTO budget: max(4, ceil(log2(n)/4)) — the StressGraph-measured
-    // convergence scaling; the count job runs on the already-persisted
-    // corpus relation (one cached scan)
+    // AUTO budget: max(4, ceil(log2(n)/4)) — the convergence scaling
+    // measured in SURVEY.md §6d (round-11 graph-ANN findings); the count
+    // job runs on the already-persisted corpus relation (one cached scan)
     val auto = rounds < 0
     val budget =
       if (!auto) rounds
@@ -395,11 +396,12 @@ object Similarity {
     * rank) — k rows per query.
     *
     * CENTERING CAVEAT (applies to the whole sign-LSH entry family,
-    * measured in StressGraph): embeddings whose coordinates are all
-    * one sign — common for some encoder models — hash every vector
-    * into the single all-ones bucket per table, collapsing bucket
-    * heads and chains to one region; entry then degenerates to the
-    * global fallback and recall craters. Center such corpora first
+    * measured, SURVEY.md §6d round-11 graph-ANN findings): embeddings
+    * whose coordinates are all one sign — common for some encoder
+    * models — hash every vector into the single all-ones bucket per
+    * table, collapsing bucket heads and chains to one region; entry
+    * then degenerates to the global fallback and recall craters.
+    * Center such corpora first
     * (subtract the coordinate means — one [[embedCovarianceAgg]]-style
     * pass; [[jlSearchTopK]] is the centering-free alternative, its
     * hyperplanes don't test signs of raw coordinates alone). */
@@ -781,7 +783,8 @@ object Similarity {
     * Build mults drop from N*nCells to ~N*(1+superProbe)*sqrt(nCells) —
     * at nCells ~ sqrt(N) that is N^1.25, not N^1.5. Approximate: a
     * vector's true nearest cell can live under an unprobed super
-    * (superProbe >= 2 makes that rare; agreement measured in StressVec). */
+    * (superProbe >= 2 makes that rare; agreement measured in SURVEY.md §6d,
+    * "IVF build pruned to sub-N^1.5"). */
   private def assignCellsPruned(df: DataFrame,
       cents: Seq[(Long, Array[Double])], cells: Int, superProbe: Int): DataFrame = {
     val spark = df.sparkSession

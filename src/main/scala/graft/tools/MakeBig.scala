@@ -1,10 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: synthesize the 1e8-row events table the flagship
-  * throughput captures (ProfileHist1d, StressHist) consume — recorded
+  * throughput capture (ProfileHist1d) consumes — recorded
   * as code so every round regenerates the identical input instead of
   * relying on a /tmp file surviving between rounds.
   *
@@ -17,11 +16,7 @@ object MakeBig {
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "/tmp/sfbig_events.parquet"
     val n = if (args.length > 1) args(1).toLong else 100000000L
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession()
     spark.range(0, n, 1, 64).select(
       col("id").as("event_id"),
       (lit(1700000000000000000L) + col("id") * 1000L).as("ts"),

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans for representative queries — used to
   * audit pushdown (PushedFilters/ReadSchema), WholeStageCodegen spans, and
   * shuffle counts per operator (dev tool; see SURVEY.md §6). */
@@ -11,12 +9,7 @@ object PlanAudit {
     val names = if (args.length > 1) args.drop(1).toSet else
       Set("q01_hist_regular", "q05_hist_dims", "q17_hist2d_dims_weighted",
         "q23_stat_median", "q45_ann_bruteforce")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevSession()
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (names.contains(name)) {
         println(s"\n========== $name ==========")

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.axes.Regular
 import graft.operators.{HistOptions, Histogram}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: isolate the unweighted 1-D count path vs the weighted decimal
@@ -11,13 +10,7 @@ import org.apache.spark.sql.functions._
 object ProfileHist1d {
   def main(args: Array[String]): Unit = {
     val path = if (args.nonEmpty) args(0) else "/tmp/sfbig_events.parquet"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession()
     val ev = spark.read.parquet(path).repartition(64)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     val n = ev.count()

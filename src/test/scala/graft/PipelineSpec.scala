@@ -1065,7 +1065,7 @@ class PipelineSpec extends SparkSpec {
     val full = asMap(Similarity.cluster(many, nCells = 16, superProbe = Some(4)))
     assert(full == exact)
     // tighter probe: approximate by design, but superProbe=2 must stay
-    // close (the StressVec-measured regime the scaladoc promises)
+    // close (the regime measured in SURVEY.md §6d that the scaladoc promises)
     val p2 = asMap(Similarity.cluster(many, nCells = 16, superProbe = Some(2)))
     val agree = p2.count { case (k, v) => exact(k) == v }
     assert(agree >= (0.9 * exact.size).toInt, s"agreement $agree/${exact.size}")

@@ -6,4 +6,4 @@ SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1} \
 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-$(nproc)} \
 SPARK_GRAFT_BENCH_OUT=${SPARK_GRAFT_BENCH_OUT:-bench_out.json} \
 SPARK_GRAFT_BENCH_SOLO=${SPARK_GRAFT_BENCH_SOLO:-3} \
-java $FLAGS -Xmx${BENCH_XMX:-32g} -cp "target/scala-2.13/classes:/opt/spark/jars/*" graft.Bench
+java $FLAGS -Xmx${SPARK_DRIVER_MEM:-8g} -cp "target/scala-2.13/classes:/opt/spark/jars/*" graft.Bench
