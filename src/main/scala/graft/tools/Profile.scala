@@ -8,8 +8,10 @@ import scala.util.control.NonFatal
 
 import graft.SparkEntry
 import graft.util.RelCache
+import org.apache.spark.SparkEnv
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.storage.BlockId
 
 /** Layered profile of SparkEntry queries (dev tool):
   *
@@ -25,7 +27,9 @@ import org.apache.spark.sql.SparkSession
   * the eager driver jobs memoization removes), `catalyst.s`
   * (`executedPlan`) and `exec.s` (`count()`, Bench's timed action), with
   * the jobs each layer started. The `exec.*` counters and the five
-  * longest stages cover every job of the run. The first line holds the
+  * longest stages cover every job of the run; `storage.rdd_mb` and
+  * `storage.broadcast_mb` are what the driver's block manager holds in
+  * RDD and broadcast blocks once it ends. The first line holds the
   * capture's context. A failing query gets an `error` field and the
   * sweep goes on. */
 object Profile {
@@ -39,7 +43,8 @@ object Profile {
       fnS: Double, fnJobs: Int, catalystS: Double, catalystJobs: Int,
       execS: Double, execJobs: Int, stages: Int, tasks: Int,
       shuffleReadMb: Double, shuffleWriteMb: Double, spillMb: Double,
-      gcMs: Long, topStages: Seq[Stage], error: Option[String]) {
+      gcMs: Long, rddMb: Double, broadcastMb: Double, topStages: Seq[Stage],
+      error: Option[String]) {
     def fields: Seq[(String, Any)] = Seq(
       "query" -> query, "run" -> run, "rows" -> rows,
       "plan.fn_s" -> fnS, "plan.fn_jobs" -> fnJobs,
@@ -48,7 +53,8 @@ object Profile {
       "exec.stages" -> stages, "exec.tasks" -> tasks,
       "exec.shuffle_read_mb" -> shuffleReadMb,
       "exec.shuffle_write_mb" -> shuffleWriteMb, "exec.spill_mb" -> spillMb,
-      "jvm.gc_ms" -> gcMs, "exec.top_stages" -> topStages.map(_.obj)) ++
+      "jvm.gc_ms" -> gcMs, "storage.rdd_mb" -> rddMb,
+      "storage.broadcast_mb" -> broadcastMb, "exec.top_stages" -> topStages.map(_.obj)) ++
       error.map("error" -> _)
     def json: String = Profile.json(Obj(fields: _*))
   }
@@ -106,11 +112,20 @@ object Profile {
     try sc.parallelize(Seq(0), 1).count() finally sc.setLocalProperty(Layer, null)
     try require(l.drained.await(60, TimeUnit.SECONDS), "listener bus did not drain in 60 s")
     finally sc.removeSparkListener(l)
-    val MB = 1048576.0
     Run(name, run, rows, walls("fn"), l.jobs("fn"), walls("catalyst"),
       l.jobs("catalyst"), walls("exec"), l.jobs("exec"), l.stages, l.tasks,
       l.readBytes / MB, l.writeBytes / MB, l.spillBytes / MB, gc,
-      l.done.sortBy(-_.s).take(5).toSeq, error)
+      storedMb(_.isRDD), storedMb(_.isBroadcast), l.done.sortBy(-_.s).take(5).toSeq, error)
+  }
+
+  private val MB = 1048576.0
+
+  /** Memory plus disk the driver's block manager holds in the blocks
+    * `select` picks: everything still retained after the run. */
+  private def storedMb(select: BlockId => Boolean): Double = {
+    val bm = SparkEnv.get.blockManager
+    bm.getMatchingBlockIds(select).flatMap(bm.getStatus)
+      .map(s => s.memSize + s.diskSize).sum / MB
   }
 
   private def gcMs(): Long = ManagementFactory.getGarbageCollectorMXBeans.asScala

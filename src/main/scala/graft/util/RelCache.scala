@@ -2,7 +2,12 @@ package graft.util
 
 import java.util.concurrent.{CompletableFuture, CompletionException, ConcurrentHashMap}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{classic, DataFrame, GraftShim}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, BroadcastQueryStageExec,
+  QueryStageExec}
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
 import org.apache.spark.storage.StorageLevel
 
 /** The artifact store. Every memoized artifact — pinned relations
@@ -23,11 +28,13 @@ object RelCache {
   // sites × per-corpus inputs), so at 96 the LRU churned CYCLICALLY —
   // nothing survived from one bench pass to the next and the min-over-
   // passes q349 stayed at its cold cost (20.5 s) instead of its
-  // memoized one. Entries are bench-scale (the largest are the 200k
-  // scale-gate relations at ~60 MB; most are KB–MB) and persist at
-  // MEMORY_AND_DISK, so the cap prices eviction churn, not OOM risk;
-  // big-sf sweeps are protected by the Verify heap valve (clear + GC
-  // above 60% used heap), not this cap.
+  // memoized one. The cap counts entries, not bytes. An entry costs its
+  // stored blocks (MEMORY_AND_DISK; the 200k scale-gate relations reach
+  // ~60 MB): a pin destroys its build's broadcasts, which otherwise keep
+  // their deserialized relations on the driver heap (34.3 MB behind
+  // 1.12 MB of pinned blocks at the end of a perfbench pipeline_cold run
+  // on 4 cpus). Big-sf sweeps are protected by the Verify heap valve
+  // (clear + GC above 60% used heap), not this cap.
   private[graft] val MaxEntries = 320
 
   private val stores = new java.util.concurrent.CopyOnWriteArrayList[Store[_]]()
@@ -110,10 +117,30 @@ object RelCache {
       if (wall > 0.25)
         logger.warn(f"persist build (key#${key.hashCode()}%08x) took $wall%.3f s"))
 
+  /** Pins `df` like a [[memo]] relation: the pin owns its bytes and its
+    * build is spent. A new pin's column buffers lose their lineage before
+    * the job that fills them (task binaries serialize that lineage,
+    * broadcasts and all), then every broadcast the build completed is
+    * destroyed. The CacheManager entry stays: columnar storage and
+    * plan-keyed reuse work as for any cached plan. Once the pin is
+    * released (eviction or [[clear]]), a plan derived from it recomputes
+    * from its logical plan, but one that had already executed throws on
+    * a rerun: its physical plan reads the released blocks (README,
+    * "Artifact caching"). */
   def persist(df: DataFrame): DataFrame = pins("persist", df)() {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    val cache = ds.sparkSession.sharedState.cacheManager
+    // an entry cached before this call (an input pin, another session's
+    // pin) is not this build's to cut or release
+    val fresh = cache.lookupCachedData(ds).isEmpty
     try {
       val pinned = df.persist(StorageLevel.MEMORY_AND_DISK)
+      val builder = cache.lookupCachedData(ds).get.cachedRepresentation.cacheBuilder
+      val buffers = builder.cachedColumnBuffers
+      if (fresh) buffers.localCheckpoint()
       pinned.count()
+      if (fresh && buffers.isCheckpointed)
+        builder.synchronized(broadcasts(builder.cachedPlan).foreach(GraftShim.destroy))
       pinned
     } catch {
       case e: Throwable =>
@@ -122,6 +149,17 @@ object RelCache {
         throw e
     }
   }
+
+  /** The broadcasts a run of `plan` completed: its exchanges, those of its
+    * materialized adaptive stages, and those of its subqueries. Cached
+    * scans (InMemoryTableScanExec) are leaves: their broadcasts belong to
+    * other cache entries. */
+  private def broadcasts(plan: SparkPlan): Seq[Broadcast[Any]] = plan.collectWithSubqueries {
+    case a: AdaptiveSparkPlanExec => broadcasts(a.executedPlan)
+    case s: BroadcastQueryStageExec if !s.isMaterialized => Nil
+    case s: QueryStageExec => broadcasts(s.plan)
+    case b: BroadcastExchangeLike => Seq(b.relationFuture.get())
+  }.flatten.distinct
 
   /** Storage blocks behind a localCheckpoint'd relation: its plan's
     * LogicalRDD leaves. Released EXPLICITLY when the entry leaves the

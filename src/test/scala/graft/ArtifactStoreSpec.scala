@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** Pins for the artifact store's contracts with its inputs: clear()
   * reaches every store, and input pins shared across sessions survive
-  * the table LRU's eviction. */
+  * the table LRU's eviction. And for what a pin holds: its own blocks,
+  * none of its build's broadcasts, and the release contract of clear(). */
 class ArtifactStoreSpec extends SparkSpec {
   import spark.implicits._
 
@@ -33,6 +34,77 @@ class ArtifactStoreSpec extends SparkSpec {
     assert(c1 != c0 && e1 != e0, "the rewrite did not change the answers")
     assert(centroids(spark) == c1, "kmeansCentroids returned stale centroids")
     assert(edges(spark) == e1, "quantileAxis returned stale edges")
+  }
+
+  // a plan with an explicit broadcast join, and its rows computed in Scala
+  private def joined(tag: String) = {
+    val facts = (0L until 3000L).map(i => (i, (i % 17).toInt)).toDF("id", "k")
+    val dims = (0 until 17).map(k => (k, s"$tag$k")).toDF("k", "name")
+    facts.join(broadcast(dims), "k").where($"id" % 3 =!= 0).select("id", "name")
+  }
+  private def joinedRows(tag: String) =
+    (0L until 3000L).filter(_ % 3 != 0).map(i => (i, s"$tag${i % 17}")).toSet
+  // collect() on the Dataset itself: it reruns that Dataset's own plan
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getString(1))).toSet
+
+  private def builderOf(df: org.apache.spark.sql.DataFrame) =
+    spark.sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      .map(_.cachedRepresentation.cacheBuilder)
+
+  test("RelCache.persist: a published pin owns its buffers and holds none of its build's broadcasts") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      BroadcastQueryStageExec, QueryStageExec}
+    val pinned = graft.util.RelCache.persist(joined("p"))
+    try {
+      val builder = builderOf(pinned).getOrElse(fail("the pin has no cache entry"))
+      val buffers = builder.cachedColumnBuffers
+      assert(buffers.isCheckpointed, "the pin's column buffers keep their lineage")
+      assert(buffers.dependencies.flatMap(_.rdd.dependencies).isEmpty,
+        s"the buffers still reach the plan's RDDs:\n${buffers.toDebugString}")
+      // the adaptive plan's stages are leaves: descend into each one
+      def stages(p: SparkPlan): Seq[BroadcastQueryStageExec] = p.collect {
+        case a: AdaptiveSparkPlanExec => stages(a.executedPlan)
+        case s: BroadcastQueryStageExec => Seq(s)
+        case s: QueryStageExec => stages(s.plan)
+      }.flatten
+      val ids = stages(builder.cachedPlan).filter(_.isMaterialized)
+        .map(_.broadcast.relationFuture.get().id).toSet
+      assert(ids.nonEmpty, s"the build broadcast nothing:\n${builder.cachedPlan}")
+      val bm = org.apache.spark.SparkEnv.get.blockManager
+      val held = bm.getMatchingBlockIds {
+        case org.apache.spark.storage.BroadcastBlockId(id, _) => ids(id)
+        case _ => false
+      }
+      assert(held.isEmpty, s"the driver still holds $held")
+      assert(rows(pinned) == joinedRows("p"))
+    } finally graft.util.RelCache.clear()
+  }
+
+  test("RelCache.clear: pins rebuild, plans derived earlier stay correct, failed builds stay uncached") {
+    val derivedLater = graft.util.RelCache.persist(joined("c")).where($"id" < 1000)
+    val ranBefore = graft.util.RelCache.persist(joined("c")).where($"id" >= 1000)
+    val ranRows = rows(ranBefore)
+    assert(ranRows == joinedRows("c").filter(_._1 >= 1000))
+    graft.util.RelCache.clear()
+    assert(builderOf(joined("c")).isEmpty, "clear() left the pin cached")
+    // its logical plan is intact: first executed now, it recomputes
+    assert(rows(derivedLater) == joinedRows("c").filter(_._1 < 1000))
+    // its physical plan read the released pin: same rows or an error
+    scala.util.Try(rows(ranBefore)).foreach(r => assert(r == ranRows))
+    val again = graft.util.RelCache.persist(joined("c"))
+    try {
+      assert(builderOf(again).exists(_.cachedColumnBuffers.isCheckpointed))
+      assert(rows(again) == joinedRows("c"))
+    } finally graft.util.RelCache.clear()
+
+    val failing = spark.range(50).withColumn("ok", assert_true($"id" < 40))
+    (1 to 2).foreach { _ =>
+      intercept[Exception](graft.util.RelCache.persist(failing))
+      assert(builderOf(failing).isEmpty, "a failed build left a cache entry")
+    }
   }
 
   test("SparkEntry.tableCache eviction keeps inputs pinned by newer sessions") {

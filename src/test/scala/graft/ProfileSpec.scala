@@ -9,7 +9,8 @@ class ProfileSpec extends SparkSpec {
   private val keys = Seq("query", "run", "rows", "plan.fn_s", "plan.fn_jobs",
     "catalyst.s", "catalyst.jobs", "exec.s", "exec.jobs", "exec.stages",
     "exec.tasks", "exec.shuffle_read_mb", "exec.shuffle_write_mb",
-    "exec.spill_mb", "jvm.gc_ms", "exec.top_stages")
+    "exec.spill_mb", "jvm.gc_ms", "storage.rdd_mb", "storage.broadcast_mb",
+    "exec.top_stages")
 
   private def profile(name: String): Seq[Profile.Run] = {
     val runs = Profile.query(spark, sf, name)
