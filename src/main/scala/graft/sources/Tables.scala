@@ -13,9 +13,45 @@ object Tables extends org.apache.spark.internal.Logging {
   val tableNames: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
+  // path -> (read key, inferred schema). Inference is a Spark job per
+  // read; a later read under the same key passes the schema instead. The
+  // key is the path's file fingerprint plus the session's parquet reader
+  // settings, so a rewrite or another reader setting infers afresh. One
+  // entry per path: SparkEntry forgets it with the path's last table alias.
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, (Any, StructType)]()
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val key = (fingerprint(spark, path), spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") })
+    val df = schemas.get(path) match {
+      case (`key`, schema) => spark.read.schema(schema).parquet(path)
+      case _ =>
+        val read = spark.read.parquet(path)
+        schemas.put(path, (key, read.schema))
+        read
+    }
     if (name == "events") normalizeEventsTs(df) else df
+  }
+
+  private[graft] def forget(path: String): Unit = schemas.remove(path)
+
+  /** The files behind a parquet path: (path, length, mtime) of every
+    * non-hidden file, from one recursive listing; empty when the path
+    * does not exist (the read then raises Spark's own error). */
+  private[graft] def fingerprint(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val files = Seq.newBuilder[(String, Long, Long)]
+    try {
+      val it = root.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(root, true)
+      while (it.hasNext) {
+        val f = it.next()
+        val name = f.getPath.getName
+        if (!name.startsWith("_") && !name.startsWith("."))
+          files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+    } catch { case _: java.io.FileNotFoundException => () }
+    files.result().sorted
   }
 
   /** Normalize events.ts to epoch-nanos long regardless of how the

@@ -193,6 +193,7 @@ object RelCache {
 
   /** Empties every store: pins are unpersisted, keyed relations release
     * their checkpoint blocks, values are dropped. Inputs pinned by
-    * SparkEntry.cacheTables are not artifacts and stay pinned. */
+    * SparkEntry.cacheTables are not artifacts and stay pinned, as do the
+    * input schemas Tables memoizes (their keys see the files). */
   def clear(): Unit = stores.forEach(_.clear())
 }
