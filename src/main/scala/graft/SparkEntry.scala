@@ -19,33 +19,35 @@ object SparkEntry {
   // Memoized per (session, path): queries re-use one logical scan instead
   // of re-listing the same parquet 45 times per run, and a new session's
   // first read of a path passes the schema Tables inferred for the same
-  // files, so it starts no job. LRU-bounded (the RelCache discipline): a
-  // long-lived driver sweeping many sf dirs/sessions would otherwise hold
-  // every scan for the session lifetime. The cached relation behind a path
-  // is ONE CacheManager entry shared by every session's alias of that path,
-  // so only the path's last alias to leave releases it, with the path's
-  // memoized schema and pin record.
+  // files, so it starts no job. An alias whose files moved is read afresh.
+  // LRU-bounded (the RelCache discipline): a long-lived driver sweeping
+  // many sf dirs/sessions would otherwise hold every scan for the session
+  // lifetime. The cached relation behind a path is ONE CacheManager entry
+  // shared by every session's alias of that path, so only the path's last
+  // alias to leave releases it, with the path's memoized schema and pin
+  // record.
   private[graft] val TableCacheMax = 32
+  private type Files = Seq[(String, Long, Long)]
   private val tableCache =
-    new java.util.LinkedHashMap[(SparkSession, String), DataFrame](16, 0.75f, true) {
+    new java.util.LinkedHashMap[(SparkSession, String), (Files, DataFrame)](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String), DataFrame]): Boolean = {
+          e: java.util.Map.Entry[(SparkSession, String), (Files, DataFrame)]): Boolean = {
         val evict = size() > TableCacheMax
         val path = e.getKey._2
         if (evict && !keySet.stream.anyMatch(k => k != e.getKey && k._2 == path)) {
-          e.getValue.unpersist()
+          e.getValue._2.unpersist()
           graft.sources.Tables.forget(path)
           pinned.remove(path)
         }
         evict
       }
     }
-  private[graft] def t(dir: String, name: String)(implicit s: SparkSession): DataFrame =
-    tableCache.synchronized {
-      val key = (s, s"$dir/$name.parquet")
-      val hit = tableCache.get(key)
-      if (hit != null) hit
-      else {
+  private[graft] def t(dir: String, name: String)(implicit s: SparkSession): DataFrame = {
+    val key = (s, s"$dir/$name.parquet")
+    val files = graft.sources.Tables.fingerprint(s, key._2)
+    tableCache.synchronized(tableCache.get(key) match {
+      case (`files`, df) => df
+      case _ =>
         // NOTE (r14, measured): bench-scale inputs are single-row-group
         // parquet files that scan as 1–3 splits. Spreading them across
         // the cores here (repartition to 8/32 before the cacheTables
@@ -56,16 +58,15 @@ object SparkEntry {
         // overhead, and solo tails regressed ×1.6. See
         // OPTIMIZATION_r14.md §5.
         val df = graft.sources.Tables.table(s, dir, name)
-        tableCache.put(key, df)
+        tableCache.put(key, (files, df))
         df
-      }
-    }
+    })
+  }
   private[graft] def tableCacheSize: Int =
     tableCache.synchronized(tableCache.size())
 
   // path -> (the files it was pinned from, the pinned relation)
-  private val pinned =
-    new java.util.concurrent.ConcurrentHashMap[String, (Seq[(String, Long, Long)], DataFrame)]()
+  private val pinned = new java.util.concurrent.ConcurrentHashMap[String, (Files, DataFrame)]()
   private val logger = org.slf4j.LoggerFactory.getLogger("graft.SparkEntry")
 
   /** Pin the benchmark inputs in memory (the reference computes over
@@ -77,8 +78,8 @@ object SparkEntry {
     * loaded is not pinned again, so once the inputs are pinned and their
     * schemas known, a new session's call starts no Spark job. An input
     * rewritten on disk since it was pinned (its file fingerprint moved) is
-    * unpersisted, dropped from every session's table memo and pinned again
-    * from the new files, with one WARN line naming its path. */
+    * unpersisted and pinned again from the new files (t() reads them
+    * afresh), with one WARN line naming its path. */
   def cacheTables(s: SparkSession, dir: String): Unit = {
     implicit val sp: SparkSession = s
     Seq("lineitem", "orders", "customer", "part", "events",
@@ -89,7 +90,6 @@ object SparkEntry {
         case (was, stale) if was != files =>
           logger.warn(s"cacheTables: $path changed on disk since it was pinned; re-pinning it")
           stale.unpersist(blocking = true)
-          tableCache.synchronized(tableCache.keySet.removeIf(_._2 == path))
         case _ => ()
       }
       val df = t(dir, n)

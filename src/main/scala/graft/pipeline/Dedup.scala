@@ -880,24 +880,22 @@ object Dedup extends org.apache.spark.internal.Logging {
     val cand = minhashLsh(docs, k, bands, rowsPerBand, bucketCap = bucketCap,
       autoCapPairs = autoCapPairs)
     // verified pairs are shared between nearDupPairs and nearDupKeep
-    memoPersist(verifiedJaccard(docs, cand, k)
+    memoPersist(verifiedJaccard(docs, docs, cand, k)
       .filter(col("jaccard") >= threshold))
   }
 
-  /** The verify stage as a reusable relation: exact k-gram jaccard for
-    * every candidate pair, UNFILTERED (one row per candidate, jaccard may
-    * be 0). Gram sets are memoized per corpus, so every caller
-    * (nearDupPairs' thresholded form, minhashAccuracy's QA report) shares
-    * one signature pass and one codegen sorted-merge formula. */
-  private def verifiedJaccard(docs: DataFrame, cand: DataFrame,
+  /** The verify stage: exact k-gram jaccard of every candidate pair (doc_a
+    * of `a`, doc_b of `b`), UNFILTERED. Each side's gram sets are hashed
+    * from its text inside the caller's build and never pinned: callers pin
+    * answers. They are columns below the joins, so a filter on jaccard
+    * pushed into a join condition reads them instead of re-hashing. `cand`
+    * appears once: every reference to a pin copies its plan into the key
+    * and cache entry of each artifact built over it. */
+  private def verifiedJaccard(a: DataFrame, b: DataFrame, cand: DataFrame,
       k: Int): DataFrame = {
-    // pinned + memoized: joined once per pair side below, and shared with
-    // any other operator computing the same gram sets on this corpus
-    val gsets = memoPersist(widen(docs).select(col("doc_id"),
-      graft.functions.GramHashes.gram_hashes(col("text"), lit("g"), k).as("gset")))
-    cand
-      .join(gsets.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("gset", "ga"), "doc_a")
-      .join(gsets.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("gset", "gb"), "doc_b")
+    def grams(docs: DataFrame, side: String) = widen(docs).select(col("doc_id").as(s"doc_$side"),
+      graft.functions.GramHashes.gram_hashes(col("text"), lit("g"), k).as(s"g$side"))
+    cand.join(grams(a, "a"), "doc_a").join(grams(b, "b"), "doc_b")
       .withColumn("inter",
         graft.functions.SortedIntersectCount.sorted_intersect_count(col("ga"), col("gb")))
       .withColumn("jaccard", col("inter").cast("double") /
@@ -911,9 +909,9 @@ object Dedup extends org.apache.spark.internal.Logging {
     * slots that agree — the standard unbiased jaccard estimator) beside
     * the exact n-gram jaccard the verify stage computes. The report a
     * pipeline reads before trusting a cheaper estimate-only threshold,
-    * or before re-sizing bands/rows. Cost: the band join and gram sets
-    * are the SAME memoized relations q41/q54 already built — the only
-    * new work is one candidate-keyed slot-compare aggregate. Signatures
+    * or before re-sizing bands/rows. Cost: the band join is the SAME
+    * memoized relation q41/q54 already built; new work is one candidate-
+    * keyed slot-compare aggregate and the candidates' verify. Signatures
     * are md5-derived identically in both engines, so the agreement count
     * (and the estimate) gates exactly. */
   def minhashAccuracy(docs: DataFrame, k: Int = 5, bands: Int = 16,
@@ -935,9 +933,9 @@ object Dedup extends org.apache.spark.internal.Logging {
       .select(col("doc_a"), col("doc_b"),
         (col("__m").cast("double") / lit((bands * rowsPerBand).toDouble))
           .as("est_jaccard"))
-    // exact jaccard over the same candidates: the shared verify-stage
-    // relation (unfiltered — a 0-jaccard candidate still reports)
-    est.join(verifiedJaccard(docs, cand, k), Seq("doc_a", "doc_b"))
+    // exact jaccard over the same candidates, pinned unfiltered (a
+    // 0-jaccard candidate still reports): warm calls skip the hashing
+    est.join(memoPersist(verifiedJaccard(docs, docs, cand, k)), Seq("doc_a", "doc_b"))
   }
 
   /** Near-dup DEDUP verdicts: the docs that survive near-duplicate removal
@@ -965,9 +963,9 @@ object Dedup extends org.apache.spark.internal.Logging {
     * Scale shape: identical to the self-join form — band-bucket equi-join
     * bounded by bucket selectivity, codegen'd sorted-merge verify — with
     * the usual asymmetry win: the new-crawl side is typically orders of
-    * magnitude smaller than the reference corpus, and only ITS bands and
-    * gram sets are new work (the reference side's relations are the
-    * memoized artifacts a production pipeline keeps checkpointed).
+    * magnitude smaller than the reference corpus. The reference side's
+    * banded relation is a pin a later crawl reuses; gram sets are hashed
+    * inside the verify build and never pinned.
     *
     * @param bucketCap skew guard, applied to EACH side's band buckets
     *   independently (lowest doc_ids kept — deterministic, oracle-
@@ -1004,19 +1002,8 @@ object Dedup extends org.apache.spark.internal.Logging {
     val cand = memoPersist(ba.join(bb, joinCond)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct())
-    val ga = memoPersist(widen(corpusA).select(col("doc_id"),
-      graft.functions.GramHashes.gram_hashes(col("text"), lit("g"), k).as("gset")))
-    val gb = memoPersist(widen(corpusB).select(col("doc_id"),
-      graft.functions.GramHashes.gram_hashes(col("text"), lit("g"), k).as("gset")))
-    cand
-      .join(ga.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("gset", "ga"), "doc_a")
-      .join(gb.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("gset", "gb"), "doc_b")
-      .withColumn("inter",
-        graft.functions.SortedIntersectCount.sorted_intersect_count(col("ga"), col("gb")))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (size(col("ga")) + size(col("gb")) - col("inter")).cast("double"))
+    memoPersist(verifiedJaccard(corpusA, corpusB, cand, k))
       .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
   }
 
   /** STREAMING fuzzy decontamination — [[crossNearDup]] with a live
@@ -1431,59 +1418,69 @@ object Dedup extends org.apache.spark.internal.Logging {
     // job). Reliable mode: the artifact is the leaf RDD's checkpoint
     // FILES — delete those paths once the next round is on disk.
     final case class Pin(df: DataFrame, blockIds: Set[Int], files: Set[String])
+    // the round pins not yet released: a round that throws releases them
+    val live = scala.collection.mutable.Set[Pin]()
     def pin(df: => DataFrame): Pin = {
       val reliable = checkpointDir.isDefined
       val out = if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
       val leafRdds = out.queryExecution.analyzed.collectLeaves().collect {
         case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
       }
-      if (reliable) Pin(out, Set.empty, leafRdds.flatMap(_.getCheckpointFile).toSet)
-      else Pin(out, leafRdds.map(_.id).toSet, Set.empty)
+      val p = if (reliable) Pin(out, Set.empty, leafRdds.flatMap(_.getCheckpointFile).toSet)
+        else Pin(out, leafRdds.map(_.id).toSet, Set.empty)
+      live += p
+      p
     }
     def release(p: Pin): Unit = {
+      live -= p
       p.blockIds.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
       p.files.foreach { f =>
         val path = new org.apache.hadoop.fs.Path(f)
         path.getFileSystem(sc.hadoopConfiguration).delete(path, true)
       }
     }
-    var labels = pin(
-      nodes.select(col("doc_id").as("node"), col("doc_id").as("comp")))
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIter) {
-      val prop = labels.df.as("l")
-        .join(edges.as("e"), col("l.node") === col("e.u"))
-        .select(col("e.v").as("node"), col("l.comp").as("comp"))
-      // relax via left join + least, not union + groupBy: a Union inside
-      // the loop trips Catalyst's constraint rewrite once the jump join's
-      // regenerated attribute ids feed back in (AttributeMap key-not-found
-      // in UnionBase.rewriteConstraints); the join form is equivalent and
-      // also skips re-shuffling the untouched labels rows
-      val nbrMin = prop.groupBy("node").agg(min("comp").as("__nc"))
-      val relaxed = pin(
-        labels.df.join(nbrMin, Seq("node"), "left")
-          .select(col("node"),
-            least(col("comp"), coalesce(col("__nc"), col("comp"))).as("comp")))
-      // pointer jump: L(u) := L(L(u)). Inner join is total — every comp
-      // value is some node's id, and the labels relation has a row for
-      // every node; L(L(u)) <= L(u) because labels only ever decrease.
-      val next = pin(
-        relaxed.df.as("a").join(relaxed.df.as("b"), col("a.comp") === col("b.node"))
-          .select(col("a.node").as("node"), col("b.comp").as("comp")))
-      val changed = next.df.as("n").join(labels.df.as("o"), "node")
-        .filter(col("n.comp") < col("o.comp")).count()
-      release(labels)
-      release(relaxed)
-      labels = next
-      converged = changed == 0L
-      it += 1
+    try {
+      var labels = pin(
+        nodes.select(col("doc_id").as("node"), col("doc_id").as("comp")))
+      var it = 0
+      var converged = false
+      while (!converged && it < maxIter) {
+        val prop = labels.df.as("l")
+          .join(edges.as("e"), col("l.node") === col("e.u"))
+          .select(col("e.v").as("node"), col("l.comp").as("comp"))
+        // relax via left join + least, not union + groupBy: a Union inside
+        // the loop trips Catalyst's constraint rewrite once the jump join's
+        // regenerated attribute ids feed back in (AttributeMap key-not-found
+        // in UnionBase.rewriteConstraints); the join form is equivalent and
+        // also skips re-shuffling the untouched labels rows
+        val nbrMin = prop.groupBy("node").agg(min("comp").as("__nc"))
+        val relaxed = pin(
+          labels.df.join(nbrMin, Seq("node"), "left")
+            .select(col("node"),
+              least(col("comp"), coalesce(col("__nc"), col("comp"))).as("comp")))
+        // pointer jump: L(u) := L(L(u)). Inner join is total — every comp
+        // value is some node's id, and the labels relation has a row for
+        // every node; L(L(u)) <= L(u) because labels only ever decrease.
+        val next = pin(
+          relaxed.df.as("a").join(relaxed.df.as("b"), col("a.comp") === col("b.node"))
+            .select(col("a.node").as("node"), col("b.comp").as("comp")))
+        val changed = next.df.as("n").join(labels.df.as("o"), "node")
+          .filter(col("n.comp") < col("o.comp")).count()
+        release(labels)
+        release(relaxed)
+        labels = next
+        converged = changed == 0L
+        it += 1
+      }
+      live -= labels // the result
+      ComponentsRun(
+        labels.df.select(col("node").as("doc_id"), col("comp").as("component"),
+          (col("node") === col("comp")).as("keep")),
+        it, converged)
+    } finally {
+      edges.unpersist()
+      live.toList.foreach(release)
     }
-    edges.unpersist()
-    ComponentsRun(
-      labels.df.select(col("node").as("doc_id"), col("comp").as("component"),
-        (col("node") === col("comp")).as("keep")),
-      it, converged)
   }
 
   /** Span-level dedup: line/paragraph dedup (CCNet, RefinedWeb) generalized

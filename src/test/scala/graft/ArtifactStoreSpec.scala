@@ -107,6 +107,71 @@ class ArtifactStoreSpec extends SparkSpec {
     }
   }
 
+  // the plans of every CacheManager entry (the listing is private[sql])
+  private def cached = {
+    import org.apache.spark.sql.execution.{CacheManager, CachedData}
+    val field = classOf[CacheManager].getDeclaredField("cachedData")
+    field.setAccessible(true)
+    field.get(spark.sharedState.cacheManager).asInstanceOf[IndexedSeq[CachedData]].map(_.plan)
+  }
+
+  test("near-dup verification pins answers, not gram sets: rows equal a Scala jaccard") {
+    import graft.pipeline.Dedup
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    graft.util.RelCache.clear()
+    val before = cached.toSet
+    type Pair = (Long, Long, Double)
+    def triples(df: org.apache.spark.sql.DataFrame): Set[Pair] =
+      df.select("doc_a", "doc_b", "jaccard").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    try {
+      val near = triples(Dedup.nearDupPairs(docs))
+      val qa = triples(Dedup.minhashAccuracy(docs))
+      val ref = docs.where($"doc_id" < 100)
+      val cross = triples(Dedup.crossNearDup(ref, docs))
+      val grams = cached.filterNot(before).filter(_.output.exists(_.dataType match {
+        case ArrayType(LongType, _) => true
+        case _ => false
+      }))
+      assert(grams.isEmpty, s"cached relations with array<bigint> columns:\n${grams.mkString("\n")}")
+
+      val sets = docs.select($"doc_id",
+        graft.functions.GramHashes.gram_hashes($"text", lit("g"), 5)).collect()
+        .map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
+      def jaccard(a: Long, b: Long): Double = {
+        val inter = (sets(a) & sets(b)).size
+        inter.toDouble / (sets(a).size + sets(b).size - inter)
+      }
+      val cand = Dedup.minhashLsh(docs).collect().map(r => (r.getLong(0), r.getLong(1)))
+      val verified = cand.map { case (a, b) => (a, b, jaccard(a, b)) }.toSet
+      assert(qa == verified, "minhashAccuracy's jaccard differs from the Scala reference")
+      assert(near == verified.filter(_._3 >= 0.7),
+        "nearDupPairs differs from the Scala reference")
+      assert(near.nonEmpty && near.size < verified.size, "the threshold selects nothing")
+      assert(cross.nonEmpty, "crossNearDup found no pair")
+      cross.foreach { case (a, b, j) =>
+        assert(a < 100 && a != b && j >= 0.7 && j == jaccard(a, b), s"crossNearDup row ($a, $b, $j)")
+      }
+    } finally graft.util.RelCache.clear()
+  }
+
+  test("componentsRun: a round that throws leaves no cache entry and no persisted RDD") {
+    val sc = spark.sparkContext
+    val (entries, rdds) = (cached, sc.getPersistentRDDs.keySet.toSet)
+    val boom = udf { (i: Long) =>
+      if (i == 7L) throw new IllegalStateException("boom") else i + 1 }
+    val nodes = (1L to 16L).toDF("doc_id")
+    // a range, not local rows: the optimizer would run the UDF over those
+    val pairs = spark.range(1L, 16L).select($"id".as("doc_a"), boom($"id").as("doc_b"))
+    val e = intercept[Exception](graft.pipeline.Dedup.componentsRun(nodes, pairs))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(x => String.valueOf(x.getMessage).contains("boom")), e)
+    assert(cached == entries, "the failed run left a cache entry")
+    val left = sc.getPersistentRDDs.keySet.toSet -- rdds
+    assert(left.isEmpty, s"the failed run left persisted RDDs: $left")
+  }
+
   test("SparkEntry.tableCache eviction keeps inputs pinned by newer sessions") {
     val dir = "/root/testdata/sf0.001"
     val names = Seq("lineitem", "orders", "customer", "part", "events",

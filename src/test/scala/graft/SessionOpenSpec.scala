@@ -118,6 +118,26 @@ class SessionOpenSpec extends SparkSpec {
     } finally inputs.foreach(n => SparkEntry.t(dir, n)(spark.newSession()).unpersist(true))
   }
 
+  test("a live session's alias of an unpinned table follows its replaced part file") {
+    val dir = Files.createTempDirectory("graft_open_alias").toString
+    val table = Files.createDirectory(Paths.get(dir, "nation.parquet"))
+    Files.copy(Paths.get(sf, "nation.parquet"), table.resolve("part-0.parquet"))
+    val s = spark.newSession()
+    val all = rows(SparkEntry.t(dir, "nation")(s))
+    // another writer replaces the part file with a copy holding other rows
+    val staged = Files.createTempDirectory("graft_open_alias_new").resolve("nation.parquet")
+    spark.read.parquet(s"$sf/nation.parquet").where("n_nationkey < 5").coalesce(1)
+      .write.parquet(staged.toString)
+    val part = Files.list(staged).toArray.map(_.asInstanceOf[Path])
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    Files.delete(table.resolve("part-0.parquet"))
+    Files.copy(part, table.resolve("part-1.parquet"))
+    val expected = rows(spark.read.parquet(staged.toString))
+    assert(expected.size == 5 && expected != all)
+    assert(rows(SparkEntry.t(dir, "nation")(s)) == expected,
+      "the session's alias kept the replaced file's listing")
+  }
+
   test("the memoized schema follows the files: an added column reaches the next session") {
     val dir = Files.createTempDirectory("graft_open_cols").toString
     Seq((1L, "a")).toDF("id", "tag").write.parquet(s"$dir/probe.parquet")
