@@ -46,8 +46,9 @@ object Graft {
     * second variable). */
   val hist: _root_.graft.operators.Histogram.type = _root_.graft.operators.Histogram
 
-  /** Dense-array fast count kernels for the hot unweighted 1-D/2-D cases
-    * (columnar-scan consumers, executor tree-merge). */
+  /** Alias kept for the former fast count kernels: `histogram1d` /
+    * `histogram2d` are `hist`'s dense form, which runs the same dense
+    * kernel. */
   val fastHist: _root_.graft.operators.FastHist.type = _root_.graft.operators.FastHist
 
   /** Equal-frequency (quantile) axes: exact rank edges below a row

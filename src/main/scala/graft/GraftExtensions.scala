@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{GramHashes, HeavyHitters, MinhashSig, RepetitionStats, SimhashSig, SortedIntersectCount, VecDot, VecDotFD}
-import graft.operators.{HistVectorAgg, HistVectorDecAgg}
+import graft.operators.{DenseHistogramStrategy, HistVectorAgg, HistVectorDecAgg}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -18,14 +18,21 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *  - sorted_intersect_count(a, b)       |A ∩ B| of sorted long arrays
   *  - gram_hashes(text, salt, k)         sorted distinct k-gram hash set
   *  - hist_vector(idx, w, nBins, flow)   dense histogram vector aggregate
+  *
+  * It also injects [[graft.operators.DenseHistogramStrategy]], the planner
+  * of `Histogram`'s dense kernel. `Histogram` installs that strategy on
+  * any session it runs on, so sessions built without these extensions
+  * plan the kernel as well.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions._
 
-  override def apply(e: SparkSessionExtensions): Unit =
+  override def apply(e: SparkSessionExtensions): Unit = {
     builders.foreach { case (name, usage, b) =>
       e.injectFunction((FunctionIdentifier(name), info(name, usage), b))
     }
+    e.injectPlannerStrategy(_ => DenseHistogramStrategy)
+  }
 }
 
 object GraftExtensions {

@@ -1,313 +1,20 @@
 package graft.operators
 
-import graft.axes.{BinAxis, IdT, Regular}
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, ExprId}
-import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import graft.axes.BinAxis
+import org.apache.spark.sql.{Column, DataFrame}
 
-/** Dense-array histogram kernels for the hot unweighted count cases.
-  *
-  * The declarative plan (filter → project index → HashAggregate) pays a
-  * hash-table lookup per row to maintain ~nBins groups; these paths replace
-  * the aggregation with a per-partition primitive array increment — the
-  * preference-ladder (d) escape hatch, justified here because no built-in
-  * operator can express "aggregate into a dense array without per-row
-  * group lookup". Results are IDENTICAL to the declarative path (counts
-  * are order-independent), verified by spec and the q78/q81 oracle gates.
-  *
-  * Two kernels, picked by plan shape:
-  *
-  *  - COLUMNAR (the flagship flat-count path): when the physical plan of
-  *    `df.select(cols)` bottoms out in a single columnar scan (vectorized
-  *    parquet / in-memory cache) carrying the selected value columns as
-  *    bare double vectors, the kernel consumes the scan's ColumnarBatch
-  *    directly — no ColumnarToRow materialization, no per-row codegen
-  *    iterator, just branch-light index arithmetic per value. Restricted
-  *    to IdT Regular axes so the JVM-side index math `(x-lo)/span*n` is
-  *    the IDENTICAL IEEE expression the codegen'd BinAxis.index evaluates
-  *    (transforms like LN go through StrictMath in codegen but Math in
-  *    scala.math — last-ulp divergence risk — so they take the row path
-  *    whose index is computed by the very same codegen'd Project).
-  *
-  *  - ROW: any other input (expressions over columns, filters, non-IdT
-  *    transforms, non-Regular axes): filter by keepPred, project
-  *    BinAxis.index in a codegen'd Project, then increment per row.
-  *
-  * Partial merge is `treeAggregate(depth = 2)`: per-partition count arrays
-  * combine ON EXECUTORS in a tree, so the driver receives O(sqrt(P))
-  * pre-merged arrays instead of every partition's partial (an RDD.fold
-  * would stream all P arrays through one driver thread — at 100 TB with
-  * ~1M map partitions that is an 8 GB single-threaded funnel). No shuffle
-  * at any point; the result is a bins-grid LocalRelation.
-  */
+/** The former dense-array count kernels' entry points, now aliases of
+  * [[Histogram]]'s dense form: without dims, `Histogram` runs the same
+  * dense kernel ([[DenseHistogram]]) these calls used to run. Output is
+  * the dense bin grid without flow bins, `(binsCol…, cnt)`. */
 object FastHist {
 
-  /** Dense 1-D unweighted histogram: (binsCol, cnt) rows, same layout as
-    * Histogram.histogram(..., dense = true). */
-  def histogram1d(df: DataFrame, x: Column, ax: BinAxis): DataFrame = {
-    val counts = ax match {
-      case r: Regular if r.transform == IdT =>
-        columnarCounts(df, x, r).getOrElse(rowCounts(df, x, ax))
-      case _ => rowCounts(df, x, ax)
-    }
-    val spark = df.sparkSession
-    val nBins = ax.nBins
-    val rows = (0 until nBins).map(i => Row(i.toLong, counts(i).toDouble))
-    val schema = StructType(Seq(StructField("__i0", LongType, nullable = false),
-      StructField("cnt", DoubleType, nullable = false)))
-    // LocalRelation result (tiny): no 1-partition RDD round-trip
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, schema)
-      .select(ax.label(col("__i0")).as(ax.binsCol,
-        graft.axes.AxisMetadata.toMetadata(ax)), col("cnt"))
-  }
+  /** Dense 1-D histogram: `Histogram.histogram(..., dense = true)`. */
+  def histogram1d(df: DataFrame, x: Column, ax: BinAxis): DataFrame =
+    Histogram.histogram(df, x, ax, opts = HistOptions(dense = true))
 
-  /** Dense 2-D unweighted histogram: (bins1, bins2, cnt) over the full
-    * bin grid, same layout as Histogram.histogramdd(..., dense = true).
-    * One flat n1*n2 count array per partition — the bin pair becomes a
-    * single array offset, no composite grouping key anywhere. */
+  /** Dense 2-D histogram: `Histogram.histogram2d(..., dense = true)`. */
   def histogram2d(df: DataFrame, x1: Column, ax1: BinAxis,
-      x2: Column, ax2: BinAxis): DataFrame = {
-    val counts = (ax1, ax2) match {
-      case (r1: Regular, r2: Regular)
-          if r1.transform == IdT && r2.transform == IdT =>
-        columnarCounts2d(df, x1, r1, x2, r2)
-          .getOrElse(rowCounts2d(df, x1, ax1, x2, ax2))
-      case _ => rowCounts2d(df, x1, ax1, x2, ax2)
-    }
-    val spark = df.sparkSession
-    val n1 = ax1.nBins
-    val n2 = ax2.nBins
-    val rows = for { i1 <- 0 until n1; i2 <- 0 until n2 }
-      yield Row(i1.toLong, i2.toLong, counts(i1 * n2 + i2).toDouble)
-    val schema = StructType(Seq(StructField("__i0", LongType, nullable = false),
-      StructField("__i1", LongType, nullable = false),
-      StructField("cnt", DoubleType, nullable = false)))
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, schema)
-      .select(ax1.label(col("__i0")).as(ax1.binsCol,
-          graft.axes.AxisMetadata.toMetadata(ax1)),
-        ax2.label(col("__i1")).as(ax2.binsCol,
-          graft.axes.AxisMetadata.toMetadata(ax2)),
-        col("cnt"))
-  }
-
-  /** Executor-side tree merge of per-partition count arrays. */
-  private def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < a.length) { a(i) += b(i); i += 1 }
-    a
-  }
-
-  /** Row kernel: index computed by the codegen'd BinAxis.index Project
-    * (bit-identical to the declarative path by construction), counted into
-    * a primitive array per partition. */
-  private[graft] def rowCounts(df: DataFrame, x: Column, ax: BinAxis): Array[Long] = {
-    val nBins = ax.nBins
-    val idxDf = df
-      .filter(ax.keepPred(x, includeUnder = false, includeOver = false))
-      .select(ax.index(x).as("__i"))
-    idxDf.queryExecution.toRdd.treeAggregate(new Array[Long](nBins))(
-      (buf, r) => {
-        if (!r.isNullAt(0)) {
-          val i = r.getLong(0)
-          if (i >= 0 && i < nBins) buf(i.toInt) += 1L
-        }
-        buf
-      },
-      merge _, depth = 2)
-  }
-
-  /** 2-D row kernel: both indices from one codegen'd Project, flat offset
-    * i1*n2 + i2 into a single array. */
-  private[graft] def rowCounts2d(df: DataFrame, x1: Column, ax1: BinAxis,
-      x2: Column, ax2: BinAxis): Array[Long] = {
-    val n1 = ax1.nBins
-    val n2 = ax2.nBins
-    val idxDf = df
-      .filter(ax1.keepPred(x1, includeUnder = false, includeOver = false) &&
-        ax2.keepPred(x2, includeUnder = false, includeOver = false))
-      .select(ax1.index(x1).as("__i1"), ax2.index(x2).as("__i2"))
-    idxDf.queryExecution.toRdd.treeAggregate(new Array[Long](n1 * n2))(
-      (buf, r) => {
-        if (!r.isNullAt(0) && !r.isNullAt(1)) {
-          val i1 = r.getLong(0)
-          val i2 = r.getLong(1)
-          if (i1 >= 0 && i1 < n1 && i2 >= 0 && i2 < n2)
-            buf((i1 * n2 + i2).toInt) += 1L
-        }
-        buf
-      },
-      merge _, depth = 2)
-  }
-
-  /** Walk past codegen/rename-only nodes to a columnar scan, resolving
-    * each requested output attribute to its position in the scan's output.
-    * Projects may only RENAME (bare attributes / aliases of attributes) —
-    * so the scan vectors hold the very values of the selection — and every
-    * resolved column must be a double vector. */
-  private def columnarScan(plan: SparkPlan): Option[(SparkPlan, Array[Int])] = {
-    def walk(p: SparkPlan, ids: Seq[ExprId]): Option[(SparkPlan, Array[Int])] =
-      p match {
-        case w: WholeStageCodegenExec => walk(w.child, ids)
-        case i: InputAdapter => walk(i.child, ids)
-        case c: ColumnarToRowExec => walk(c.child, ids)
-        case pr: ProjectExec =>
-          val mapped = ids.map { id =>
-            pr.projectList.find(_.exprId == id) match {
-              case Some(a: AttributeReference) => Some(a.exprId)
-              case Some(al: Alias) => al.child match {
-                case ar: AttributeReference => Some(ar.exprId)
-                case _ => None
-              }
-              case _ => None
-            }
-          }
-          if (mapped.forall(_.isDefined)) walk(pr.child, mapped.map(_.get))
-          else None
-        case s if s.supportsColumnar =>
-          val pos = ids.map(id => s.output.indexWhere(_.exprId == id))
-          if (pos.forall(i => i >= 0 && s.output(i).dataType == DoubleType))
-            Some((s, pos.toArray))
-          else None
-        case _ => None
-      }
-    walk(plan, plan.output.map(_.exprId))
-  }
-
-  /** Columnar 1-D kernel for IdT Regular axes: consume the scan's
-    * ColumnarBatch vector directly. Returns None when the plan isn't a
-    * bare columnar scan of the value column (the row kernel then owns
-    * correctness). The index math mirrors Regular.index/keepPred exactly:
-    * keep x in [lo, hi) — NaN fails `x >= lo` in Java just as it fails
-    * `x < hi` in Spark's NaN-largest ordering, either way dropped — then
-    * floor((x-lo)/span*n) clamped to [0, n-1]; after the keep test the
-    * scaled value is >= 0 and finite, so Math.floor == long truncation. */
-  private[graft] def columnarCounts(df: DataFrame, x: Column,
-      ax: Regular): Option[Array[Long]] = {
-    val valDf = df.select(x)
-    columnarScan(valDf.queryExecution.executedPlan).map { case (scan, pos) =>
-      val c0 = pos(0)
-      val n = ax.nBins
-      val lo = ax.lo
-      val hi = ax.hi
-      val span = hi - lo
-      val nD = n.toDouble
-      val nM1 = (n - 1).toLong
-      scan.executeColumnar().treeAggregate(new Array[Long](n))(
-        (buf, batch) => {
-          val v = batch.column(c0)
-          val m = batch.numRows()
-          v match {
-            case w: org.apache.spark.sql.execution.vectorized.WritableColumnVector
-                if !w.hasNull && !w.hasDictionary =>
-              // bulk-copy into a primitive array: one arraycopy, then a
-              // tight monomorphic loop (no per-element virtual call)
-              val arr = w.getDoubles(0, m)
-              var i = 0
-              while (i < m) {
-                val xv = arr(i)
-                if (xv >= lo && xv < hi) {
-                  var b = ((xv - lo) / span * nD).toLong
-                  if (b > nM1) b = nM1
-                  buf(b.toInt) += 1L
-                }
-                i += 1
-              }
-            case _ =>
-              var i = 0
-              if (v.hasNull) {
-                while (i < m) {
-                  if (!v.isNullAt(i)) {
-                    val xv = v.getDouble(i)
-                    if (xv >= lo && xv < hi) {
-                      var b = ((xv - lo) / span * nD).toLong
-                      if (b > nM1) b = nM1
-                      buf(b.toInt) += 1L
-                    }
-                  }
-                  i += 1
-                }
-              } else {
-                while (i < m) {
-                  val xv = v.getDouble(i)
-                  if (xv >= lo && xv < hi) {
-                    var b = ((xv - lo) / span * nD).toLong
-                    if (b > nM1) b = nM1
-                    buf(b.toInt) += 1L
-                  }
-                  i += 1
-                }
-              }
-          }
-          buf
-        },
-        merge _, depth = 2)
-    }
-  }
-
-  /** Columnar 2-D kernel: same contract as the 1-D form, two vectors per
-    * batch, one flat array offset per kept pair. A null in EITHER column
-    * drops the row (the conjunctive keepPred's null semantics). */
-  private[graft] def columnarCounts2d(df: DataFrame, x1: Column, ax1: Regular,
-      x2: Column, ax2: Regular): Option[Array[Long]] = {
-    val valDf = df.select(x1, x2)
-    columnarScan(valDf.queryExecution.executedPlan).map { case (scan, pos) =>
-      val (c1, c2) = (pos(0), pos(1))
-      val n1 = ax1.nBins; val lo1 = ax1.lo; val hi1 = ax1.hi
-      val sp1 = hi1 - lo1; val n1D = n1.toDouble; val n1M1 = (n1 - 1).toLong
-      val n2 = ax2.nBins; val lo2 = ax2.lo; val hi2 = ax2.hi
-      val sp2 = hi2 - lo2; val n2D = n2.toDouble; val n2M1 = (n2 - 1).toLong
-      scan.executeColumnar().treeAggregate(new Array[Long](n1 * n2))(
-        (buf, batch) => {
-          val v1 = batch.column(c1)
-          val v2 = batch.column(c2)
-          val m = batch.numRows()
-          (v1, v2) match {
-            case (w1: org.apache.spark.sql.execution.vectorized.WritableColumnVector,
-                  w2: org.apache.spark.sql.execution.vectorized.WritableColumnVector)
-                if !w1.hasNull && !w1.hasDictionary &&
-                  !w2.hasNull && !w2.hasDictionary =>
-              // two bulk copies, then a tight primitive loop — per-element
-              // virtual calls would otherwise dominate the lean-scan case
-              val a1 = w1.getDoubles(0, m)
-              val a2 = w2.getDoubles(0, m)
-              var i = 0
-              while (i < m) {
-                val a = a1(i)
-                val b = a2(i)
-                if (a >= lo1 && a < hi1 && b >= lo2 && b < hi2) {
-                  var i1 = ((a - lo1) / sp1 * n1D).toLong
-                  if (i1 > n1M1) i1 = n1M1
-                  var i2 = ((b - lo2) / sp2 * n2D).toLong
-                  if (i2 > n2M1) i2 = n2M1
-                  buf((i1 * n2 + i2).toInt) += 1L
-                }
-                i += 1
-              }
-            case _ =>
-              val anyNull = v1.hasNull || v2.hasNull
-              var i = 0
-              while (i < m) {
-                if (!anyNull || (!v1.isNullAt(i) && !v2.isNullAt(i))) {
-                  val a = v1.getDouble(i)
-                  val b = v2.getDouble(i)
-                  if (a >= lo1 && a < hi1 && b >= lo2 && b < hi2) {
-                    var i1 = ((a - lo1) / sp1 * n1D).toLong
-                    if (i1 > n1M1) i1 = n1M1
-                    var i2 = ((b - lo2) / sp2 * n2D).toLong
-                    if (i2 > n2M1) i2 = n2M1
-                    buf((i1 * n2 + i2).toInt) += 1L
-                  }
-                }
-                i += 1
-              }
-          }
-          buf
-        },
-        merge _, depth = 2)
-    }
-  }
+      x2: Column, ax2: BinAxis): DataFrame =
+    Histogram.histogram2d(df, x1, ax1, x2, ax2, opts = HistOptions(dense = true))
 }

@@ -93,14 +93,13 @@ case class HistVectorAgg(
     copy(idx = c(0), weight = c(1))
 }
 
-/** Dense WEIGHTED histogram buffer: per-bin sums as DECIMAL(38,14)
-  * unscaled integers (BigInteger). Plain-double accumulation of weights is
-  * order-dependent (merge order varies with partitioning), violating the
-  * cross-engine / run-to-run determinism contract; integer accumulation of
-  * each weight's shortest-string decimal image (exactly Spark's
-  * double->DECIMAL(38,14) cast, see graft.util.Dec) is associative and
-  * exact, so eval() is bit-identical to the sparse path's
-  * Dec.exactDouble(sum(Dec.toDec(w))).
+/** Dense WEIGHTED histogram buffer: per-bin exact sums of each weight's
+  * DECIMAL(38,14) image ([[ExactSum]], the accumulator of the histogram
+  * kernel). Plain-double accumulation of weights is order-dependent
+  * (merge order varies with partitioning), violating the cross-engine /
+  * run-to-run determinism contract; exact integer accumulation is
+  * associative. Weights without an image (NULL, NaN, ±Inf, past precision
+  * 38) are skipped, as the sparse path's try_cast skips them.
   */
 case class HistVectorDecAgg(
     idx: Expression,
@@ -109,17 +108,18 @@ case class HistVectorDecAgg(
     flow: Boolean,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[java.math.BigInteger]] {
-  import java.math.{BigDecimal => JBD, BigInteger => JBI, RoundingMode}
+  extends TypedImperativeAggregate[ExactSum] {
+  import java.math.RoundingMode
 
   override def children: Seq[Expression] = Seq(idx, weight)
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 
-  override def createAggregationBuffer(): Array[JBI] =
-    Array.fill(nBins + 2)(JBI.ZERO)
+  @transient private lazy val memo = new ExactSum.Memo
 
-  override def update(buf: Array[JBI], row: InternalRow): Array[JBI] = {
+  override def createAggregationBuffer(): ExactSum = new ExactSum(nBins + 2)
+
+  override def update(buf: ExactSum, row: InternalRow): ExactSum = {
     val iv = idx.eval(row)
     if (iv != null) {
       val i = iv.asInstanceOf[Long]
@@ -128,65 +128,36 @@ case class HistVectorDecAgg(
         else if (i == -1) nBins
         else if (i == nBins) nBins + 1
         else -1 // out-of-protocol indices ignored
-      if (slot >= 0) {
-        val w = weight.eval(row) match {
-          case null => 0.0
-          case d: Double => d
-          case other => other.toString.toDouble
-        }
-        // Mirror of Spark's double->DECIMAL(38,14) cast: shortest string
-        // representation, then HALF_UP to scale 14 (graft.util.Dec.toDec).
-        // The cast yields NULL — row skipped — for non-finite weights and
-        // for values that overflow precision 38; diverging here (throwing)
-        // would break the documented bit-parity with the sparse path.
-        if (java.lang.Double.isFinite(w)) {
-          val d = new JBD(java.lang.Double.toString(w))
-            .setScale(14, RoundingMode.HALF_UP)
-          if (d.precision() <= 38) buf(slot) = buf(slot).add(d.unscaledValue())
-        }
+      if (slot >= 0) weight.eval(row) match {
+        case null => ()
+        case d: Double => buf.addDouble(slot, d, memo)
+        case other => buf.addDouble(slot, other.toString.toDouble, memo)
       }
     }
     buf
   }
 
-  override def merge(a: Array[JBI], b: Array[JBI]): Array[JBI] = {
-    var i = 0
-    while (i < a.length) { a(i) = a(i).add(b(i)); i += 1 }
-    a
-  }
+  override def merge(a: ExactSum, b: ExactSum): ExactSum = a.merge(b)
 
-  /** Exact decimal -> double, bit-identical to Dec.exactDouble /
-    * Oracle.exactDbl: toDouble(floor(s)) + toDouble((s-floor(s))*1e14)/1e14. */
-  override def eval(buf: Array[JBI]): Any = {
-    val out = new Array[Double]((if (flow) buf.length else nBins))
+  /** Exact decimal -> double, the Oracle.exactDbl sequence:
+    * toDouble(floor(s)) + toDouble((s-floor(s))*1e14)/1e14. */
+  override def eval(buf: ExactSum): Any = {
+    val out = new Array[Double](if (flow) buf.slots else nBins)
     var i = 0
     while (i < out.length) {
-      val s = new JBD(buf(i), 14)
-      val fl = s.setScale(0, RoundingMode.FLOOR)
-      out(i) = fl.longValueExact().toDouble +
-        s.subtract(fl).movePointRight(14).longValueExact().toDouble / 1.0e14
+      val s = buf.total(i)
+      if (s != null) {
+        val fl = s.setScale(0, RoundingMode.FLOOR)
+        out(i) = fl.longValueExact().toDouble +
+          s.subtract(fl).movePointRight(14).longValueExact().toDouble / 1.0e14
+      }
       i += 1
     }
     new GenericArrayData(out)
   }
 
-  override def serialize(buf: Array[JBI]): Array[Byte] = {
-    val parts = buf.map(_.toByteArray)
-    val bb = java.nio.ByteBuffer.allocate(parts.map(_.length + 4).sum)
-    parts.foreach { p => bb.putInt(p.length); bb.put(p) }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[JBI] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val out = new Array[JBI](nBins + 2)
-    var i = 0
-    while (i < out.length) {
-      val p = new Array[Byte](bb.getInt); bb.get(p)
-      out(i) = new JBI(p); i += 1
-    }
-    out
-  }
+  override def serialize(buf: ExactSum): Array[Byte] = ExactSum.toBytes(buf)
+  override def deserialize(bytes: Array[Byte]): ExactSum = ExactSum.fromBytes(bytes)
 
   override def withNewMutableAggBufferOffset(o: Int): HistVectorDecAgg =
     copy(mutableAggBufferOffset = o)

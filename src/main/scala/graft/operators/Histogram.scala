@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.axes.BinAxis
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -30,18 +30,33 @@ final case class HistOptions(
   *
   * Data model: one row per array element; the reference's "loop dims" (the
   * dimensions NOT flattened into the histogram, core.py:271-276) become
-  * GROUP BY columns (`dims`). The whole operator is a single declarative
-  * `groupBy(dims ++ binIdx).agg(sum)` — Catalyst plans it as partial
-  * (map-side) HashAggregate + one shuffle keyed by (dims, bins) + final
-  * HashAggregate, which is exactly the reference's Dask plan of per-chunk
-  * histograms + tree-reduce (core.py:411-464), but engine-managed. Shuffle
-  * volume is bounded by #groups x #bins x #map-partitions, never by input
-  * row count — the property that makes this hold at 100 TB.
+  * GROUP BY columns (`dims`).
   *
-  * Summation determinism: weighted sums and density totals are accumulated
-  * in DECIMAL(38,14) (exact, associative) and only cast back to double at
-  * the end, so results do not depend on partitioning / aggregation order —
-  * required both for the DuckDB oracle hash-compare and for run-to-run
+  * One aggregation step ([[binCounts]], shared with `HistStats`) feeds
+  * every call:
+  *  - Without dims, and with at most `DenseHistogram.MaxSlots` (64k) slots
+  *    in the grid Π(nBins + flow slots), the plan holds one
+  *    [[DenseHistogram]] node, planned by [[DenseHistogramStrategy]] as
+  *    one dense exec: each partition fills a flat slot array (straight
+  *    from the columnar scan for IdT `Regular` axes, else from the
+  *    codegen'd `BinAxis.index` projection), the partial arrays merge
+  *    without a shuffle, and the exec emits the sparse or the dense layout
+  *    itself. No shuffle, no hash aggregate, no densify join. This is the
+  *    reference's per-chunk fill + tree-reduce (core.py:411-464). The
+  *    strategy is installed on the DataFrame's session by the first call,
+  *    so sessions built without `GraftExtensions` run it too.
+  *  - With dims (or a larger grid), a declarative
+  *    `groupBy(dims ++ binIdx).agg(...)`: partial (map-side) aggregate,
+  *    one shuffle keyed by (dims, bins), final aggregate. Shuffle volume is
+  *    bounded by #groups x #bins x #map-partitions, never by input row
+  *    count.
+  *
+  * Summation determinism: weighted sums are exact sums of each weight's
+  * DECIMAL(38,14) image ([[ExactSum]] on both paths, bit-identical to
+  * `sum(Dec.toDec(w))`), and density totals are accumulated in
+  * DECIMAL(38,14); both are cast back to double only at the end, so
+  * results do not depend on partitioning / aggregation order — required
+  * both for the DuckDB oracle hash-compare and for run-to-run
   * reproducibility on a cluster.
   */
 object Histogram {
@@ -100,38 +115,7 @@ object Histogram {
     require(specs.nonEmpty)
     val idxNames = specs.indices.map(k => s"__i$k")
     val dimCols = dims.map(col)
-
-    // Sparse-output equivalence of boost flow semantics: an axis without the
-    // underflow trait discards x < lo entirely; with the trait but flow=false
-    // the bin exists but is not returned — identical to dropping the rows.
-    // Filter FIRST, on the raw value (keepPred: one or two comparisons),
-    // THEN project the bin index — the index's when/floor chain runs exactly
-    // once per kept row instead of once per pushed-down range predicate.
-    val keep = specs.map { case (c, ax) =>
-      ax.keepPred(c, opts.flow && ax.underflow, opts.flow && ax.overflow)
-    }.reduce(_ && _)
-
-    val projected = df.filter(keep).select(
-      dimCols ++
-        specs.zipWithIndex.map { case ((c, ax), k) => ax.index(c).as(idxNames(k)) } ++
-        opts.weight.map(w => graft.util.Dec.toDec(w).as("__w")).toSeq: _*)
-
-    val cntExpr = opts.weight match {
-      case Some(_) => graft.util.Dec.exactDouble(sum(col("__w")))
-      case None if opts.intStorage => count(lit(1))
-      case None => count(lit(1)).cast("double")
-    }
-
-    val sparse = projected
-      .groupBy((dims ++ idxNames).map(col): _*)
-      .agg(cntExpr.as("cnt"))
-
-    // densify keys come from the PRE-filter relation (df, not projected):
-    // a group whose values all fall outside the axis still exists with an
-    // all-zero histogram (the reference keeps every loop-dim coordinate)
-    val grouped =
-      if (opts.dense) densify(sparse, df, specs, idxNames, dims, opts)
-      else sparse
+    val grouped = binCounts(df, specs, dims, opts)
 
     val valued =
       if (opts.density) {
@@ -157,6 +141,57 @@ object Histogram {
           ax.label(col(idxNames(k)))
             .as(ax.binsCol, graft.axes.AxisMetadata.toMetadata(ax))
         } :+ col(valueName): _*)
+  }
+
+  /** The one aggregation step behind [[histogramdd]] and the
+    * `HistStats` accessors: (dims…, `__i0`…, `cnt`), sparse or dense —
+    * the dense kernel, or with dims (or a larger grid) the declarative
+    * aggregate, whose rows are filtered on the raw value (keepPred: one or
+    * two comparisons) before the bin index is projected once per kept row,
+    * and which a join densifies. */
+  private[graft] def binCounts(df: DataFrame, specs: Seq[(Column, BinAxis)],
+      dims: Seq[String], opts: HistOptions): DataFrame = {
+    val idxNames = specs.indices.map(k => s"__i$k")
+    val kernel =
+      if (dims.nonEmpty) None
+      else DenseHistogram.counts(df, specs, opts.flow, opts.weight, opts.dense)
+    kernel match {
+      case Some(h) =>
+        val cnt =
+          if (opts.weight.isDefined) {
+            val c = graft.util.Dec.exactDouble(col("__s"))
+            if (opts.dense) coalesce(c, lit(0.0)) else c
+          } else if (opts.intStorage) col("n")
+          else col("n").cast("double")
+        h.select(idxNames.map(col) :+ cnt.as("cnt"): _*)
+      case None =>
+        // Sparse-output equivalence of boost flow semantics: an axis
+        // without the underflow trait discards x < lo entirely; with the
+        // trait but flow=false the bin exists but is not returned —
+        // identical to dropping the rows.
+        val keep = specs.map { case (c, ax) =>
+          ax.keepPred(c, opts.flow && ax.underflow, opts.flow && ax.overflow)
+        }.reduce(_ && _)
+        val projected = ExactSum.weightInput(df.filter(keep).select(
+          dims.map(col) ++
+            specs.zipWithIndex.map { case ((c, ax), k) => ax.index(c).as(idxNames(k)) } ++
+            opts.weight.map(_.as("__w")).toSeq: _*), "__w")
+        val cntExpr = opts.weight match {
+          case Some(_) => graft.util.Dec.exactDouble(GraftShim.column(
+            ExactSumAgg(GraftShim.expression(col("__w")),
+              df.sparkSession.sessionState.conf.ansiEnabled).toAggregateExpression()))
+          case None if opts.intStorage => count(lit(1))
+          case None => count(lit(1)).cast("double")
+        }
+        val sparse = projected
+          .groupBy((dims ++ idxNames).map(col): _*)
+          .agg(cntExpr.as("cnt"))
+        // densify keys come from the PRE-filter relation (df, not
+        // projected): a group whose values all fall outside the axis
+        // still exists with an all-zero histogram (the reference keeps
+        // every loop-dim coordinate)
+        if (opts.dense) densify(sparse, df, specs, idxNames, dims, opts) else sparse
+    }
   }
 
   /** Profile histogram (the ROOT-TProfile shape boost-histogram expresses

@@ -37,21 +37,21 @@ object Tables extends org.apache.spark.internal.Logging {
   private[graft] def forget(path: String): Unit = schemas.remove(path)
 
   /** The files behind a parquet path: (path, length, mtime) of every
-    * non-hidden file, from one recursive listing; empty when the path
-    * does not exist (the read then raises Spark's own error). */
+    * non-hidden file, from a `listStatus` walk of its directories; empty
+    * when the path does not exist (the read then raises Spark's own
+    * error). A recursive `listFiles` would also build each file's
+    * located status and load its permissions. */
   private[graft] def fingerprint(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
     val root = new org.apache.hadoop.fs.Path(path)
-    val files = Seq.newBuilder[(String, Long, Long)]
-    try {
-      val it = root.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(root, true)
-      while (it.hasNext) {
-        val f = it.next()
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(p: org.apache.hadoop.fs.Path): Seq[(String, Long, Long)] =
+      fs.listStatus(p).toSeq.flatMap { f =>
         val name = f.getPath.getName
-        if (!name.startsWith("_") && !name.startsWith("."))
-          files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+        if (f.isDirectory) walk(f.getPath)
+        else if (name.startsWith("_") || name.startsWith(".")) Nil
+        else Seq((f.getPath.toString, f.getLen, f.getModificationTime))
       }
-    } catch { case _: java.io.FileNotFoundException => () }
-    files.result().sorted
+    try walk(root).sorted catch { case _: java.io.FileNotFoundException => Nil }
   }
 
   /** Normalize events.ts to epoch-nanos long regardless of how the

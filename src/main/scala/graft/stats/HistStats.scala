@@ -33,23 +33,14 @@ object HistStats {
 
   private def decSum(e: Column): Column = graft.util.Dec.sumDec(e)
 
-  /** Indexed no-flow histogram + left edge `l` and width `w` columns.
-    * Filter on the raw value (keepPred), then project the index once —
-    * same single-evaluation shape as Histogram.histogramdd. */
+  /** Indexed no-flow histogram + left edge `l` and width `w` columns:
+    * Histogram's own aggregation step (the dense kernel without dims). */
   def base(df: DataFrame, x: Column, ax: BinAxis, dims: Seq[String],
-      weight: Option[Column] = None): DataFrame = {
-    val cnt = weight match {
-      case Some(_) => graft.util.Dec.exactDouble(sum(col("__w")))
-      case None => count(lit(1)).cast("double")
-    }
-    df.filter(ax.keepPred(x, includeUnder = false, includeOver = false))
-      .select(dims.map(col) ++ Seq(ax.index(x).as("__i0")) ++
-        weight.map(w => graft.util.Dec.toDec(w).as("__w")).toSeq: _*)
-      .groupBy((dims :+ "__i0").map(col): _*)
-      .agg(cnt.as("cnt"))
+      weight: Option[Column] = None): DataFrame =
+    graft.operators.Histogram.binCounts(df, Seq(x -> ax), dims,
+        graft.operators.HistOptions(weight = weight))
       .withColumn("l", ax.label(col("__i0")))
       .withColumn("w", ax.width(col("__i0")))
-  }
 
   private def grouped(b: DataFrame, dims: Seq[String])(aggs: Column*): DataFrame =
     if (dims.isEmpty) b.agg(aggs.head, aggs.tail: _*)

@@ -38,6 +38,8 @@ object DecRoutes {
       files = Set(
         "graft/stats/HistStats.scala",
         "graft/operators/Histogram.scala",
+        "graft/operators/ExactSum.scala",
+        "graft/operators/DenseHistogram.scala",
         "graft/operators/HistVectorAgg.scala",
         "graft/streaming/StreamingHist.scala",
         "graft/pipeline/Similarity.scala",

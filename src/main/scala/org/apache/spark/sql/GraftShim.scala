@@ -2,19 +2,35 @@ package org.apache.spark.sql
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Bridge between Catalyst Expressions and the public Column API.
   *
   * Spark 4's Column wraps a ColumnNode rather than an Expression, and the
   * converter (classic.ExpressionUtils) is private[sql]; this shim exposes
-  * just the two conversions — the same approach used by public Spark
+  * just the two conversions, `Dataset.ofRows` and the decimal `SUM`
+  * overflow error — the same approach used by public Spark
   * extension libraries. It also reaches the session's function registry
   * and the blocking form of `Broadcast.destroy`.
   */
 object GraftShim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A DataFrame over a logical plan (`Dataset.ofRows` is private[sql]). */
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `d` at (precision, scale) the way Spark's grouped decimal `SUM`
+    * returns it: NULL when it does not fit, or under ANSI Spark's own
+    * "overflow in sum of decimals" error (private[sql]). */
+  def sumResult(d: org.apache.spark.sql.types.Decimal, precision: Int, scale: Int,
+      ansi: Boolean): org.apache.spark.sql.types.Decimal =
+    if (d.changePrecision(precision, scale)) d
+    else if (ansi) throw org.apache.spark.sql.errors.QueryExecutionErrors
+      .overflowInSumOfDecimalError(null, "try_sum")
+    else null
 
   /** Register a temp SQL function on an EXISTING session (withExtensions
     * only applies at session build time; the registry is private[sql]). */

@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   *  - every registered route (DecRoutes) is driven with the boundary
   *    inputs that broke round 11 — sub-unit squares, >2^53 products,
   *    >2^53 quantized sums — and must reproduce BigDecimal/BigInt truth
-  *    exactly;
+  *    exactly; the dec38-14 inputs also run through the histogram
+  *    kernel's accumulator (ExactSum), which must match the string route;
   *  - each case also asserts its SEEDED REGRESSION (the naive double or
   *    dec14-string form) actually diverges on the same input — a gate
   *    that cannot go red gates nothing;
@@ -21,6 +22,21 @@ import org.apache.spark.sql.functions._
   */
 class DecBoundarySpec extends SparkSpec {
   import spark.implicits._
+
+  /** `vals` through the histogram kernel's accumulator, one slot. */
+  private def exactSum(vals: Seq[Double]): graft.operators.ExactSum = {
+    val acc = new graft.operators.ExactSum(1)
+    val memo = new graft.operators.ExactSum.Memo
+    vals.foreach(acc.addDouble(0, _, memo))
+    acc
+  }
+
+  /** The bin value of a one-bin histogram weighted by `vals`. */
+  private def weightedOneBin(vals: Seq[Double]): Double =
+    graft.operators.Histogram.histogram(vals.toDF("v"), lit(0.5),
+      graft.axes.Regular("b", 1, 0.0, 1.0),
+      opts = graft.operators.HistOptions(weight = Some(col("v"))))
+      .collect()(0).getDouble(1)
 
   test("registry scan: every route consumer in src/main is registered") {
     val root = java.nio.file.Paths.get("src/main/scala")
@@ -61,6 +77,10 @@ class DecBoundarySpec extends SparkSpec {
     val truth = vals.map(v => BigDecimal(v)).sum.toDouble
     val got = vals.toDF("v").agg(Dec.sumDec(col("v"))).collect()(0).getDouble(0)
     assert(got == truth, s"sumDec $got != exact $truth")
+    // the histogram kernel's accumulator: exact images, exact total, and
+    // the same double through a weighted one-bin histogram
+    assert(BigDecimal(exactSum(vals).total(0)) == vals.map(v => BigDecimal(v)).sum)
+    assert(weightedOneBin(vals) == got)
     // seeded regression: the naive double sum diverges on this input
     val naive = vals.toDF("v").agg(sum(col("v"))).collect()(0).getDouble(0)
     assert(naive != truth, "double sum did NOT diverge — boundary case lost its power")
@@ -78,6 +98,11 @@ class DecBoundarySpec extends SparkSpec {
     assert(viaDec != truth,
       "dec14 reproduced sub-unit squares exactly — scope doc is stale, " +
         "re-derive the boundary")
+    // the kernel's accumulator rounds each square at digit 14 exactly
+    // like the string route: same (out-of-scope) sum, not truth
+    assert(weightedOneBin(squares) == viaDec)
+    assert(BigDecimal(exactSum(squares).total(0)) ==
+      squares.map(v => BigDecimal(v).setScale(14, BigDecimal.RoundingMode.HALF_UP)).sum)
     // and the IN-scope route for the same computation: quantize the
     // DELTAS to exact 1e-9-grid longs, square as integers (<= 2^63),
     // sum in decimal(38,0), divide once — exact (the q335 fix shape)
