@@ -22,7 +22,9 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * It also injects [[graft.operators.DenseHistogramStrategy]], the planner
   * of `Histogram`'s dense kernel. `Histogram` installs that strategy on
   * any session it runs on, so sessions built without these extensions
-  * plan the kernel as well.
+  * plan the kernel as well; the injected copy serves a session that reads
+  * a kernel node (a global temp view of a histogram) before its own first
+  * `Histogram` call.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions._

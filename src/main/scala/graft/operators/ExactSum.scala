@@ -3,11 +3,8 @@ package graft.operators
 import graft.util.Dec
 import java.math.{BigDecimal => JBD, BigInteger => JBI, RoundingMode}
 import org.apache.spark.sql.{DataFrame, GraftShim}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{DataType, Decimal, DoubleType}
+import org.apache.spark.sql.types.{Decimal, DoubleType}
 
 /** Exact per-slot weight sums, equal to Spark's `sum(Dec.toDec(w))` in
   * every slot.
@@ -156,46 +153,4 @@ object ExactSum {
     }
     s
   }
-}
-
-/** `SUM` of a weight's DECIMAL(38,14) image as an aggregate function: the
-  * value of `sum(Dec.toDec(w))` computed with [[ExactSum]]. `child` is a
-  * double, or already a DECIMAL(38,14). `ansi` is the session's mode when
-  * the call was planned, as for Spark's `Sum`. */
-case class ExactSumAgg(
-    child: Expression,
-    ansi: Boolean,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ExactSum] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = true
-  override def dataType: DataType = Dec.D
-  override def prettyName: String = "exact_sum"
-
-  @transient private lazy val memo = new ExactSum.Memo
-
-  override def createAggregationBuffer(): ExactSum = new ExactSum(1)
-
-  override def update(buf: ExactSum, row: InternalRow): ExactSum = {
-    child.eval(row) match {
-      case null => ()
-      case d: Double => buf.addDouble(0, d, memo)
-      case d: Decimal => buf.addDecimal(0, d)
-    }
-    buf
-  }
-
-  override def merge(a: ExactSum, b: ExactSum): ExactSum = a.merge(b)
-  override def eval(buf: ExactSum): Any = buf.result(0, ansi)
-  override def serialize(buf: ExactSum): Array[Byte] = ExactSum.toBytes(buf)
-  override def deserialize(bytes: Array[Byte]): ExactSum = ExactSum.fromBytes(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): ExactSumAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): ExactSumAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): ExactSumAgg =
-    copy(child = c(0))
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.axes.BinAxis
-import org.apache.spark.sql.{Column, DataFrame, GraftShim}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -52,9 +52,10 @@ final case class HistOptions(
   *    count.
   *
   * Summation determinism: weighted sums are exact sums of each weight's
-  * DECIMAL(38,14) image ([[ExactSum]] on both paths, bit-identical to
-  * `sum(Dec.toDec(w))`), and density totals are accumulated in
-  * DECIMAL(38,14); both are cast back to double only at the end, so
+  * DECIMAL(38,14) image (`sum(Dec.toDec(w))` on the declarative path,
+  * [[ExactSum]] in the kernel, bit-identical to it), and density totals
+  * are accumulated in DECIMAL(38,14); both are cast back to double only
+  * at the end, so
   * results do not depend on partitioning / aggregation order — required
   * both for the DuckDB oracle hash-compare and for run-to-run
   * reproducibility on a cluster.
@@ -172,14 +173,12 @@ object Histogram {
         val keep = specs.map { case (c, ax) =>
           ax.keepPred(c, opts.flow && ax.underflow, opts.flow && ax.overflow)
         }.reduce(_ && _)
-        val projected = ExactSum.weightInput(df.filter(keep).select(
+        val projected = df.filter(keep).select(
           dims.map(col) ++
             specs.zipWithIndex.map { case ((c, ax), k) => ax.index(c).as(idxNames(k)) } ++
-            opts.weight.map(_.as("__w")).toSeq: _*), "__w")
+            opts.weight.map(w => graft.util.Dec.toDec(w).as("__w")).toSeq: _*)
         val cntExpr = opts.weight match {
-          case Some(_) => graft.util.Dec.exactDouble(GraftShim.column(
-            ExactSumAgg(GraftShim.expression(col("__w")),
-              df.sparkSession.sessionState.conf.ansiEnabled).toAggregateExpression()))
+          case Some(_) => graft.util.Dec.exactDouble(sum(col("__w")))
           case None if opts.intStorage => count(lit(1))
           case None => count(lit(1)).cast("double")
         }

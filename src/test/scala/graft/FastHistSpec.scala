@@ -96,7 +96,8 @@ class FastHistSpec extends SparkSpec
   }
 
   test("treeAggregate merge is correct across a high partition count") {
-    // 64 partitions on local[4]: many partial arrays, multi-level merge
+    // 64 partitions on local[4]: many partial arrays, merged on the driver
+    // (HistKernelSpec covers the executor tree merge past the bound)
     val df = spark.range(0, 20000).select((col("id") % 40 / lit(10.0)).as("x"))
       .repartition(64)
     val (fast, _) = run(FastHist.histogram1d(df, col("x"), ax))

@@ -181,6 +181,34 @@ class HistKernelSpec extends SparkSpec
     assert(math.abs(sums(0) - 184467.45) < 1e-9 && math.abs(sums(1) + 184467.44) < 1e-9)
   }
 
+  test("partials past the driver-merge bound tree-merge on executors, spills included") {
+    // 129 partitions x a 256x256 grid = 8.45M partition-slots, past the
+    // 8M bound: the kernel's job gains the tree level's shuffle stage
+    val axx = Regular("x", 256, 0.0, 256.0)
+    val axy = Regular("y", 256, 0.0, 256.0)
+    // the first two rows of each 200-row partition put 60000.5 each into
+    // slot (0, 0): each partition's slot spills past a long, and so
+    // does their merge
+    val first = col("id") % 200 < 2
+    val df = spark.range(0, 129 * 200, 1, 129).select(
+      when(first, lit(0.5)).otherwise(col("id") * 7 % 256 + 0.25).as("x"),
+      when(first, lit(0.5)).otherwise(col("id") / 256 % 256).as("y"),
+      when(first, lit(60000.5)).otherwise(col("id") % 13 * 0.1 - 0.35).as("w"))
+    val sc = spark.sparkContext
+    for (weight <- Seq(None, Some(col("w")))) {
+      val group = s"kernel-tree-merge-${weight.isDefined}"
+      val h = Histogram.histogram2d(df, col("x"), axx, col("y"), axy,
+        opts = HistOptions(weight = weight))
+      sc.setJobGroup(group, group)
+      val got = try bits(h) finally sc.clearJobGroup()
+      val stages = sc.statusTracker.getJobIdsForGroup(group).toSeq
+        .flatMap(sc.statusTracker.getJobInfo(_)).map(_.stageIds.length)
+      assert(stages == Seq(2), "one job: the partial fills, then the tree level")
+      assert(got == bits(DeclarativeHistogram.histogramdd(df,
+        Seq(col("x") -> axx, col("y") -> axy), opts = HistOptions(weight = weight))))
+    }
+  }
+
   test("precision-38 overflow: an error under ANSI, NULL otherwise, as SUM") {
     val ax = Regular("x", 2, 0.0, 2.0)
     val df = Seq((0.5, 9e23), (0.5, 9e23), (1.5, 1.0)).toDF("x", "w")
@@ -249,8 +277,16 @@ class HistKernelSpec extends SparkSpec
       SparkSession.setActiveSession(spark)
     }
     assert(graftSession ne spark)
-    assert(graftSession.sessionState.planner.strategies
-      .contains(graft.operators.DenseHistogramStrategy))
     assert(planned(graftSession).contains("DenseHistogramExec"))
+    // a new session reads a kernel node from a global view before any
+    // Histogram call of its own: only the extension's strategy plans it
+    Histogram.histogram(graftSession.range(4).select(col("id").cast("double").as("x")),
+      col("x"), ax).createOrReplaceGlobalTempView("kernel_hist")
+    val fresh = graftSession.newSession()
+    try {
+      val viewed = fresh.table("global_temp.kernel_hist")
+      assert(viewed.collect().map(_.getDouble(1)).sum == 4.0)
+      assert(viewed.queryExecution.executedPlan.toString.contains("DenseHistogramExec"))
+    } finally fresh.catalog.dropGlobalTempView("kernel_hist")
   }
 }
