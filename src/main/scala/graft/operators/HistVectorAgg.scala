@@ -182,20 +182,6 @@ object HistVectorAgg {
       HistVectorDecAgg(GraftShim.expression(idx), GraftShim.expression(weight), nBins, flow)
         .toAggregateExpression())
 
-  private val VectorMinBins = 256
-  /** Physical-strategy chooser for dense 1-D histograms: many bins favor
-    * the vector aggregate (one array per group per map task through the
-    * shuffle); few bins favor the plain groupBy (per-bin rows compress to
-    * nothing and stay fully codegen'd). Threshold ([[VectorMinBins]]) from
-    * local benchmarks; both paths return identical dense output — unweighted
-    * counts are exact in double, weighted sums go through the decimal vector
-    * aggregate. */
-  def autoDense(df: DataFrame, x: Column, ax: BinAxis, dims: Seq[String],
-      weight: Option[Column] = None): DataFrame =
-    if (ax.nBins >= VectorMinBins) histogram(df, x, ax, dims, weight)
-    else Histogram.histogram(df, x, ax, dims,
-      HistOptions(weight = weight, dense = true))
-
   /** Dense-path histogram: groupBy(dims).agg(vector) then posexplode back to
     * the same sparse row layout as Histogram.histogramdd(dense = true).
     * Shuffle volume: one (nBins+2)-element array per group per map task.

@@ -2,7 +2,7 @@ package graft.stats
 
 import graft.axes.BinAxis
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -409,15 +409,10 @@ object HistStats {
     val joined = h.select(dims.map(col) ++
         Seq(col(ax.binsCol), col("cnt")): _*)
       .join(broadcast(ov), Seq(ax.binsCol))
-      .withColumn("__t", col("cnt") * col("__frac"))
-    val terms = sort_array(collect_list(struct(
-      col("__si").as("k"), col("__t").as("t"))))
-    val folded = grouped(joined, dims :+ "__dl")(terms.as("__terms"))
-    def fold(arr: Column): Column =
-      aggregate(arr, lit(0.0), (acc, x) => acc + x.getField("t"))
-    folded.select(dims.map(col) ++ Seq(
-      col("__dl").as(s"${ax.name}_regrid_bins"),
-      fold(col("__terms")).as("cnt")): _*)
+    binTerms(joined, dims :+ "__dl", col("__si"), "t" -> col("cnt") * col("__frac"))
+      .select(dims.map(col) ++ Seq(
+        col("__dl").as(s"${ax.name}_regrid_bins"),
+        foldTerms().as("cnt")): _*)
   }
 
   /** Bin areas over multiple axes: the cross product of the axes' bin
@@ -444,6 +439,132 @@ object HistStats {
     * accessor.is_normalized, accessor.py:132. */
   def isNormalized(hist: DataFrame): Boolean = hist.columns.contains("pdf")
 
+  /** Two count histograms over ONE axis, aligned bin by bin: the one
+    * comparison step under the drift family ([[drift]], [[psi]],
+    * [[pull]], [[emd]], [[cvm]], [[ks]], [[hellinger]], [[jsDivergence]]
+    * and the `*From` forms). `rows` carries dims, the bin label
+    * (`ax.binsCol`) and the side counts `__ca`/`__cb`, 0 where a side
+    * lacks the bin. The contracts every member shares:
+    *
+    *  - pointwise metrics align on the FULL-OUTER join of the occupied
+    *    bins ([[outerAligned]]); CDF/grid metrics align on the DENSE
+    *    axis grid ([[gridAligned]], bin width in `__bw`): a sparse
+    *    histogram omits empty bins, but an empty bin between occupied
+    *    ones still carries a CDF gap;
+    *  - the dense grid exists only on the finite axis: a label it does
+    *    not know (a flow row, other edges) would vanish from both terms
+    *    and totals, so it raises eagerly instead ([[requireOnGrid]]);
+    *  - totals `ta`/`tb` and running cumulatives `cca`/`ccb` are
+    *    DECIMAL(38,14)-exact before ONE double cast each;
+    *  - a side with zero total mass (empty input, or a dims key present
+    *    in only one snapshot) has no distribution: [[perBin]] makes its
+    *    terms NULL, so the metric is NULL for exactly that group, never
+    *    0/0 ([[drift]] alone requires nonzero totals instead);
+    *  - per-bin terms sum by the bin-order fold ([[binTerms]]).
+    *
+    * Scale shape: both inputs are ALREADY aggregated (≤ nBins rows per
+    * group), so the join, the per-group windows and the fold all run on
+    * histogram-sized relations — the raw corpora are never touched. */
+  private final case class Aligned(rows: DataFrame, ax: BinAxis, dims: Seq[String]) {
+    private val group = Window.partitionBy(dims.map(col): _*)
+    private val upTo = group.orderBy(col(ax.binsCol))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    private def exact(c: String, w: WindowSpec): Column =
+      graft.util.Dec.exactDouble(sum(graft.util.Dec.toDec(col(c))).over(w))
+    val ta: Column = exact("__ca", group)
+    val tb: Column = exact("__cb", group)
+    val cca: Column = exact("__ca", upTo)
+    val ccb: Column = exact("__cb", upTo)
+
+    /** `t`, or NULL where either side's total is zero. The guard sits ON
+      * the term: ANSI double-divide throws on /0, and a Project computes
+      * unguarded columns eagerly even when a later CASE would mask them. */
+    def perBin(t: Column): Column =
+      when(ta === lit(0.0) || tb === lit(0.0), lit(null).cast("double")).otherwise(t)
+    def withColumns(cs: (String, Column)*): Aligned = copy(rows = rows.withColumns(cs.toMap))
+    def fold(terms: (String, Column)*): DataFrame =
+      binTerms(rows, dims, col(ax.binsCol), terms: _*)
+  }
+
+  private def side(h: DataFrame, ax: BinAxis, dims: Seq[String], cnt: String): DataFrame =
+    h.select(dims.map(col) ++ Seq(col(ax.binsCol), col("cnt").as(cnt)): _*)
+
+  /** [[Aligned]] on the full-outer join of the two sides' occupied bins. */
+  private def outerAligned(a: DataFrame, b: DataFrame, ax: BinAxis,
+      dims: Seq[String]): Aligned =
+    Aligned(side(a, ax, dims, "__ca")
+      .join(side(b, ax, dims, "__cb"), dims :+ ax.binsCol, "full_outer")
+      .na.fill(0.0, Seq("__ca", "__cb")), ax, dims)
+
+  /** [[Aligned]] on the dense axis grid: every group seen on either side
+    * × every bin. `metric` names the caller in the off-grid error. */
+  private def gridAligned(metric: String, a: DataFrame, b: DataFrame, ax: BinAxis,
+      dims: Seq[String]): Aligned = {
+    val (aa, bb) = (side(a, ax, dims, "__ca"), side(b, ax, dims, "__cb"))
+    requireOnGrid(aa.select(col(ax.binsCol)).union(bb.select(col(ax.binsCol))), ax, metric)
+    val bins = binsTable(a.sparkSession, ax)
+      .select(col("left_edge").as(ax.binsCol), col("width").as("__bw"))
+    val grid = if (dims.isEmpty) bins
+      else aa.select(dims.map(col): _*).union(bb.select(dims.map(col): _*)).distinct()
+        .crossJoin(broadcast(bins))
+    Aligned(grid.join(aa, dims :+ ax.binsCol, "left")
+      .join(bb, dims :+ ax.binsCol, "left")
+      .na.fill(0.0, Seq("__ca", "__cb")), ax, dims)
+  }
+
+  /** Raise unless every distinct label of the one-column `labels` is a
+    * finite bin of `ax`: an eager broadcast-join count, cheap on the
+    * histogram-sized inputs it guards. */
+  private def requireOnGrid(labels: DataFrame, ax: BinAxis, what: String): Unit = {
+    val bins = binsTable(labels.sparkSession, ax).select(col("left_edge").as(ax.binsCol))
+    val offGrid = labels.distinct().join(broadcast(bins), Seq(ax.binsCol), "left_anti").count()
+    require(offGrid == 0L,
+      s"$what requires flow-free histograms binned on the axis grid: " +
+        s"$offGrid bin label(s) outside the ${ax.nBins}-bin ${ax.binsCol} axis")
+  }
+
+  /** Per `keys` group, the named per-bin `terms` collected as
+    * `__terms`, an array of structs sorted by the bin order `k`;
+    * [[foldTerms]] sums one field of it left to right.
+    *
+    * The per-bin terms are full-precision ratios, where the
+    * DECIMAL(38,14) route is NOT cross-engine-safe: quantizing to 14
+    * decimals goes through the double's decimal string, and Java 17's
+    * Double.toString emits non-shortest digit strings for some doubles,
+    * so the half-up rounding at digit 14 can differ from DuckDB's by one
+    * quantum per term. The explicit left-to-right fold in bin order is
+    * the sequential-sum contract the oracles pin with SUM(x ORDER BY k);
+    * the interpreted HOF fold is fine on an already-aggregated
+    * histogram-sized array. */
+  private def binTerms(rows: DataFrame, keys: Seq[String], k: Column,
+      terms: (String, Column)*): DataFrame = {
+    val withTerms = rows.withColumns(terms.map { case (n, t) => s"__t_$n" -> t }.toMap)
+    grouped(withTerms, keys)(sort_array(collect_list(struct(
+      k.as("k") +: terms.map { case (n, _) => col(s"__t_$n").as(n) }: _*))).as("__terms"))
+  }
+
+  private def foldTerms(field: String = "t"): Column =
+    aggregate(col("__terms"), lit(0.0), (acc, x) => acc + x.getField(field))
+
+  /** ln quantized to the 1e-9 floor: ln is the one libm call engines
+    * disagree on, so every ln in the family goes through this. */
+  private[graft] def qln(x: Column): Column = floor(log(x) * lit(1.0e9)) / lit(1.0e9)
+
+  /** The dims-free reference histogram `ref` replicated across every
+    * group of `a`: the broadcast reference grid the `*From` forms and
+    * the batch live monitors score against. */
+  private[graft] def refGrid(a: DataFrame, ref: DataFrame, ax: BinAxis,
+      dims: Seq[String]): DataFrame =
+    a.select(dims.map(col): _*).distinct()
+      .crossJoin(broadcast(ref.select(col(ax.binsCol), col("cnt"))))
+
+  /** `metric` per group of `a` against the reference grid of `ref`. */
+  private def fromRef(metric: String, a: DataFrame, ref: DataFrame, ax: BinAxis,
+      dims: Seq[String])(score: DataFrame => DataFrame): DataFrame = {
+    require(dims.nonEmpty, s"${metric}From scores per group; use $metric for the global form")
+    score(refGrid(a, ref, ax, dims))
+  }
+
   /** Distribution drift between two histograms over the SAME axis (the
     * monitoring primitive behind data-quality dashboards: reference
     * window vs current window): per dims group, total-variation distance
@@ -454,50 +575,18 @@ object HistStats {
     * IEEE ops, so results are bit-identical cross-engine (a KL/JS variant
     * would hinge on ln(), which carries no cross-engine bit guarantee).
     * Inputs must be count histograms with a nonzero total per group —
-    * drift from an empty distribution is undefined.
-    *
-    * Scale shape: both inputs are ALREADY aggregated (≤ nBins rows per
-    * group), so the outer join, the per-group total window and the final
-    * aggregate all run on histogram-sized relations — the raw corpora are
-    * never touched. */
+    * drift from an empty distribution is undefined. [[Aligned]] holds
+    * the shared contracts. */
   def drift(a: DataFrame, b: DataFrame, ax: BinAxis,
       dims: Seq[String] = Nil): DataFrame = {
-    val aa = a.select(dims.map(col) ++
-      Seq(col(ax.binsCol).as("__bin"), col("cnt").as("__ca")): _*)
-    val bb = b.select(dims.map(col) ++
-      Seq(col(ax.binsCol).as("__bin"), col("cnt").as("__cb")): _*)
-    val j = aa.join(bb, dims :+ "__bin", "full_outer")
-      .na.fill(0.0, Seq("__ca", "__cb"))
-    val w = if (dims.isEmpty) Window.partitionBy()
-      else Window.partitionBy(dims.map(col): _*)
-    val ta = graft.util.Dec.exactDouble(
-      sum(graft.util.Dec.toDec(col("__ca"))).over(w))
-    val tb = graft.util.Dec.exactDouble(
-      sum(graft.util.Dec.toDec(col("__cb"))).over(w))
-    val pq = j.withColumn("__p", col("__ca") / ta)
-      .withColumn("__q", col("__cb") / tb)
+    val al = outerAligned(a, b, ax, dims)
     val d = col("__p") - col("__q")
     val s = col("__p") + col("__q")
-    // The per-bin terms are full-precision ratios, where the
-    // DECIMAL(38,14) route is NOT cross-engine-safe: quantizing to 14
-    // decimals goes through the double's decimal string, and Java 17's
-    // Double.toString emits non-shortest digit strings for some doubles,
-    // so the half-up rounding at digit 14 can differ from DuckDB's by one
-    // quantum per term. Instead sum the (≤ nBins-sized) term array with
-    // an explicit left-to-right fold in bin order — the same
-    // sequential-sum contract the dot-product oracles pin with
-    // SUM(x ORDER BY i); the interpreted HOF fold is fine on an
-    // already-aggregated histogram-sized array.
-    val terms = sort_array(collect_list(struct(
-      col("__bin").as("k"),
-      abs(d).as("t1"),
-      when(s > lit(0.0), d * d / s).otherwise(lit(0.0)).as("t2"))))
-    def fold(arr: Column, field: String): Column =
-      aggregate(arr, lit(0.0), (acc, x) => acc + x.getField(field))
-    grouped(pq, dims)(terms.as("__terms"))
+    al.withColumns("__p" -> col("__ca") / al.ta, "__q" -> col("__cb") / al.tb)
+      .fold("t1" -> abs(d), "t2" -> when(s > lit(0.0), d * d / s).otherwise(lit(0.0)))
       .select(dims.map(col) ++ Seq(
-        (fold(col("__terms"), "t1") * lit(0.5)).as("tvd"),
-        fold(col("__terms"), "t2").as("chisq")): _*)
+        (foldTerms("t1") * lit(0.5)).as("tvd"),
+        foldTerms("t2").as("chisq")): _*)
   }
 
   /** Population Stability Index between two count histograms over the
@@ -510,55 +599,27 @@ object HistStats {
     * thresholds are published against.
     *
     * Cross-engine exactness: ln() runs once per BIN on identical
-    * clamped ratios and is 1e-9-floor-quantized (the q141/q185
-    * convention — ln carries no cross-engine bit guarantee); every
-    * other op is a correctly-rounded IEEE step in pinned order, and the
-    * per-group sum is the sequential bin-order fold [[drift]] pins.
-    * Same scale shape as [[drift]]: everything runs on already-
-    * aggregated histogram-sized relations. */
+    * clamped ratios and is [[qln]]-quantized; every other op is a
+    * correctly-rounded IEEE step in pinned order. A side with zero total
+    * makes its ratios NULL ([[Aligned.perBin]]): NULL term -> the
+    * in-order fold propagates -> NULL psi for exactly the affected
+    * group, and an empty comparison is NULL too. Pinned identically in
+    * Oracle.psi / Oracle.psiGrouped. */
   def psi(a: DataFrame, b: DataFrame, ax: BinAxis, eps: Double = 1e-6,
       dims: Seq[String] = Nil): DataFrame = {
     require(eps > 0.0, s"eps must be positive: $eps")
-    val aa = a.select(dims.map(col) ++
-      Seq(col(ax.binsCol).as("__bin"), col("cnt").as("__ca")): _*)
-    val bb = b.select(dims.map(col) ++
-      Seq(col(ax.binsCol).as("__bin"), col("cnt").as("__cb")): _*)
-    val j = aa.join(bb, dims :+ "__bin", "full_outer")
-      .na.fill(0.0, Seq("__ca", "__cb"))
-    val w = if (dims.isEmpty) Window.partitionBy()
-      else Window.partitionBy(dims.map(col): _*)
-    val ta = graft.util.Dec.exactDouble(
-      sum(graft.util.Dec.toDec(col("__ca"))).over(w))
-    val tb = graft.util.Dec.exactDouble(
-      sum(graft.util.Dec.toDec(col("__cb"))).over(w))
-    // Group lifecycle: a side with zero total mass (empty histogram, or
-    // a dims key born/dead on one side of the comparison) has NO
-    // distribution — its PSI is undefined, not "everything-vs-eps".
-    // The guard sits ON the division (ANSI double-divide throws on /0,
-    // and a Project computes unguarded columns eagerly even when a
-    // downstream CASE would mask them): NULL ratio -> NULL term -> the
-    // in-order fold propagates -> NULL psi for exactly the affected
-    // group. Pinned identically in Oracle.psi / Oracle.psiGrouped.
-    val dead = ta === lit(0.0) || tb === lit(0.0)
-    val pq = j
-      .withColumn("__p",
-        when(dead, lit(null).cast("double")).otherwise(col("__ca") / ta))
-      .withColumn("__q",
-        when(dead, lit(null).cast("double")).otherwise(col("__cb") / tb))
+    val al = outerAligned(a, b, ax, dims)
     val ph = greatest(col("__p"), lit(eps))
     val qh = greatest(col("__q"), lit(eps))
     val term = when(col("__p").isNull || col("__q").isNull,
         lit(null).cast("double"))
-      .otherwise((ph - qh) *
-        (floor(log(ph / qh) * lit(1.0e9)) / lit(1.0e9)))
-    val terms = sort_array(collect_list(struct(
-      col("__bin").as("k"), term.as("t"))))
-    def fold(arr: Column): Column =
-      aggregate(arr, lit(0.0), (acc, x) => acc + x.getField("t"))
-    grouped(pq, dims)(terms.as("__terms"))
+      .otherwise((ph - qh) * qln(ph / qh))
+    al.withColumns("__p" -> al.perBin(col("__ca") / al.ta),
+        "__q" -> al.perBin(col("__cb") / al.tb))
+      .fold("t" -> term)
       .select(dims.map(col) :+
         when(size(col("__terms")) === 0, lit(null).cast("double"))
-          .otherwise(fold(col("__terms"))).as("psi"): _*)
+          .otherwise(foldTerms()).as("psi"): _*)
   }
 
   /** 1-D Earth Mover's Distance (Wasserstein-1) between two binned
@@ -570,69 +631,15 @@ object HistStats {
     * mismatched mass, EMD also weighs the distance it moved, so a
     * one-bin nudge and a cross-range jump with equal TVD separate.
     * Requires an ORDERED axis (flow-free histograms: mass at infinity
-    * has no finite transport cost). Cross-engine bit-exactness: totals
-    * AND cumulatives are DECIMAL(38,14)-exact before ONE double cast
-    * each; the per-bin |·|·width term is a fixed IEEE sequence; terms
-    * fold in bin order. Runs entirely on histogram-sized relations. */
+    * has no finite transport cost). Dense grid, off-grid raise,
+    * zero total → NULL and the bin-order fold are [[Aligned]]'s; the
+    * per-bin |·|·width term is a fixed IEEE sequence. Pinned in
+    * Oracle.emd. */
   def emd(a: DataFrame, b: DataFrame, ax: BinAxis,
       dims: Seq[String] = Nil): DataFrame = {
-    val aa = a.select(dims.map(col) ++
-      Seq(col(ax.binsCol), col("cnt").as("__ca")): _*)
-    val bb = b.select(dims.map(col) ++
-      Seq(col(ax.binsCol), col("cnt").as("__cb")): _*)
-    // DENSE grid: a sparse histogram omits empty bins, but an empty bin
-    // between two occupied ones still carries |CDFa−CDFb|·width — unlike
-    // every pointwise drift metric, absence is NOT a zero term here
-    val bins = binsTable(a.sparkSession, ax)
-      .select(col("left_edge").as(ax.binsCol), col("width").as("__bw"))
-    // Transport cost is only defined ON the finite grid: a bin label the
-    // dense axis doesn't know (a flow row, or a histogram built on other
-    // edges) would silently vanish from both the terms AND the totals.
-    // Enforce the documented flow-free precondition instead of skewing
-    // (mirror of StreamingHist.windowedPsi's labels require). Inputs are
-    // histogram-sized, so this eager probe is a broadcast-join count.
-    val offGrid = aa.select(col(ax.binsCol))
-      .union(bb.select(col(ax.binsCol))).distinct()
-      .join(broadcast(bins.select(col(ax.binsCol))), Seq(ax.binsCol),
-        "left_anti").count()
-    require(offGrid == 0L,
-      s"emd requires flow-free histograms binned on the axis grid: " +
-        s"$offGrid bin label(s) outside the ${ax.nBins}-bin ${ax.binsCol} axis")
-    val grid = if (dims.isEmpty) bins
-      else aa.select(dims.map(col): _*)
-        .union(bb.select(dims.map(col): _*)).distinct()
-        .crossJoin(broadcast(bins))
-    val j = grid.join(aa, dims :+ ax.binsCol, "left")
-      .join(bb, dims :+ ax.binsCol, "left")
-      .na.fill(0.0, Seq("__ca", "__cb"))
-    val w = if (dims.isEmpty) Window.partitionBy()
-      else Window.partitionBy(dims.map(col): _*)
-    val cw = w.orderBy(col(ax.binsCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ta = graft.util.Dec.exactDouble(
-      sum(graft.util.Dec.toDec(col("__ca"))).over(w))
-    val tb = graft.util.Dec.exactDouble(
-      sum(graft.util.Dec.toDec(col("__cb"))).over(w))
-    val cca = graft.util.Dec.exactDouble(
-      sum(graft.util.Dec.toDec(col("__ca"))).over(cw))
-    val ccb = graft.util.Dec.exactDouble(
-      sum(graft.util.Dec.toDec(col("__cb"))).over(cw))
-    // Group lifecycle: zero total mass on either side (empty input, or a
-    // dims key present in only one snapshot — the dense grid crossJoins
-    // the UNION of keys, so the absent side's total is exactly 0) has no
-    // CDF; 0/0 would poison the fold with NaN. NULL per term -> NULL emd
-    // for exactly that group — a drift monitor reports "no comparison",
-    // it does not crash. Pinned identically in Oracle.emd.
-    val withTerm = j
-      .withColumn("__t", when(ta === lit(0.0) || tb === lit(0.0),
-          lit(null).cast("double"))
-        .otherwise(abs(cca / ta - ccb / tb) * col("__bw")))
-    val terms = sort_array(collect_list(struct(
-      col(ax.binsCol).as("k"), col("__t").as("t"))))
-    def fold(arr: Column): Column =
-      aggregate(arr, lit(0.0), (acc, x) => acc + x.getField("t"))
-    grouped(withTerm, dims)(terms.as("__terms"))
-      .select(dims.map(col) :+ fold(col("__terms")).as("emd"): _*)
+    val al = gridAligned("emd", a, b, ax, dims)
+    al.fold("t" -> al.perBin(abs(al.cca / al.ta - al.ccb / al.tb) * col("__bw")))
+      .select(dims.map(col) :+ foldTerms().as("emd"): _*)
   }
 
   /** Binned two-sample Cramér–von Mises criterion between two count
@@ -642,67 +649,13 @@ object HistStats {
     * largest gap, CvM = the WHOLE CDF discrepancy: sensitive to many
     * moderate gaps that never trip KS's max). Unnormalized binned form
     * — comparable across windows/groups on the same axis. Contracts are
-    * [[emd]]'s: ordered flow-free axis (off-grid labels raise), dense
-    * grid, zero-total lifecycle → NULL, never 0/0. Cross-engine:
-    * DECIMAL-exact totals/cumulatives (one double cast each), each term
-    * g·g after one subtraction, the terms folded in bin order (the emd
-    * sorted-array fold == SUM ORDER BY i). Histogram-sized relations
-    * only. */
+    * [[Aligned]]'s; each term is g·g after one subtraction. */
   def cvm(a: DataFrame, b: DataFrame, ax: BinAxis,
       dims: Seq[String] = Nil): DataFrame = {
-    val aa = a.select(dims.map(col) ++
-      Seq(col(ax.binsCol), col("cnt").as("__ca")): _*)
-    val bb = b.select(dims.map(col) ++
-      Seq(col(ax.binsCol), col("cnt").as("__cb")): _*)
-    val bins = binsTable(a.sparkSession, ax)
-      .select(col("left_edge").as(ax.binsCol))
-    val offGrid = aa.select(col(ax.binsCol))
-      .union(bb.select(col(ax.binsCol))).distinct()
-      .join(broadcast(bins), Seq(ax.binsCol), "left_anti").count()
-    require(offGrid == 0L,
-      s"cvm requires flow-free histograms binned on the axis grid: " +
-        s"$offGrid bin label(s) outside the ${ax.nBins}-bin ${ax.binsCol} axis")
-    val grid = if (dims.isEmpty) bins
-      else aa.select(dims.map(col): _*)
-        .union(bb.select(dims.map(col): _*)).distinct()
-        .crossJoin(broadcast(bins))
-    val j = grid.join(aa, dims :+ ax.binsCol, "left")
-      .join(bb, dims :+ ax.binsCol, "left")
-      .na.fill(0.0, Seq("__ca", "__cb"))
-    val w = if (dims.isEmpty) Window.partitionBy()
-      else Window.partitionBy(dims.map(col): _*)
-    val cw = w.orderBy(col(ax.binsCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ta = graft.util.Dec.exactDouble(
-      sum(graft.util.Dec.toDec(col("__ca"))).over(w))
-    val tb = graft.util.Dec.exactDouble(
-      sum(graft.util.Dec.toDec(col("__cb"))).over(w))
-    val cca = graft.util.Dec.exactDouble(
-      sum(graft.util.Dec.toDec(col("__ca"))).over(cw))
-    val ccb = graft.util.Dec.exactDouble(
-      sum(graft.util.Dec.toDec(col("__cb"))).over(cw))
-    val gap = cca / ta - ccb / tb
-    val withTerm = j
-      .withColumn("__t", when(ta === lit(0.0) || tb === lit(0.0),
-          lit(null).cast("double"))
-        .otherwise(gap * gap))
-    val terms = sort_array(collect_list(struct(
-      col(ax.binsCol).as("k"), col("__t").as("t"))))
-    def fold(arr: Column): Column =
-      aggregate(arr, lit(0.0), (acc, x) => acc + x.getField("t"))
-    grouped(withTerm, dims)(terms.as("__terms"))
-      .select(dims.map(col) :+ fold(col("__terms")).as("cvm"): _*)
-  }
-
-  /** Per-group binned CvM against one shared reference histogram —
-    * [[cvm]] in [[psiFrom]]'s rolling-monitor shape. Same scale shape:
-    * the dims×bins grid is histogram-sized, the reference broadcasts. */
-  def cvmFrom(a: DataFrame, ref: DataFrame, ax: BinAxis,
-      dims: Seq[String]): DataFrame = {
-    require(dims.nonEmpty, "cvmFrom scores per group; use cvm for the global form")
-    val grid = a.select(dims.map(col): _*).distinct()
-      .crossJoin(broadcast(ref.select(col(ax.binsCol), col("cnt"))))
-    cvm(a, grid, ax, dims)
+    val al = gridAligned("cvm", a, b, ax, dims)
+    val gap = al.cca / al.ta - al.ccb / al.tb
+    al.fold("t" -> al.perBin(gap * gap))
+      .select(dims.map(col) :+ foldTerms().as("cvm"): _*)
   }
 
   /** Bhattacharyya coefficient + HELLINGER distance between two count
@@ -710,57 +663,19 @@ object HistStats {
     * (BC = Σ√(pᵢ·qᵢ) ∈ [0,1], H = √(1−BC) ∈ [0,1]: a truly metric
     * distance, unlike PSI's unbounded score, with no epsilon floor —
     * a bin empty on one side contributes exactly 0, not a clamped ln):
-    * over the dense axis grid, per-bin probabilities from
-    * DECIMAL-exact totals, term √(p·q) (sqrt is correctly rounded —
-    * no quantization needed anywhere), terms folded in bin order, and
-    * H = √(max(0, 1−BC)) (the clamp absorbs the last-ulp BC > 1 of an
-    * identical pair). Zero-total lifecycle → NULL (the emd rule);
-    * off-grid labels raise. Histogram-sized relations only. */
+    * term √(p·q) (sqrt is correctly rounded — no quantization needed
+    * anywhere) and H = √(max(0, 1−BC)) (the clamp absorbs the last-ulp
+    * BC > 1 of an identical pair). Contracts are [[Aligned]]'s. */
   def hellinger(a: DataFrame, b: DataFrame, ax: BinAxis,
       dims: Seq[String] = Nil): DataFrame = {
-    val aa = a.select(dims.map(col) ++
-      Seq(col(ax.binsCol), col("cnt").as("__ca")): _*)
-    val bb = b.select(dims.map(col) ++
-      Seq(col(ax.binsCol), col("cnt").as("__cb")): _*)
-    val bins = binsTable(a.sparkSession, ax)
-      .select(col("left_edge").as(ax.binsCol))
-    val offGrid = aa.select(col(ax.binsCol))
-      .union(bb.select(col(ax.binsCol))).distinct()
-      .join(broadcast(bins), Seq(ax.binsCol), "left_anti").count()
-    require(offGrid == 0L,
-      s"hellinger requires flow-free histograms binned on the axis grid: " +
-        s"$offGrid bin label(s) outside the ${ax.nBins}-bin ${ax.binsCol} axis")
-    val grid = if (dims.isEmpty) bins
-      else aa.select(dims.map(col): _*)
-        .union(bb.select(dims.map(col): _*)).distinct()
-        .crossJoin(broadcast(bins))
-    val j = grid.join(aa, dims :+ ax.binsCol, "left")
-      .join(bb, dims :+ ax.binsCol, "left")
-      .na.fill(0.0, Seq("__ca", "__cb"))
-    val w = if (dims.isEmpty) Window.partitionBy()
-      else Window.partitionBy(dims.map(col): _*)
-    val ta = graft.util.Dec.exactDouble(
-      sum(graft.util.Dec.toDec(col("__ca"))).over(w))
-    val tb = graft.util.Dec.exactDouble(
-      sum(graft.util.Dec.toDec(col("__cb"))).over(w))
-    val withTerm = j
-      .withColumn("__t", when(ta === lit(0.0) || tb === lit(0.0),
-          lit(null).cast("double"))
-        .otherwise(sqrt((col("__ca") / ta) * (col("__cb") / tb))))
-    val terms = sort_array(collect_list(struct(
-      col(ax.binsCol).as("k"), col("__t").as("t"))))
-    def fold(arr: Column): Column =
-      aggregate(arr, lit(0.0), (acc, x) => acc + x.getField("t"))
-    grouped(withTerm, dims)(terms.as("__terms"))
-      .select(dims.map(col) ++ {
-        val bc = fold(col("__terms"))
+    val al = gridAligned("hellinger", a, b, ax, dims)
+    val bc = foldTerms()
+    al.fold("t" -> al.perBin(sqrt((col("__ca") / al.ta) * (col("__cb") / al.tb))))
+      .select(dims.map(col) ++ Seq(bc.as("bc"),
         // greatest() SKIPS NULLs in both engines — guard the lifecycle
         // NULL explicitly or a dead side would read hellinger = 0
-        Seq(bc.as("bc"),
-          when(bc.isNull, lit(null).cast("double"))
-            .otherwise(sqrt(greatest(lit(0.0), lit(1.0) - bc)))
-            .as("hellinger"))
-      }: _*)
+        when(bc.isNull, lit(null).cast("double"))
+          .otherwise(sqrt(greatest(lit(0.0), lit(1.0) - bc))).as("hellinger")): _*)
   }
 
   /** Jensen–Shannon DIVERGENCE between two count histograms — the
@@ -769,59 +684,105 @@ object HistStats {
     * construction — a bin empty on one side contributes q·ln2, not a
     * clamp — symmetric, and bounded by ln 2, so thresholds transfer
     * across metrics): JS = ½·Σ p·ln(p/m) + ½·Σ q·ln(q/m) with
-    * m = (p+q)/2 and 0·ln(0/m) ≡ 0.
-    *
-    * Cross-engine: p/q from DECIMAL-exact totals; each ln is
-    * 1e-9-quantized (ln is the one libm call engines disagree on —
-    * the lmScore discipline); per-bin terms fold in pinned bin order.
-    * Zero-total lifecycle → NULL (the emd rule); off-grid labels
-    * raise. Histogram-sized relations only. */
+    * m = (p+q)/2 and 0·ln(0/m) ≡ 0. Each ln is [[qln]]-quantized;
+    * contracts are [[Aligned]]'s. */
   def jsDivergence(a: DataFrame, b: DataFrame, ax: BinAxis,
       dims: Seq[String] = Nil): DataFrame = {
-    val aa = a.select(dims.map(col) ++
-      Seq(col(ax.binsCol), col("cnt").as("__ca")): _*)
-    val bb = b.select(dims.map(col) ++
-      Seq(col(ax.binsCol), col("cnt").as("__cb")): _*)
-    val bins = binsTable(a.sparkSession, ax)
-      .select(col("left_edge").as(ax.binsCol))
-    val offGrid = aa.select(col(ax.binsCol))
-      .union(bb.select(col(ax.binsCol))).distinct()
-      .join(broadcast(bins), Seq(ax.binsCol), "left_anti").count()
-    require(offGrid == 0L,
-      s"jsDivergence requires flow-free histograms binned on the axis grid: " +
-        s"$offGrid bin label(s) outside the ${ax.nBins}-bin ${ax.binsCol} axis")
-    val grid = if (dims.isEmpty) bins
-      else aa.select(dims.map(col): _*)
-        .union(bb.select(dims.map(col): _*)).distinct()
-        .crossJoin(broadcast(bins))
-    val j = grid.join(aa, dims :+ ax.binsCol, "left")
-      .join(bb, dims :+ ax.binsCol, "left")
-      .na.fill(0.0, Seq("__ca", "__cb"))
-    val w = if (dims.isEmpty) Window.partitionBy()
-      else Window.partitionBy(dims.map(col): _*)
-    val ta = graft.util.Dec.exactDouble(
-      sum(graft.util.Dec.toDec(col("__ca"))).over(w))
-    val tb = graft.util.Dec.exactDouble(
-      sum(graft.util.Dec.toDec(col("__cb"))).over(w))
-    def qln(x: Column): Column = floor(log(x) * lit(1.0e9)) / lit(1.0e9)
-    val p = col("__ca") / ta
-    val q = col("__cb") / tb
+    val al = gridAligned("jsDivergence", a, b, ax, dims)
+    val p = col("__ca") / al.ta
+    val q = col("__cb") / al.tb
     val m = (p + q) / lit(2.0)
     val term =
       when(col("__ca") > lit(0.0), p * qln(p / m)).otherwise(lit(0.0)) +
       when(col("__cb") > lit(0.0), q * qln(q / m)).otherwise(lit(0.0))
-    val withTerm = j
-      .withColumn("__t", when(ta === lit(0.0) || tb === lit(0.0),
-          lit(null).cast("double"))
-        .otherwise(term))
-    val terms = sort_array(collect_list(struct(
-      col(ax.binsCol).as("k"), col("__t").as("t"))))
-    def fold(arr: Column): Column =
-      aggregate(arr, lit(0.0), (acc, x) => acc + x.getField("t"))
-    grouped(withTerm, dims)(terms.as("__terms"))
-      .select(dims.map(col) :+
-        (fold(col("__terms")) / lit(2.0)).as("js"): _*)
+    al.fold("t" -> al.perBin(term))
+      .select(dims.map(col) :+ (foldTerms() / lit(2.0)).as("js"): _*)
   }
+
+  /** Binned two-sample Kolmogorov–Smirnov statistic between two count
+    * histograms: D = maxᵢ |CDFa(i) − CDFb(i)| over the DENSE axis grid —
+    * the scale-free companion of [[emd]] (EMD carries axis units and
+    * weighs how FAR mass moved; KS is the largest single CDF gap, the
+    * classic 0..1 drift alarm with published critical values). The
+    * binned form is what a histogram supports — it lower-bounds the
+    * raw-value [[ksTest]] (coarsening can only shrink CDF gaps) and is
+    * the one a streaming monitor can compute from bounded state.
+    * Contracts are [[Aligned]]'s, except that MAX is order-free — no
+    * fold at all: a dead side makes every gap NULL, and MAX over
+    * all-NULL is NULL for exactly that group (max skips NULLs, and NULL
+    * gaps only occur group-wide). Pinned in Oracle.ksFromByDim. */
+  def ks(a: DataFrame, b: DataFrame, ax: BinAxis,
+      dims: Seq[String] = Nil): DataFrame = {
+    val al = gridAligned("ks", a, b, ax, dims)
+    grouped(al.withColumns("__g" -> al.perBin(abs(al.cca / al.ta - al.ccb / al.tb))).rows,
+      dims)(max(col("__g")).as("ks"))
+  }
+
+  /** Per-bin PULL between two count histograms (the ROOT-style residual
+    * plot: which bins disagree, and by how many sigmas under Poisson
+    * errors): pull_i = (a_i − b_i) / √(a_i + b_i), with the per-bin
+    * counts carried through. The per-bin companion to [[drift]]'s
+    * scalar metrics — drift says THAT distributions diverged, pull says
+    * WHERE. Full-outer alignment ([[Aligned]]), absent bins count 0; the
+    * tail is subtraction of exactly-representable counts, one √, one
+    * division — a fixed IEEE sequence, bit-identical cross-engine. A
+    * bin with zero counts on both sides (dense-histogram zero rows)
+    * yields NULL. */
+  def pull(a: DataFrame, b: DataFrame, ax: BinAxis,
+      dims: Seq[String] = Nil): DataFrame =
+    outerAligned(a, b, ax, dims).rows
+      .select(dims.map(col) ++ Seq(col(ax.binsCol),
+        col("__ca").as("cnt_a"), col("__cb").as("cnt_b"),
+        when(col("__ca") + col("__cb") > lit(0.0),
+          (col("__ca") - col("__cb")) / sqrt(col("__ca") + col("__cb")))
+          .otherwise(lit(null).cast("double")).as("pull")): _*)
+
+  /** Per-group drift against ONE shared reference histogram (the
+    * monitoring form: every window/day/source scored against the same
+    * baseline distribution). The reference (histogram-sized, no dims) is
+    * broadcast-replicated across the groups present in `a` ([[refGrid]]),
+    * then scored with the exact [[drift]] algebra — each group's
+    * full-outer bin join sees the complete reference support, so a group
+    * missing a reference bin still pays its TVD/chi-square share. */
+  def driftFrom(a: DataFrame, ref: DataFrame, ax: BinAxis,
+      dims: Seq[String]): DataFrame =
+    fromRef("drift", a, ref, ax, dims)(drift(a, _, ax, dims))
+
+  /** Per-group PSI against one shared reference histogram — the rolling
+    * drift monitor in its published form ("PSI of each day's score
+    * distribution vs the training snapshot; alarm past 0.25"): the
+    * [[psi]] metric on [[driftFrom]]'s broadcast reference grid. */
+  def psiFrom(a: DataFrame, ref: DataFrame, ax: BinAxis,
+      dims: Seq[String], eps: Double = 1e-6): DataFrame =
+    fromRef("psi", a, ref, ax, dims)(psi(a, _, ax, eps, dims))
+
+  /** Per-group EMD against one shared reference histogram — [[emd]]'s
+    * units-carrying drift score in [[psiFrom]]'s rolling-monitor shape
+    * ("how many axis units did each day's distribution move from the
+    * training snapshot?"). */
+  def emdFrom(a: DataFrame, ref: DataFrame, ax: BinAxis,
+      dims: Seq[String]): DataFrame =
+    fromRef("emd", a, ref, ax, dims)(emd(a, _, ax, dims))
+
+  /** Per-group binned KS against one shared reference histogram —
+    * [[ks]] in [[psiFrom]]'s rolling-monitor shape. */
+  def ksFrom(a: DataFrame, ref: DataFrame, ax: BinAxis,
+      dims: Seq[String]): DataFrame =
+    fromRef("ks", a, ref, ax, dims)(ks(a, _, ax, dims))
+
+  /** Per-group binned CvM against one shared reference histogram —
+    * [[cvm]] in [[psiFrom]]'s rolling-monitor shape. */
+  def cvmFrom(a: DataFrame, ref: DataFrame, ax: BinAxis,
+      dims: Seq[String]): DataFrame =
+    fromRef("cvm", a, ref, ax, dims)(cvm(a, _, ax, dims))
+
+  /** Per-group PULL against one shared reference histogram — [[pull]]'s
+    * per-bin residuals in [[psiFrom]]'s rolling-monitor shape (the
+    * drill-down beside the scalar drift scores: WHICH bins moved, by
+    * how many Poisson sigmas). */
+  def pullFrom(a: DataFrame, ref: DataFrame, ax: BinAxis,
+      dims: Seq[String]): DataFrame =
+    fromRef("pull", a, ref, ax, dims)(pull(a, _, ax, dims))
 
   /** Two-sample WELCH t-test between two value populations — the drift
     * family's mean-level significance head (PSI/EMD/KS/CvM say the
@@ -1067,145 +1028,6 @@ object HistStats {
           .as("trend_per_day"))
   }
 
-  /** Per-group PSI against one shared reference histogram — the rolling
-    * drift monitor in its published form ("PSI of each day's score
-    * distribution vs the training snapshot; alarm past 0.25"): the
-    * [[psi]] metric with [[driftFrom]]'s broadcast reference grid. Same
-    * scale shape: the dims×bins grid is histogram-sized, the reference
-    * broadcasts. */
-  def psiFrom(a: DataFrame, ref: DataFrame, ax: BinAxis,
-      dims: Seq[String], eps: Double = 1e-6): DataFrame = {
-    require(dims.nonEmpty, "psiFrom scores per group; use psi for the global form")
-    val grid = a.select(dims.map(col): _*).distinct()
-      .crossJoin(broadcast(ref.select(col(ax.binsCol), col("cnt"))))
-    psi(a, grid, ax, eps, dims)
-  }
-
-  /** Per-group EMD against one shared reference histogram — [[emd]]'s
-    * units-carrying drift score in [[psiFrom]]'s rolling-monitor shape
-    * ("how many axis units did each day's distribution move from the
-    * training snapshot?"). Same scale shape: the dims×bins grid is
-    * histogram-sized, the reference broadcasts; the dense-grid and
-    * flow-free contracts are [[emd]]'s. */
-  def emdFrom(a: DataFrame, ref: DataFrame, ax: BinAxis,
-      dims: Seq[String]): DataFrame = {
-    require(dims.nonEmpty, "emdFrom scores per group; use emd for the global form")
-    val grid = a.select(dims.map(col): _*).distinct()
-      .crossJoin(broadcast(ref.select(col(ax.binsCol), col("cnt"))))
-    emd(a, grid, ax, dims)
-  }
-
-  /** Binned two-sample Kolmogorov–Smirnov statistic between two count
-    * histograms: D = maxᵢ |CDFa(i) − CDFb(i)| over the DENSE axis grid —
-    * the scale-free companion of [[emd]] (EMD carries axis units and
-    * weighs how FAR mass moved; KS is the largest single CDF gap, the
-    * classic 0..1 drift alarm with published critical values). The
-    * binned form is what a histogram supports — it lower-bounds the
-    * raw-value [[ksTest]] (coarsening can only shrink CDF gaps) and is
-    * the one a streaming monitor can compute from bounded state.
-    * Contracts are [[emd]]'s: ordered flow-free axis (off-grid bin
-    * labels raise), dense grid so gaps survive across empty bins, and
-    * the group-lifecycle guard — a side with zero total mass (empty
-    * input, or a dims key present in only one snapshot) has no CDF, so
-    * its ks is NULL, never 0/0. Cross-engine bit-exactness: totals and
-    * cumulatives are DECIMAL(38,14)-exact before ONE double cast each,
-    * each gap is one IEEE subtraction after one division per side, and
-    * MAX is order-free — no fold contract needed at all. Runs entirely
-    * on histogram-sized relations. */
-  def ks(a: DataFrame, b: DataFrame, ax: BinAxis,
-      dims: Seq[String] = Nil): DataFrame = {
-    val aa = a.select(dims.map(col) ++
-      Seq(col(ax.binsCol), col("cnt").as("__ca")): _*)
-    val bb = b.select(dims.map(col) ++
-      Seq(col(ax.binsCol), col("cnt").as("__cb")): _*)
-    val bins = binsTable(a.sparkSession, ax)
-      .select(col("left_edge").as(ax.binsCol))
-    // off-grid labels would vanish from both the gaps AND the totals —
-    // enforce the flow-free precondition (the emd/windowedPsi require)
-    val offGrid = aa.select(col(ax.binsCol))
-      .union(bb.select(col(ax.binsCol))).distinct()
-      .join(broadcast(bins), Seq(ax.binsCol), "left_anti").count()
-    require(offGrid == 0L,
-      s"ks requires flow-free histograms binned on the axis grid: " +
-        s"$offGrid bin label(s) outside the ${ax.nBins}-bin ${ax.binsCol} axis")
-    val grid = if (dims.isEmpty) bins
-      else aa.select(dims.map(col): _*)
-        .union(bb.select(dims.map(col): _*)).distinct()
-        .crossJoin(broadcast(bins))
-    val j = grid.join(aa, dims :+ ax.binsCol, "left")
-      .join(bb, dims :+ ax.binsCol, "left")
-      .na.fill(0.0, Seq("__ca", "__cb"))
-    val w = if (dims.isEmpty) Window.partitionBy()
-      else Window.partitionBy(dims.map(col): _*)
-    val cw = w.orderBy(col(ax.binsCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ta = graft.util.Dec.exactDouble(
-      sum(graft.util.Dec.toDec(col("__ca"))).over(w))
-    val tb = graft.util.Dec.exactDouble(
-      sum(graft.util.Dec.toDec(col("__cb"))).over(w))
-    val cca = graft.util.Dec.exactDouble(
-      sum(graft.util.Dec.toDec(col("__ca"))).over(cw))
-    val ccb = graft.util.Dec.exactDouble(
-      sum(graft.util.Dec.toDec(col("__cb"))).over(cw))
-    // dead side -> every gap NULL -> MAX over all-NULL = NULL for
-    // exactly that group (max skips NULLs, and NULL gaps only occur
-    // group-wide). Pinned identically in Oracle.ksFromByDim.
-    val withGap = j.withColumn("__g",
-      when(ta === lit(0.0) || tb === lit(0.0), lit(null).cast("double"))
-        .otherwise(abs(cca / ta - ccb / tb)))
-    grouped(withGap, dims)(max(col("__g")).as("ks"))
-  }
-
-  /** Per-group binned KS against one shared reference histogram —
-    * [[ks]] in [[psiFrom]]'s rolling-monitor shape. Same scale shape:
-    * the dims×bins grid is histogram-sized, the reference broadcasts. */
-  def ksFrom(a: DataFrame, ref: DataFrame, ax: BinAxis,
-      dims: Seq[String]): DataFrame = {
-    require(dims.nonEmpty, "ksFrom scores per group; use ks for the global form")
-    val grid = a.select(dims.map(col): _*).distinct()
-      .crossJoin(broadcast(ref.select(col(ax.binsCol), col("cnt"))))
-    ks(a, grid, ax, dims)
-  }
-
-  /** Per-bin PULL between two count histograms (the ROOT-style residual
-    * plot: which bins disagree, and by how many sigmas under Poisson
-    * errors): pull_i = (a_i − b_i) / √(a_i + b_i), with the per-bin
-    * counts carried through. The per-bin companion to [[drift]]'s
-    * scalar metrics — drift says THAT distributions diverged, pull says
-    * WHERE. Runs entirely on already-aggregated histogram relations
-    * (full-outer join keyed by (dims, bin), absent bins count 0); the
-    * tail is subtraction of exactly-representable counts, one √, one
-    * division — a fixed IEEE sequence, bit-identical cross-engine. A
-    * bin with zero counts on both sides (dense-histogram zero rows)
-    * yields NULL. */
-  def pull(a: DataFrame, b: DataFrame, ax: BinAxis,
-      dims: Seq[String] = Nil): DataFrame = {
-    val aa = a.select(dims.map(col) ++
-      Seq(col(ax.binsCol), col("cnt").as("__ca")): _*)
-    val bb = b.select(dims.map(col) ++
-      Seq(col(ax.binsCol), col("cnt").as("__cb")): _*)
-    aa.join(bb, dims :+ ax.binsCol, "full_outer")
-      .na.fill(0.0, Seq("__ca", "__cb"))
-      .select(dims.map(col) ++ Seq(col(ax.binsCol),
-        col("__ca").as("cnt_a"), col("__cb").as("cnt_b"),
-        when(col("__ca") + col("__cb") > lit(0.0),
-          (col("__ca") - col("__cb")) / sqrt(col("__ca") + col("__cb")))
-          .otherwise(lit(null).cast("double")).as("pull")): _*)
-  }
-
-  /** Per-group PULL against one shared reference histogram — [[pull]]'s
-    * per-bin residuals in [[psiFrom]]'s rolling-monitor shape (the
-    * drill-down beside the scalar drift scores: WHICH bins moved, by
-    * how many Poisson sigmas). Same scale shape: the dims×bins grid is
-    * histogram-sized, the reference broadcasts. */
-  def pullFrom(a: DataFrame, ref: DataFrame, ax: BinAxis,
-      dims: Seq[String]): DataFrame = {
-    require(dims.nonEmpty, "pullFrom scores per group; use pull for the global form")
-    val grid = a.select(dims.map(col): _*).distinct()
-      .crossJoin(broadcast(ref.select(col(ax.binsCol), col("cnt"))))
-    pull(a, grid, ax, dims)
-  }
-
   /** Grouped Pearson correlation over raw columns (the feature-QA
     * companion to Histogram.profile): one map-combinable aggregate pass
     * collecting n, Σx, Σy, Σxy, Σx², Σy² through DECIMAL(38,14) (exact,
@@ -1261,7 +1083,7 @@ object HistStats {
     * to 1e19 per group cannot overflow the cross products. */
   def ksTest(df: DataFrame, value: Column, inA: Column,
       dims: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.expressions.{Window, WindowSpec}
     val vd = value.cast("double")
     val base = df.filter(vd.isNotNull)
       .select(dims.map(col) ++ Seq(vd.as("__v"),
@@ -1292,21 +1114,6 @@ object HistStats {
           col("ks_num").cast("double") /
             (col("n_a").cast("double") * col("n_b").cast("double")))
           .otherwise(lit(null).cast("double")).as("ks")): _*)
-  }
-
-  /** Per-group drift against ONE shared reference histogram (the
-    * monitoring form: every window/day/source scored against the same
-    * baseline distribution). The reference (histogram-sized, no dims) is
-    * broadcast-replicated across the groups present in `a`, then scored
-    * with the exact [[drift]] algebra — each group's full-outer bin join
-    * sees the complete reference support, so a group missing a reference
-    * bin still pays its TVD/chi-square share. */
-  def driftFrom(a: DataFrame, ref: DataFrame, ax: BinAxis,
-      dims: Seq[String]): DataFrame = {
-    require(dims.nonEmpty, "driftFrom scores per group; use drift for the global form")
-    val grid = a.select(dims.map(col): _*).distinct()
-      .crossJoin(broadcast(ref.select(col(ax.binsCol), col("cnt"))))
-    drift(a, grid, ax, dims)
   }
 
   /** Coarse version of an axis: every k adjacent bins merged — supported
@@ -1371,13 +1178,7 @@ object HistStats {
   def smooth(hist: DataFrame, ax: BinAxis, w: Int,
       dims: Seq[String] = Nil): DataFrame = {
     require(w >= 1, s"smoothing half-width must be positive: $w")
-    val bins = binsTable(hist.sparkSession, ax)
-      .select(col("left_edge").as(ax.binsCol))
-    val offGrid = hist.select(col(ax.binsCol)).distinct()
-      .join(broadcast(bins), Seq(ax.binsCol), "left_anti").count()
-    require(offGrid == 0L,
-      s"smooth requires flow-free histograms binned on the axis grid: " +
-        s"$offGrid bin label(s) outside the ${ax.nBins}-bin ${ax.binsCol} axis")
+    requireOnGrid(hist.select(col(ax.binsCol)), ax, "smooth")
     // index each contributing row, explode its (target bin, weight)
     // pairs, aggregate; the dense grid left-join fills silent bins
     val idxTable = hist.sparkSession.range(0, ax.nBins)
@@ -1425,13 +1226,9 @@ object HistStats {
     * window partitioned by dims (bins-bounded partitions). */
   def peaks(hist: DataFrame, ax: BinAxis,
       dims: Seq[String] = Nil): DataFrame = {
+    requireOnGrid(hist.select(col(ax.binsCol)), ax, "peaks")
     val bins = binsTable(hist.sparkSession, ax)
       .select(col("left_edge").as(ax.binsCol))
-    val offGrid = hist.select(col(ax.binsCol)).distinct()
-      .join(broadcast(bins), Seq(ax.binsCol), "left_anti").count()
-    require(offGrid == 0L,
-      s"peaks requires flow-free histograms binned on the axis grid: " +
-        s"$offGrid bin label(s) outside the ${ax.nBins}-bin ${ax.binsCol} axis")
     val grid = if (dims.isEmpty) bins
       else hist.select(dims.map(col): _*).distinct().crossJoin(broadcast(bins))
     val j = grid.join(hist, dims :+ ax.binsCol, "left")

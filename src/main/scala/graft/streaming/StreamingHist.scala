@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.axes.BinAxis
+import graft.stats.HistStats
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -42,14 +43,9 @@ object StreamingHist {
   def windowedHistogram(df: DataFrame, tsCol: String, x: Column, ax: BinAxis,
       windowDuration: String, watermark: String = "10 seconds",
       slideDuration: Option[String] = None): DataFrame = {
-    val kept = ax.keepPred(x, includeUnder = false, includeOver = false)
     if (df.isStreaming) {
-      df.withWatermark(tsCol, watermark)
-        .filter(kept)
-        .select(window(col(tsCol), windowDuration,
-          slideDuration.getOrElse(windowDuration)).as("win"), ax.index(x).as("__i0"))
-        .groupBy(col("win"), col("__i0"))
-        .agg(count(lit(1)).cast("double").as("cnt"))
+      windowBinCounts(df, tsCol, x, ax, windowDuration,
+          slideDuration.getOrElse(windowDuration), watermark)
         .select(col("win.start").as("window_start"), col("win.end").as("window_end"),
           ax.label(col("__i0")).as(ax.binsCol), col("cnt"))
     } else {
@@ -66,7 +62,8 @@ object StreamingHist {
       val us = unix_micros(col(tsCol))
       // window() drops null timestamps (TimeWindowing inserts an
       // IsNotNull filter); mirror that so batch == streaming rows
-      df.filter(col(tsCol).isNotNull && kept)
+      df.filter(col(tsCol).isNotNull &&
+          ax.keepPred(x, includeUnder = false, includeOver = false))
         .select((us - pmod(us, lit(slideUs))).as("__w0"), ax.index(x).as("__i0"))
         .withColumn("__wi", explode(sequence(lit(0L), lit(nW - 1))))
         .select((col("__w0") - col("__wi") * lit(slideUs)).as("__ws"), col("__i0"))
@@ -78,478 +75,228 @@ object StreamingHist {
     }
   }
 
+  /** The streaming stateful aggregation under [[windowedHistogram]] and
+    * the live monitors: watermarked in-range counts per (event-time
+    * window struct `win`, bin index `__i0`) — state #windows×#bins,
+    * independent of event volume. */
+  private def windowBinCounts(df: DataFrame, tsCol: String, x: Column, ax: BinAxis,
+      windowDuration: String, slideDuration: String, watermark: String): DataFrame =
+    df.withWatermark(tsCol, watermark)
+      .filter(ax.keepPred(x, includeUnder = false, includeOver = false))
+      .select(window(col(tsCol), windowDuration, slideDuration).as("win"),
+        ax.index(x).as("__i0"))
+      .groupBy(col("win"), col("__i0"))
+      .agg(count(lit(1)).cast("double").as("cnt"))
+
+  /** One live monitor's streaming stage, built by [[monitor]]: the axis's
+    * in-range (label, width) rows in ascending order (the fold order the
+    * batch side sorts into), the driver-collected reference counts per
+    * label, and `windows` — one row per closed event-time window with
+    * its ≤ nBins (label, count) pairs in `__a`. All of it is bins-sized.
+    *
+    * Streaming == batch BIT-EXACTLY for every monitor, by construction:
+    * window bin counts, their totals and running cumulatives are sums of
+    * integer-valued doubles — exact below 2^53, so they equal the batch
+    * side's DECIMAL-exact values after its one double cast; the reference
+    * ratios and CDF are computed once driver-side from the same
+    * integer-valued counts; each per-bin term is the batch side's IEEE
+    * sequence on identical operands; terms fold left to right in
+    * ascending label order, and the terms the batch side never sees (a
+    * bin absent from both window and reference, or the 0.0 seed) add an
+    * IEEE-neutral +0.0. StreamingSpec asserts the exact equality. */
+  private final class Live(bins: Seq[(Double, Double)], ref: Map[Double, Double],
+      windows: DataFrame) {
+    val labels: Seq[Double] = bins.map(_._1)
+    val widths: Seq[Double] = bins.map(_._2)
+    val refCnt: Seq[Double] = labels.map(ref.getOrElse(_, 0.0))
+    val refTot: Double = ref.values.sum // integer-valued doubles: exact
+    def refCdf: Seq[Double] = refCnt.scanLeft(0.0)(_ + _).tail.map(_ / refTot)
+    /** The window's count in bin `label`, 0 where it has none. */
+    def cnt(label: Column): Column =
+      coalesce(element_at(map_from_entries(col("__a")), label), lit(0.0))
+    val cnts: Seq[Column] = labels.map(l => cnt(lit(l)))
+    val total: Column = aggregate(col("__a"), lit(0.0), (acc, e) => acc + e.getField("cnt"))
+    /** Running window-side cumulative: a Column chain over the static
+      * ascending label list (a bins-sized expression tree). */
+    def cums: Seq[Column] = cnts.scanLeft(lit(0.0))(_ + _).tail
+    def select(cols: Column*): DataFrame =
+      windows.select(col("__w2.start").as("window_start") +: cols: _*)
+  }
+
+  /** A live drift monitor: per event-time window, `batch` scores the batch
+    * windowed histogram (dims `window_start`) against `ref` — the
+    * oracle-gated configuration; a streaming input instead chains TWO
+    * stateful aggregations (the q177 discipline) — [[windowBinCounts]],
+    * then a per-window collect of its ≤ nBins closed rows keyed through
+    * window_time so the chain stays append-legal — and `live` scores each
+    * window's array map-side against the driver-collected reference. The
+    * reference must carry only in-range axis labels (flow rows raise) and,
+    * unless `emptyRefOk`, positive mass. A window with zero in-range
+    * events emits no row on either path. */
+  private def monitor(df: DataFrame, tsCol: String, x: Column, ax: BinAxis,
+      windowDuration: String, ref: DataFrame, watermark: String,
+      emptyRefOk: Boolean = false)(batch: DataFrame => DataFrame)(
+      live: Live => DataFrame): DataFrame =
+    if (!df.isStreaming) {
+      batch(windowedHistogram(df, tsCol, x, ax, windowDuration)
+        .select(col("window_start"), col(ax.binsCol), col("cnt")))
+    } else {
+      val bins = HistStats.binsTable(df.sparkSession, ax)
+        .select(col("left_edge").cast("double"), col("width").cast("double"))
+        .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toSeq
+      val refRows = ref
+        .select(col(ax.binsCol).cast("double"), col("cnt").cast("double"))
+        .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
+      require(refRows.keySet.subsetOf(bins.map(_._1).toSet),
+        "reference histogram carries bins outside the axis (flow rows?)")
+      require(emptyRefOk || refRows.values.sum > 0.0, "reference histogram is empty")
+      live(new Live(bins, refRows,
+        windowBinCounts(df, tsCol, x, ax, windowDuration, windowDuration, watermark)
+          .select(col("win"), ax.label(col("__i0")).cast("double").as("__b"), col("cnt"))
+          .groupBy(window(window_time(col("win")), windowDuration).as("__w2"))
+          .agg(collect_list(struct(col("__b"), col("cnt"))).as("__a"))))
+    }
+
   /** Per-window Population Stability Index against a STATIC reference
     * histogram — the LIVE drift monitor ("alarm when this hour's
-    * distribution drifts past 0.25 from the training snapshot").
-    *
-    * Batch execution is exactly HistStats.psiFrom over the batch
-    * windowed histogram (the oracle-gated configuration, q191).
-    * Streaming chains TWO stateful aggregations (the q177 discipline):
-    * the watermarked per-(window, bin) count — state #windows×#bins —
-    * feeding a per-window collect of its ≤ nBins closed rows, then the
-    * PSI arithmetic runs map-side over that array against the
-    * DRIVER-COLLECTED reference (bins-sized, embedded as literals).
-    *
-    * Streaming == batch BIT-EXACTLY, by construction: the streaming
-    * fold iterates the full static in-range label list in ascending
-    * order, while the batch fold covers only bins present in window or
-    * reference — but an absent-in-both bin contributes exactly
-    * (eps−eps)·qln(1) = +0.0, and inserting +0.0 into a left fold
-    * never changes an IEEE sum; window totals are sums of
-    * integer-valued doubles (exact in any order, equal to the batch
-    * side's decimal total); every other op is the same pinned IEEE
-    * sequence on identical inputs. StreamingSpec asserts the exact
-    * equality. */
+    * distribution drifts past 0.25 from the training snapshot"). Batch is
+    * HistStats.psiFrom (q191); streaming is [[monitor]]'s and bit-exact by
+    * [[Live]]'s argument — the batch fold covers only bins present in
+    * window or reference, and an absent-in-both bin contributes exactly
+    * (eps−eps)·qln(1) = +0.0. */
   def windowedPsi(df: DataFrame, tsCol: String, x: Column, ax: BinAxis,
       windowDuration: String, ref: DataFrame, eps: Double = 1e-6,
       watermark: String = "10 seconds"): DataFrame = {
     require(eps > 0.0, s"eps must be positive: $eps")
-    if (!df.isStreaming) {
-      val wh = windowedHistogram(df, tsCol, x, ax, windowDuration)
-        .select(col("window_start"), col(ax.binsCol), col("cnt"))
-      graft.stats.HistStats.psiFrom(wh, ref, ax,
-        dims = Seq("window_start"), eps = eps)
-    } else {
-      // static, bins-sized driver-side work: the axis's in-range labels
-      // (ascending — the fold order the batch side sorts into) and the
-      // reference's clamped mass per label
-      val spark = df.sparkSession
-      val labels = spark.range(0, ax.nBins)
-        .select(ax.label(col("id")).cast("double")).collect()
-        .map(_.getDouble(0)).toSeq
-      val refRows = ref
-        .select(col(ax.binsCol).cast("double"), col("cnt").cast("double"))
-        .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
-      require(refRows.keySet.subsetOf(labels.toSet),
-        "reference histogram carries bins outside the axis (flow rows?)")
-      val refTot = refRows.values.sum // integer-valued doubles: exact
-      require(refTot > 0.0, "reference histogram is empty")
-      val qh = labels.map(l =>
-        math.max(refRows.getOrElse(l, 0.0) / refTot, eps))
-      // the first stateful agg keeps the event-time-tagged window struct
-      // so the second (the q177 chained-stateful pattern, via
-      // window_time) stays append-legal; rows otherwise identical to
-      // windowedHistogram's streaming branch
-      val kept = ax.keepPred(x, includeUnder = false, includeOver = false)
-      val agged = df.withWatermark(tsCol, watermark)
-        .filter(kept)
-        .select(window(col(tsCol), windowDuration).as("win"),
-          ax.index(x).as("__i0"))
-        .groupBy(col("win"), col("__i0"))
-        .agg(count(lit(1)).cast("double").as("cnt"))
-        .select(col("win"), ax.label(col("__i0")).cast("double").as("__b"),
-          col("cnt"))
-        .groupBy(window(window_time(col("win")), windowDuration).as("__w2"))
-        .agg(collect_list(struct(col("__b"), col("cnt"))).as("__a"))
-      val wmap = map_from_entries(col("__a"))
-      val total = aggregate(col("__a"), lit(0.0),
-        (acc, e) => acc + e.getField("cnt"))
-      val terms = labels.zip(qh).map { case (l, q) =>
-        val p = coalesce(element_at(wmap, lit(l)), lit(0.0)) / total
-        val ph = greatest(p, lit(eps))
-        (ph - lit(q)) * (floor(log(ph / lit(q)) * lit(1.0e9)) / lit(1.0e9))
+    monitor(df, tsCol, x, ax, windowDuration, ref, watermark)(
+      HistStats.psiFrom(_, ref, ax, dims = Seq("window_start"), eps = eps)) { s =>
+      val terms = s.cnts.lazyZip(s.refCnt).map { (c, r) =>
+        val q = math.max(r / s.refTot, eps)
+        val ph = greatest(c / s.total, lit(eps))
+        (ph - lit(q)) * HistStats.qln(ph / lit(q))
       }
-      agged.select(col("__w2.start").as("window_start"),
-        terms.reduceLeft(_ + _).as("psi"))
+      s.select(terms.reduceLeft(_ + _).as("psi"))
     }
   }
 
   /** Per-window Earth Mover's Distance against a STATIC reference
     * histogram — the [[windowedPsi]] monitor with HistStats.emd's
     * units-carrying score ("this hour's scores sit ~12 points from the
-    * training snapshot", not just "drifted"). Batch execution is exactly
-    * HistStats.emdFrom over the batch windowed histogram (the
-    * oracle-gated configuration); streaming chains the same TWO stateful
-    * aggregations as windowedPsi and runs the CDF fold map-side against
-    * the driver-collected reference.
-    *
-    * Streaming == batch BIT-EXACTLY, by construction: window bin counts
-    * and their running cumulatives are sums of integer-valued doubles —
-    * exact below 2^53, so the streaming double running sum equals the
-    * batch side's DECIMAL-exact cumulative after its one double cast;
-    * the reference CDF is computed once driver-side from the same
-    * integer-valued counts; the per-bin |CDFa−CDFb|·width term is the
-    * identical IEEE sequence; terms fold in ascending bin order, and
-    * prepending 0.0 to a fold of non-negative terms never changes an
-    * IEEE sum. StreamingSpec asserts the exact equality.
-    *
-    * Same contracts as HistStats.emd: ordered flow-free axis (the
-    * keepPred drops out-of-range events; a reference carrying off-grid
-    * bins raises), non-empty reference. A window with zero in-range
-    * events emits no row on either path. */
+    * training snapshot", not just "drifted"). Batch is HistStats.emdFrom;
+    * streaming is [[monitor]]'s, with the per-bin |CDFa−CDFb|·width
+    * term. Contracts are HistStats.emd's. */
   def windowedEmd(df: DataFrame, tsCol: String, x: Column, ax: BinAxis,
       windowDuration: String, ref: DataFrame,
-      watermark: String = "10 seconds"): DataFrame = {
-    if (!df.isStreaming) {
-      val wh = windowedHistogram(df, tsCol, x, ax, windowDuration)
-        .select(col("window_start"), col(ax.binsCol), col("cnt"))
-      graft.stats.HistStats.emdFrom(wh, ref, ax,
-        dims = Seq("window_start"))
-    } else {
-      // bins-sized driver-side work: ascending in-range (label, width)
-      // rows and the reference's cumulative mass per label
-      val spark = df.sparkSession
-      val bins = graft.stats.HistStats.binsTable(spark, ax)
-        .select(col("left_edge").cast("double"), col("width").cast("double"))
-        .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toSeq
-      val labels = bins.map(_._1)
-      val refRows = ref
-        .select(col(ax.binsCol).cast("double"), col("cnt").cast("double"))
-        .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
-      require(refRows.keySet.subsetOf(labels.toSet),
-        "reference histogram carries bins outside the axis (flow rows?)")
-      val refTot = refRows.values.sum // integer-valued doubles: exact
-      require(refTot > 0.0, "reference histogram is empty")
-      // reference CDF per label, in fold order (exact integer cumsum,
-      // one double division each — the same arithmetic the batch side's
-      // DECIMAL-exact cumulative reaches after its single double cast)
-      val refCdf = labels.scanLeft(0.0)((acc, l) =>
-        acc + refRows.getOrElse(l, 0.0)).tail.map(_ / refTot)
-      val kept = ax.keepPred(x, includeUnder = false, includeOver = false)
-      val agged = df.withWatermark(tsCol, watermark)
-        .filter(kept)
-        .select(window(col(tsCol), windowDuration).as("win"),
-          ax.index(x).as("__i0"))
-        .groupBy(col("win"), col("__i0"))
-        .agg(count(lit(1)).cast("double").as("cnt"))
-        .select(col("win"), ax.label(col("__i0")).cast("double").as("__b"),
-          col("cnt"))
-        .groupBy(window(window_time(col("win")), windowDuration).as("__w2"))
-        .agg(collect_list(struct(col("__b"), col("cnt"))).as("__a"))
-      val wmap = map_from_entries(col("__a"))
-      val total = aggregate(col("__a"), lit(0.0),
-        (acc, e) => acc + e.getField("cnt"))
-      // running window-side cumulative: a Column chain over the static
-      // ascending label list (bins-sized expression tree)
-      val cums = labels.scanLeft(lit(0.0))((acc, l) =>
-        acc + coalesce(element_at(wmap, lit(l)), lit(0.0))).tail
-      val terms = cums.lazyZip(refCdf).lazyZip(bins.map(_._2)).map {
-        (cum, q, w) => abs(cum / total - lit(q)) * lit(w)
+      watermark: String = "10 seconds"): DataFrame =
+    monitor(df, tsCol, x, ax, windowDuration, ref, watermark)(
+      HistStats.emdFrom(_, ref, ax, dims = Seq("window_start"))) { s =>
+      val terms = s.cums.lazyZip(s.refCdf).lazyZip(s.widths).map {
+        (cum, q, w) => abs(cum / s.total - lit(q)) * lit(w)
       }
-      agged.select(col("__w2.start").as("window_start"),
-        terms.reduceLeft(_ + _).as("emd"))
+      s.select(terms.reduceLeft(_ + _).as("emd"))
     }
-  }
 
   /** Per-window binned Kolmogorov–Smirnov statistic against a STATIC
-    * reference histogram — the third head of the drift-monitor family
-    * ([[windowedPsi]] = ln-weighted score, [[windowedEmd]] = units-
-    * carrying transport cost, this = the classic 0..1 largest-CDF-gap
-    * alarm). Batch execution is exactly HistStats.ksFrom over the batch
-    * windowed histogram (the oracle-gated configuration); streaming
-    * chains the same TWO stateful aggregations and takes the gap MAX
-    * map-side against the driver-collected reference.
-    *
-    * Streaming == batch BIT-EXACTLY, by construction: window bin counts
-    * and their running cumulatives are sums of integer-valued doubles —
-    * exact below 2^53, so the streaming double running sum equals the
-    * batch side's DECIMAL-exact cumulative after its one double cast;
-    * the reference CDF is computed once driver-side from the same
-    * integer-valued counts; each gap is one division + one subtraction
-    * (identical IEEE sequence), and MAX is order-free — the batch side
-    * needs no fold contract and neither does this one.
-    *
-    * Same contracts as HistStats.ks: ordered flow-free axis (the
-    * keepPred drops out-of-range events; a reference carrying off-grid
-    * bins raises), non-empty reference. A window with zero in-range
-    * events emits no row on either path. */
+    * reference histogram — the classic 0..1 largest-CDF-gap alarm of the
+    * live family. Batch is HistStats.ksFrom; streaming is [[monitor]]'s,
+    * taking the gap MAX (order-free on both sides). Contracts are
+    * HistStats.ks's. */
   def windowedKs(df: DataFrame, tsCol: String, x: Column, ax: BinAxis,
       windowDuration: String, ref: DataFrame,
-      watermark: String = "10 seconds"): DataFrame = {
-    if (!df.isStreaming) {
-      val wh = windowedHistogram(df, tsCol, x, ax, windowDuration)
-        .select(col("window_start"), col(ax.binsCol), col("cnt"))
-      graft.stats.HistStats.ksFrom(wh, ref, ax,
-        dims = Seq("window_start"))
-    } else {
-      val spark = df.sparkSession
-      val labels = graft.stats.HistStats.binsTable(spark, ax)
-        .select(col("left_edge").cast("double"))
-        .collect().map(_.getDouble(0)).toSeq
-      val refRows = ref
-        .select(col(ax.binsCol).cast("double"), col("cnt").cast("double"))
-        .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
-      require(refRows.keySet.subsetOf(labels.toSet),
-        "reference histogram carries bins outside the axis (flow rows?)")
-      val refTot = refRows.values.sum // integer-valued doubles: exact
-      require(refTot > 0.0, "reference histogram is empty")
-      val refCdf = labels.scanLeft(0.0)((acc, l) =>
-        acc + refRows.getOrElse(l, 0.0)).tail.map(_ / refTot)
-      val kept = ax.keepPred(x, includeUnder = false, includeOver = false)
-      val agged = df.withWatermark(tsCol, watermark)
-        .filter(kept)
-        .select(window(col(tsCol), windowDuration).as("win"),
-          ax.index(x).as("__i0"))
-        .groupBy(col("win"), col("__i0"))
-        .agg(count(lit(1)).cast("double").as("cnt"))
-        .select(col("win"), ax.label(col("__i0")).cast("double").as("__b"),
-          col("cnt"))
-        .groupBy(window(window_time(col("win")), windowDuration).as("__w2"))
-        .agg(collect_list(struct(col("__b"), col("cnt"))).as("__a"))
-      val wmap = map_from_entries(col("__a"))
-      val total = aggregate(col("__a"), lit(0.0),
-        (acc, e) => acc + e.getField("cnt"))
-      val cums = labels.scanLeft(lit(0.0))((acc, l) =>
-        acc + coalesce(element_at(wmap, lit(l)), lit(0.0))).tail
-      val gaps = cums.lazyZip(refCdf).map { (cum, q) =>
-        abs(cum / total - lit(q))
-      }
-      agged.select(col("__w2.start").as("window_start"),
-        (if (gaps.size == 1) gaps.head else greatest(gaps: _*)).as("ks"))
+      watermark: String = "10 seconds"): DataFrame =
+    monitor(df, tsCol, x, ax, windowDuration, ref, watermark)(
+      HistStats.ksFrom(_, ref, ax, dims = Seq("window_start"))) { s =>
+      val gaps = s.cums.lazyZip(s.refCdf).map((cum, q) => abs(cum / s.total - lit(q)))
+      s.select((if (gaps.size == 1) gaps.head else greatest(gaps: _*)).as("ks"))
     }
-  }
 
   /** Per-window binned Cramér–von Mises against a STATIC reference
-    * histogram — the drift quartet's integrated-gap head in its live
-    * form ([[windowedPsi]]/[[windowedEmd]]/[[windowedKs]] + this; CvM
-    * sums EVERY squared CDF gap, catching many moderate gaps that
-    * never trip KS's max). Batch execution is exactly HistStats.cvmFrom
-    * over the batch windowed histogram (the oracle-gated
-    * configuration); streaming chains the same TWO stateful
-    * aggregations and folds the squared gaps map-side against the
-    * driver-collected reference CDF.
-    *
-    * Streaming == batch BIT-EXACTLY: the [[windowedEmd]] argument —
-    * integer-valued counts are exact in doubles so the streaming
-    * running sums equal the batch DECIMAL-exact cumulatives after
-    * their one double cast; each term is one division, one
-    * subtraction, one multiply (g·g); the terms fold left-to-right in
-    * label order, matching the batch sorted-array fold (prepending the
-    * 0.0 seed is IEEE-neutral). Same contracts as HistStats.cvm. */
+    * histogram — the integrated-gap head of the live family (CvM sums
+    * EVERY squared CDF gap, catching many moderate gaps that never trip
+    * KS's max). Batch is HistStats.cvmFrom; streaming is [[monitor]]'s,
+    * each term one division, one subtraction, one multiply (g·g).
+    * Contracts are HistStats.cvm's. */
   def windowedCvm(df: DataFrame, tsCol: String, x: Column, ax: BinAxis,
       windowDuration: String, ref: DataFrame,
-      watermark: String = "10 seconds"): DataFrame = {
-    if (!df.isStreaming) {
-      val wh = windowedHistogram(df, tsCol, x, ax, windowDuration)
-        .select(col("window_start"), col(ax.binsCol), col("cnt"))
-      graft.stats.HistStats.cvmFrom(wh, ref, ax,
-        dims = Seq("window_start"))
-    } else {
-      val spark = df.sparkSession
-      val labels = graft.stats.HistStats.binsTable(spark, ax)
-        .select(col("left_edge").cast("double"))
-        .collect().map(_.getDouble(0)).toSeq
-      val refRows = ref
-        .select(col(ax.binsCol).cast("double"), col("cnt").cast("double"))
-        .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
-      require(refRows.keySet.subsetOf(labels.toSet),
-        "reference histogram carries bins outside the axis (flow rows?)")
-      val refTot = refRows.values.sum // integer-valued doubles: exact
-      require(refTot > 0.0, "reference histogram is empty")
-      val refCdf = labels.scanLeft(0.0)((acc, l) =>
-        acc + refRows.getOrElse(l, 0.0)).tail.map(_ / refTot)
-      val kept = ax.keepPred(x, includeUnder = false, includeOver = false)
-      val agged = df.withWatermark(tsCol, watermark)
-        .filter(kept)
-        .select(window(col(tsCol), windowDuration).as("win"),
-          ax.index(x).as("__i0"))
-        .groupBy(col("win"), col("__i0"))
-        .agg(count(lit(1)).cast("double").as("cnt"))
-        .select(col("win"), ax.label(col("__i0")).cast("double").as("__b"),
-          col("cnt"))
-        .groupBy(window(window_time(col("win")), windowDuration).as("__w2"))
-        .agg(collect_list(struct(col("__b"), col("cnt"))).as("__a"))
-      val wmap = map_from_entries(col("__a"))
-      val total = aggregate(col("__a"), lit(0.0),
-        (acc, e) => acc + e.getField("cnt"))
-      val cums = labels.scanLeft(lit(0.0))((acc, l) =>
-        acc + coalesce(element_at(wmap, lit(l)), lit(0.0))).tail
-      val terms = cums.lazyZip(refCdf).map { (cum, q) =>
-        val g = cum / total - lit(q)
+      watermark: String = "10 seconds"): DataFrame =
+    monitor(df, tsCol, x, ax, windowDuration, ref, watermark)(
+      HistStats.cvmFrom(_, ref, ax, dims = Seq("window_start"))) { s =>
+      val terms = s.cums.lazyZip(s.refCdf).map { (cum, q) =>
+        val g = cum / s.total - lit(q)
         g * g
       }
-      agged.select(col("__w2.start").as("window_start"),
-        terms.reduceLeft(_ + _).as("cvm"))
+      s.select(terms.reduceLeft(_ + _).as("cvm"))
     }
-  }
 
   /** Per-window HELLINGER distance against a STATIC reference histogram
-    * — the drift quintet's bounded symmetric metric in its live form
-    * (PSI score / EMD units / KS max gap / CvM integrated gap / H ∈
-    * [0,1] true metric, no epsilon floor). Batch execution is exactly
-    * HistStats.hellinger over the batch windowed histogram per window;
-    * streaming chains the same TWO stateful aggregations and folds the
-    * √(p·q) terms map-side against the driver-collected reference.
-    *
-    * Streaming == batch BIT-EXACTLY: integer counts exact in doubles,
-    * each term is one division per side, one multiply, one
-    * correctly-rounded sqrt; terms fold left-to-right in label order
-    * (the batch sorted-array fold; 0.0 seed IEEE-neutral); the final
-    * H = √(max(0, 1−BC)) is the same fixed tail. Contracts are
+    * — the bounded symmetric metric of the live family (H ∈ [0,1], a
+    * true metric, no epsilon floor). Batch is HistStats.hellinger over
+    * the reference grid per window; streaming is [[monitor]]'s, each
+    * term one division per side, one multiply and one correctly-rounded
+    * sqrt, then the same H = √(max(0, 1−BC)) tail. Contracts are
     * HistStats.hellinger's. */
   def windowedHellinger(df: DataFrame, tsCol: String, x: Column,
       ax: BinAxis, windowDuration: String, ref: DataFrame,
-      watermark: String = "10 seconds"): DataFrame = {
-    if (!df.isStreaming) {
-      val wh = windowedHistogram(df, tsCol, x, ax, windowDuration)
-        .select(col("window_start"), col(ax.binsCol), col("cnt"))
-      val grid = wh.select(col("window_start")).distinct()
-        .crossJoin(broadcast(ref.select(col(ax.binsCol), col("cnt"))))
-      graft.stats.HistStats.hellinger(wh, grid, ax,
-        dims = Seq("window_start"))
-    } else {
-      val spark = df.sparkSession
-      val labels = graft.stats.HistStats.binsTable(spark, ax)
-        .select(col("left_edge").cast("double"))
-        .collect().map(_.getDouble(0)).toSeq
-      val refRows = ref
-        .select(col(ax.binsCol).cast("double"), col("cnt").cast("double"))
-        .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
-      require(refRows.keySet.subsetOf(labels.toSet),
-        "reference histogram carries bins outside the axis (flow rows?)")
-      val refTot = refRows.values.sum // integer-valued doubles: exact
-      require(refTot > 0.0, "reference histogram is empty")
-      val refP = labels.map(l => refRows.getOrElse(l, 0.0) / refTot)
-      val kept = ax.keepPred(x, includeUnder = false, includeOver = false)
-      val agged = df.withWatermark(tsCol, watermark)
-        .filter(kept)
-        .select(window(col(tsCol), windowDuration).as("win"),
-          ax.index(x).as("__i0"))
-        .groupBy(col("win"), col("__i0"))
-        .agg(count(lit(1)).cast("double").as("cnt"))
-        .select(col("win"), ax.label(col("__i0")).cast("double").as("__b"),
-          col("cnt"))
-        .groupBy(window(window_time(col("win")), windowDuration).as("__w2"))
-        .agg(collect_list(struct(col("__b"), col("cnt"))).as("__a"))
-      val wmap = map_from_entries(col("__a"))
-      val total = aggregate(col("__a"), lit(0.0),
-        (acc, e) => acc + e.getField("cnt"))
-      val terms = labels.lazyZip(refP).map { (l, q) =>
-        sqrt((coalesce(element_at(wmap, lit(l)), lit(0.0)) / total) * lit(q))
-      }
-      val bc = terms.reduceLeft(_ + _)
-      agged.select(col("__w2.start").as("window_start"), bc.as("bc"),
-        sqrt(greatest(lit(0.0), lit(1.0) - bc)).as("hellinger"))
+      watermark: String = "10 seconds"): DataFrame =
+    monitor(df, tsCol, x, ax, windowDuration, ref, watermark)(wh =>
+      HistStats.hellinger(wh, HistStats.refGrid(wh, ref, ax, Seq("window_start")), ax,
+        dims = Seq("window_start"))) { s =>
+      val bc = s.cnts.lazyZip(s.refCnt).map((c, r) =>
+        sqrt((c / s.total) * lit(r / s.refTot))).reduceLeft(_ + _)
+      s.select(bc.as("bc"), sqrt(greatest(lit(0.0), lit(1.0) - bc)).as("hellinger"))
     }
-  }
 
   /** Per-window Jensen–Shannon divergence against a STATIC reference
-    * histogram — the windowed form of HistStats.jsDivergence (q292) and
-    * the last member of the live drift family beside
-    * [[windowedPsi]]/[[windowedEmd]]/[[windowedKs]]/[[windowedCvm]]/
-    * [[windowedHellinger]]: symmetric, finite on empty bins (a bin
-    * empty on one side contributes q·ln2, not an epsilon clamp), and
-    * bounded by ln 2, so alert thresholds transfer across deployments.
-    *
-    * Batch execution delegates to the gated jsDivergence per window
-    * (the oracle-gated configuration); streaming chains the same TWO
-    * stateful aggregations as the Hellinger/PSI family and computes the
-    * per-bin terms in-row against the driver-collected reference —
-    * integer-valued counts are exact in doubles, divisions and the
-    * 1e-9-quantized ln run on bit-identical operands, and the per-bin
-    * fold is the same left association, so streaming == batch
-    * BIT-exactly (StreamingSpec-pinned). */
+    * histogram — the windowed form of HistStats.jsDivergence (q292):
+    * symmetric, finite on empty bins (a bin empty on one side
+    * contributes q·ln2, not an epsilon clamp), and bounded by ln 2, so
+    * alert thresholds transfer across deployments. Batch is
+    * HistStats.jsDivergence over the reference grid per window;
+    * streaming is [[monitor]]'s, with the 1e-9-quantized ln on
+    * bit-identical operands. */
   def windowedJs(df: DataFrame, tsCol: String, x: Column,
       ax: BinAxis, windowDuration: String, ref: DataFrame,
-      watermark: String = "10 seconds"): DataFrame = {
-    if (!df.isStreaming) {
-      val wh = windowedHistogram(df, tsCol, x, ax, windowDuration)
-        .select(col("window_start"), col(ax.binsCol), col("cnt"))
-      val grid = wh.select(col("window_start")).distinct()
-        .crossJoin(broadcast(ref.select(col(ax.binsCol), col("cnt"))))
-      graft.stats.HistStats.jsDivergence(wh, grid, ax,
-        dims = Seq("window_start"))
-    } else {
-      val spark = df.sparkSession
-      val labels = graft.stats.HistStats.binsTable(spark, ax)
-        .select(col("left_edge").cast("double"))
-        .collect().map(_.getDouble(0)).toSeq
-      val refRows = ref
-        .select(col(ax.binsCol).cast("double"), col("cnt").cast("double"))
-        .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
-      require(refRows.keySet.subsetOf(labels.toSet),
-        "reference histogram carries bins outside the axis (flow rows?)")
-      val refTot = refRows.values.sum // integer-valued doubles: exact
-      require(refTot > 0.0, "reference histogram is empty")
-      val kept = ax.keepPred(x, includeUnder = false, includeOver = false)
-      val agged = df.withWatermark(tsCol, watermark)
-        .filter(kept)
-        .select(window(col(tsCol), windowDuration).as("win"),
-          ax.index(x).as("__i0"))
-        .groupBy(col("win"), col("__i0"))
-        .agg(count(lit(1)).cast("double").as("cnt"))
-        .select(col("win"), ax.label(col("__i0")).cast("double").as("__b"),
-          col("cnt"))
-        .groupBy(window(window_time(col("win")), windowDuration).as("__w2"))
-        .agg(collect_list(struct(col("__b"), col("cnt"))).as("__a"))
-      val wmap = map_from_entries(col("__a"))
-      val total = aggregate(col("__a"), lit(0.0),
-        (acc, e) => acc + e.getField("cnt"))
-      def qln(c: Column): Column = floor(log(c) * lit(1.0e9)) / lit(1.0e9)
-      val terms = labels.map { l =>
-        val ca = coalesce(element_at(wmap, lit(l)), lit(0.0))
-        val cb = lit(refRows.getOrElse(l, 0.0))
-        val p = ca / total
-        val q = cb / lit(refTot)
+      watermark: String = "10 seconds"): DataFrame =
+    monitor(df, tsCol, x, ax, windowDuration, ref, watermark)(wh =>
+      HistStats.jsDivergence(wh, HistStats.refGrid(wh, ref, ax, Seq("window_start")), ax,
+        dims = Seq("window_start"))) { s =>
+      val terms = s.cnts.lazyZip(s.refCnt).map { (ca, r) =>
+        val cb = lit(r)
+        val p = ca / s.total
+        val q = cb / lit(s.refTot)
         val m = (p + q) / lit(2.0)
-        when(ca > lit(0.0), p * qln(p / m)).otherwise(lit(0.0)) +
-          when(cb > lit(0.0), q * qln(q / m)).otherwise(lit(0.0))
+        when(ca > lit(0.0), p * HistStats.qln(p / m)).otherwise(lit(0.0)) +
+          when(cb > lit(0.0), q * HistStats.qln(q / m)).otherwise(lit(0.0))
       }
-      agged.select(col("__w2.start").as("window_start"),
-        (terms.reduceLeft(_ + _) / lit(2.0)).as("js"))
+      s.select((terms.reduceLeft(_ + _) / lit(2.0)).as("js"))
     }
-  }
 
   /** Per-window per-bin PULL against a STATIC reference histogram — the
-    * drill-down beside [[windowedPsi]]/[[windowedEmd]]/[[windowedKs]]'s
-    * scalar alarms: WHICH bins moved this hour, and by how many Poisson
-    * sigmas. Batch execution is exactly HistStats.pullFrom over the
-    * batch windowed histogram (the oracle-gated configuration);
-    * streaming chains the same TWO stateful aggregations and computes
-    * the per-bin residuals map-side against the driver-collected
-    * reference — emitting a row for every bin the window OR the
-    * reference occupies (the batch full-outer semantics), so a bin that
-    * DISAPPEARED from live traffic still surfaces with cnt_a = 0.
-    *
-    * Streaming == batch BIT-EXACTLY: integer-valued counts are exact in
-    * doubles and the (a−b)/√(a+b) tail is one fixed IEEE sequence per
-    * row — no fold, no cumulative, no order contract at all. */
+    * drill-down beside the scalar alarms: WHICH bins moved this hour,
+    * and by how many Poisson sigmas. Batch is HistStats.pullFrom;
+    * streaming is [[monitor]]'s, emitting a row for every bin the window
+    * OR the reference occupies (the batch full-outer semantics), so a
+    * bin that DISAPPEARED from live traffic still surfaces with
+    * cnt_a = 0. No fold, no cumulative: the (a−b)/√(a+b) tail is one
+    * fixed IEEE sequence per row. An empty reference is allowed. */
   def windowedPull(df: DataFrame, tsCol: String, x: Column, ax: BinAxis,
       windowDuration: String, ref: DataFrame,
-      watermark: String = "10 seconds"): DataFrame = {
-    if (!df.isStreaming) {
-      val wh = windowedHistogram(df, tsCol, x, ax, windowDuration)
-        .select(col("window_start"), col(ax.binsCol), col("cnt"))
-      graft.stats.HistStats.pullFrom(wh, ref, ax,
-        dims = Seq("window_start"))
-    } else {
-      val spark = df.sparkSession
-      val labels = graft.stats.HistStats.binsTable(spark, ax)
-        .select(col("left_edge").cast("double"))
-        .collect().map(_.getDouble(0)).toSeq
-      val refRows = ref
-        .select(col(ax.binsCol).cast("double"), col("cnt").cast("double"))
-        .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
-      require(refRows.keySet.subsetOf(labels.toSet),
-        "reference histogram carries bins outside the axis (flow rows?)")
-      val kept = ax.keepPred(x, includeUnder = false, includeOver = false)
-      val agged = df.withWatermark(tsCol, watermark)
-        .filter(kept)
-        .select(window(col(tsCol), windowDuration).as("win"),
-          ax.index(x).as("__i0"))
-        .groupBy(col("win"), col("__i0"))
-        .agg(count(lit(1)).cast("double").as("cnt"))
-        .select(col("win"), ax.label(col("__i0")).cast("double").as("__b"),
-          col("cnt"))
-        .groupBy(window(window_time(col("win")), windowDuration).as("__w2"))
-        .agg(collect_list(struct(col("__b"), col("cnt"))).as("__a"))
-      val wmap = map_from_entries(col("__a"))
+      watermark: String = "10 seconds"): DataFrame =
+    monitor(df, tsCol, x, ax, windowDuration, ref, watermark, emptyRefOk = true)(
+      HistStats.pullFrom(_, ref, ax, dims = Seq("window_start"))) { s =>
       // every axis label rides as a literal (label, refCnt) struct; the
       // both-absent rows filter out, reproducing the batch full-outer
-      val binArr = array(labels.map(l => struct(lit(l).as("l"),
-        lit(refRows.getOrElse(l, 0.0)).as("cb"))): _*)
-      val ca = coalesce(element_at(wmap, col("__e.l")), lit(0.0))
-      agged.select(col("__w2.start").as("window_start"),
-          explode(binArr).as("__e"), col("__a"))
+      val binArr = array(s.labels.lazyZip(s.refCnt).map((l, r) =>
+        struct(lit(l).as("l"), lit(r).as("cb"))): _*)
+      s.select(explode(binArr).as("__e"), col("__a"))
         .select(col("window_start"), col("__e.l").as(ax.binsCol),
-          ca.as("cnt_a"), col("__e.cb").as("cnt_b"))
+          s.cnt(col("__e.l")).as("cnt_a"), col("__e.cb").as("cnt_b"))
         .filter(col("cnt_a") > 0.0 || col("cnt_b") > 0.0)
         .withColumn("pull",
           when(col("cnt_a") + col("cnt_b") > lit(0.0),
             (col("cnt_a") - col("cnt_b")) / sqrt(col("cnt_a") + col("cnt_b")))
             .otherwise(lit(null).cast("double")))
     }
-  }
 
   /** STATELESS streaming decontamination — the live-ingest screen for
     * Dedup.decontaminate's batch semantics: each arriving document is

@@ -18,7 +18,10 @@ import org.apache.spark.sql.types.DecimalType
   * Both casts are exact (integer part: int64 -> double correctly rounded
   * per IEEE; fraction: < 10^14 < 2^53), and the remaining ops are single
   * correctly-rounded IEEE ops — bit-identical across engines.
-  * The SQL mirror lives in graft.oracle.Oracle.exactDbl.
+  * The SQL mirror lives in graft.oracle.Oracle.exactDbl. Spark computes
+  * the fraction as `pmod(s, 1)` (DECIMAL(15,14)): its `s - floor(s)`
+  * types as DECIMAL(38,12) under the precision-loss rule and would round
+  * the fraction at digit 12 (0.99999999999999 -> 1.0).
   *
   * SCOPE: the per-row double -> decimal conversion is engine-identical
   * only when the double's value is determined by its first 14 fractional
@@ -49,11 +52,9 @@ object Dec {
   def toDec(c: Column): Column = c.try_cast(D)
 
   /** Exact decimal -> double, bit-identical to Oracle.exactDbl. */
-  def exactDouble(s: Column): Column = {
-    val i = floor(s)
-    i.cast("long").cast("double") +
-      ((s - i) * lit(100000000000000L)).cast("long").cast("double") / lit(1.0e14)
-  }
+  def exactDouble(s: Column): Column =
+    floor(s).cast("long").cast("double") +
+      (pmod(s, lit(1)) * lit(100000000000000L)).cast("long").cast("double") / lit(1.0e14)
 
   /** Order-independent, cross-engine-deterministic sum of a double column. */
   def sumDec(c: Column): Column = exactDouble(sum(toDec(c)))

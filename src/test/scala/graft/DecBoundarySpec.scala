@@ -163,5 +163,29 @@ class DecBoundarySpec extends SparkSpec {
     // the documented reason the sequence is pinned at all
     assert(v.doubleValue != hand,
       "one-step conversion agreed — boundary case lost its power")
+    // fractions that need all 14 digits: the sequence's fraction step
+    // must not round early. Expected doubles are Oracle.exactDbl's in
+    // DuckDB; each must equal the sequence run on BigDecimal.
+    def formula(d: BigDecimal): Double = {
+      val fl = d.setScale(0, BigDecimal.RoundingMode.FLOOR)
+      fl.toLongExact.toDouble + (d - fl).bigDecimal.movePointRight(14).longValueExact().toDouble / 1.0e14
+    }
+    val fractions = Seq("0.99999999999999" -> 0.99999999999999,
+      "0.12345678901234" -> 0.12345678901234, "0.00000000000003" -> 3e-14,
+      "-0.12345678901234" -> -0.12345678901234003,
+      "-3.00000000000001" -> -3.0000000000000098)
+    val dec = fractions.map { case (t, _) => lit(BigDecimal(t).bigDecimal).cast(Dec.D) }
+    val row = Seq(1).toDF("x").select(dec.map(Dec.exactDouble): _*).collect()(0)
+    fractions.zipWithIndex.foreach { case ((t, want), i) =>
+      assert(formula(BigDecimal(t)) == want, t)
+      assert(row.getDouble(i) == want, s"exactDouble($t) = ${row.getDouble(i)}, not $want")
+    }
+    // seeded regression: `s - floor(s)` types as DECIMAL(38,12) in Spark
+    // and rounds the fraction at digit 12
+    val s = dec.head
+    val digit12 = Seq(1).toDF("x").select(floor(s).cast("long").cast("double") +
+        ((s - floor(s)) * lit(100000000000000L)).cast("long").cast("double") / lit(1.0e14))
+      .collect()(0).getDouble(0)
+    assert(digit12 != fractions.head._2, "s - floor(s) kept 14 digits — regression case lost its power")
   }
 }

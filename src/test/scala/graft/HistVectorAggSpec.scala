@@ -71,6 +71,29 @@ class HistVectorAggSpec extends SparkSpec {
     assert(fast(3.0) == 0.0) // dense zero bin present
   }
 
+  test("14-digit bin sums: vector decimal path equals the weighted paths") {
+    // each group's bin sums to a value whose fraction needs all 14
+    // digits (0.99999999999999, -3.00000000000001): the vector aggregate
+    // (q67's hist_vector_dec) converts with the exact BigDecimal formula,
+    // and the dims path's sumDec and the dims-free kernel must agree
+    val df = Seq(("a", 0.5, 0.5), ("a", 0.5, 0.49999999999999),
+        ("b", 0.5, -3.0), ("b", 0.5, -1.0e-14)).toDF("g", "x", "w")
+    val ax = Regular("x", 1, 0.0, 1.0)
+    val want = Map("a" -> 0.99999999999999, "b" -> -3.0000000000000098)
+    val vector = HistVectorAgg.histogram(df, col("x"), ax, Seq("g"), Some(col("w")))
+      .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
+    val sparse = Histogram.histogram(df, col("x"), ax, Seq("g"),
+        HistOptions(weight = Some(col("w"))))
+      .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
+    assert(vector == want && sparse == want)
+    for ((g, v) <- want) {
+      val kernel = Histogram.histogram(df.filter(col("g") === g), col("x"), ax,
+          opts = HistOptions(weight = Some(col("w"))))
+        .collect()(0).getDouble(1)
+      assert(kernel == v, g)
+    }
+  }
+
   test("non-finite / overflowing weights are skipped like the sparse cast") {
     // The sparse path's double->DECIMAL(38,14) cast yields NULL (row
     // skipped) for NaN/Infinity and precision-38 overflow; the dense

@@ -193,18 +193,62 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
-  test("driftFrom: grid and metric joins keyed by (group, bin), no cartesian") {
+  test("drift family: (group, bin) join keys, grid-only cross joins, windows over joins") {
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins._
+    import org.apache.spark.sql.execution.window.WindowExec
+    import graft.stats.HistStats
     val ax = graft.axes.Regular("x", 4, 0.0, 4.0)
     val d = (1L to 40L).map(i => (s"d${i % 3}", (i % 4).toDouble)).toDF("g", "x")
     val a = graft.operators.Histogram.histogram(d, col("x"), ax, dims = Seq("g"))
     val ref = graft.operators.Histogram.histogram(d, col("x"), ax)
-    val plan = executedPlan(graft.stats.HistStats.driftFrom(a, ref, ax, Seq("g")))
-    assert(!plan.contains("CartesianProduct"), plan)
-    // the group×reference grid is a broadcast nested-loop (ref is
-    // dims-less); the full-outer metric join CANNOT broadcast in Spark —
-    // it runs shuffled, which is fine: both sides are post-aggregation
-    // histogram-sized relations, never the raw corpus
-    assert(plan.contains("BroadcastNestedLoopJoin"), plan)
+    val g = Seq("g")
+    val family = Seq(
+      "driftFrom" -> HistStats.driftFrom(a, ref, ax, g),
+      "psiFrom" -> HistStats.psiFrom(a, ref, ax, g),
+      "emdFrom" -> HistStats.emdFrom(a, ref, ax, g),
+      "cvmFrom" -> HistStats.cvmFrom(a, ref, ax, g),
+      "ksFrom" -> HistStats.ksFrom(a, ref, ax, g),
+      "pullFrom" -> HistStats.pullFrom(a, ref, ax, g),
+      "hellinger" -> HistStats.hellinger(a, HistStats.refGrid(a, ref, ax, g), ax, g),
+      "jsDivergence" -> HistStats.jsDivergence(a, HistStats.refGrid(a, ref, ax, g), ax, g))
+    def names(p: SparkPlan): Seq[String] = p.output.map(_.name)
+    for ((name, df) <- family) {
+      val plan = df.queryExecution.executedPlan match {
+        case p: AdaptiveSparkPlanExec => p.inputPlan
+        case p => p
+      }
+      val clue = s"$name:\n$plan"
+      assert(plan.collect { case c: CartesianProductExec => c }.isEmpty, clue)
+      // every equi-join (the metric join and the dense-grid fills) is
+      // keyed by exactly (group, bin)
+      val keys = plan.collect {
+        case j: SortMergeJoinExec => j.leftKeys ++ j.rightKeys
+        case j: ShuffledHashJoinExec => j.leftKeys ++ j.rightKeys
+        case j: BroadcastHashJoinExec => j.leftKeys ++ j.rightKeys
+      }
+      assert(keys.nonEmpty, clue)
+      keys.foreach(k => assert(k.size == 4 &&
+        k.flatMap(_.references.map(_.name)).toSet == Set("g", ax.binsCol), clue))
+      // the only cross joins are the grids: the distinct groups × a
+      // broadcast dims-free table (the reference, or the axis bins)
+      val grids = plan.collect { case j: BroadcastNestedLoopJoinExec => j }
+      assert(grids.nonEmpty, clue)
+      grids.foreach { j =>
+        val (build, streamed) = if (j.buildSide == BuildRight) (j.right, j.left) else (j.left, j.right)
+        assert(j.condition.isEmpty && names(streamed) == g && !names(build).contains("g"), clue)
+      }
+      // every window partitions by the group and runs above the join,
+      // on the histogram-sized relation, never over a raw scan
+      val windows = plan.collect { case w: WindowExec => w }
+      assert(windows.nonEmpty == (name != "pullFrom"), clue)
+      windows.foreach { w =>
+        assert(w.partitionSpec.flatMap(_.references.map(_.name)) == g, clue)
+        assert(w.child.collectFirst { case j: BaseJoinExec => j }.isDefined, clue)
+      }
+    }
   }
 
   test("normalizeOver with flow: width lookups stay broadcast joins") {

@@ -1407,6 +1407,56 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("live monitors: off-axis/empty references raise; windowedPull takes an empty one") {
+    val ax = Regular("value", 4, 0.0, 4.0)
+    implicit val sqlCtx = spark.sqlContext
+    val stream = MemoryStream[(Timestamp, Double)].toDF().toDF("event_time", "value")
+    def on(events: org.apache.spark.sql.DataFrame) = Seq[(String,
+        org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      "windowedPsi" -> (StreamingHist.windowedPsi(events, "event_time", col("value"), ax,
+        "10 seconds", _)),
+      "windowedEmd" -> (StreamingHist.windowedEmd(events, "event_time", col("value"), ax,
+        "10 seconds", _)),
+      "windowedKs" -> (StreamingHist.windowedKs(events, "event_time", col("value"), ax,
+        "10 seconds", _)),
+      "windowedCvm" -> (StreamingHist.windowedCvm(events, "event_time", col("value"), ax,
+        "10 seconds", _)),
+      "windowedHellinger" -> (StreamingHist.windowedHellinger(events, "event_time",
+        col("value"), ax, "10 seconds", _)),
+      "windowedJs" -> (StreamingHist.windowedJs(events, "event_time", col("value"), ax,
+        "10 seconds", _)))
+    // a flow row is off the axis; an empty reference has no distribution
+    val offAxis = Seq((0.0, 2.0), (Double.PositiveInfinity, 1.0)).toDF(ax.binsCol, "cnt")
+    val empty = Seq.empty[(Double, Double)].toDF(ax.binsCol, "cnt")
+    for ((name, monitor) <- on(stream); (ref, msg) <- Seq(
+        offAxis -> "carries bins outside the axis", empty -> "reference histogram is empty")) {
+      val e = intercept[IllegalArgumentException](monitor(ref))
+      assert(e.getMessage.contains(msg), s"$name: ${e.getMessage}")
+    }
+
+    // windowedPull scores each occupied bin against an empty reference:
+    // cnt_b = 0, pull = cnt_a / sqrt(cnt_a), streaming == batch
+    def pull(events: org.apache.spark.sql.DataFrame) = StreamingHist.windowedPull(
+      events, "event_time", col("value"), ax, "10 seconds", empty)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      (r.getTimestamp(0).getTime / 1000, r.getDouble(1)) ->
+        ((r.getDouble(2), r.getDouble(3), r.getDouble(4)))).toMap
+    val batch = rows(pull(Seq((ts(1), 0.5), (ts(2), 0.5), (ts(3), 3.5), (ts(50), 2.5))
+      .toDF("event_time", "value")))
+    assert(batch == Map((0L, 0.0) -> ((2.0, 0.0, 2.0 / math.sqrt(2.0))),
+      (0L, 3.0) -> ((1.0, 0.0, 1.0)), (50L, 2.0) -> ((1.0, 0.0, 1.0))))
+    val input = MemoryStream[(Timestamp, Double)]
+    val q = pull(input.toDF().toDF("event_time", "value")).writeStream.format("memory")
+      .queryName("pull_empty_ref").outputMode(OutputMode.Append()).start()
+    try {
+      input.addData((ts(1), 0.5), (ts(2), 0.5), (ts(3), 3.5))
+      q.processAllAvailable()
+      input.addData((ts(50), 2.5)) // watermark 40: closes [0,10)
+      q.processAllAvailable()
+      assert(rows(spark.table("pull_empty_ref")) == batch.filter(_._1._1 < 40L))
+    } finally q.stop()
+  }
+
   test("rate-limit state TTL: quiet-day eviction changes no emitted rows and releases state") {
     implicit val sqlCtx = spark.sqlContext
     import StreamingHist.{RlEvent, RlKept}
