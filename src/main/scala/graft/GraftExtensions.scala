@@ -21,10 +21,9 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *
   * It also injects [[graft.operators.DenseHistogramStrategy]], the planner
   * of `Histogram`'s dense kernel. `Histogram` installs that strategy on
-  * any session it runs on, so sessions built without these extensions
-  * plan the kernel as well; the injected copy serves a session that reads
-  * a kernel node (a global temp view of a histogram) before its own first
-  * `Histogram` call.
+  * any session it runs on, and in that session's extensions, so sessions
+  * built without these extensions, and the sessions `newSession()` makes
+  * from them, plan the kernel as well.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions._

@@ -63,6 +63,27 @@ final class ExactSum(val slots: Int) extends Serializable {
     this
   }
 
+  /** Whether a weight of `slot` had an image. */
+  def isSet(slot: Int): Boolean = nonNull(slot)
+
+  /** `slot`'s partial as its two parts, the unscaled long and the spilled
+    * `BigInteger`'s bytes (or null), for a merge in another task. */
+  def longPart(slot: Int): Long = sums(slot)
+  def bigPart(slot: Int): Array[Byte] =
+    if (spill == null || spill(slot) == null) null else spill(slot).toByteArray
+
+  /** Adds a partial given by its parts (`big` null when it did not spill). */
+  def addPartial(slot: Int, long: Long, big: JBI): Unit = {
+    addLong(slot, long)
+    if (big != null) addBig(slot, big)
+  }
+
+  def clear(slot: Int): Unit = {
+    sums(slot) = 0L
+    nonNull(slot) = false
+    if (spill != null) spill(slot) = null
+  }
+
   /** The exact sum of `slot`, or null when no weight there had an image. */
   def total(slot: Int): JBD =
     if (!nonNull(slot)) null

@@ -34,18 +34,25 @@ final case class HistOptions(
   *
   * One aggregation step ([[binCounts]], shared with `HistStats`) feeds
   * every call:
-  *  - Without dims, and with at most `DenseHistogram.MaxSlots` (64k) slots
-  *    in the grid Π(nBins + flow slots), the plan holds one
-  *    [[DenseHistogram]] node, planned by [[DenseHistogramStrategy]] as
-  *    one dense exec: each partition fills a flat slot array (straight
-  *    from the columnar scan for IdT `Regular` axes, else from the
-  *    codegen'd `BinAxis.index` projection), the partial arrays merge
-  *    without a shuffle, and the exec emits the sparse or the dense layout
-  *    itself. No shuffle, no hash aggregate, no densify join. This is the
-  *    reference's per-chunk fill + tree-reduce (core.py:411-464). The
-  *    strategy is installed on the DataFrame's session by the first call,
-  *    so sessions built without `GraftExtensions` run it too.
-  *  - With dims (or a larger grid), a declarative
+  *  - With at most `DenseHistogram.MaxSlots` (64k) slots in the grid
+  *    Π(nBins + flow slots), on a non-streaming input, with or without
+  *    dims, the plan holds one [[DenseHistogram]] node, planned by
+  *    [[DenseHistogramStrategy]] as one dense exec. Each partition fills a
+  *    flat slot array per dims key (straight from the columnar scan for
+  *    IdT `Regular` axes, else from the codegen'd `BinAxis.index`
+  *    projection), and the exec emits the sparse or the dense layout
+  *    itself: no hash aggregate, no densify join. Without dims the
+  *    partial arrays merge on the driver, without a shuffle: the
+  *    reference's per-chunk fill + tree-reduce (core.py:411-464). With
+  *    dims (the reference's loop dims, core.py:271-276, filled by the same
+  *    loop) each task flushes its sparse partials, past a slot budget
+  *    too, into one keyed shuffle inside the exec, hash-partitioned by
+  *    the dims as Spark partitions them, so the windows and aggregates
+  *    over the dims above it plan no exchange. The strategy is installed
+  *    on the DataFrame's session by the first call, so sessions built
+  *    without `GraftExtensions` run it too.
+  *  - A larger grid, a streaming input, or a dims key Spark does not group
+  *    by its bytes (a collated string) takes a declarative
   *    `groupBy(dims ++ binIdx).agg(...)`: partial (map-side) aggregate,
   *    one shuffle keyed by (dims, bins), final aggregate. Shuffle volume is
   *    bounded by #groups x #bins x #map-partitions, never by input row
@@ -146,25 +153,22 @@ object Histogram {
 
   /** The one aggregation step behind [[histogramdd]] and the
     * `HistStats` accessors: (dims…, `__i0`…, `cnt`), sparse or dense —
-    * the dense kernel, or with dims (or a larger grid) the declarative
+    * the dense kernel, or where it does not apply the declarative
     * aggregate, whose rows are filtered on the raw value (keepPred: one or
     * two comparisons) before the bin index is projected once per kept row,
     * and which a join densifies. */
   private[graft] def binCounts(df: DataFrame, specs: Seq[(Column, BinAxis)],
       dims: Seq[String], opts: HistOptions): DataFrame = {
     val idxNames = specs.indices.map(k => s"__i$k")
-    val kernel =
-      if (dims.nonEmpty) None
-      else DenseHistogram.counts(df, specs, opts.flow, opts.weight, opts.dense)
-    kernel match {
+    DenseHistogram.counts(df, specs, dims, opts.flow, opts.weight, opts.dense) match {
       case Some(h) =>
         val cnt =
           if (opts.weight.isDefined) {
             val c = graft.util.Dec.exactDouble(col("__s"))
             if (opts.dense) coalesce(c, lit(0.0)) else c
-          } else if (opts.intStorage) col("n")
-          else col("n").cast("double")
-        h.select(idxNames.map(col) :+ cnt.as("cnt"): _*)
+          } else if (opts.intStorage) col("__n")
+          else col("__n").cast("double")
+        h.select(dims.map(col) ++ idxNames.map(col) :+ cnt.as("cnt"): _*)
       case None =>
         // Sparse-output equivalence of boost flow semantics: an axis
         // without the underflow trait discards x < lo entirely; with the
@@ -377,8 +381,10 @@ object Histogram {
     // Both sides are post-aggregation (bins x groups). No broadcast hint:
     // AQE sees the REAL post-agg sizes at runtime and broadcasts when the
     // sparse side is small — a forced hint would OOM at extreme group
-    // cardinality, where sort-merge is the correct plan.
-    keys.join(sparse, (dims ++ idxNames).toSeq, "left")
-      .withColumn("cnt", coalesce(col("cnt"), zero))
+    // cardinality, where sort-merge is the correct plan. The join is
+    // null-safe: a NULL dims key is a group too.
+    val on = (dims ++ idxNames).map(c => keys(c) <=> sparse(c)).reduce(_ && _)
+    keys.join(sparse, on, "left")
+      .select(keys.columns.map(keys(_)) :+ coalesce(sparse("cnt"), zero).as("cnt"): _*)
   }
 }

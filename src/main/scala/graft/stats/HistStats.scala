@@ -459,7 +459,7 @@ object HistStats {
     *  - a side with zero total mass (empty input, or a dims key present
     *    in only one snapshot) has no distribution: [[perBin]] makes its
     *    terms NULL, so the metric is NULL for exactly that group, never
-    *    0/0 ([[drift]] alone requires nonzero totals instead);
+    *    0/0;
     *  - per-bin terms sum by the bin-order fold ([[binTerms]]).
     *
     * Scale shape: both inputs are ALREADY aggregated (≤ nBins rows per
@@ -574,16 +574,16 @@ object HistStats {
     * DECIMAL(38,14)-exact sum or a fixed sequence of correctly-rounded
     * IEEE ops, so results are bit-identical cross-engine (a KL/JS variant
     * would hinge on ln(), which carries no cross-engine bit guarantee).
-    * Inputs must be count histograms with a nonzero total per group —
-    * drift from an empty distribution is undefined. [[Aligned]] holds
-    * the shared contracts. */
+    * Inputs are count histograms; drift from an empty distribution is
+    * undefined, so a group whose total is zero on either side scores
+    * NULL. [[Aligned]] holds the shared contracts. */
   def drift(a: DataFrame, b: DataFrame, ax: BinAxis,
       dims: Seq[String] = Nil): DataFrame = {
     val al = outerAligned(a, b, ax, dims)
     val d = col("__p") - col("__q")
     val s = col("__p") + col("__q")
-    al.withColumns("__p" -> col("__ca") / al.ta, "__q" -> col("__cb") / al.tb)
-      .fold("t1" -> abs(d), "t2" -> when(s > lit(0.0), d * d / s).otherwise(lit(0.0)))
+    al.withColumns("__p" -> al.perBin(col("__ca") / al.ta), "__q" -> al.perBin(col("__cb") / al.tb))
+      .fold("t1" -> abs(d), "t2" -> al.perBin(when(s > lit(0.0), d * d / s).otherwise(lit(0.0))))
       .select(dims.map(col) ++ Seq(
         (foldTerms("t1") * lit(0.5)).as("tvd"),
         foldTerms("t2").as("chisq")): _*)

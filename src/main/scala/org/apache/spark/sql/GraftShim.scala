@@ -12,7 +12,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * just the two conversions, `Dataset.ofRows` and the decimal `SUM`
   * overflow error — the same approach used by public Spark
   * extension libraries. It also reaches the session's function registry
-  * and the blocking form of `Broadcast.destroy`.
+  * extensions and grouping-key normalization, and the blocking form of `Broadcast.destroy`.
   */
 object GraftShim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -39,6 +39,23 @@ object GraftShim {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
+
+  /** `e` as Spark normalizes a grouping key (private[sql]): float and
+    * double -0.0 become 0.0 and every NaN one NaN; `e` itself when its
+    * type holds no float. */
+  def normalizeKey(e: Expression): Expression =
+    org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+
+  /** Enters `strategy` in `spark`'s extensions (private[sql]), which the
+    * sessions `newSession()` makes from it share, unless it is there. */
+  def injectStrategy(spark: SparkSession,
+      strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    s.extensions.synchronized {
+      if (!s.extensions.buildPlannerStrategies(s).contains(strategy))
+        s.extensions.injectPlannerStrategy(_ => strategy)
+    }
+  }
 
   /** Destroys `b` and waits until its blocks are gone (the public
     * `destroy()` removes them asynchronously). */

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 /** The pre-kernel declarative histogram — filter on keepPred, project the
   * bin index, `groupBy(dims ++ binIdx).agg(sum(Dec.toDec(w)))`, densify by
-  * a join, window density — kept verbatim as the reference the kernel
+  * a null-safe join, window density — kept as the reference the kernel
   * must reproduce bit for bit. */
 object DeclarativeHistogram {
   import graft.util.Dec
@@ -41,8 +41,9 @@ object DeclarativeHistogram {
         if (dims.isEmpty) grid
         else df.select(dimCols: _*).distinct().crossJoin(grid)
       val zero = if (opts.intStorage) lit(0L) else lit(0.0)
-      keys.join(sparse, (dims ++ idxNames).toSeq, "left")
-        .withColumn("cnt", coalesce(col("cnt"), zero))
+      val on = (dims ++ idxNames).map(c => keys(c) <=> sparse(c)).reduce(_ && _)
+      keys.join(sparse, on, "left")
+        .select(keys.columns.map(keys(_)) :+ coalesce(sparse("cnt"), zero).as("cnt"): _*)
     }
     val valued =
       if (opts.density) {
@@ -85,7 +86,8 @@ class HistKernelSpec extends SparkSpec
     val xs = Seq(-7.5, -1.0, -0.0, 0.0, 0.25, 0.5, 1.0, 1.5, 2.0, 2.999, 3.0, 3.5, 7.0, 12.0,
       1e300, -1e300, Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity).map(Some(_)) :+ None
     val ws = Seq(0.1, 0.2, 1e-15, tie, -tie, 1.000000000000005, -1.000000000000005, Double.NaN,
-      Double.PositiveInfinity, Double.NegativeInfinity, -0.0, 92233.72036854775, 5e5, 3.25)
+      Double.PositiveInfinity, Double.NegativeInfinity, -0.0, 92233.72036854775, 5e5, 3.25,
+      1e30, 0.12345678901234)
       .map(Some(_)) :+ None
     val strs = Seq("a", "b", "zz", null)
     for ((x, k) <- xs.zipWithIndex; j <- 0 until 3)
@@ -117,20 +119,21 @@ class HistKernelSpec extends SparkSpec
     val got = Histogram.histogramdd(df, specs, dims, opts)
     val want = DeclarativeHistogram.histogramdd(df, specs, dims, opts)
     assert(bits(got) == bits(want), label)
-    assert(kernelExecs(got).nonEmpty == dims.isEmpty, s"$label: kernel planned iff no dims")
+    assert(kernelExecs(got).nonEmpty, s"$label: kernel planned")
   }
 
   for ((name, c, ax) <- axes) test(s"kernel equals the declarative expression: $name axis") {
-    for (flow <- Seq(false, true); dense <- Seq(false, true); density <- Seq(false, true);
-         weight <- Seq(None, Some(col("w")))) {
+    for (dims <- Seq(Nil, Seq("g")); flow <- Seq(false, true); dense <- Seq(false, true);
+         density <- Seq(false, true); weight <- Seq(None, Some(col("w")))) {
       val opts = HistOptions(weight = weight, flow = flow, dense = dense, density = density)
-      check(local, Seq(c -> ax), Nil, opts, s"$name $opts")
+      check(local, Seq(c -> ax), dims, opts, s"$name $dims $opts")
     }
-    check(parquet, Seq(c -> ax), Nil, HistOptions(flow = true, weight = Some(col("w"))),
-      s"$name parquet")
-    check(local, Seq(c -> ax), Seq("g"), HistOptions(flow = true, weight = Some(col("w"))),
-      s"$name dims")
-    check(local, Seq(c -> ax), Nil, HistOptions(intStorage = true, dense = true), s"$name int")
+    for (dims <- Seq(Nil, Seq("g"))) {
+      check(parquet, Seq(c -> ax), dims, HistOptions(flow = true, weight = Some(col("w"))),
+        s"$name $dims parquet")
+      check(local, Seq(c -> ax), dims, HistOptions(intStorage = true, dense = true),
+        s"$name $dims int")
+    }
   }
 
   test("kernel equals the declarative expression: 2-D grids on both fills") {
@@ -139,6 +142,96 @@ class HistKernelSpec extends SparkSpec
          dense <- Seq(false, true)) {
       val opts = HistOptions(weight = Some(col("w")), flow = flow, dense = dense)
       check(df, Seq(col("x") -> regular, c -> ax), Nil, opts, s"${ax.name} $opts")
+    }
+  }
+
+  test("keyed kernel: multi-column and NULL keys, a key named n, keys off the grid") {
+    val ax = Regular("x", 8, 0.0, 8.0)
+    // s holds NULLs; g1 rows all fall outside the axis in half the rows
+    val withOff = local.union(Seq((Some(100.0), Some(1L), "off", Some(1.0), "g9"),
+      (None, None, "off", Some(2.0), "g9")).toDF("x", "i", "s", "w", "g"))
+    for (df <- Seq(withOff, parquet); dense <- Seq(false, true); flow <- Seq(false, true);
+         weight <- Seq(None, Some(col("w")))) {
+      val opts = HistOptions(weight = weight, flow = flow, dense = dense)
+      check(df, Seq(col("x") -> ax), Seq("g", "s"), opts, s"(g, s) $opts")
+      check(df.withColumnRenamed("g", "n"), Seq(col("x") -> ax), Seq("n"), opts, s"n $opts")
+    }
+    // the group whose rows are all off the axis gets its zero grid, dense
+    val g9 = Histogram.histogram(withOff, col("x"), ax, Seq("g"), HistOptions(dense = true))
+      .filter(col("g") === "g9").collect()
+    assert(g9.length == 8 && g9.forall(_.getDouble(2) == 0.0))
+    assert(Histogram.histogram(withOff, col("x"), ax, Seq("g")).filter(col("g") === "g9")
+      .count() == 0)
+  }
+
+  test("keyed kernel: double keys group as Spark groups them") {
+    val ax = Regular("x", 4, 0.0, 4.0)
+    val nan2 = java.lang.Double.longBitsToDouble(0x7ff8000000000123L)
+    assert(nan2.isNaN && java.lang.Double.doubleToRawLongBits(nan2) !=
+      java.lang.Double.doubleToRawLongBits(Double.NaN))
+    val keys = Seq(-0.0, 0.0, Double.NaN, nan2, 1.5)
+    val local = (for ((d, j) <- keys.zipWithIndex; x <- Seq(0.5, 1.5 + j, 9.0))
+      yield (d, d.toFloat, x, j * 0.25)).toDF("d", "f", "x", "w")
+    val path = java.nio.file.Files.createTempDirectory("histkeys").resolve("t.parquet").toString
+    local.repartition(2).write.parquet(path)
+    for (df <- Seq(local, spark.read.parquet(path)); dims <- Seq(Seq("d"), Seq("f"), Seq("d", "f"));
+         dense <- Seq(false, true)) {
+      val opts = HistOptions(weight = Some(col("w")), dense = dense)
+      check(df, Seq(col("x") -> ax), dims, opts, s"$dims $dense")
+      // three groups: 0.0, NaN and 1.5
+      assert(Histogram.histogram(df, col("x"), ax, dims, opts).select(dims.map(col): _*)
+        .distinct().count() == 3, s"$dims $dense")
+    }
+  }
+
+  test("keyed kernel: empty input has no groups, sparse or dense") {
+    val ax = Regular("x", 3, 0.0, 3.0)
+    val empty = Seq.empty[(String, Double, Double)].toDF("g", "x", "w")
+    for (dense <- Seq(false, true); weight <- Seq(None, Some(col("w")))) {
+      val opts = HistOptions(weight = weight, dense = dense, flow = true)
+      check(empty, Seq(col("x") -> ax), Seq("g"), opts, s"empty $opts")
+      assert(Histogram.histogram(empty, col("x"), ax, Seq("g"), opts).count() == 0)
+    }
+  }
+
+  test("keyed kernel: 5k groups x 102 slots in 3 partitions flush at the slot budget") {
+    val ax = Regular("x", 100, 0.0, 100.0)
+    val df = spark.range(0, 20000, 1, 3).select(
+      (col("id") % 5000).as("g"),
+      (col("id") * 37 % 103 - 1.5).as("x"),
+      (col("id") % 7 * 0.1).as("w"))
+    for (weight <- Seq(None, Some(col("w"))); dense <- Seq(false, true)) {
+      val opts = HistOptions(weight = weight, flow = true, dense = dense)
+      val h = Histogram.histogram(df, col("x"), ax, Seq("g"), opts)
+      assert(bits(h) == bits(DeclarativeHistogram.histogramdd(df, Seq(col("x") -> ax),
+        Seq("g"), opts)), s"$opts")
+      assert(kernelExecs(h).map(_.metrics("flushes").value).sum > 0, s"$opts")
+    }
+  }
+
+  test("keyed kernel: a collated-string key keeps the declarative plan") {
+    val ax = Regular("x", 8, 0.0, 8.0)
+    val df = local.select(collate(col("s"), "UTF8_LCASE").as("s"), col("x"), col("w"))
+      .union(Seq(("A", 0.5, 1.0), ("B", 1.5, 2.0)).toDF("s", "x", "w")
+        .select(collate(col("s"), "UTF8_LCASE").as("s"), col("x"), col("w")))
+    val h = Histogram.histogram(df, col("x"), ax, Seq("s"), HistOptions(weight = Some(col("w"))))
+    assert(bits(h) == bits(DeclarativeHistogram.histogramdd(df, Seq(col("x") -> ax), Seq("s"),
+      HistOptions(weight = Some(col("w"))))))
+    assert(kernelExecs(h).isEmpty)
+  }
+
+  test("a dims call is one job: the fill stage, then the keyed merge") {
+    val ax = Regular("x", 8, 0.0, 8.0)
+    val sc = spark.sparkContext
+    for ((name, df) <- Seq(
+        "histogram" -> Histogram.histogram(parquet, col("x"), ax, Seq("g"), HistOptions(flow = true)),
+        "median" -> graft.stats.HistStats.median(parquet, col("x"), ax, Seq("g")))) {
+      val group = s"kernel-dims-$name"
+      sc.setJobGroup(group, group)
+      try df.collect() finally sc.clearJobGroup()
+      val stages = sc.statusTracker.getJobIdsForGroup(group).toSeq
+        .flatMap(sc.statusTracker.getJobInfo(_)).map(_.stageIds.length)
+      assert(stages == Seq(2), name)
     }
   }
 
@@ -256,6 +349,20 @@ class HistKernelSpec extends SparkSpec
       assert(spark.table("kernel_stream").collect().map(r => r.getDouble(0) -> r.getDouble(1))
         .toMap == Map(0.0 -> 2.0, 1.0 -> 1.0))
     } finally q.stop()
+  }
+
+  test("a plain session's new session reads kernel nodes from global views, with dims or not") {
+    val ax = Regular("x", 4, 0.0, 4.0)
+    val df = spark.range(8).select(col("id").cast("double").as("x"), (col("id") % 2).as("g"))
+    // the shared spec session is a plain SparkSession.builder() session
+    Histogram.histogram(df, col("x"), ax).createOrReplaceGlobalTempView("plain_hist")
+    Histogram.histogram(df, col("x"), ax, Seq("g")).createOrReplaceGlobalTempView("plain_hist_dims")
+    val fresh = spark.newSession()
+    try for (view <- Seq("plain_hist", "plain_hist_dims")) {
+      val viewed = fresh.table(s"global_temp.$view")
+      assert(viewed.collect().map(_.getAs[Double]("cnt")).sum == 4.0, view)
+      assert(viewed.queryExecution.executedPlan.toString.contains("DenseHistogramExec"), view)
+    } finally Seq("plain_hist", "plain_hist_dims").foreach(spark.catalog.dropGlobalTempView)
   }
 
   test("plan shape: the executed plan names the kernel in plain and Graft sessions") {

@@ -3,6 +3,7 @@ package graft
 import graft.axes._
 import graft.operators.Histogram
 import graft.stats.HistStats
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Pins the analytic rv_histogram semantics (reference accessor.py):
@@ -259,6 +260,27 @@ class HistStatsSpec extends SparkSpec {
     // identical inputs -> exactly zero drift
     val z = HistStats.drift(ha, ha, ax).collect().head
     assert(z.getDouble(0) == 0.0 && z.getDouble(1) == 0.0)
+  }
+
+  test("drift: a side with zero total scores NULL for that group, as psi and emd") {
+    val ax = Regular("x", 4, 0.0, 4.0)
+    val a = Histogram.histogram(Seq(0.5, 1.5).toDF("x"), col("x"), ax)
+    val empty = Histogram.histogram(Seq.empty[Double].toDF("x"), col("x"), ax)
+    val r = HistStats.drift(a, empty, ax).collect()
+    assert(r.length == 1 && r.head.isNullAt(0) && r.head.isNullAt(1))
+    // d2 is absent from b: NULL; d1 keeps its score,
+    // p = (.5, 0, .5, 0), q = (.5, .5, 0, 0)
+    val g = Seq("g")
+    val ha = Histogram.histogram(Seq(("d1", 0.5), ("d1", 2.5), ("d2", 1.5)).toDF("g", "x"),
+      col("x"), ax, g)
+    val hb = Histogram.histogram(Seq(("d1", 0.5), ("d1", 1.5)).toDF("g", "x"), col("x"), ax, g)
+    def scores(df: DataFrame): Map[String, Option[Double]] = df.collect()
+      .map(r => r.getString(0) -> Option(r.get(1)).map(_.asInstanceOf[Double])).toMap
+    val d = HistStats.drift(ha, hb, ax, g).collect()
+      .map(r => r.getString(0) -> ((Option(r.get(1)), Option(r.get(2))))).toMap
+    assert(d == Map("d1" -> ((Some(0.5), Some(1.0))), "d2" -> ((None, None))))
+    assert(scores(HistStats.psi(ha, hb, ax, dims = g))("d2").isEmpty)
+    assert(scores(HistStats.emd(ha, hb, ax, g))("d2").isEmpty)
   }
 
   test("psi: positive for shifted distributions, exactly zero for identical") {

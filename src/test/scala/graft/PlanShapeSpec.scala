@@ -251,6 +251,73 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  /** The plan a collected `df` ran: AQE's final plan, stages included. */
+  private object Ran extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+    def apply(df: DataFrame): org.apache.spark.sql.execution.SparkPlan = {
+      df.collect()
+      df.queryExecution.executedPlan
+    }
+  }
+
+  test("histograms with dims: one kernel exec, no exchange, every window over its output") {
+    import graft.operators.{DenseHistogramExec, HistOptions, Histogram}
+    import graft.stats.HistStats
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.window.WindowExec
+    val ax = graft.axes.Regular("x", 4, 0.0, 4.0)
+    val d = (1L to 40L).map(i => (s"d${i % 3}", (i % 5).toDouble)).toDF("g", "x")
+    val g = Seq("g")
+    for ((name, df) <- Seq(
+        "median" -> HistStats.median(d, col("x"), ax, g),
+        "mean" -> HistStats.mean(d, col("x"), ax, g),
+        "density" -> Histogram.histogramdd(d, Seq(col("x") -> ax), g,
+          HistOptions(density = true)))) {
+      val plan = Ran(df)
+      val clue = s"$name:\n$plan"
+      assert(Ran.collect(plan) { case e: DenseHistogramExec => e }.size == 1, clue)
+      assert(Ran.collect(plan) { case e: Exchange => e }.isEmpty, clue)
+      val windows = Ran.collect(plan) { case w: WindowExec => w }
+      assert(windows.nonEmpty == (name != "mean"), clue)
+      windows.foreach(w =>
+        assert(Ran.collectFirst(w.child) { case e: DenseHistogramExec => e }.isDefined, clue))
+    }
+  }
+
+  test("dims-free drift family: each unpartitioned window sits over the kernel or the join") {
+    import graft.operators.{DenseHistogramExec, Histogram}
+    import graft.stats.HistStats
+    import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
+    import org.apache.spark.sql.execution.adaptive.QueryStageExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val ax = graft.axes.Regular("x", 4, 0.0, 4.0)
+    val a = Histogram.histogram((1L to 40L).map(i => (i % 4).toDouble).toDF("x"), col("x"), ax)
+    val b = Histogram.histogram((1L to 30L).map(i => (i % 3).toDouble).toDF("x"), col("x"), ax)
+    val family = Seq(
+      "drift" -> HistStats.drift(a, b, ax), "psi" -> HistStats.psi(a, b, ax),
+      "pull" -> HistStats.pull(a, b, ax), "emd" -> HistStats.emd(a, b, ax),
+      "cvm" -> HistStats.cvm(a, b, ax), "ks" -> HistStats.ks(a, b, ax),
+      "hellinger" -> HistStats.hellinger(a, b, ax),
+      "jsDivergence" -> HistStats.jsDivergence(a, b, ax))
+    // the first node under a window that is not a pass-through unary node
+    def source(p: SparkPlan): SparkPlan = p match {
+      case k: DenseHistogramExec => k
+      case q: QueryStageExec => source(q.plan)
+      case u: UnaryExecNode => source(u.child)
+      case other => other
+    }
+    for ((name, df) <- family) {
+      val plan = Ran(df)
+      val clue = s"$name:\n$plan"
+      val windows = Ran.collect(plan) { case w: WindowExec if w.partitionSpec.isEmpty => w }
+      assert(windows.nonEmpty == (name != "pull"), clue)
+      windows.foreach(w => assert(source(w.child) match {
+        case _: DenseHistogramExec | _: BaseJoinExec => true
+        case _ => false
+      }, clue))
+    }
+  }
+
   test("normalizeOver with flow: width lookups stay broadcast joins") {
     val ax1 = graft.axes.Regular("x", 4, 0.0, 4.0)
     val ax2 = graft.axes.Regular("y", 4, 0.0, 4.0)
