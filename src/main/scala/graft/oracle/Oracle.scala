@@ -69,7 +69,8 @@ object Oracle {
         else (s"(SELECT DISTINCT ${dims.mkString(", ")} FROM $table$whereSql) __d" +: grids)
           .mkString(" CROSS JOIN ")
       val zero = if (intStorage) "CAST(0 AS BIGINT)" else "CAST(0 AS DOUBLE)"
-      val joinCond = (dims ++ idx).map(c => s"__k.$c = __g0.$c").mkString(" AND ")
+      // null-safe: a NULL dims key is a group of its own (Histogram.densify)
+      val joinCond = (dims ++ idx).map(c => s"__k.$c IS NOT DISTINCT FROM __g0.$c").mkString(" AND ")
       sb ++= s", __k AS (SELECT * FROM $keySrc)"
       sb ++= s", __gd AS (SELECT ${(dims ++ idx).map(c => s"__k.$c").mkString(", ")}, " +
         s"COALESCE(__g0.cnt, $zero) AS cnt FROM __k LEFT JOIN __g0 ON $joinCond)"

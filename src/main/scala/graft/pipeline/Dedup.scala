@@ -55,10 +55,11 @@ object Dedup extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** Bounded derived-relation memo (see graft.util.RelCache): signature /
-    * gram-set relations are pinned and reused across operators on the same
-    * corpus; call [[clearCache]] to release them. */
-  private def memoPersist(df: DataFrame): DataFrame = graft.util.RelCache.persist(df)
+  /** Bounded derived-relation memo (see graft.util.RelCache): answers are
+    * pinned and reused across operators on the same corpus; call
+    * [[clearCache]] to release them. `reads` runs before a build only. */
+  private def memoPersist(df: DataFrame, reads: => Any = ()): DataFrame =
+    graft.util.RelCache.persist(df, reads)
 
   def clearCache(): Unit = graft.util.RelCache.clear()
 
@@ -667,22 +668,22 @@ object Dedup extends org.apache.spark.internal.Logging {
     * contribution regardless of corpus composition. */
   private def bandedRelation(docs: DataFrame, k: Int, bands: Int,
       rowsPerBand: Int, bucketCap: Option[Int] = None): DataFrame = {
-    val sig = minhashSignature(docs, k, bands * rowsPerBand)
     val rowNames = (1 to rowsPerBand).map(r => s"s$r")
-    val bandStructs = (0 until bands).map { b =>
-      struct(lit(b).as("band") +:
-        (0 until rowsPerBand).map(r =>
-          col(s"h${b * rowsPerBand + r + 1}").as(rowNames(r))): _*)
-    }
-    val banded = sig
-      .select(col("doc_id"), explode(array(bandStructs: _*)).as("bs"))
+    val banded = minhashSignature(docs, k, bands * rowsPerBand).select(col("doc_id"),
+      explode(array(bandStructs(bands, rowsPerBand)(j => col(s"h$j")): _*)).as("bs"))
       .select(col("doc_id") +: col("bs.band").as("band") +:
         rowNames.map(rn => col(s"bs.$rn").as(rn)): _*)
     bucketCap.fold(banded)(capBuckets(banded, rowNames, _))
   }
 
+  /** One (band, s1..sN) struct per band over signature hash `hash(j)`,
+    * j = 1..bands·rowsPerBand. */
+  private def bandStructs(bands: Int, rowsPerBand: Int)(hash: Int => Column): Seq[Column] =
+    (0 until bands).map(b => struct(lit(b).as("band") +:
+      (1 to rowsPerBand).map(r => hash(b * rowsPerBand + r).as(s"s$r")): _*))
+
   /** The bucketCap filter as a standalone stage, so the auto skew guard
-    * can cap an ALREADY-pinned band relation without re-running the
+    * can cap a band relation its build has pinned without re-running the
     * signature pass. Per-bucket window (never single-partition); lowest
     * doc_ids survive — deterministic, so an oracle can mirror it. */
   private def capBuckets(banded: DataFrame, rowNames: Seq[String],
@@ -708,26 +709,32 @@ object Dedup extends org.apache.spark.internal.Logging {
   private val AutoCapChoices = Seq(1024, 256, 64, 16)
 
   // decision memo: the guard's sizing aggregate is one cheap job over the
-  // pinned band relation, but pipelines call minhashLsh many times on one
+  // band relation, but pipelines call minhashLsh many times on one
   // corpus (nearDupPairs, nearDupKeep, dupComponents share it) — decide once
   // per (banded relation, budget).
   private val capDecisions = new graft.util.RelCache.Store[Option[Int]](64)
 
-  /** Measures the blocking cost of a pinned band relation (the q273
-    * blocking-report metric: Σ s(s−1)/2 over band buckets) and returns the
-    * bucketCap to apply — None when the uncapped join fits `budget`. */
-  private def decideAutoCap(banded: DataFrame, rowNames: Seq[String],
-      budget: Long): Option[Int] = {
-    capDecisions("autoCap", banded)(budget) {
-      val sizes = banded
-        .groupBy(("band" +: rowNames).map(col): _*)
-        .agg(count(lit(1)).as("__s"))
-      val pairCols =
-        sum(expr("__s * (__s - 1) div 2").cast("decimal(38,0)")).as("c_all") +:
-          AutoCapChoices.map(c => sum(
-            expr(s"least(__s, $c) * (least(__s, $c) - 1) div 2")
-              .cast("decimal(38,0)")).as(s"c_$c"))
-      val row = sizes.agg(pairCols.head, pairCols.tail: _*).head()
+  /** Measures the blocking cost of the band join and returns the
+    * bucketCap to apply — None when the uncapped join fits `budget`. One
+    * relation (the self-join): Σ s(s−1)/2 over its band buckets (the q273
+    * blocking-report metric). Two (the bipartite join): Σ sA·sB over
+    * SHARED band buckets (one bucket-keyed join of the two bucket-size
+    * relations — bucket-cardinality work). A cap c bounds each s by c.
+    * `reads` pins the relations before a build. */
+  private def decideAutoCap(banded: Seq[DataFrame], rowNames: Seq[String],
+      budget: Long)(reads: => Any): Option[Int] = {
+    capDecisions("autoCap", banded: _*)(budget) {
+      reads
+      val keys = "band" +: rowNames
+      val sizes = banded.zipWithIndex.map { case (b, i) =>
+        b.groupBy(keys.map(col): _*).agg(count(lit(1)).as(s"__s$i"))
+      }.reduce(_.join(_, keys))
+      def pairs(cap: Option[Int]) = {
+        val s = banded.indices.map(i => cap.fold(s"__s$i")(c => s"least(__s$i, $c)"))
+        sum(expr(if (s.size == 1) s"${s(0)} * (${s(0)} - 1) div 2" else s.mkString(" * "))
+          .cast("decimal(38,0)"))
+      }
+      val row = sizes.agg(pairs(None), AutoCapChoices.map(c => pairs(Some(c))): _*).head()
       def cand(i: Int): BigDecimal =
         Option(row.getDecimal(i)).map(BigDecimal(_)).getOrElse(BigDecimal(0))
       if (cand(0) <= BigDecimal(budget)) None
@@ -735,49 +742,13 @@ object Dedup extends org.apache.spark.internal.Logging {
         val chosen = AutoCapChoices.zipWithIndex
           .collectFirst { case (c, i) if cand(i + 1) <= BigDecimal(budget) => c }
           .getOrElse(AutoCapChoices.last)
-        logWarning(s"minhashLsh skew guard: ${cand(0)} candidate pairs " +
-          s"exceed budget=$budget (hot band buckets — near-identical " +
-          s"docs); applying bucketCap=$chosen " +
+        logWarning(s"${if (banded.size == 1) "minhashLsh" else "crossNearDup"} skew " +
+          s"guard: ${cand(0)} candidate pairs exceed budget=$budget (hot band " +
+          s"buckets — near-identical docs); applying bucketCap=$chosen " +
           s"(capped pairs=${cand(AutoCapChoices.indexOf(chosen) + 1)}, " +
           "lowest doc_ids kept per bucket; bounded recall loss). Pass " +
           "bucketCap=Some(n) explicitly, or raise autoCapPairs to force " +
           "the exact join.")
-        Some(chosen)
-      }
-    }
-  }
-
-  /** The bipartite form of [[decideAutoCap]] for [[crossNearDup]]: the
-    * blocking cost is Σ sA·sB over SHARED band buckets (one bucket-keyed
-    * join of the two bucket-size relations — bucket-cardinality work),
-    * and the capped candidates are Σ min(sA,c)·min(sB,c). */
-  private def decideAutoCapCross(bandedA: DataFrame, bandedB: DataFrame,
-      rowNames: Seq[String], budget: Long): Option[Int] = {
-    capDecisions("autoCapCross", bandedA, bandedB)(budget) {
-      val keyCols = ("band" +: rowNames).map(col)
-      def sizes(banded: DataFrame, out: String) = banded
-        .groupBy(keyCols: _*).agg(count(lit(1)).as(out))
-      val joined = sizes(bandedA, "__sa")
-        .join(sizes(bandedB, "__sb"), "band" +: rowNames)
-      val pairCols =
-        sum(expr("__sa * __sb").cast("decimal(38,0)")).as("c_all") +:
-          AutoCapChoices.map(c => sum(
-            expr(s"least(__sa, $c) * least(__sb, $c)").cast("decimal(38,0)"))
-            .as(s"c_$c"))
-      val row = joined.agg(pairCols.head, pairCols.tail: _*).head()
-      def cand(i: Int): BigDecimal =
-        Option(row.getDecimal(i)).map(BigDecimal(_)).getOrElse(BigDecimal(0))
-      if (cand(0) <= BigDecimal(budget)) None
-      else {
-        val chosen = AutoCapChoices.zipWithIndex
-          .collectFirst { case (c, i) if cand(i + 1) <= BigDecimal(budget) => c }
-          .getOrElse(AutoCapChoices.last)
-        logWarning(s"crossNearDup skew guard: ${cand(0)} bipartite " +
-          s"candidate pairs exceed budget=$budget; applying " +
-          s"bucketCap=$chosen to both sides " +
-          s"(capped pairs=${cand(AutoCapChoices.indexOf(chosen) + 1)}). " +
-          "Pass bucketCap=Some(n) explicitly, or raise autoCapPairs to " +
-          "force the exact join.")
         Some(chosen)
       }
     }
@@ -836,7 +807,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     *   near-identical docs otherwise produce m^2 candidate pairs; capping
     *   trades bounded recall loss for bounded work. None engages the
     *   AUTO skew guard: the blocking cost Σ s(s−1)/2 is measured on the
-    *   pinned band relation (the q273 blocking-report metric — two
+    *   band relation (the q273 blocking-report metric — two
     *   map-combinable aggregates, the join itself never runs) and a cap
     *   is derived + logged only when it exceeds `autoCapPairs`; below
     *   the budget the join is exact, so gated scales are byte-identical
@@ -845,27 +816,31 @@ object Dedup extends org.apache.spark.internal.Logging {
     *   [[AutoCapPairs]]); Long.MaxValue disables it. */
   def minhashLsh(docs: DataFrame, k: Int = 5, bands: Int = 16,
       rowsPerBand: Int = 4, bucketCap: Option[Int] = None,
-      autoCapPairs: Long = AutoCapPairs): DataFrame = {
+      autoCapPairs: Long = AutoCapPairs): DataFrame = graft.util.RelCache.scoped { scope =>
+    lshCandidates(bandedRelation(docs, k, bands, rowsPerBand, bucketCap), rowsPerBand,
+      bucketCap, autoCapPairs, scope)
+  }
+
+  /** The candidate pin of [[minhashLsh]] over `banded`. The band relation
+    * is a build intermediate: the first build that reads it (the cap
+    * decision or the band join) pins it in `scope`, so a cold call runs
+    * the signature (md5 per distinct shingle) once, not once per join
+    * side, and a warm call runs none. The candidate RELATION is memoized:
+    * minhashLsh, nearDupPairs and nearDupKeep over one corpus share one
+    * band join. */
+  private def lshCandidates(banded: DataFrame, rowsPerBand: Int, bucketCap: Option[Int],
+      autoCapPairs: Long, scope: graft.util.RelCache.Scope): DataFrame = {
     val rowNames = (1 to rowsPerBand).map(r => s"s$r")
-    val keys = "band" +: rowNames
-    // persisted: the self-join below would otherwise run the signature
-    // (md5 per distinct shingle) once per join side
-    val bandedRaw = memoPersist(bandedRelation(docs, k, bands, rowsPerBand, bucketCap))
-    val bandedPinned = bucketCap match {
-      case Some(_) => bandedRaw            // explicit cap: caller decided
-      case None => decideAutoCap(bandedRaw, rowNames, autoCapPairs)
-        .fold(bandedRaw)(c => memoPersist(capBuckets(bandedRaw, rowNames, c)))
+    val capped = bucketCap match {
+      case Some(_) => banded               // explicit cap: caller decided
+      case None => decideAutoCap(Seq(banded), rowNames, autoCapPairs)(scope.pin(banded))
+        .fold(banded)(capBuckets(banded, rowNames, _))
     }
-    val a = bandedPinned.as("a")
-    val b = bandedPinned.as("b")
-    val joinCond = keys.map(kc => col(s"a.$kc") === col(s"b.$kc"))
+    val joinCond = ("band" +: rowNames).map(kc => col(s"a.$kc") === col(s"b.$kc"))
       .reduce(_ && _) && col("a.doc_id") < col("b.doc_id")
-    // the candidate RELATION is memoized too: minhashLsh, nearDupPairs and
-    // nearDupKeep over one corpus share one band join, not just one
-    // signature pass
-    memoPersist(a.join(b, joinCond)
+    memoPersist(capped.as("a").join(capped.as("b"), joinCond)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct())
+      .distinct(), scope.pin(banded))
   }
 
   /** End-to-end near-duplicate detection: MinHash+LSH candidate generation
@@ -911,28 +886,29 @@ object Dedup extends org.apache.spark.internal.Logging {
     * pipeline reads before trusting a cheaper estimate-only threshold,
     * or before re-sizing bands/rows. Cost: the band join is the SAME
     * memoized relation q41/q54 already built; new work is one candidate-
-    * keyed slot-compare aggregate and the candidates' verify. Signatures
-    * are md5-derived identically in both engines, so the agreement count
-    * (and the estimate) gates exactly. */
+    * keyed slot-compare aggregate, pinned with O(candidates) rows, and
+    * the candidates' verify. Signatures are md5-derived identically in
+    * both engines, so the agreement count (and the estimate) gates
+    * exactly. */
   def minhashAccuracy(docs: DataFrame, k: Int = 5, bands: Int = 16,
       rowsPerBand: Int = 4): DataFrame = {
     val rowNames = (1 to rowsPerBand).map(r => s"s$r")
-    val cand = minhashLsh(docs, k, bands, rowsPerBand)
-    val banded = memoPersist(bandedRelation(docs, k, bands, rowsPerBand, None))
-    val a = banded.as("a")
-    val b = banded.as("b")
-    val slotMatches = rowNames
-      .map(rn => when(col(s"a.$rn") === col(s"b.$rn"), 1L).otherwise(0L))
-      .reduce(_ + _)
-    val est = cand
-      .join(a, col("doc_a") === col("a.doc_id"))
-      .join(b, col("doc_b") === col("b.doc_id") && col("a.band") === col("b.band"))
-      .select(col("doc_a"), col("doc_b"), slotMatches.as("__m"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(sum(col("__m")).as("__m"))
-      .select(col("doc_a"), col("doc_b"),
-        (col("__m").cast("double") / lit((bands * rowsPerBand).toDouble))
-          .as("est_jaccard"))
+    val (cand, est) = graft.util.RelCache.scoped { scope =>
+      val banded = bandedRelation(docs, k, bands, rowsPerBand, None)
+      val cand = lshCandidates(banded, rowsPerBand, None, AutoCapPairs, scope)
+      val (a, b) = (banded.as("a"), banded.as("b"))
+      val slotMatches = rowNames
+        .map(rn => when(col(s"a.$rn") === col(s"b.$rn"), 1L).otherwise(0L))
+        .reduce(_ + _)
+      (cand, memoPersist(cand
+        .join(a, col("doc_a") === col("a.doc_id"))
+        .join(b, col("doc_b") === col("b.doc_id") && col("a.band") === col("b.band"))
+        .groupBy(col("doc_a"), col("doc_b"))
+        .agg(sum(slotMatches).as("__m"))
+        .select(col("doc_a"), col("doc_b"),
+          (col("__m").cast("double") / lit((bands * rowsPerBand).toDouble))
+            .as("est_jaccard")), scope.pin(banded)))
+    }
     // exact jaccard over the same candidates, pinned unfiltered (a
     // 0-jaccard candidate still reports): warm calls skip the hashing
     est.join(memoPersist(verifiedJaccard(docs, docs, cand, k)), Seq("doc_a", "doc_b"))
@@ -963,9 +939,10 @@ object Dedup extends org.apache.spark.internal.Logging {
     * Scale shape: identical to the self-join form — band-bucket equi-join
     * bounded by bucket selectivity, codegen'd sorted-merge verify — with
     * the usual asymmetry win: the new-crawl side is typically orders of
-    * magnitude smaller than the reference corpus. The reference side's
-    * banded relation is a pin a later crawl reuses; gram sets are hashed
-    * inside the verify build and never pinned.
+    * magnitude smaller than the reference corpus. Each side's banded
+    * relation is an intermediate of the candidate build (see
+    * [[lshCandidates]]); gram sets are hashed inside the verify build and
+    * never pinned.
     *
     * @param bucketCap skew guard, applied to EACH side's band buckets
     *   independently (lowest doc_ids kept — deterministic, oracle-
@@ -985,23 +962,21 @@ object Dedup extends org.apache.spark.internal.Logging {
       bucketCap: Option[Int] = None,
       autoCapPairs: Long = AutoCapPairs): DataFrame = {
     val rowNames = (1 to rowsPerBand).map(r => s"s$r")
-    val keys = "band" +: rowNames
-    val baRaw = memoPersist(bandedRelation(corpusA, k, bands, rowsPerBand, bucketCap))
-    val bbRaw = memoPersist(bandedRelation(corpusB, k, bands, rowsPerBand, bucketCap))
-    val (baG, bbG) = bucketCap match {
-      case Some(_) => (baRaw, bbRaw)       // explicit cap: caller decided
-      case None => decideAutoCapCross(baRaw, bbRaw, rowNames, autoCapPairs)
-        .fold((baRaw, bbRaw))(c =>
-          (memoPersist(capBuckets(baRaw, rowNames, c)),
-            memoPersist(capBuckets(bbRaw, rowNames, c))))
+    val cand = graft.util.RelCache.scoped { scope =>
+      val (ba, bb) = (bandedRelation(corpusA, k, bands, rowsPerBand, bucketCap),
+        bandedRelation(corpusB, k, bands, rowsPerBand, bucketCap))
+      def pinBoth() = { scope.pin(ba); scope.pin(bb) }
+      val (ca, cb) = bucketCap match {
+        case Some(_) => (ba, bb)           // explicit cap: caller decided
+        case None => decideAutoCap(Seq(ba, bb), rowNames, autoCapPairs)(pinBoth())
+          .fold((ba, bb))(c => (capBuckets(ba, rowNames, c), capBuckets(bb, rowNames, c)))
+      }
+      val joinCond = ("band" +: rowNames).map(kc => col(s"a.$kc") === col(s"b.$kc"))
+        .reduce(_ && _) && col("a.doc_id") =!= col("b.doc_id")
+      memoPersist(ca.as("a").join(cb.as("b"), joinCond)
+        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+        .distinct(), pinBoth())
     }
-    val ba = baG.as("a")
-    val bb = bbG.as("b")
-    val joinCond = keys.map(kc => col(s"a.$kc") === col(s"b.$kc"))
-      .reduce(_ && _) && col("a.doc_id") =!= col("b.doc_id")
-    val cand = memoPersist(ba.join(bb, joinCond)
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct())
     memoPersist(verifiedJaccard(corpusA, corpusB, cand, k))
       .filter(col("jaccard") >= threshold)
   }
@@ -1057,12 +1032,6 @@ object Dedup extends org.apache.spark.internal.Logging {
             .as("__gb")), "doc_b"))
     val sig = graft.functions.MinhashSig.minhash_sig(col("text"), k,
       bands * rowsPerBand)
-    val bandStructs = (0 until bands).map { b =>
-      struct(lit(b).as("band") +:
-        (0 until rowsPerBand).map(r =>
-          element_at(col("__sig"), b * rowsPerBand + r + 1)
-            .as(rowNames(r))): _*)
-    }
     // no widen() on the stream side: its stats probe forces batch
     // planning (illegal on a streaming relation), and micro-batches
     // arrive pre-partitioned anyway
@@ -1074,7 +1043,8 @@ object Dedup extends org.apache.spark.internal.Logging {
           .as("__ga"),
         explode(array(sig)).as("__sig")): _*)
       .select((col("doc_id") +: tsCols) ++ Seq(col("__ga"),
-        explode(array(bandStructs: _*)).as("bs")): _*)
+        explode(array(bandStructs(bands, rowsPerBand)(element_at(col("__sig"), _)): _*))
+          .as("bs")): _*)
       .select((col("doc_id") +: tsCols) ++ (col("__ga") +:
         col("bs.band").as("band") +:
         rowNames.map(rn => col(s"bs.$rn").as(rn))): _*)
@@ -1292,25 +1262,27 @@ object Dedup extends org.apache.spark.internal.Logging {
     *
     * Algorithm: distributed min-label propagation with POINTER JUMPING.
     * Labels start as the node's own id; each round every node takes the
-    * min of its own label and its neighbors' labels (one equi-join on the
-    * edge relation + one min-aggregate), then shortcuts through its
-    * label's own label (L(u) := L(L(u)), one more equi-join — sound
-    * because every label IS a node id and L is monotone non-increasing).
+    * min of its own label and its neighbors' labels, then shortcuts
+    * through its label's own label (L(u) := L(L(u)) — sound because
+    * every label IS a node id and L is monotone non-increasing).
     * The edge step alone needs diameter rounds; the shortcut doubles the
     * effective propagation distance per round, so convergence is
     * O(log(diameter)) — near-clique duplicate graphs converge in 2-3
     * rounds and even a pathological n-node CHAIN (possible under
     * transitive near-duplication) needs only ~log2(n) (pinned by spec).
-    * Each round is a few shuffles keyed by doc_id, output stays one row
-    * per node, and labels are lineage-truncated + previous-round blocks
-    * evicted, so the job graph and block storage stay flat across
-    * iterations; the convergence check is a single scalar count. At
-    * production scale the same loop runs with a reliable checkpoint dir
-    * instead of localCheckpoint.
+    * The edges are one adjacency RDD hash-partitioned like the labels,
+    * so a round is ONE Spark job over co-partitioned node -> label data:
+    * three shuffles (neighbour min, the jump's request and its answer),
+    * and a result stage that stores the new labels with their lineage
+    * cut (localCheckpoint, or a reliable checkpoint dir) while each task
+    * adds its fallen labels to the change flag, an accumulator. The
+    * previous round's labels are released once the next are stored, so
+    * the job graph and block storage stay flat across iterations. With a
+    * checkpoint dir a second job per round writes the files.
     *
     * Precondition: every id in `pairs` must appear in `nodes` (true for
     * any pair relation derived from the same corpus) — edges to unknown
-    * nodes would silently drop in the jump join's inner equi-join.
+    * nodes silently drop out of the neighbour min.
     *
     * @param maxIter hard bound on rounds (a last-resort guard; the loop
     *   exits on convergence). If the bound is hit the labels returned are
@@ -1403,84 +1375,68 @@ object Dedup extends org.apache.spark.internal.Logging {
 
   private def componentsRunInner(nodes: DataFrame, pairs: DataFrame,
       maxIter: Int, checkpointDir: Option[String],
-      sc: org.apache.spark.SparkContext): ComponentsRun = {
-    val edges = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .union(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
-      .distinct()
-      .persist()
-    // Each round's labels are materialized with truncated lineage; without
-    // explicit release a d-round run pins d corpus-sized artifacts.
-    // localCheckpoint mode: the checkpointed RDD is the one wrapped by the
-    // returned Dataset's LogicalRDD leaf — unpersist exactly that id (a
-    // global getPersistentRDDs before/after diff would also sweep up
-    // UNRELATED caches that happen to materialize during the round, e.g.
-    // the edges persist or RelCache pins lazily registered by round 1's
-    // job). Reliable mode: the artifact is the leaf RDD's checkpoint
-    // FILES — delete those paths once the next round is on disk.
-    final case class Pin(df: DataFrame, blockIds: Set[Int], files: Set[String])
-    // the round pins not yet released: a round that throws releases them
-    val live = scala.collection.mutable.Set[Pin]()
-    def pin(df: => DataFrame): Pin = {
-      val reliable = checkpointDir.isDefined
-      val out = if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
-      val leafRdds = out.queryExecution.analyzed.collectLeaves().collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }
-      val p = if (reliable) Pin(out, Set.empty, leafRdds.flatMap(_.getCheckpointFile).toSet)
-        else Pin(out, leafRdds.map(_.id).toSet, Set.empty)
-      live += p
-      p
+      sc: org.apache.spark.SparkContext): ComponentsRun = graft.util.RelCache.scoped { scope =>
+    import org.apache.spark.rdd.RDD
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    val part = new org.apache.spark.HashPartitioner(
+      nodes.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
+    // the ids as longs; a NULL id joins nothing, as in the SQL form
+    def ids(df: DataFrame, cs: String*) = {
+      require(cs.forall(c => Seq(LongType, IntegerType, ShortType, ByteType)
+        .contains(df.schema(c).dataType)), s"components takes integral ids: ${df.schema}")
+      df.select(cs.map(col(_).cast("long")): _*)
+        .queryExecution.toRdd.filter(r => cs.indices.forall(!r.isNullAt(_)))
     }
-    def release(p: Pin): Unit = {
-      live -= p
-      p.blockIds.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-      p.files.foreach { f =>
-        val path = new org.apache.hadoop.fs.Path(f)
-        path.getFileSystem(sc.hadoopConfiguration).delete(path, true)
-      }
+    // every pair in both directions, as each node's distinct neighbours
+    val adj = scope.persist(ids(pairs, "doc_a", "doc_b")
+      .flatMap(r => Seq(r.getLong(0) -> r.getLong(1), r.getLong(1) -> r.getLong(0)))
+      .groupByKey(part).mapValues(_.toArray.distinct))
+    val changed = sc.longAccumulator("components changed")
+    var labels = ids(nodes, "doc_id").map(r => (r.getLong(0), r.getLong(0)))
+      .reduceByKey(part, (a, _) => a)
+    var rows = Option.empty[RDD[InternalRow]]
+    var n = 0L
+    // ONE job: the new (node, comp) rows, stored with their lineage cut,
+    // and the change flag, which each task of its result stage adds to
+    def pin(next: RDD[(Long, (Long, Long))]): Unit = {
+      changed.reset()
+      val out = scope.checkpoint(next.mapPartitions(_.map { case (node, (comp, old)) =>
+        if (comp < old) changed.add(1L)
+        InternalRow(node, comp)
+      }, preservesPartitioning = true), checkpointDir.isDefined)
+      n = out.count()
+      rows.foreach(scope.release) // the previous round's
+      rows = Some(out)
+      labels = out.mapPartitions(_.map(r => (r.getLong(0), r.getLong(1))), preservesPartitioning = true)
     }
-    try {
-      var labels = pin(
-        nodes.select(col("doc_id").as("node"), col("doc_id").as("comp")))
-      var it = 0
-      var converged = false
-      while (!converged && it < maxIter) {
-        val prop = labels.df.as("l")
-          .join(edges.as("e"), col("l.node") === col("e.u"))
-          .select(col("e.v").as("node"), col("l.comp").as("comp"))
-        // relax via left join + least, not union + groupBy: a Union inside
-        // the loop trips Catalyst's constraint rewrite once the jump join's
-        // regenerated attribute ids feed back in (AttributeMap key-not-found
-        // in UnionBase.rewriteConstraints); the join form is equivalent and
-        // also skips re-shuffling the untouched labels rows
-        val nbrMin = prop.groupBy("node").agg(min("comp").as("__nc"))
-        val relaxed = pin(
-          labels.df.join(nbrMin, Seq("node"), "left")
-            .select(col("node"),
-              least(col("comp"), coalesce(col("__nc"), col("comp"))).as("comp")))
-        // pointer jump: L(u) := L(L(u)). Inner join is total — every comp
-        // value is some node's id, and the labels relation has a row for
-        // every node; L(L(u)) <= L(u) because labels only ever decrease.
-        val next = pin(
-          relaxed.df.as("a").join(relaxed.df.as("b"), col("a.comp") === col("b.node"))
-            .select(col("a.node").as("node"), col("b.comp").as("comp")))
-        val changed = next.df.as("n").join(labels.df.as("o"), "node")
-          .filter(col("n.comp") < col("o.comp")).count()
-        release(labels)
-        release(relaxed)
-        labels = next
-        converged = changed == 0L
-        it += 1
-      }
-      live -= labels // the result
-      ComponentsRun(
-        labels.df.select(col("node").as("doc_id"), col("comp").as("component"),
+    var it = 0
+    while ((it == 0 || changed.value > 0L) && it < maxIter) {
+      // relax: each node takes the min of its own and its neighbours' labels
+      val nbrMin = adj.join(labels).flatMap { case (_, (nbrs, l)) => nbrs.iterator.map(_ -> l) }
+        .reduceByKey(part, math.min(_, _))
+      val relaxed = labels.leftOuterJoin(nbrMin).mapValues { case (l, m) => m.fold(l)(math.min(l, _)) }
+      // pointer jump: L(u) := L(L(u)). Total: every comp value is some
+      // node's id, and L(L(u)) <= L(u) because labels only ever decrease
+      pin(relaxed.map(_.swap).join(relaxed).values.join(labels))
+      it += 1
+    }
+    val converged = it > 0 && changed.value == 0L
+    if (rows.isEmpty) pin(labels.mapValues(l => (l, l)))
+    // the published labels: a LogicalRDD over the stored rows (the leaf a
+    // memo releases), with their size for the join planner
+    val id = nodes.schema("doc_id")
+    val session = nodes.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val leaf = org.apache.spark.sql.execution.LogicalRDD(Seq("node", "comp").map(
+        org.apache.spark.sql.catalyst.expressions.AttributeReference(_, LongType, id.nullable)()),
+      scope.keep(rows.get))(session,
+      Some(org.apache.spark.sql.catalyst.plans.logical.Statistics(BigInt(24) * n, Some(n))))
+    ComponentsRun(
+      org.apache.spark.sql.GraftShim.ofRows(session, leaf)
+        .select(col("node").cast(id.dataType).as("doc_id"),
+          col("comp").cast(id.dataType).as("component"),
           (col("node") === col("comp")).as("keep")),
-        it, converged)
-    } finally {
-      edges.unpersist()
-      live.toList.foreach(release)
-    }
+      it, converged)
   }
 
   /** Span-level dedup: line/paragraph dedup (CCNet, RefinedWeb) generalized

@@ -3,6 +3,7 @@ package graft.util
 import java.util.concurrent.{CompletableFuture, CompletionException, ConcurrentHashMap}
 
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{classic, DataFrame, GraftShim}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, BroadcastQueryStageExec,
@@ -126,8 +127,10 @@ object RelCache {
     * released (eviction or [[clear]]), a plan derived from it recomputes
     * from its logical plan, but one that had already executed throws on
     * a rerun: its physical plan reads the released blocks (README,
-    * "Artifact caching"). */
-  def persist(df: DataFrame): DataFrame = pins("persist", df)() {
+    * "Artifact caching"). `reads` runs before a build only: it pins the
+    * intermediates the build reads (see [[Scope]]). */
+  def persist(df: DataFrame, reads: => Any = ()): DataFrame = pins("persist", df)() {
+    reads // a build's inputs, pinned in the caller's build scope
     val ds = df.asInstanceOf[classic.Dataset[_]]
     val cache = ds.sparkSession.sharedState.cacheManager
     // an entry cached before this call (an input pin, another session's
@@ -190,6 +193,70 @@ object RelCache {
   val memo = new Store[DataFrame](MaxEntries, releaseBlocks,
     (tag, key, wall) =>
       logger.warn(f"memo build: $tag (key#${key.hashCode()}%08x) took $wall%.3f s"))
+
+  /** A build scope: what one cold build materializes only for itself (a
+    * DataFrame pin, a round's RDD, a checkpoint file) lives until the
+    * scope closes, on success or on failure, or until [[release]]. A scope
+    * releases only what it created: a relation the CacheManager already
+    * holds is read, not pinned again, and [[keep]] hands a result to the
+    * caller. Used by one thread. */
+  final class Scope private[RelCache] () {
+    private val owned = scala.collection.mutable.LinkedHashMap[AnyRef, () => Unit]()
+
+    /** `df` materialized once and cached until the scope closes. Its
+      * buffers keep their lineage, so another caller's build planned over
+      * them recomputes after the release instead of failing. */
+    def pin(df: DataFrame): DataFrame = {
+      val ds = df.asInstanceOf[classic.Dataset[_]]
+      val cache = ds.sparkSession.sharedState.cacheManager
+      if (cache.lookupCachedData(ds).isEmpty) {
+        own(df.persist(StorageLevel.MEMORY_AND_DISK))(_.unpersist())
+        // a count of the buffers, not of the DataFrame: the aggregate above
+        // a fresh cache entry costs two more jobs (4 against 2 on sf0.001)
+        cache.lookupCachedData(ds).get.cachedRepresentation.cacheBuilder
+          .cachedColumnBuffers.count()
+      }
+      df
+    }
+
+    /** `rdd` cached until the scope closes. */
+    def persist[T](rdd: RDD[T]): RDD[T] =
+      own(rdd.persist(StorageLevel.MEMORY_AND_DISK))(_.unpersist(false))
+
+    /** `rdd` stored by its next job with its lineage cut: in local blocks,
+      * or also written under the context's checkpoint dir when `reliable`.
+      * The release drops the blocks and deletes the files. */
+    def checkpoint[T](rdd: RDD[T], reliable: Boolean): RDD[T] = {
+      if (reliable) rdd.persist(StorageLevel.MEMORY_AND_DISK).checkpoint()
+      else rdd.localCheckpoint()
+      own(rdd) { r =>
+        r.unpersist(false)
+        r.getCheckpointFile.foreach { f =>
+          val path = new org.apache.hadoop.fs.Path(f)
+          path.getFileSystem(r.sparkContext.hadoopConfiguration).delete(path, true)
+        }
+      }
+    }
+
+    def release(x: AnyRef): Unit = owned.remove(x).foreach(_())
+
+    def keep[T <: AnyRef](x: T): T = { owned.remove(x); x }
+
+    private def own[T <: AnyRef](x: T)(release: T => Unit): T = {
+      owned(x) = () => release(x)
+      x
+    }
+
+    private[RelCache] def close(): Unit = owned.keys.toList.reverse.foreach { x =>
+      try release(x) catch { case scala.util.control.NonFatal(_) => () }
+    }
+  }
+
+  /** Runs `body` in a new build [[Scope]] and closes it. */
+  def scoped[T](body: Scope => T): T = {
+    val scope = new Scope
+    try body(scope) finally scope.close()
+  }
 
   /** Empties every store: pins are unpersisted, keyed relations release
     * their checkpoint blocks, values are dropped. Inputs pinned by

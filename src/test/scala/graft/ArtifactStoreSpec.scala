@@ -107,13 +107,14 @@ class ArtifactStoreSpec extends SparkSpec {
     }
   }
 
-  // the plans of every CacheManager entry (the listing is private[sql])
-  private def cached = {
+  // every CacheManager entry (the listing is private[sql]), and their plans
+  private def entries = {
     import org.apache.spark.sql.execution.{CacheManager, CachedData}
     val field = classOf[CacheManager].getDeclaredField("cachedData")
     field.setAccessible(true)
-    field.get(spark.sharedState.cacheManager).asInstanceOf[IndexedSeq[CachedData]].map(_.plan)
+    field.get(spark.sharedState.cacheManager).asInstanceOf[IndexedSeq[CachedData]]
   }
+  private def cached = entries.map(_.plan)
 
   test("near-dup verification pins answers, not gram sets: rows equal a Scala jaccard") {
     import graft.pipeline.Dedup
@@ -154,6 +155,76 @@ class ArtifactStoreSpec extends SparkSpec {
         assert(a < 100 && a != b && j >= 0.7 && j == jaccard(a, b), s"crossNearDup row ($a, $b, $j)")
       }
     } finally graft.util.RelCache.clear()
+  }
+
+  test("band signatures live for one build: no banded pin after cold calls, nothing built warm") {
+    import graft.pipeline.Dedup
+    import org.apache.spark.sql.DataFrame
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val ref = docs.where($"doc_id" < 100)
+    val sc = spark.sparkContext
+    graft.util.RelCache.clear()
+    val (before, rdds) = (cached.toSet, sc.getPersistentRDDs.keySet.toSet)
+    def rowsOf(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    val calls = Seq[(String, () => DataFrame)](
+      "minhashLsh" -> (() => Dedup.minhashLsh(docs)),
+      "nearDupPairs" -> (() => Dedup.nearDupPairs(docs)),
+      "crossNearDup" -> (() => Dedup.crossNearDup(ref, docs)),
+      "minhashAccuracy" -> (() => Dedup.minhashAccuracy(docs)))
+    try {
+      val cold = calls.map { case (n, call) => n -> rowsOf(call()) }.toMap
+      val bandCols = Seq("doc_id", "band", "s1", "s2", "s3", "s4")
+      val added = entries.filterNot(e => before(e.plan))
+      val banded = added.filter(_.plan.output.map(_.name) == bandCols)
+      assert(banded.isEmpty, s"banded relations stay cached:\n${banded.map(_.plan).mkString("\n")}")
+      // every RDD the calls left persisted holds the buffers of a pin
+      val pinned = added.map(_.cachedRepresentation.cacheBuilder)
+        .filter(_.isCachedColumnBuffersLoaded).map(_.cachedColumnBuffers.id).toSet
+      val stray = sc.getPersistentRDDs.keySet.toSet -- rdds -- pinned
+      assert(stray.isEmpty, s"persisted RDDs that no pin owns: $stray")
+
+      calls.foreach { case (n, call) =>
+        val size = cached.size
+        var out: DataFrame = null
+        assert(jobsOf { out = call() } == 0, s"a warm $n started a job")
+        assert(cached.size == size, s"a warm $n added a cache entry")
+        assert(rowsOf(out) == cold(n), s"a warm $n returned other rows")
+      }
+
+      // the answers, from the signatures in Scala: candidates share one of
+      // the 16 buckets of 4 hashes, the estimate is the share of equal hashes
+      val sig = Dedup.minhashSignature(docs, 5, 64).collect()
+        .map(r => r.getLong(0) -> (1 to 64).map(r.getLong)).toMap
+      def shared(a: Long, b: Long) = (0 until 16).exists(i =>
+        sig(a).slice(4 * i, 4 * i + 4) == sig(b).slice(4 * i, 4 * i + 4))
+      val ids = sig.keys.toSeq.sorted
+      val cand = (for (a <- ids; b <- ids if a < b && shared(a, b)) yield Seq(a, b)).toSet
+      assert(cold("minhashLsh") == cand)
+      val est = cold("minhashAccuracy").map(r => Seq(r(0), r(1)) -> r(2)).toMap
+      assert(est.keySet == cand, "minhashAccuracy reports other candidates")
+      est.foreach { case (Seq(a: Long, b: Long), e) =>
+        assert(e == sig(a).zip(sig(b)).count(p => p._1 == p._2) / 64.0, s"estimate of ($a, $b)")
+      }
+      val near = cold("minhashAccuracy").filter(_(3).asInstanceOf[Double] >= 0.7)
+        .map(r => Seq(r(0), r(1), r(3)))
+      assert(cold("nearDupPairs") == near && near.nonEmpty)
+      val crossCand = for (a <- ids if a < 100; b <- ids if a != b && shared(a, b)) yield (a, b)
+      assert(cold("crossNearDup").map(r => (r(0), r(1))) ==
+        crossCand.filter { case (a, b) =>
+          near.exists(r => r.take(2) == Seq(a min b, a max b)) }.toSet)
+    } finally graft.util.RelCache.clear()
+  }
+
+  test("components: clear() releases every RDD the run persisted") {
+    val sc = spark.sparkContext
+    graft.util.RelCache.clear()
+    val rdds = sc.getPersistentRDDs.keySet.toSet
+    val nodes = (1L to 20L).toDF("doc_id")
+    val pairs = (1L until 20L).filter(_ % 5 != 0).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val labels = graft.pipeline.Dedup.components(nodes, pairs).collect()
+    assert(labels.map(r => r.getLong(1)).toSet == Set(1L, 6L, 11L, 16L))
+    graft.util.RelCache.clear()
+    assert(sc.getPersistentRDDs.keySet.toSet == rdds, "clear() left a persisted RDD")
   }
 
   test("componentsRun: a round that throws leaves no cache entry and no persisted RDD") {

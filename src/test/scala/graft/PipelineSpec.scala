@@ -1513,6 +1513,42 @@ class PipelineSpec extends SparkSpec {
     assert(run.rounds <= 10, s"rounds = ${run.rounds}")
   }
 
+  test("components: one job per round") {
+    val n = 40L
+    val nodes = (1L to n).toDF("doc_id")
+    val pairs = (1L until n).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    var run: Dedup.ComponentsRun = null
+    val jobs = jobsOf { run = Dedup.componentsRun(nodes, pairs) }
+    assert(run.converged && run.rounds > 2)
+    assert(jobs <= run.rounds + 2, s"$jobs jobs for ${run.rounds} rounds")
+    assert(run.labels.collect().forall(_.getLong(1) == 1L))
+  }
+
+  test("components: labels equal a union-find on seeded random graphs") {
+    val rnd = new scala.util.Random(20261020L)
+    (1 to 6).foreach { g =>
+      val ids = rnd.shuffle((1L to 300L).toList).take(20 + rnd.nextInt(60))
+      val edges = Seq.fill(rnd.nextInt(ids.size)) {
+        (ids(rnd.nextInt(ids.size)), ids(rnd.nextInt(ids.size)))
+      }
+      // duplicate and reversed pairs of some edges; the rest of the ids
+      // stay isolated unless an edge reaches them
+      val pairs = edges ++ edges.take(edges.size / 3) ++ edges.take(edges.size / 4).map(_.swap)
+      val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
+      def find(i: Long): Long = if (parent(i) == i) i else find(parent(i))
+      pairs.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        parent(ra max rb) = ra min rb
+      }
+      val expected = ids.map(i => i -> ((find(i), find(i) == i))).toMap
+      val run = Dedup.componentsRun(ids.toDF("doc_id"), pairs.toDF("doc_a", "doc_b"))
+      assert(run.converged, s"graph $g")
+      val out = run.labels.collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
+      assert(out == expected, s"graph $g: ${ids.size} nodes, ${pairs.size} pairs")
+    }
+  }
+
   test("span dedup: cross-doc spans stripped, within-doc repeats kept") {
     val w2 = Seq(
       (1L, "a b c d e f"),   // spans (w=2): "a b","c d","e f"

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,6 +13,34 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = () // session shared across suites
+
+  /** Jobs `f` starts on this thread. The listener bus delivers events in
+    * order, so once a marker job's start arrives every job of `f` has. */
+  protected def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = "graft.spec.jobs"
+    val jobs = new AtomicInteger()
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(tag)).orNull match {
+          case "run" => jobs.incrementAndGet()
+          case "drain" => drained.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "run")
+      try f finally sc.setLocalProperty(tag, "drain")
+      sc.parallelize(Seq(0), 1).count()
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain in 60 s")
+      jobs.get
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 object SparkSpec {
