@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{GramHashes, HeavyHitters, MinhashSig, RepetitionStats, SimhashSig, SortedIntersectCount, VecDot, VecDotFD}
-import graft.operators.{DenseHistogramStrategy, HistVectorAgg, HistVectorDecAgg}
+import graft.operators.DenseHistogramStrategy
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -17,7 +17,6 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *  - vec_dot(a, b)                      float-vector dot product (double)
   *  - sorted_intersect_count(a, b)       |A ∩ B| of sorted long arrays
   *  - gram_hashes(text, salt, k)         sorted distinct k-gram hash set
-  *  - hist_vector(idx, w, nBins, flow)   dense histogram vector aggregate
   *
   * It also injects [[graft.operators.DenseHistogramStrategy]], the planner
   * of `Histogram`'s dense kernel. `Histogram` installs that strategy on
@@ -43,11 +42,6 @@ object GraftExtensions {
     case other => throw new IllegalArgumentException(
       s"$what must be an integer literal (got $other)")
   }
-  private def boolLit(e: Expression, what: String): Boolean = e match {
-    case Literal(v: Boolean, _) => v
-    case other => throw new IllegalArgumentException(
-      s"$what must be a boolean literal (got $other)")
-  }
 
   private def info(name: String, usage: String) =
     new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
@@ -62,14 +56,6 @@ object GraftExtensions {
     ("gram_hashes",
       "gram_hashes(text, salt, k) - sorted distinct hashes of character k-grams",
       args => GramHashes(args(0), args(1), intLit(args(2), "gram_hashes k"))),
-    ("hist_vector",
-      "hist_vector(idx, weight, nBins, flow) - dense histogram count vector",
-      args => HistVectorAgg(args(0), args(1), intLit(args(2), "hist_vector nBins"),
-        boolLit(args(3), "hist_vector flow")).toAggregateExpression()),
-    ("hist_vector_dec",
-      "hist_vector_dec(idx, weight, nBins, flow) - decimal-exact weighted histogram vector",
-      args => HistVectorDecAgg(args(0), args(1), intLit(args(2), "hist_vector_dec nBins"),
-        boolLit(args(3), "hist_vector_dec flow")).toAggregateExpression()),
     ("minhash_sig",
       "minhash_sig(text, k, numHashes) - per-doc MinHash signature array",
       args => MinhashSig(args(0), intLit(args(1), "minhash_sig k"),

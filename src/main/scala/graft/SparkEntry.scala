@@ -253,19 +253,16 @@ object SparkEntry {
         opts = HistOptions(dense = true))
     },
     "q19_hist_dense_vector" -> { (s, dir) =>
-      // dense-vector TypedImperativeAggregate path: one Array[Double] per
-      // (group, map task) through the shuffle instead of per-bin rows
+      // the same call as q18: both names stay in the gated query set
       implicit val sp: SparkSession = s
-      graft.operators.HistVectorAgg.histogram(
-        t(dir, "events"), col("value"), axValue, Seq("event_type"))
+      hist(dir, "events", col("value"), axValue, Seq("event_type"),
+        HistOptions(dense = true))
     },
     "q67_hist_dense_vector_weighted" -> { (s, dir) =>
-      // weighted dense-vector path: HistVectorDecAgg's DECIMAL(38,14)
-      // buffers must match the sparse decimal path bit-for-bit
+      // the keyed kernel's exact sums must match the decimal oracle bit for bit
       implicit val sp: SparkSession = s
-      graft.operators.HistVectorAgg.histogram(
-        t(dir, "events"), col("value"), axValue, Seq("event_type"),
-        weight = Some(col("value")))
+      hist(dir, "events", col("value"), axValue, Seq("event_type"),
+        HistOptions(dense = true, weight = Some(col("value"))))
     },
     "q20_stat_mean" -> { (s, dir) =>
       implicit val sp: SparkSession = s

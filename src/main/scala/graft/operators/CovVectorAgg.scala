@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
   * them; this aggregate keeps ONE Array[Long] of quantized moments per
   * (task) and merges buffers — the corpus is read once with zero row
   * fan-out, and the shuffle carries one ~34 KB buffer per map task.
-  * Same trade as HistVectorAgg vs the sparse groupBy.
+  * Same trade as the dense histogram kernel vs the sparse groupBy.
   *
   * Quantization is [[graft.pipeline.Similarity.embedCovariance]]'s
   * verbatim: qᵢ = floor(xᵢ·1e4) exact longs, so the emitted sums are

@@ -146,32 +146,4 @@ object ExactSum {
       case Some(f) if f.dataType != DoubleType => df.withColumn(name, Dec.toDec(col(name)))
       case _ => df
     }
-
-  /** Aggregation-buffer bytes: the slot count, then per slot a flag and,
-    * when set, the unscaled sum. */
-  def toBytes(s: ExactSum): Array[Byte] = {
-    val bytes = new java.io.ByteArrayOutputStream()
-    val out = new java.io.DataOutputStream(bytes)
-    out.writeInt(s.slots)
-    for (t <- (0 until s.slots).map(s.total)) {
-      out.writeBoolean(t != null)
-      if (t != null) {
-        val u = t.unscaledValue().toByteArray
-        out.writeInt(u.length)
-        out.write(u)
-      }
-    }
-    bytes.toByteArray
-  }
-
-  def fromBytes(bytes: Array[Byte]): ExactSum = {
-    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
-    val s = new ExactSum(in.readInt())
-    for (i <- 0 until s.slots if in.readBoolean()) {
-      val u = new Array[Byte](in.readInt())
-      in.readFully(u)
-      s.addUnscaled(i, new JBI(u))
-    }
-    s
-  }
 }

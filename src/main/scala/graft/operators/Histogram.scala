@@ -210,23 +210,8 @@ object Histogram {
     * across partitionings and engines. Variance is clamped at 0 before
     * the sqrt (an exact-arithmetic one-value bin yields exactly 0). */
   def profile(df: DataFrame, x: Column, ax: BinAxis, y: Column,
-      dims: Seq[String] = Nil): DataFrame = {
-    val yd = y.cast("double")
-    val proj = df
-      .filter(ax.keepPred(x, includeUnder = false, includeOver = false) && yd.isNotNull)
-      .select(dims.map(col) ++ Seq(ax.index(x).as("__i0"), yd.as("__y")): _*)
-    val sy = graft.util.Dec.exactDouble(sum(graft.util.Dec.toDec(col("__y"))))
-    val syy = graft.util.Dec.exactDouble(
-      sum(graft.util.Dec.toDec(col("__y") * col("__y"))))
-    proj.groupBy((dims :+ "__i0").map(col): _*)
-      .agg(count(lit(1)).as("cnt"), sy.as("__sy"), syy.as("__syy"))
-      .withColumn("mean_y", col("__sy") / col("cnt").cast("double"))
-      .withColumn("std_y", sqrt(greatest(lit(0.0),
-        col("__syy") / col("cnt").cast("double") - col("mean_y") * col("mean_y"))))
-      .select(dims.map(col) ++ Seq(
-        ax.label(col("__i0")).as(ax.binsCol, graft.axes.AxisMetadata.toMetadata(ax)),
-        col("cnt"), col("mean_y"), col("std_y")): _*)
-  }
+      dims: Seq[String] = Nil): DataFrame =
+    profileNd(df, Seq(x -> ax), y, "y", dims)
 
   /** 2-D profile histogram — [[profile]] with TWO binned coordinates
     * (boost-histogram's Mean storage on a 2-axis histogram; ROOT's
@@ -240,26 +225,35 @@ object Histogram {
     * (dims, i, j); the DECIMAL(38,14) Σz/Σz² discipline and the fixed
     * IEEE mean/std tail are [[profile]]'s verbatim. */
   def profile2d(df: DataFrame, x: Column, ax: BinAxis, y: Column,
-      ay: BinAxis, z: Column, dims: Seq[String] = Nil): DataFrame = {
-    val zd = z.cast("double")
-    val proj = df
-      .filter(ax.keepPred(x, includeUnder = false, includeOver = false) &&
-        ay.keepPred(y, includeUnder = false, includeOver = false) &&
-        zd.isNotNull)
-      .select(dims.map(col) ++ Seq(ax.index(x).as("__i0"),
-        ay.index(y).as("__i1"), zd.as("__z")): _*)
-    val sz = graft.util.Dec.exactDouble(sum(graft.util.Dec.toDec(col("__z"))))
-    val szz = graft.util.Dec.exactDouble(
-      sum(graft.util.Dec.toDec(col("__z") * col("__z"))))
-    proj.groupBy((dims ++ Seq("__i0", "__i1")).map(col): _*)
-      .agg(count(lit(1)).as("cnt"), sz.as("__sz"), szz.as("__szz"))
-      .withColumn("mean_z", col("__sz") / col("cnt").cast("double"))
-      .withColumn("std_z", sqrt(greatest(lit(0.0),
-        col("__szz") / col("cnt").cast("double") - col("mean_z") * col("mean_z"))))
-      .select(dims.map(col) ++ Seq(
-        ax.label(col("__i0")).as(ax.binsCol, graft.axes.AxisMetadata.toMetadata(ax)),
-        ay.label(col("__i1")).as(ay.binsCol, graft.axes.AxisMetadata.toMetadata(ay)),
-        col("cnt"), col("mean_z"), col("std_z")): _*)
+      ay: BinAxis, z: Column, dims: Seq[String] = Nil): DataFrame =
+    profileNd(df, Seq(x -> ax, y -> ay), z, "z", dims)
+
+  /** The step behind [[profile]] and [[profile2d]]: per in-range cell of
+    * `specs`, the entry count, `mean_<name>` and `std_<name>` of `v`. */
+  private def profileNd(df: DataFrame, specs: Seq[(Column, BinAxis)], v: Column,
+      name: String, dims: Seq[String]): DataFrame = {
+    val idxNames = specs.indices.map(k => s"__i$k")
+    val vd = v.cast("double")
+    val keep = specs.map { case (c, ax) =>
+      ax.keepPred(c, includeUnder = false, includeOver = false)
+    }.reduce(_ && _)
+    val proj = df.filter(keep && vd.isNotNull)
+      .select(dims.map(col) ++
+        specs.zipWithIndex.map { case ((c, ax), k) => ax.index(c).as(idxNames(k)) } :+
+        vd.as("__v"): _*)
+    val sv = graft.util.Dec.exactDouble(sum(graft.util.Dec.toDec(col("__v"))))
+    val svv = graft.util.Dec.exactDouble(
+      sum(graft.util.Dec.toDec(col("__v") * col("__v"))))
+    val (mean, std) = (s"mean_$name", s"std_$name")
+    proj.groupBy((dims ++ idxNames).map(col): _*)
+      .agg(count(lit(1)).as("cnt"), sv.as("__sv"), svv.as("__svv"))
+      .withColumn(mean, col("__sv") / col("cnt").cast("double"))
+      .withColumn(std, sqrt(greatest(lit(0.0),
+        col("__svv") / col("cnt").cast("double") - col(mean) * col(mean))))
+      .select(dims.map(col) ++
+        specs.zipWithIndex.map { case ((_, ax), k) =>
+          ax.label(col(idxNames(k))).as(ax.binsCol, graft.axes.AxisMetadata.toMetadata(ax))
+        } ++ Seq(col("cnt"), col(mean), col(std)): _*)
   }
 
   /** Weighted profile histogram (boost-histogram's WeightedMean storage —

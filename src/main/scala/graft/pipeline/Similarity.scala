@@ -208,10 +208,6 @@ object Similarity {
         col("nrm").as("__nb")), "neighbor_id")
       .select(col("query_id"), col("neighbor_id"),
         cosine(col("__ea"), col("__eb"), col("__na"), col("__nb")).as("cosine"))
-    def blocks(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.analyzed.collectLeaves().collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }
     // AUTO budget: max(4, ceil(log2(n)/4)) — the convergence scaling
     // measured in SURVEY.md §6d (round-11 graph-ANN findings); the count
     // job runs on the already-persisted corpus relation (one cached scan)
@@ -264,7 +260,7 @@ object Similarity {
         logWarning(f"knnGraph round $round/$budget: edge churn $churn%.4f")
         converged = churn < 0.01
       }
-      blocks(graph).foreach(_.unpersist(false))
+      graft.util.RelCache.releaseBlocks(graph)
       graph = next
     }
     graph
@@ -1932,7 +1928,7 @@ object Similarity {
     * [[graft.operators.CovVectorAgg]] — one Array[Long] per map task,
     * ZERO row fan-out (the declarative path explodes d(d+1)/2 pair
     * rows per vector; at d = 64 that is a 2080× fan-out the aggregate
-    * eliminates, the HistVectorAgg trade) — then the identical
+    * eliminates, the dense histogram kernel's trade) — then the identical
     * covariance arithmetic on the identical exact integers, so the
     * output is BIT-identical to [[embedCovariance]] (spec-pinned). The
     * single moment row is bins-sized (1 + d + d(d+1)/2 longs) and the

@@ -218,14 +218,6 @@ object TextAnalysis {
   private def bpeTrainRun(docs: DataFrame, nMerges: Int,
       batchCap: Int): Seq[(Int, String, String, Long)] = {
     import graft.functions.{BpeVocab, CodePoints, MergePair}
-    val spark = docs.sparkSession
-    val sc = spark.sparkContext
-    def evict(df: DataFrame): Unit =
-      df.queryExecution.analyzed.collectLeaves().foreach {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          sc.getPersistentRDDs.get(l.rdd.id).foreach(_.unpersist(false))
-        case _ => ()
-      }
     var words = docs
       .select(explode(regexp_extract_all(coalesce(col("text"), lit("")),
         lit(BpeVocab.WordRe), lit(0))).as("w"))
@@ -242,7 +234,7 @@ object TextAnalysis {
     while (!done && merges.size < nMerges) {
       if (depth >= 3) {
         val ck = words.localCheckpoint(true)
-        evict(anchor)
+        graft.util.RelCache.releaseBlocks(anchor)
         anchor = ck
         words = ck
         depth = 0
@@ -290,7 +282,7 @@ object TextAnalysis {
         depth += 1
       }
     }
-    evict(anchor)
+    graft.util.RelCache.releaseBlocks(anchor)
     merges.toSeq
   }
 

@@ -81,15 +81,10 @@ object Layout {
       df, col(xCol), xCol, nBins).axis
     val ay = graft.operators.QuantileBins.autoAxisTagged(
       df, col(yCol), yCol, nBins).axis
-    df.select(ax.index(col(xCol)).as("__i"), ay.index(col(yCol)).as("__j"))
-      .filter(col("__i") >= 0 && col("__i") <= ax.nBins - 1 &&
-        col("__j") >= 0 && col("__j") <= ay.nBins - 1)
-      .select(col("__i").cast("long").as("cell_q"),
-        col("__j").cast("long").as("cell_p"))
-      .select(col("cell_q"), col("cell_p"),
-        interleave(Seq(col("cell_q"), col("cell_p")), bits).as("zkey"))
-      .groupBy(col("cell_q"), col("cell_p"), col("zkey"))
-      .agg(count(lit(1)).as("cnt"))
+    graft.operators.Histogram.binCounts(df, Seq(col(xCol) -> ax, col(yCol) -> ay), Nil,
+        graft.operators.HistOptions(intStorage = true))
+      .select(col("__i0").as("cell_q"), col("__i1").as("cell_p"),
+        interleave(Seq(col("__i0"), col("__i1")), bits).as("zkey"), col("cnt"))
   }
 
   /** Z-ordered parquet write: range-partition by the zorder key (so

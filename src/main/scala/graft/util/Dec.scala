@@ -47,7 +47,7 @@ object Dec {
     *
     * try_cast, not cast: NaN/Infinity and precision-38 overflow become NULL
     * (row skipped by SUM) in BOTH engines and under ANSI mode — the same
-    * skip semantics HistVectorDecAgg implements — instead of an
+    * skip semantics the histogram kernel's ExactSum implements — instead of an
     * ANSI-dependent crash. */
   def toDec(c: Column): Column = c.try_cast(D)
 

@@ -40,7 +40,6 @@ object DecRoutes {
         "graft/operators/Histogram.scala",
         "graft/operators/ExactSum.scala",
         "graft/operators/DenseHistogram.scala",
-        "graft/operators/HistVectorAgg.scala",
         "graft/streaming/StreamingHist.scala",
         "graft/pipeline/Similarity.scala",
         "graft/pipeline/Funnel.scala",

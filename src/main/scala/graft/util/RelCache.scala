@@ -138,11 +138,8 @@ object RelCache {
     val fresh = cache.lookupCachedData(ds).isEmpty
     try {
       val pinned = df.persist(StorageLevel.MEMORY_AND_DISK)
-      val builder = cache.lookupCachedData(ds).get.cachedRepresentation.cacheBuilder
-      val buffers = builder.cachedColumnBuffers
-      if (fresh) buffers.localCheckpoint()
-      pinned.count()
-      if (fresh && buffers.isCheckpointed)
+      val builder = fill(df, cutLineage = fresh)
+      if (fresh && builder.cachedColumnBuffers.isCheckpointed)
         builder.synchronized(broadcasts(builder.cachedPlan).foreach(GraftShim.destroy))
       pinned
     } catch {
@@ -151,6 +148,21 @@ object RelCache {
         try df.unpersist() catch { case _: Throwable => () }
         throw e
     }
+  }
+
+  /** Materializes `df`'s cache entry with one count of its column
+    * buffers, their lineage cut first when `cutLineage`. A count of the
+    * DataFrame would plan an aggregate above the entry: more jobs (4
+    * against 2 on sf0.001) for the same stored blocks. Returns the entry's
+    * builder. */
+  private def fill(df: DataFrame, cutLineage: Boolean) = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    val builder = ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds).get
+      .cachedRepresentation.cacheBuilder
+    val buffers = builder.cachedColumnBuffers
+    if (cutLineage) buffers.localCheckpoint()
+    buffers.count()
+    builder
   }
 
   /** The broadcasts a run of `plan` completed: its exchanges, those of its
@@ -177,7 +189,7 @@ object RelCache {
     * outlive the store must own its lifecycle (write it to a table /
     * re-memo it); reference-counting handed-out relations would trade
     * this rare loud failure for unbounded storage growth. */
-  private def releaseBlocks(df: DataFrame): Unit =
+  private[graft] def releaseBlocks(df: DataFrame): Unit =
     df.queryExecution.analyzed.collectLeaves().foreach {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
         l.rdd.unpersist(false)
@@ -211,10 +223,7 @@ object RelCache {
       val cache = ds.sparkSession.sharedState.cacheManager
       if (cache.lookupCachedData(ds).isEmpty) {
         own(df.persist(StorageLevel.MEMORY_AND_DISK))(_.unpersist())
-        // a count of the buffers, not of the DataFrame: the aggregate above
-        // a fresh cache entry costs two more jobs (4 against 2 on sf0.001)
-        cache.lookupCachedData(ds).get.cachedRepresentation.cacheBuilder
-          .cachedColumnBuffers.count()
+        fill(df, cutLineage = false)
       }
       df
     }

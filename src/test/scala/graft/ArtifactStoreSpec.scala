@@ -83,6 +83,31 @@ class ArtifactStoreSpec extends SparkSpec {
     } finally graft.util.RelCache.clear()
   }
 
+  test("RelCache.persist: a cold pin starts 2 jobs and stores the blocks a counted pin stores") {
+    // a fresh relation behind a shuffle; `salt` changes the plan, not the rows
+    def fresh(salt: Long) = spark.range(0, 3000, 1, 4).repartition(3, $"id" % 7)
+      .select($"id", ($"id" * 3 + salt - salt).as("v"))
+    def stored(df: org.apache.spark.sql.DataFrame) = {
+      val id = builderOf(df).getOrElse(fail("no cache entry")).cachedColumnBuffers.id
+      spark.sparkContext.getRDDStorageInfo.filter(_.id == id)
+        .map(i => (i.numPartitions, i.numCachedPartitions, i.memSize, i.diskSize)).toSeq
+    }
+    // a count of the DataFrame materializes a twin: the aggregate above
+    // the entry plans more jobs
+    val counted = fresh(2).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      builderOf(counted).get.cachedColumnBuffers.localCheckpoint()
+      assert(jobsOf(counted.count()) > 2)
+      var pinned: org.apache.spark.sql.DataFrame = null
+      assert(jobsOf { pinned = graft.util.RelCache.persist(fresh(1)) } == 2)
+      assert(stored(pinned) == stored(counted) && stored(pinned).map(_._2) == Seq(3))
+      assert(pinned.collect().toSet == counted.collect().toSet)
+    } finally {
+      counted.unpersist()
+      graft.util.RelCache.clear()
+    }
+  }
+
   test("RelCache.clear: pins rebuild, plans derived earlier stay correct, failed builds stay uncached") {
     val derivedLater = graft.util.RelCache.persist(joined("c")).where($"id" < 1000)
     val ranBefore = graft.util.RelCache.persist(joined("c")).where($"id" >= 1000)

@@ -1,7 +1,7 @@
 package graft
 
 import graft.axes._
-import graft.operators.{HistOptions, Histogram, HistVectorAgg}
+import graft.operators.{HistOptions, Histogram}
 import graft.pipeline.{Dedup, Similarity, TextAnalysis}
 import graft.stats.HistStats
 import org.apache.spark.sql.functions._
@@ -31,7 +31,6 @@ class EmptyInputSpec extends SparkSpec {
     // dense with no groups: grid exists only when dims empty
     assert(Histogram.histogram(emptyNum, col("x"), ax, Seq("g"),
       HistOptions(dense = true)).count() == 0)
-    assert(HistVectorAgg.histogram(emptyNum, col("x"), ax, Seq("g")).count() == 0)
   }
 
   test("stats on empty input: empty output, no division errors") {

@@ -14,7 +14,7 @@ class ExtensionsSpec extends AnyFunSuite {
     s
   }
 
-  test("vec_dot / sorted_intersect_count / gram_hashes / hist_vector from SQL") {
+  test("vec_dot / sorted_intersect_count / gram_hashes from SQL") {
     spark.sql(
       "SELECT CAST(array(1.0, 2.0) AS array<float>) AS a, CAST(array(3.0, 4.0) AS array<float>) AS b"
     ).createOrReplaceTempView("v")
@@ -35,16 +35,6 @@ class ExtensionsSpec extends AnyFunSuite {
       ).head()
     }
     assert(err.getMessage != null)
-
-    spark.sql("SELECT * FROM VALUES (0L, 1.0), (0L, 2.0), (1L, 5.0) AS t(i, w)")
-      .createOrReplaceTempView("h")
-    val vec = spark.sql("SELECT hist_vector(i, w, 2, false) FROM h")
-      .head().getSeq[Double](0)
-    assert(vec == Seq(3.0, 5.0))
-
-    val vecDec = spark.sql("SELECT hist_vector_dec(i, w, 2, false) FROM h")
-      .head().getSeq[Double](0)
-    assert(vecDec == Seq(3.0, 5.0))
 
     assert(spark.sql("SELECT minhash_sig('abcdefgh', 5, 4)")
       .head().getSeq[Long](0).length == 4)

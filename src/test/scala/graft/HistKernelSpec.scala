@@ -272,6 +272,34 @@ class HistKernelSpec extends SparkSpec
     val sums = Histogram.histogram(big, col("x"), ax, opts = HistOptions(weight = Some(col("w"))))
       .orderBy(col("x_bins")).collect().map(_.getDouble(1))
     assert(math.abs(sums(0) - 184467.45) < 1e-9 && math.abs(sums(1) + 184467.44) < 1e-9)
+    // 1e16- and 1e-7-scale addends, whose double sum depends on the order:
+    // the same bits at 1, 7 and 32 partitions
+    val rnd7 = new scala.util.Random(7)
+    val mixed = (0 until 400).map { i =>
+      val w = if (i % 29 == 0) 1.0e16 else rnd7.nextDouble() * 1e-7 + 0.1
+      (rnd7.nextDouble() * 4.0, w)
+    }.toDF("x", "w")
+    val dense = HistOptions(weight = Some(col("w")), dense = true)
+    val want = bits(DeclarativeHistogram.histogramdd(mixed.repartition(5), Seq(col("x") -> ax),
+      opts = dense))
+    for (parts <- Seq(1, 7, 32)) {
+      val got = Histogram.histogram(mixed.repartition(parts), col("x"), ax, opts = dense)
+      assert(bits(got) == want && kernelExecs(got).nonEmpty, s"$parts partitions")
+    }
+    // bin sums whose fraction needs all 14 digits, with dims and without
+    val one = Regular("x", 1, 0.0, 1.0)
+    val d14 = Seq(("a", 0.5, 0.5), ("a", 0.5, 0.49999999999999),
+      ("b", 0.5, -3.0), ("b", 0.5, -1.0e-14)).toDF("g", "x", "w")
+    val weighted = HistOptions(weight = Some(col("w")))
+    val want14 = Map("a" -> 0.99999999999999, "b" -> -3.0000000000000098)
+    check(d14, Seq(col("x") -> one), Seq("g"), weighted, "14 digits, dims")
+    assert(Histogram.histogram(d14, col("x"), one, Seq("g"), weighted).collect()
+      .map(r => r.getString(0) -> r.getDouble(2)).toMap == want14)
+    for ((g, v) <- want14) {
+      val part = d14.filter(col("g") === g)
+      check(part, Seq(col("x") -> one), Nil, weighted, s"14 digits, $g")
+      assert(Histogram.histogram(part, col("x"), one, opts = weighted).collect()(0).getDouble(1) == v, g)
+    }
   }
 
   test("partials past the driver-merge bound tree-merge on executors, spills included") {

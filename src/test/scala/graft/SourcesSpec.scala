@@ -1,7 +1,7 @@
 package graft
 
 import graft.axes.Regular
-import graft.operators.HistVectorAgg
+import graft.operators.{HistOptions, Histogram}
 import graft.sources.Tables
 import graft.streaming.StreamingHist
 import org.apache.spark.sql.functions._
@@ -42,7 +42,7 @@ class SourcesSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("vector and declarative dense paths agree at 8 and 512 bins") {
+  test("kernel and declarative dense paths agree at 8 and 512 bins") {
     import spark.implicits._
     val df = Seq(("a", 1.0), ("a", 200.0), ("b", 513.0)).toDF("g", "x")
     val small = Regular("x", 8, 0.0, 512.0)
@@ -50,9 +50,9 @@ class SourcesSpec extends SparkSpec {
     for (ax <- Seq(small, big)) {
       def rows(h: org.apache.spark.sql.DataFrame) =
         h.collect().map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2)).toMap
-      val got = rows(HistVectorAgg.histogram(df, col("x"), ax, Seq("g")))
-      assert(got == rows(graft.operators.Histogram.histogram(df, col("x"), ax, Seq("g"),
-        graft.operators.HistOptions(dense = true))))
+      val got = rows(Histogram.histogram(df, col("x"), ax, Seq("g"), HistOptions(dense = true)))
+      assert(got == rows(DeclarativeHistogram.histogramdd(df, Seq(col("x") -> ax), Seq("g"),
+        HistOptions(dense = true))))
       assert(got.size == 2 * ax.nBins) // group b kept with all-zero histogram
       val binOf1 = ax.edges.reverse.find(_ <= 1.0).get
       assert(got(("a", binOf1)) == 1.0)
