@@ -272,8 +272,11 @@ class HistKernelSpec extends SparkSpec
     val sums = Histogram.histogram(big, col("x"), ax, opts = HistOptions(weight = Some(col("w"))))
       .orderBy(col("x_bins")).collect().map(_.getDouble(1))
     assert(math.abs(sums(0) - 184467.45) < 1e-9 && math.abs(sums(1) + 184467.44) < 1e-9)
-    // 1e16- and 1e-7-scale addends, whose double sum depends on the order:
-    // the same bits at 1, 7 and 32 partitions
+  }
+
+  test("exact sums: mixed-scale weights give the same bits at 1, 7 and 32 partitions") {
+    val ax = Regular("x", 4, 0.0, 4.0)
+    // 1e16- and 1e-7-scale addends, whose double sum depends on the order
     val rnd7 = new scala.util.Random(7)
     val mixed = (0 until 400).map { i =>
       val w = if (i % 29 == 0) 1.0e16 else rnd7.nextDouble() * 1e-7 + 0.1
@@ -286,7 +289,9 @@ class HistKernelSpec extends SparkSpec
       val got = Histogram.histogram(mixed.repartition(parts), col("x"), ax, opts = dense)
       assert(bits(got) == want && kernelExecs(got).nonEmpty, s"$parts partitions")
     }
-    // bin sums whose fraction needs all 14 digits, with dims and without
+  }
+
+  test("exact sums: bin sums that need all 14 fraction digits, with dims and without") {
     val one = Regular("x", 1, 0.0, 1.0)
     val d14 = Seq(("a", 0.5, 0.5), ("a", 0.5, 0.49999999999999),
       ("b", 0.5, -3.0), ("b", 0.5, -1.0e-14)).toDF("g", "x", "w")
