@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.axes.BinAxis
-import graft.operators.{HistOptions, Histogram}
 import graft.stats.HistStats
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
@@ -38,9 +37,9 @@ object StreamingHist {
     * needs the event-time window column. Batch execution uses plain
     * integer arithmetic on epoch micros instead: the same tumbling
     * assignment (`start = ts - ts mod duration`, Spark's own formula for
-    * epoch-aligned windows) as the histogram kernel's LONG group key
-    * rather than a (start, end) struct — cheaper hashing/compare in the
-    * keyed fill, identical rows out. */
+    * epoch-aligned windows) grouped by a LONG key rather than a
+    * (start, end) struct — cheaper hashing/compare in the aggregate
+    * hot path, identical rows out. */
   def windowedHistogram(df: DataFrame, tsCol: String, x: Column, ax: BinAxis,
       windowDuration: String, watermark: String = "10 seconds",
       slideDuration: Option[String] = None): DataFrame = {
@@ -63,13 +62,16 @@ object StreamingHist {
       val us = unix_micros(col(tsCol))
       // window() drops null timestamps (TimeWindowing inserts an
       // IsNotNull filter); mirror that so batch == streaming rows
-      val windowed = df.filter(col(tsCol).isNotNull)
-        .select((us - pmod(us, lit(slideUs))).as("__w0"), x.as("__x"))
+      df.filter(col(tsCol).isNotNull &&
+          ax.keepPred(x, includeUnder = false, includeOver = false))
+        .select((us - pmod(us, lit(slideUs))).as("__w0"), ax.index(x).as("__i0"))
         .withColumn("__wi", explode(sequence(lit(0L), lit(nW - 1))))
-        .select((col("__w0") - col("__wi") * lit(slideUs)).as("__ws"), col("__x"))
-      // in-range counts per (window, bin): the histogram kernel, the
-      // window start its group key
-      Histogram.binCounts(windowed, Seq(col("__x") -> ax), Seq("__ws"), HistOptions())
+        .select((col("__w0") - col("__wi") * lit(slideUs)).as("__ws"), col("__i0"))
+        // a hash aggregate, not the keyed histogram kernel: on 4M pinned
+        // rows (4 cpus) the kernel took 15-40% longer at 720 hourly
+        // windows x 100 bins and at 1e5 sliding windows x 10 bins
+        .groupBy(col("__ws"), col("__i0"))
+        .agg(count(lit(1)).cast("double").as("cnt"))
         .select(timestamp_micros(col("__ws")).as("window_start"),
           timestamp_micros(col("__ws") + lit(durUs)).as("window_end"),
           ax.label(col("__i0")).as(ax.binsCol), col("cnt"))

@@ -283,20 +283,13 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
-  test("batch windowed histogram and z-order cells: one kernel exec, no aggregate for the count") {
+  test("z-order cells: one kernel exec, no aggregate for the count") {
     import graft.operators.DenseHistogramExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    val ev = (0L until 60L).map(i => (new java.sql.Timestamp(i * 60000L), (i % 9).toDouble,
-      (i * 7 % 11).toDouble)).toDF("ts", "x", "y")
-    for ((name, df) <- Seq(
-        "windowedHistogram" -> graft.streaming.StreamingHist.windowedHistogram(ev, "ts",
-          col("x"), graft.axes.Regular("x", 4, 0.0, 8.0), "10 minutes", slideDuration = Some("5 minutes")),
-        "zorderQCells" -> graft.sources.Layout.zorderQCells(ev, "x", "y", 4))) {
-      val plan = Ran(df)
-      val clue = s"$name:\n$plan"
-      assert(Ran.collect(plan) { case e: DenseHistogramExec => e }.size == 1, clue)
-      assert(Ran.collect(plan) { case a: BaseAggregateExec => a }.isEmpty, clue)
-    }
+    val ev = (0L until 60L).map(i => ((i % 9).toDouble, (i * 7 % 11).toDouble)).toDF("x", "y")
+    val plan = Ran(graft.sources.Layout.zorderQCells(ev, "x", "y", 4))
+    assert(Ran.collect(plan) { case e: DenseHistogramExec => e }.size == 1, plan)
+    assert(Ran.collect(plan) { case a: BaseAggregateExec => a }.isEmpty, plan)
   }
 
   test("dims-free drift family: each unpartitioned window sits over the kernel or the join") {
