@@ -574,16 +574,15 @@ object Similarity {
         .otherwise(lit(0L))
     }.reduce(_ + _)
 
-  /** Deterministic Lloyd-trained coarse quantizer for IVF: init = the
-    * nCells lowest-vec_id embeddings (cent_id = rank), then `iters`
-    * rounds of cosine assignment (ties -> lowest cent_id, the TopKByScore
-    * order) and per-dimension DECIMAL(38,14)-exact means — every step is
+  /** Deterministic Lloyd-trained coarse quantizer for IVF: a driver
+    * [[lloyd]] over the nCells·8-vector ':ivf' hash-rank [[sample]] —
+    * init = its first nCells vectors (cent_id = rank), then `iters`
+    * rounds of cosine assignment ([[nearestCos]]: ties -> lowest
+    * cent_id, the TopKByScore order) and per-dimension
+    * DECIMAL(38,14)-exact means ([[exactMeans]]) — every step is
     * reproducible bit-for-bit in any engine, so the DuckDB oracle can
     * re-derive the same centroids. Empty cells keep their previous
-    * centroid. Per round: one broadcast-join assignment pass over the
-    * corpus + one (nCells x dim)-row aggregate collected to the driver
-    * (tiny, like QuantileBins' edge collect); at 100 TB you train on a
-    * hash-sampled subset and the rounds are the same two jobs. */
+    * centroid. The one corpus job is the bounded sample collect. */
   def kmeansCentroids(corpus: DataFrame, nCells: Int,
       iters: Int): Seq[(Long, Array[Double])] = {
     // Memoized: cluster, clusterBalancedSample and annIvf over one corpus
@@ -597,106 +596,124 @@ object Similarity {
 
   private def trainCentroids(corpus: DataFrame, nCells: Int,
       iters: Int): Seq[(Long, Array[Double])] = {
-    import java.math.{BigDecimal => JBD, BigInteger => JBI, RoundingMode}
-    // Deterministic UNBIASED training subset: the nCells*8 vectors with the
-    // smallest 60-bit salted md5 of vec_id (ties by vec_id). A hash-rank
-    // sample is a uniform draw regardless of how vec_id correlates with
-    // content (ingest time, source, shard) — a vec_id prefix is not — and
-    // it works for offset or sparse id spaces. TakeOrdered keeps it one
-    // bounded top-k job (k rows per map partition to the driver, never a
-    // full sort), so the same two-job shape holds at 100 TB. The sample is
-    // bounded (nCells * 8 * dim floats), so it is collected ONCE and Lloyd
-    // runs on the driver with every step bit-identical to the SQL the
-    // oracle executes: dots and norms fold left-to-right in double,
-    // assignment ties go to the lowest cent_id with NaN ordered largest
-    // (Double.compare = ORDER BY ccos DESC), and per-dimension means
-    // accumulate DECIMAL(38,14) unscaled integers (shortest-string image
-    // of each double, Dec.toDec) with the Dec.exactDouble split at the
-    // end. Init centroids = the first nCells in the same hash order.
-    val trainHash = conv(substring(
-      md5(concat(col("vec_id").cast("string"), lit(":ivf"))), 1, 15), 16, 10)
+    val s = sample(corpus, ":ivf", nCells * 8)
+    val norms = s.map(l2)
+    lloyd(s, nCells, iters, new graft.operators.ExactSum.Memo) { cs =>
+      val cnorms = cs.map(l2)
+      s.indices.map(vi => nearestCos(s(vi), norms(vi), cs, cnorms)).toArray
+    }.zipWithIndex.map { case (c, i) => (i.toLong, c) }.toSeq
+  }
+
+  /** The training sample of the driver quantizer trainers: the `n`
+    * vectors with the smallest 60-bit md5 of vec_id + `salt` (ties by
+    * vec_id), as doubles (float -> double is exact). A hash-rank sample is
+    * a uniform draw regardless of how vec_id correlates with content
+    * (ingest time, source, shard) — a vec_id prefix is not — and it works
+    * for offset or sparse id spaces. TakeOrdered keeps it one bounded
+    * top-k job (n rows per map partition to the driver, never a full
+    * sort), so training costs the same jobs at 100 TB. Ragged lengths fail
+    * loudly: silent truncation would mask corrupt embeddings. */
+  private def sample(corpus: DataFrame, salt: String, n: Int): Array[Array[Double]] = {
+    val h = conv(substring(
+      md5(concat(col("vec_id").cast("string"), lit(salt))), 1, 15), 16, 10)
       .cast("long")
-    val sample: Array[Array[Float]] =
-      corpus.select(col("embedding"), trainHash.as("__h"), col("vec_id"))
-        .orderBy(col("__h"), col("vec_id")).limit(nCells * 8)
-        .collect()
-        .map(_.getSeq[Float](0).toArray)
-    // corpora smaller than the requested cell count (incl. empty) simply
-    // train fewer cells — every vector becomes its own centroid
-    if (sample.isEmpty) return Seq.empty
-    def dotFD(v: Array[Float], c: Array[Double]): Double = {
-      // fail loudly on mismatched lengths, like VecDot/VecDotFD — silent
-      // truncation would mask corrupt embeddings during training and then
-      // crash anyway in the assignCells pass
-      require(v.length == c.length,
-        s"kmeans: embedding length mismatch (${v.length} vs ${c.length})")
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i).toDouble * c(i); i += 1 }
-      s
+    val s = corpus.select(col("embedding"), h.as("__h"), col("vec_id"))
+      .orderBy(col("__h"), col("vec_id")).limit(n)
+      .collect()
+      .map(_.getSeq[Float](0).iterator.map(_.toDouble).toArray)
+    require(s.forall(_.length == s.head.length),
+      s"ragged embedding lengths in the training sample (dim ${s.head.length})")
+    s
+  }
+
+  /** Driver Lloyd, every step bit-identical to the SQL the oracle runs:
+    * init = the first `k` sample vectors (a sample smaller than `k`, incl.
+    * empty, trains fewer centroids), then `iters` rounds of `assign` (each
+    * vector's centroid index for the current centroids) and the
+    * [[exactMeans]] update. */
+  private def lloyd(vs: Array[Array[Double]], k: Int, iters: Int,
+      memo: graft.operators.ExactSum.Memo)(
+      assign: Array[Array[Double]] => Array[Int]): Array[Array[Double]] = {
+    var cents = vs.take(k)
+    for (_ <- 1 to iters) cents = exactMeans(vs, assign(cents), cents, memo)
+    cents
+  }
+
+  /** Each centroid's per-dimension mean over the vectors assigned to it,
+    * as the oracle's COALESCE(SUM(TRY_CAST(x AS DECIMAL(38,14))) /
+    * COUNT(*), previous): [[graft.operators.ExactSum]] skips an element
+    * with no DECIMAL(38,14) image (NaN, ±Inf, past precision 38) while
+    * the COUNT(*) denominator still counts every member, the exact sum
+    * converts through [[graft.util.Dec.exactDouble]], and a centroid with
+    * no member or a dimension with no image keeps its previous value. */
+  private[graft] def exactMeans(vs: Array[Array[Double]], assign: Array[Int],
+      cents: Array[Array[Double]],
+      memo: graft.operators.ExactSum.Memo): Array[Array[Double]] = {
+    val dim = if (cents.isEmpty) 0 else cents.head.length
+    val sums = new graft.operators.ExactSum(cents.length * dim)
+    val n = new Array[Int](cents.length)
+    for (vi <- vs.indices) {
+      val c = assign(vi)
+      n(c) += 1
+      var i = 0
+      while (i < dim) { sums.addDouble(c * dim + i, vs(vi)(i), memo); i += 1 }
     }
-    def nrm2(v: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
-      math.sqrt(s)
-    }
-    def cnrm2(c: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < c.length) { s += c(i) * c(i); i += 1 }
-      math.sqrt(s)
-    }
-    val norms = sample.map(nrm2)
-    var cents: Array[Array[Double]] = sample.take(nCells).map(_.map(_.toDouble))
-    for (_ <- 1 to iters) {
-      val cnorms = cents.map(cnrm2)
-      val assign = sample.indices.map { vi =>
-        var best = -1; var bestScore = 0.0
-        var c = 0
-        while (c < cents.length) {
-          val ccos = dotFD(sample(vi), cents(c)) / (norms(vi) * cnorms(c))
-          if (best == -1 || java.lang.Double.compare(ccos, bestScore) > 0) {
-            best = c; bestScore = ccos
-          }
-          c += 1
-        }
-        best
-      }
-      cents = cents.zipWithIndex.map { case (old, cid) =>
-        val members = sample.indices.filter(assign(_) == cid)
-        if (members.isEmpty) old
-        else {
-          val dim = old.length
-          Array.tabulate(dim) { i =>
-            // mirror of the oracle's SUM(TRY_CAST(...)) / COUNT(*):
-            // non-finite / precision-38-overflow elements are skipped by
-            // the SUM but COUNT(*) still counts every member; a dimension
-            // with no castable element yields a NULL mean, which COALESCEs
-            // to the previous centroid value
-            var acc = JBI.ZERO
-            var valid = 0
-            members.foreach { vi =>
-              val x = sample(vi)(i).toDouble
-              if (java.lang.Double.isFinite(x)) {
-                val d = new JBD(java.lang.Double.toString(x))
-                  .setScale(14, RoundingMode.HALF_UP)
-                if (d.precision() <= 38) {
-                  acc = acc.add(d.unscaledValue())
-                  valid += 1
-                }
-              }
-            }
-            if (valid == 0) old(i)
-            else {
-              val s = new JBD(acc, 14)
-              val fl = s.setScale(0, RoundingMode.FLOOR)
-              val exact = fl.longValueExact().toDouble +
-                s.subtract(fl).movePointRight(14).longValueExact().toDouble / 1.0e14
-              exact / members.length.toDouble
-            }
-          }
-        }
+    Array.tabulate(cents.length) { c =>
+      if (n(c) == 0) cents(c)
+      else Array.tabulate(dim) { i =>
+        if (!sums.isSet(c * dim + i)) cents(c)(i)
+        else graft.util.Dec.exactDouble(sums.total(c * dim + i)) / n(c).toDouble
       }
     }
-    cents.zipWithIndex.map { case (c, i) => (i.toLong, c) }.toSeq
+  }
+
+  /** The centroid with the largest cosine to `v` (norm `nv`): dots fold
+    * left-to-right in double, ties go to the lowest index and NaN ranks
+    * greatest (Double.compare = the oracle's ORDER BY ccos DESC). */
+  private def nearestCos(v: Array[Double], nv: Double, cents: Array[Array[Double]],
+      cnorms: Array[Double]): Int = {
+    var best = -1; var bestCos = 0.0
+    var c = 0
+    while (c < cents.length) {
+      var dot = 0.0; var i = 0
+      while (i < v.length) { dot += v(i) * cents(c)(i); i += 1 }
+      val cos = dot / (nv * cnorms(c))
+      if (best == -1 || java.lang.Double.compare(cos, bestCos) > 0) {
+        best = c; bestCos = cos
+      }
+      c += 1
+    }
+    best
+  }
+
+  /** The centroid with the smallest squared L2 to `v` (j-ordered
+    * subtract, square, add): ties go to the lowest index and NaN ranks
+    * greatest (the oracle's ORDER BY d2 ASC, cent_id). */
+  private def nearestL2(v: Array[Double], cents: Array[Array[Double]]): Int = {
+    var best = -1; var bestD = 0.0
+    var c = 0
+    while (c < cents.length) {
+      var d = 0.0; var j = 0
+      while (j < v.length) { val e = v(j) - cents(c)(j); d += e * e; j += 1 }
+      if (best == -1 || java.lang.Double.compare(d, bestD) < 0) {
+        best = c; bestD = d
+      }
+      c += 1
+    }
+    best
+  }
+
+  /** Euclidean norm: the left-to-right sum of squares both engines fold. */
+  private def l2(v: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < v.length) { s += v(i) * v(i); i += 1 }
+    math.sqrt(s)
+  }
+
+  /** `x / ‖x‖₂` ([[l2]]'s correctly rounded norm), or zeros for x = 0. */
+  private def unitL2(x: Array[Double]): Array[Double] = {
+    val s = l2(x)
+    if (s > 0.0) x.map(_ / s) else Array.fill(x.length)(0.0)
   }
 
   /** Centroids as a broadcastable (cent_id, cvec, cnrm) relation; the norm
@@ -704,12 +721,7 @@ object Similarity {
   private def centroidsDf(spark: org.apache.spark.sql.SparkSession,
       cents: Seq[(Long, Array[Double])]): DataFrame = {
     import spark.implicits._
-    cents.map { case (cid, v) =>
-      var s = 0.0
-      var i = 0
-      while (i < v.length) { s += v(i) * v(i); i += 1 }
-      (cid, v.toSeq, math.sqrt(s))
-    }.toDF("cent_id", "cvec", "cnrm")
+    cents.map { case (cid, v) => (cid, v.toSeq, l2(v)) }.toDF("cent_id", "cvec", "cnrm")
   }
 
   /** Nearest `cells` centroids per vector via the bounded heap aggregate
@@ -1297,26 +1309,43 @@ object Similarity {
   /** Encode against an already-trained codebook (shared by
     * [[pqEncode]] and [[pqSearch]] so one training run serves both). */
   private def pqEncodeWith(corpus: DataFrame,
-      codebook: Seq[(Int, Long, Array[Double])], m: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val sub = codebook.head._3.length
-    val cb = codebook.map { case (ss, cid, c) => (ss, cid, c.toSeq) }
-      .toDF("__ss", "__cid", "__cvec")
-    // one scored projection per subspace (the offset is a plan constant),
-    // unioned — each branch is map-side against the broadcast codebook
-    val scored = (0 until m).map { ss =>
-      corpus.select(col("vec_id"), col("embedding"))
-        .join(broadcast(cb.filter(col("__ss") === ss)))
-        .select(col("vec_id"), col("__ss"), col("__cid"),
-          graft.functions.VecL2FD.vec_l2_fd(
-            col("embedding"), col("__cvec"), ss * sub).as("__d2"))
-    }.reduce(_ unionAll _)
-    scored.groupBy(col("vec_id"), col("__ss"))
-      .agg(min(struct(col("__d2"), col("__cid"))).as("__b"))
+      codebook: Seq[(Int, Long, Array[Double])], m: Int): DataFrame =
+    pqNearest(corpus, codebook, m)
       .select(col("vec_id"), col("__ss").cast("int").as("subspace"),
         col("__b.__cid").as("code"))
+
+  /** Each vector's nearest codeword per subspace, (vec_id, __ss, __b =
+    * min struct(__d2, __cid)): the map-combinable argmin that
+    * [[pqEncode]] emits and [[pqError]] aggregates. */
+  private def pqNearest(corpus: DataFrame,
+      codebook: Seq[(Int, Long, Array[Double])], m: Int): DataFrame =
+    subspaceD2(corpus.select(col("vec_id"), col("embedding")),
+        codebookDf(corpus.sparkSession, codebook), Nil, m,
+        codebook.head._3.length, col("vec_id"), col("__ss"), col("__cid"))
+      .groupBy(col("vec_id"), col("__ss"))
+      .agg(min(struct(col("__d2"), col("__cid"))).as("__b"))
+
+  /** A trained codebook as a (__ss, __cid, __cvec) relation. */
+  private def codebookDf(spark: org.apache.spark.sql.SparkSession,
+      codebook: Seq[(Int, Long, Array[Double])]): DataFrame = {
+    import spark.implicits._
+    codebook.map { case (ss, cid, c) => (ss, cid, c.toSeq) }
+      .toDF("__ss", "__cid", "__cvec")
   }
+
+  /** Squared L2 (the codegen'd [[graft.functions.VecL2FD]] slice fold)
+    * from each row's `embedding` slice to every codeword of that
+    * subspace: one branch per subspace (the slice offset is a plan
+    * constant) joining the BROADCAST `table` (__ss, __cvec, the `on` keys;
+    * a keyless join when `on` is empty), unioned. Emits `keep` and __d2. */
+  private def subspaceD2(rows: DataFrame, table: DataFrame, on: Seq[String],
+      m: Int, sub: Int, keep: Column*): DataFrame =
+    (0 until m).map { ss =>
+      val t = broadcast(table.filter(col("__ss") === ss))
+      (if (on.isEmpty) rows.join(t) else rows.join(t, on))
+        .select(keep :+ graft.functions.VecL2FD.vec_l2_fd(
+          col("embedding"), col("__cvec"), ss * sub).as("__d2"): _*)
+    }.reduce(_ unionAll _)
 
   /** Exact squared-L2 top-k (the Euclidean companion of
     * [[bruteForceTopK]]'s cosine): every query against every corpus
@@ -1328,21 +1357,75 @@ object Similarity {
   def bruteForceL2TopK(corpus: DataFrame, queries: DataFrame,
       k: Int): DataFrame = {
     require(k > 0, s"k must be positive: $k")
-    val q = queries.select(col("vec_id").as("query_id"),
-      transform(col("embedding"), _.cast("double")).as("__qv"))
-    val scored = corpus.select(col("vec_id"), col("embedding"))
-      .join(broadcast(q))
+    rankL2(corpus.select(col("vec_id"), col("embedding"))
+      .join(broadcast(queryVecs(queries)))
       .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
         graft.functions.VecL2FD.vec_l2_fd(
-          col("embedding"), col("__qv"), 0).as("__d2"))
+          col("embedding"), col("__qv"), 0).as("__d2")), k, "d2")
+  }
+
+  /** The query side of an exact-L2 scan: (query_id, __qv = the embedding
+    * pre-cast to double once per query row). */
+  private def queryVecs(queries: DataFrame): DataFrame =
+    queries.select(col("vec_id").as("query_id"),
+      transform(col("embedding"), _.cast("double")).as("__qv"))
+
+  /** Rank-k per query_id by (__d2 asc, neighbor_id asc): the bounded-heap
+    * TopKByScore on the NEGATED distance (max-heap ↔ min distance), the
+    * distance restored as column `out`. */
+  private def rankL2(scored: DataFrame, k: Int, out: String): DataFrame =
     scored.groupBy(col("query_id"))
       .agg(graft.functions.TopKByScore.top_k(
-        -col("__d2"), col("vec_id"), k).as("__t"))
+        -col("__d2"), col("neighbor_id"), k).as("__t"))
       .select(col("query_id"), posexplode(col("__t")).as(Seq("__p", "__x")))
       .select(col("query_id"), col("__x.id").as("neighbor_id"),
-        (-col("__x.score")).as("d2"),
+        (-col("__x.score")).as(out),
         (col("__p") + lit(1)).cast("int").as("rank"))
+
+  /** Exact-L2 re-rank of a (query_id, neighbor_id) shortlist to k — the
+    * IVFADC-R tail (Jégou et al. 2011 §V): only the shortlist rows read
+    * their RAW vectors, so the join touches |Q|·shortlist vectors, not
+    * the corpus. */
+  private def rerankL2(shortlist: DataFrame, corpus: DataFrame,
+      queries: DataFrame, k: Int, out: String): DataFrame =
+    rankL2(shortlist.select(col("query_id"), col("neighbor_id"))
+      .join(corpus.select(col("vec_id").as("neighbor_id"), col("embedding")),
+        "neighbor_id")
+      .join(broadcast(queryVecs(queries)), "query_id")
+      .select(col("query_id"), col("neighbor_id"),
+        graft.functions.VecL2FD.vec_l2_fd(
+          col("embedding"), col("__qv"), 0).as("__d2")), k, out)
+
+  /** The ADC scan of [[pqSearch]] and [[ivfPqSearch]]: the query `lut`
+    * (query_id, the `on` keys, subspace, code, __d2) folds to ONE map row
+    * per (query_id, `on`...) keyed subspace·codes + code, BROADCAST
+    * against the packed codes `enc` (vec_id, the `on` keys, __codes; a
+    * cross join when `on` is empty). The m terms fold MAP-SIDE in
+    * subspace order (the 0.0-seeded subspace-ascending IEEE sequence), so
+    * the only exchange of the search is the bounded-heap rank to k — or
+    * to the `rerank` shortlist that [[rerankL2]] re-ranks on exact L2. */
+  private def adcSearch(enc: DataFrame, lut: DataFrame, on: Seq[String],
+      corpus: DataFrame, queries: DataFrame, k: Int, m: Int, codes: Int,
+      rerank: Int): DataFrame = {
+    val lutMap = lut.groupBy(col("query_id") +: on.map(col): _*)
+      .agg(map_from_entries(collect_list(struct(
+        (col("subspace").cast("long") * lit(codes.toLong) + col("code"))
+          .as("__mk"),
+        col("__d2").as("__mv")))).as("__lm"))
+    val pairs =
+      if (on.isEmpty) enc.crossJoin(broadcast(lutMap))
+      else enc.join(broadcast(lutMap), on)
+    val adc = rankL2(pairs.filter(col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        expr(s"""aggregate(sequence(0, ${m - 1}), CAST(0.0 AS DOUBLE),
+           |(acc, ss) -> acc + coalesce(element_at(__lm,
+           |    CAST(ss AS BIGINT) * ${codes}L + element_at(__codes, ss + 1)),
+           |  CAST(raise_error('ADC: code absent from LUT — partial or stale
+           | codebook') AS DOUBLE)))"""
+          .stripMargin.replaceAll("\n", " ")).as("__d2")),
+      if (rerank > 0) rerank else k, "approx_d2")
+    if (rerank == 0) adc else rerankL2(adc, corpus, queries, k, "approx_d2")
   }
 
   /** PQ asymmetric-distance search (ADC, Jégou et al. 2011 §IV): the
@@ -1381,70 +1464,22 @@ object Similarity {
     if (codebook.isEmpty)
       return Seq.empty[(Long, Long, Double, Int)]
         .toDF("query_id", "neighbor_id", "approx_d2", "rank")
-    val sub = codebook.head._3.length
-    val cb = codebook.map { case (ss, cid, c) => (ss, cid, c.toSeq) }
-      .toDF("__ss", "__cid", "__cvec")
     // codes packed to one array row per vector (pinned — the stored-on-
     // disk artifact; map-combinable min, so the pack is one small train-
-    // time exchange) and the |Q|·m·k LUT folded to one map row per query:
-    // the ADC scan is then a broadcast nested-loop over the packed codes
-    // with the m-term fold MAP-SIDE in subspace order (the same
-    // 0.0-seeded subspace-ascending IEEE sequence as the previous
-    // sort_array fold) — no (query, vector, subspace) exchange at all,
-    // only the bounded-heap rank-k merge (guide §2.3/§2.4).
+    // time exchange) and scanned by [[adcSearch]] as a broadcast nested
+    // loop against the |Q|-row LUT maps — no (query, vector, subspace)
+    // exchange at all (guide §2.3/§2.4).
     val enc = graft.util.RelCache.persist(
       pqEncodeWith(corpus, codebook, m)
         .groupBy(col("vec_id"))
         .agg(array((0 until m).map(ss =>
           min(when(col("subspace") === ss, col("code")))): _*).as("__codes")))
-    val lut = (0 until m).map { ss =>
-      queries.select(col("vec_id").as("query_id"), col("embedding"))
-        .join(broadcast(cb.filter(col("__ss") === ss)))
-        .select(col("query_id"), col("__ss").cast("int").as("subspace"),
-          col("__cid").as("code"),
-          graft.functions.VecL2FD.vec_l2_fd(
-            col("embedding"), col("__cvec"), ss * sub).as("__d2"))
-    }.reduce(_ unionAll _)
-    val lutMap = lut.groupBy(col("query_id"))
-      .agg(map_from_entries(collect_list(struct(
-        (col("subspace").cast("long") * lit(codes.toLong) + col("code"))
-          .as("__mk"),
-        col("__d2").as("__mv")))).as("__lm"))
-    val summed = enc.crossJoin(broadcast(lutMap))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        expr(s"""aggregate(sequence(0, ${m - 1}), CAST(0.0 AS DOUBLE),
-           |(acc, ss) -> acc + coalesce(element_at(__lm,
-           |    CAST(ss AS BIGINT) * ${codes}L + element_at(__codes, ss + 1)),
-           |  CAST(raise_error('ADC: code absent from LUT — partial or stale
-           | codebook') AS DOUBLE)))"""
-          .stripMargin.replaceAll("\n", " ")).as("__ad2"))
-    val adc = summed.groupBy(col("query_id"))
-      .agg(graft.functions.TopKByScore.top_k(
-        -col("__ad2"), col("vec_id"), if (rerank > 0) rerank else k).as("__t"))
-      .select(col("query_id"), posexplode(col("__t")).as(Seq("__p", "__x")))
-      .select(col("query_id"), col("__x.id").as("neighbor_id"),
-        (-col("__x.score")).as("approx_d2"),
-        (col("__p") + lit(1)).cast("int").as("rank"))
-    if (rerank == 0) adc
-    else {
-      val qv = queries.select(col("vec_id").as("query_id"),
-        transform(col("embedding"), _.cast("double")).as("__qv"))
-      adc.select(col("query_id"), col("neighbor_id"))
-        .join(corpus.select(col("vec_id").as("neighbor_id"), col("embedding")),
-          "neighbor_id")
-        .join(broadcast(qv), "query_id")
-        .select(col("query_id"), col("neighbor_id"),
-          graft.functions.VecL2FD.vec_l2_fd(
-            col("embedding"), col("__qv"), 0).as("__d2"))
-        .groupBy(col("query_id"))
-        .agg(graft.functions.TopKByScore.top_k(
-          -col("__d2"), col("neighbor_id"), k).as("__t"))
-        .select(col("query_id"), posexplode(col("__t")).as(Seq("__p", "__x")))
-        .select(col("query_id"), col("__x.id").as("neighbor_id"),
-          (-col("__x.score")).as("approx_d2"),
-          (col("__p") + lit(1)).cast("int").as("rank"))
-    }
+    val lut = subspaceD2(
+      queries.select(col("vec_id").as("query_id"), col("embedding")),
+      codebookDf(spark, codebook), Nil, m, codebook.head._3.length,
+      col("query_id"), col("__ss").cast("int").as("subspace"),
+      col("__cid").as("code"))
+    adcSearch(enc, lut, Nil, corpus, queries, k, m, codes, rerank)
   }
 
   /** PQ reconstruction-error report: per subspace, the vector count,
@@ -1464,18 +1499,7 @@ object Similarity {
     if (codebook.isEmpty)
       return Seq.empty[(Int, Long, Double, Double)]
         .toDF("subspace", "n", "mean_d2", "max_d2")
-    val sub = codebook.head._3.length
-    val cb = codebook.map { case (ss, cid, c) => (ss, cid, c.toSeq) }
-      .toDF("__ss", "__cid", "__cvec")
-    val scored = (0 until m).map { ss =>
-      corpus.select(col("vec_id"), col("embedding"))
-        .join(broadcast(cb.filter(col("__ss") === ss)))
-        .select(col("vec_id"), col("__ss"), col("__cid"),
-          graft.functions.VecL2FD.vec_l2_fd(
-            col("embedding"), col("__cvec"), ss * sub).as("__d2"))
-    }.reduce(_ unionAll _)
-    scored.groupBy(col("vec_id"), col("__ss"))
-      .agg(min(struct(col("__d2"), col("__cid"))).as("__b"))
+    pqNearest(corpus, codebook, m)
       .groupBy(col("__ss"))
       .agg(count(lit(1)).as("n"),
         (sum(floor(col("__b.__d2") * lit(1.0e9)).cast("decimal(38,0)"))
@@ -1554,74 +1578,23 @@ object Similarity {
     // re-grouped |probed|·m struct rows per query through a shuffle —
     // ~200 MB at the 200k gate — just to re-join m rows it had already
     // had side by side).
-    val enc = graft.util.RelCache.persist((0 until m).map { ss =>
-      asg.join(broadcast(combined.filter(col("__ss") === ss)), "cell")
-        .select(col("vec_id"), col("cell"), col("__ss"), col("__code"),
-          graft.functions.VecL2FD.vec_l2_fd(
-            col("embedding"), col("__cvec"), ss * sub).as("__d2"))
-    }.reduce(_ unionAll _)
+    val enc = graft.util.RelCache.persist(subspaceD2(asg, combined,
+        Seq("cell"), m, sub, col("vec_id"), col("cell"), col("__ss"),
+        col("__code"))
       .groupBy(col("vec_id"), col("cell"), col("__ss"))
       .agg(min(struct(col("__d2"), col("__code"))).as("__b"))
       .groupBy(col("vec_id"), col("cell"))
       .agg(array((0 until m).map(ss =>
         min(when(col("__ss") === ss, col("__b.__code")))): _*).as("__codes")))
     // query LUT: exact d2 from the query subvector to every combined
-    // target in its nprobe probed cells — folded to ONE map row per
-    // (query, probed cell), keyed subspace·codes + code, and broadcast
+    // target in its nprobe probed cells; in the ADC scan only packed rows
+    // in probed cells join a LUT map — the scan IS the pruning
     val qasg = assignCells(queries, cent, nprobe)
       .select(col("vec_id").as("query_id"), col("embedding"), col("cell"))
-    val lut = (0 until m).map { ss =>
-      qasg.join(broadcast(combined.filter(col("__ss") === ss)), "cell")
-        .select(col("query_id"), col("cell"),
-          col("__ss").as("subspace"), col("__code").as("code"),
-          graft.functions.VecL2FD.vec_l2_fd(
-            col("embedding"), col("__cvec"), ss * sub).as("__d2"))
-    }.reduce(_ unionAll _)
-    val lutMap = lut.groupBy(col("query_id"), col("cell"))
-      .agg(map_from_entries(collect_list(struct(
-        (col("subspace").cast("long") * lit(codes.toLong) + col("code"))
-          .as("__mk"),
-        col("__d2").as("__mv")))).as("__lm"))
-    // ADC: only packed rows in probed cells join a LUT map — the scan IS
-    // the pruning; the m per-subspace terms fold MAP-SIDE in subspace
-    // order (same 0.0-seeded subspace-ascending IEEE sequence as the
-    // previous sort_array fold, term for term), so the only exchange
-    // left in the search path is the bounded-heap rank-k merge
-    val summed = enc.join(broadcast(lutMap), "cell")
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        expr(s"""aggregate(sequence(0, ${m - 1}), CAST(0.0 AS DOUBLE),
-           |(acc, ss) -> acc + coalesce(element_at(__lm,
-           |    CAST(ss AS BIGINT) * ${codes}L + element_at(__codes, ss + 1)),
-           |  CAST(raise_error('ADC: code absent from LUT — partial or stale
-           | codebook') AS DOUBLE)))"""
-          .stripMargin.replaceAll("\n", " ")).as("__ad2"))
-    val adc = summed.groupBy(col("query_id"))
-      .agg(graft.functions.TopKByScore.top_k(
-        -col("__ad2"), col("vec_id"), if (rerank > 0) rerank else k).as("__t"))
-      .select(col("query_id"), posexplode(col("__t")).as(Seq("__p", "__x")))
-      .select(col("query_id"), col("__x.id").as("neighbor_id"),
-        (-col("__x.score")).as("approx_d2"),
-        (col("__p") + lit(1)).cast("int").as("rank"))
-    if (rerank == 0) adc
-    else {
-      val qv = queries.select(col("vec_id").as("query_id"),
-        transform(col("embedding"), _.cast("double")).as("__qv"))
-      adc.select(col("query_id"), col("neighbor_id"))
-        .join(corpus.select(col("vec_id").as("neighbor_id"), col("embedding")),
-          "neighbor_id")
-        .join(broadcast(qv), "query_id")
-        .select(col("query_id"), col("neighbor_id"),
-          graft.functions.VecL2FD.vec_l2_fd(
-            col("embedding"), col("__qv"), 0).as("__d2"))
-        .groupBy(col("query_id"))
-        .agg(graft.functions.TopKByScore.top_k(
-          -col("__d2"), col("neighbor_id"), k).as("__t"))
-        .select(col("query_id"), posexplode(col("__t")).as(Seq("__p", "__x")))
-        .select(col("query_id"), col("__x.id").as("neighbor_id"),
-          (-col("__x.score")).as("approx_d2"),
-          (col("__p") + lit(1)).cast("int").as("rank"))
-    }
+    val lut = subspaceD2(qasg, combined, Seq("cell"), m, sub,
+      col("query_id"), col("cell"), col("__ss").as("subspace"),
+      col("__code").as("code"))
+    adcSearch(enc, lut, Seq("cell"), corpus, queries, k, m, codes, rerank)
   }
 
   /** Truncated-dimension search with full-dimension rerank — the
@@ -1644,23 +1617,8 @@ object Similarity {
     require(rerank >= k, s"rerank shortlist must be >= k: $rerank < $k")
     def trunc(df: DataFrame): DataFrame = df.select(col("vec_id"),
       expr(s"slice(embedding, 1, $dPrefix)").as("embedding"))
-    val shortlist = bruteForceL2TopK(trunc(corpus), trunc(queries), rerank)
-    val qv = queries.select(col("vec_id").as("query_id"),
-      transform(col("embedding"), _.cast("double")).as("__qv"))
-    shortlist.select(col("query_id"), col("neighbor_id"))
-      .join(corpus.select(col("vec_id").as("neighbor_id"), col("embedding")),
-        "neighbor_id")
-      .join(broadcast(qv), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        graft.functions.VecL2FD.vec_l2_fd(
-          col("embedding"), col("__qv"), 0).as("__d2"))
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopKByScore.top_k(
-        -col("__d2"), col("neighbor_id"), k).as("__t"))
-      .select(col("query_id"), posexplode(col("__t")).as(Seq("__p", "__x")))
-      .select(col("query_id"), col("__x.id").as("neighbor_id"),
-        (-col("__x.score")).as("d2"),
-        (col("__p") + lit(1)).cast("int").as("rank"))
+    rerankL2(bruteForceL2TopK(trunc(corpus), trunc(queries), rerank),
+      corpus, queries, k, "d2")
   }
 
   /** Residual PQ codebook for [[ivfPqSearch]]: the [[pqCodebook]] Lloyd
@@ -1682,108 +1640,34 @@ object Similarity {
   private def trainResidualPqCodebook(corpus: DataFrame,
       cents: Seq[(Long, Array[Double])], m: Int,
       k: Int): Seq[(Int, Long, Array[Double])] = {
-    val trainHash = conv(substring(
-      md5(concat(col("vec_id").cast("string"), lit(":ivfpq"))), 1, 15), 16, 10)
-      .cast("long")
-    val sample: Array[Array[Float]] =
-      corpus.select(col("embedding"), trainHash.as("__h"), col("vec_id"))
-        .orderBy(col("__h"), col("vec_id")).limit(k * 8)
-        .collect()
-        .map(_.getSeq[Float](0).toArray)
+    val s = sample(corpus, ":ivfpq", k * 8)
+    if (s.isEmpty) return Seq.empty
+    val dim = s.head.length
+    require(cents.forall(_._2.length == dim),
+      "centroid/embedding dimension mismatch")
+    val cs = cents.sortBy(_._1).map(_._2).toArray
+    val cnorms = cs.map(l2)
+    trainPqLloydD(s.map { v =>
+      val c = cs(nearestCos(v, l2(v), cs, cnorms))
+      Array.tabulate(dim)(j => v(j) - c(j))
+    }, m, k, 2)
+  }
+
+  /** Per-subspace [[lloyd]] with the L2 argmin ([[nearestL2]]: ties to
+    * the lowest code, NaN greatest) on one shared double sample: the
+    * [[pqCodebook]] trainer on raw vectors, the [[residualPqCodebook]]
+    * one on coarse residuals. */
+  private def trainPqLloydD(sample: Array[Array[Double]], m: Int, k: Int,
+      iters: Int): Seq[(Int, Long, Array[Double])] = {
     if (sample.isEmpty) return Seq.empty
     val dim = sample.head.length
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
-    require(cents.forall(_._2.length == dim),
-      "centroid/embedding dimension mismatch")
-    def nrmF(v: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
-      math.sqrt(s)
-    }
-    def nrmD(v: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i) * v(i); i += 1 }
-      math.sqrt(s)
-    }
-    def dotFD(v: Array[Float], c: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i).toDouble * c(i); i += 1 }
-      s
-    }
-    val sorted = cents.sortBy(_._1)
-    val residuals: Array[Array[Double]] = sample.map { v =>
-      val nv = nrmF(v)
-      var bestCos = Double.NegativeInfinity
-      var best: Array[Double] = sorted.head._2
-      sorted.foreach { case (_, c) =>
-        val cos = dotFD(v, c) / (nv * nrmD(c))
-        if (java.lang.Double.compare(cos, bestCos) > 0) {
-          bestCos = cos; best = c
-        }
-      }
-      Array.tabulate(dim)(j => v(j).toDouble - best(j))
-    }
-    trainPqLloydD(residuals, m, k)
-  }
-
-  /** Per-subspace driver Lloyd over double vectors (the
-    * [[trainPqCodebook]] arithmetic generalized to a residual sample):
-    * decimal-exact per-dim means, ties to the lowest code, empty codes
-    * keep their codeword, 2 refinement iterations. */
-  private def trainPqLloydD(sample: Array[Array[Double]], m: Int,
-      k: Int): Seq[(Int, Long, Array[Double])] = {
-    import java.math.{BigDecimal => JBD, BigInteger => JBI, RoundingMode}
-    val dim = sample.head.length
     val sub = dim / m
-    def d2(v: Array[Double], lo: Int, c: Array[Double]): Double = {
-      var s = 0.0; var j = 0
-      while (j < sub) { val d = v(lo + j) - c(j); s += d * d; j += 1 }
-      s
-    }
+    val memo = new graft.operators.ExactSum.Memo
     (0 until m).flatMap { ss =>
-      val lo = ss * sub
-      var cs: Array[Array[Double]] = sample.take(k).map(_.slice(lo, lo + sub))
-      for (_ <- 1 to 2) {
-        val assign = sample.indices.map { vi =>
-          var best = -1; var bestD = 0.0
-          var c = 0
-          while (c < cs.length) {
-            val d = d2(sample(vi), lo, cs(c))
-            if (best == -1 || java.lang.Double.compare(d, bestD) < 0) {
-              best = c; bestD = d
-            }
-            c += 1
-          }
-          best
-        }
-        cs = cs.zipWithIndex.map { case (old, cid) =>
-          val members = sample.indices.filter(assign(_) == cid)
-          if (members.isEmpty) old
-          else Array.tabulate(sub) { j =>
-            var acc = JBI.ZERO
-            var valid = 0
-            members.foreach { vi =>
-              val x = sample(vi)(lo + j)
-              if (java.lang.Double.isFinite(x)) {
-                val d = new JBD(java.lang.Double.toString(x))
-                  .setScale(14, RoundingMode.HALF_UP)
-                if (d.precision() <= 38) {
-                  acc = acc.add(d.unscaledValue()); valid += 1
-                }
-              }
-            }
-            if (valid == 0) old(j)
-            else {
-              val s = new JBD(acc, 14)
-              val fl = s.setScale(0, RoundingMode.FLOOR)
-              val exact = fl.longValueExact().toDouble +
-                s.subtract(fl).movePointRight(14).longValueExact().toDouble / 1.0e14
-              exact / members.length.toDouble
-            }
-          }
-        }
-      }
-      cs.zipWithIndex.map { case (c, cid) => (ss, cid.toLong, c) }
+      val part = sample.map(_.slice(ss * sub, ss * sub + sub))
+      lloyd(part, k, iters, memo)(cs => part.map(nearestL2(_, cs)))
+        .zipWithIndex.map { case (c, cid) => (ss, cid.toLong, c) }
     }
   }
 
@@ -1792,92 +1676,15 @@ object Similarity {
     * operator surface. */
   private[graft] def pqCodebook(corpus: DataFrame, m: Int, k: Int,
       iters: Int): Seq[(Int, Long, Array[Double])] = {
+    require(m > 0 && k > 1, s"bad PQ shape: m=$m k=$k")
     // memoized like kmeansCentroids: encode, search and the error
     // report over one corpus share ONE training run
-    pqMemo("pq", corpus)(m, k, iters)(trainPqCodebook(corpus, m, k, iters))
+    pqMemo("pq", corpus)(m, k, iters)(
+      trainPqLloydD(sample(corpus, ":pq", k * 8), m, k, iters))
   }
 
   // codebooks are tiny (m x k x sub doubles)
   private val pqMemo = new graft.util.RelCache.Store[Seq[(Int, Long, Array[Double])]](16)
-
-  private def trainPqCodebook(corpus: DataFrame, m: Int, k: Int,
-      iters: Int): Seq[(Int, Long, Array[Double])] = {
-    import java.math.{BigDecimal => JBD, BigInteger => JBI, RoundingMode}
-    require(m > 0 && k > 1, s"bad PQ shape: m=$m k=$k")
-    val trainHash = conv(substring(
-      md5(concat(col("vec_id").cast("string"), lit(":pq"))), 1, 15), 16, 10)
-      .cast("long")
-    val sample: Array[Array[Float]] =
-      corpus.select(col("embedding"), trainHash.as("__h"), col("vec_id"))
-        .orderBy(col("__h"), col("vec_id")).limit(k * 8)
-        .collect()
-        .map(_.getSeq[Float](0).toArray)
-    if (sample.isEmpty) return Seq.empty
-    val dim = sample.head.length
-    require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
-    require(sample.forall(_.length == dim),
-      s"pq: ragged embedding lengths in the training sample (dim $dim)")
-    val sub = dim / m
-    def d2(v: Array[Float], lo: Int, c: Array[Double]): Double = {
-      var s = 0.0; var j = 0
-      while (j < sub) {
-        val d = v(lo + j).toDouble - c(j); s += d * d; j += 1
-      }
-      s
-    }
-    // per-subspace independent Lloyd on the shared sample
-    val codebook: Seq[(Int, Long, Array[Double])] = (0 until m).flatMap { ss =>
-      val lo = ss * sub
-      var cents: Array[Array[Double]] =
-        sample.take(k).map(_.slice(lo, lo + sub).map(_.toDouble))
-      for (_ <- 1 to iters) {
-        val assign = sample.indices.map { vi =>
-          var best = -1; var bestD = 0.0
-          var c = 0
-          while (c < cents.length) {
-            val d = d2(sample(vi), lo, cents(c))
-            if (best == -1 || java.lang.Double.compare(d, bestD) < 0) {
-              best = c; bestD = d
-            }
-            c += 1
-          }
-          best
-        }
-        cents = cents.zipWithIndex.map { case (old, cid) =>
-          val members = sample.indices.filter(assign(_) == cid)
-          if (members.isEmpty) old
-          else Array.tabulate(sub) { j =>
-            // the kmeansCentroids decimal-mean mirror (oracle: SUM(
-            // TRY_CAST(...DECIMAL(38,14))) / COUNT(*)): skipped
-            // non-castable elements, COUNT(*) denominator, NULL mean
-            // COALESCEs to the previous codeword value
-            var acc = JBI.ZERO
-            var valid = 0
-            members.foreach { vi =>
-              val x = sample(vi)(lo + j).toDouble
-              if (java.lang.Double.isFinite(x)) {
-                val d = new JBD(java.lang.Double.toString(x))
-                  .setScale(14, RoundingMode.HALF_UP)
-                if (d.precision() <= 38) {
-                  acc = acc.add(d.unscaledValue()); valid += 1
-                }
-              }
-            }
-            if (valid == 0) old(j)
-            else {
-              val s = new JBD(acc, 14)
-              val fl = s.setScale(0, RoundingMode.FLOOR)
-              val exact = fl.longValueExact().toDouble +
-                s.subtract(fl).movePointRight(14).longValueExact().toDouble / 1.0e14
-              exact / members.length.toDouble
-            }
-          }
-        }
-      }
-      cents.zipWithIndex.map { case (c, cid) => (ss, cid.toLong, c) }
-    }
-    codebook
-  }
 
   /** Exact d×d covariance of the embedding coordinates — the input
     * every whitening / PCA step of a SemDeDup-style pipeline needs
@@ -1992,76 +1799,29 @@ object Similarity {
     * driver-bounded pure arithmetic — the kmeans-Lloyd precedent. The
     * result is d rows. */
   def pcaPower(emb: DataFrame, iters: Int = 12): DataFrame = {
-    require(iters >= 1, s"iters must be positive: $iters")
     val spark = emb.sparkSession
     import spark.implicits._
+    pcaComponents(emb, iters, 1).flatMap { case (x, l, share) =>
+      x.indices.map(i => (i, x(i), l, share))
+    }.toDF("dim", "loading", "eigenvalue", "explained_share")
+  }
+
+  /** The eigen step of [[pcaPower]] (`n` = 1) and [[pcaDeflate]] (`n` =
+    * 2): the d×d covariance loaded once, the first component by the
+    * quantized power iteration, the second by the same iteration on the
+    * matrix deflated by the first. Each comes with its eigenvalue and
+    * explained share λ/tr(C) (None when tr(C) ≤ 0); no vector, no
+    * component. */
+  private def pcaComponents(emb: DataFrame, iters: Int,
+      n: Int): Seq[(Array[Double], Double, Option[Double])] = {
+    require(iters >= 1, s"iters must be positive: $iters")
     // the moments come from the dense-buffer aggregate (bit-identical
     // to the declarative covariance, 16x faster at 1M vectors — the
     // q286 measurement); the declarative path stays the gated q246
     val covRows = probeDim(emb)
       .map(d0 => embedCovarianceAgg(emb, d0).collect())
       .getOrElse(Array.empty)
-    if (covRows.isEmpty)
-      return Seq.empty[(Int, Double, Double, Option[Double])]
-        .toDF("dim", "loading", "eigenvalue", "explained_share")
-    val d = covRows.iterator.map(_.getInt(1)).max + 1
-    val a = Array.ofDim[Double](d, d)
-    covRows.foreach { r =>
-      val (i, j, c) = (r.getInt(0), r.getInt(1), r.getDouble(3))
-      a(i)(j) = c; a(j)(i) = c
-    }
-    var x = Array.fill(d)(1.0)
-    var m = 0.0
-    for (_ <- 1 to iters) {
-      val y = Array.tabulate(d) { i =>
-        var s = 0.0; var j = 0
-        while (j < d) { s += a(i)(j) * x(j); j += 1 }
-        s
-      }
-      m = y.iterator.map(math.abs).max
-      x = if (m > 0.0) y.map(v => math.floor(v / m * 1.0e6) / 1.0e6)
-          else Array.fill(d)(0.0)
-    }
-    var trace = 0.0
-    var i = 0
-    while (i < d) { trace += a(i)(i); i += 1 }
-    val share: Option[Double] = if (trace > 0.0) Some(m / trace) else None
-    (0 until d).map(i => (i, x(i), m, share))
-      .toDF("dim", "loading", "eigenvalue", "explained_share")
-  }
-
-  /** TOP-TWO principal components by power iteration + DEFLATION —
-    * [[pcaPower]] continued one rank down (the 2-D shadow most
-    * embedding-cloud visualizations and stratified-dedup grids want):
-    * extract x₁ as in pcaPower, L2-normalize it (u = x₁/‖x₁‖₂ — sqrt
-    * is correctly rounded IEEE, so u is deterministic), deflate
-    * C' = C − λ₁·u·uᵀ, and run the same `iters` quantized rounds on
-    * C'. Emits (component ∈ {0,1}, dim, loading, eigenvalue,
-    * explained_share).
-    *
-    * Cross-engine bit-exactness: everything [[pcaPower]] pins, plus —
-    * ‖x₁‖₂² folds in dim order, each deflated entry is
-    * cov − (λ·uᵢ)·uⱼ in that exact association, and the second
-    * iteration quantizes every round like the first. Degenerate
-    * inputs (λ₁ = 0) deflate by nothing and legitimately re-find the
-    * zero vector. Scale shape: [[pcaPower]]'s — one never-shuffled
-    * covariance pass, d×d driver-bounded eigen math. */
-  /** First non-NULL embedding's length — one limit(1) probe job. */
-  private def probeDim(emb: DataFrame): Option[Int] =
-    emb.filter(col("embedding").isNotNull)
-      .select(size(col("embedding")).as("__d")).limit(1).collect()
-      .headOption.map(_.getInt(0))
-
-  def pcaDeflate(emb: DataFrame, iters: Int = 12): DataFrame = {
-    require(iters >= 1, s"iters must be positive: $iters")
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val covRows = probeDim(emb)
-      .map(d0 => embedCovarianceAgg(emb, d0).collect())
-      .getOrElse(Array.empty)
-    if (covRows.isEmpty)
-      return Seq.empty[(Int, Int, Double, Double, Option[Double])]
-        .toDF("component", "dim", "loading", "eigenvalue", "explained_share")
+    if (covRows.isEmpty) return Seq.empty
     val d = covRows.iterator.map(_.getInt(1)).max + 1
     val a = Array.ofDim[Double](d, d)
     covRows.foreach { r =>
@@ -2084,22 +1844,43 @@ object Similarity {
       (x, lam)
     }
     val (x1, l1) = power(a)
-    var s2 = 0.0
-    var j = 0
-    while (j < d) { s2 += x1(j) * x1(j); j += 1 }
-    val s = math.sqrt(s2)
-    val u = if (s > 0.0) x1.map(_ / s) else Array.fill(d)(0.0)
-    val a2 = Array.tabulate(d, d)((i, k) => a(i)(k) - (l1 * u(i)) * u(k))
-    val (x2, l2) = power(a2)
-    var trace = 0.0
-    var i = 0
-    while (i < d) { trace += a(i)(i); i += 1 }
-    def share(l: Double): Option[Double] =
-      if (trace > 0.0) Some(l / trace) else None
-    ((0 until d).map(i => (0, i, x1(i), l1, share(l1))) ++
-      (0 until d).map(i => (1, i, x2(i), l2, share(l2))))
-      .toDF("component", "dim", "loading", "eigenvalue", "explained_share")
+    val comps = if (n == 1) Seq((x1, l1)) else {
+      val u = unitL2(x1)
+      Seq((x1, l1), power(Array.tabulate(d, d)((i, k) => a(i)(k) - (l1 * u(i)) * u(k))))
+    }
+    val trace = (0 until d).foldLeft(0.0)((t, i) => t + a(i)(i))
+    comps.map { case (x, l) => (x, l, if (trace > 0.0) Some(l / trace) else None) }
   }
+
+  /** TOP-TWO principal components by power iteration + DEFLATION —
+    * [[pcaPower]] continued one rank down (the 2-D shadow most
+    * embedding-cloud visualizations and stratified-dedup grids want):
+    * extract x₁ as in pcaPower, L2-normalize it (u = x₁/‖x₁‖₂ — sqrt
+    * is correctly rounded IEEE, so u is deterministic), deflate
+    * C' = C − λ₁·u·uᵀ, and run the same `iters` quantized rounds on
+    * C'. Emits (component ∈ {0,1}, dim, loading, eigenvalue,
+    * explained_share).
+    *
+    * Cross-engine bit-exactness: everything [[pcaPower]] pins, plus —
+    * ‖x₁‖₂² folds in dim order, each deflated entry is
+    * cov − (λ·uᵢ)·uⱼ in that exact association, and the second
+    * iteration quantizes every round like the first. Degenerate
+    * inputs (λ₁ = 0) deflate by nothing and legitimately re-find the
+    * zero vector. Scale shape: [[pcaPower]]'s — one never-shuffled
+    * covariance pass, d×d driver-bounded eigen math. */
+  def pcaDeflate(emb: DataFrame, iters: Int = 12): DataFrame = {
+    val spark = emb.sparkSession
+    import spark.implicits._
+    pcaComponents(emb, iters, 2).zipWithIndex.flatMap { case ((x, l, share), c) =>
+      x.indices.map(i => (c, i, x(i), l, share))
+    }.toDF("component", "dim", "loading", "eigenvalue", "explained_share")
+  }
+
+  /** First non-NULL embedding's length — one limit(1) probe job. */
+  private def probeDim(emb: DataFrame): Option[Int] =
+    emb.filter(col("embedding").isNotNull)
+      .select(size(col("embedding")).as("__d")).limit(1).collect()
+      .headOption.map(_.getInt(0))
 
   /** "All-but-the-top" embedding postprocess (Mu & Viswanath 2018,
     * arXiv:1702.01417): remove each vector's projection onto the TOP
@@ -2118,16 +1899,11 @@ object Similarity {
   def removeTopComponent(emb: DataFrame, iters: Int = 12): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val comp = pcaPower(emb, iters).collect()
+    val comp = pcaComponents(emb, iters, 1)
     if (comp.isEmpty)
       return Seq.empty[(Long, Int, Double, Double)]
         .toDF("vec_id", "i", "projection", "x")
-    val x1 = comp.sortBy(_.getInt(0)).map(_.getDouble(1))
-    var s2 = 0.0
-    var j = 0
-    while (j < x1.length) { s2 += x1(j) * x1(j); j += 1 }
-    val s = math.sqrt(s2)
-    val u = if (s > 0.0) x1.map(_ / s) else x1.map(_ => 0.0)
+    val u = unitL2(comp.head._1)
     emb.filter(col("embedding").isNotNull)
       .select(col("vec_id"),
         graft.functions.VecDotFD.vec_dot_fd(col("embedding"), lit(u))
@@ -2150,13 +1926,11 @@ object Similarity {
   def pcaProject2d(emb: DataFrame, iters: Int = 12): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val comp = pcaDeflate(emb, iters).collect()
+    val comp = pcaComponents(emb, iters, 2)
     if (comp.isEmpty)
       return Seq.empty[(Long, Double, Double)]
         .toDF("vec_id", "proj0", "proj1")
-    def loadings(c: Int): Array[Double] = comp.filter(_.getInt(0) == c)
-      .sortBy(_.getInt(1)).map(_.getDouble(2))
-    val (x0, x1) = (loadings(0), loadings(1))
+    val Seq(x0, x1) = comp.map(_._1)
     emb.filter(col("embedding").isNotNull)
       .select(col("vec_id"),
         graft.functions.VecDotFD.vec_dot_fd(col("embedding"), lit(x0)).as("proj0"),
@@ -2236,22 +2010,12 @@ object Similarity {
   def pcaWhiten(emb: DataFrame, iters: Int = 12): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val comp = pcaDeflate(emb, iters).collect()
+    val comp = pcaComponents(emb, iters, 2)
     if (comp.isEmpty)
       return Seq.empty[(Long, Int, Option[Double])]
         .toDF("vec_id", "component", "y")
-    def arm(c: Int): (Array[Double], Double) = {
-      val rows = comp.filter(_.getInt(0) == c).sortBy(_.getInt(1))
-      val x = rows.map(_.getDouble(2))
-      val lam = rows.head.getDouble(3)
-      var s2 = 0.0
-      var j = 0
-      while (j < x.length) { s2 += x(j) * x(j); j += 1 }
-      val s = math.sqrt(s2)
-      (if (s > 0.0) x.map(_ / s) else x.map(_ => 0.0), lam)
-    }
-    val cols = Seq(0, 1).map { c =>
-      val (u, lam) = arm(c)
+    val cols = comp.zipWithIndex.map { case ((x, lam, _), c) =>
+      val u = unitL2(x)
       val y =
         if (lam > 0.0)
           graft.functions.VecDotFD.vec_dot_fd(col("embedding"), lit(u)) /
@@ -2396,10 +2160,10 @@ object Similarity {
   def pcaProject(emb: DataFrame, iters: Int = 12): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val comp = pcaPower(emb, iters).collect()
+    val comp = pcaComponents(emb, iters, 1)
     if (comp.isEmpty)
       return Seq.empty[(Long, Double)].toDF("vec_id", "projection")
-    val x = comp.sortBy(_.getInt(0)).map(_.getDouble(1))
+    val x = comp.head._1
     emb.filter(col("embedding").isNotNull)
       .select(col("vec_id"),
         graft.functions.VecDotFD.vec_dot_fd(col("embedding"),

@@ -56,6 +56,14 @@ object Dec {
     floor(s).cast("long").cast("double") +
       (pmod(s, lit(1)) * lit(100000000000000L)).cast("long").cast("double") / lit(1.0e14)
 
+  /** [[exactDouble]] on the driver, for an exact sum of scale ≤ 14: the
+    * same floor + fraction split, bit-identical to the Column form. */
+  def exactDouble(s: java.math.BigDecimal): Double = {
+    val fl = s.setScale(0, java.math.RoundingMode.FLOOR)
+    fl.longValueExact().toDouble +
+      s.subtract(fl).setScale(D.scale).unscaledValue().longValueExact().toDouble / 1.0e14
+  }
+
   /** Order-independent, cross-engine-deterministic sum of a double column. */
   def sumDec(c: Column): Column = exactDouble(sum(toDec(c)))
 }

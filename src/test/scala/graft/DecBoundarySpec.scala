@@ -179,7 +179,11 @@ class DecBoundarySpec extends SparkSpec {
     fractions.zipWithIndex.foreach { case ((t, want), i) =>
       assert(formula(BigDecimal(t)) == want, t)
       assert(row.getDouble(i) == want, s"exactDouble($t) = ${row.getDouble(i)}, not $want")
+      // the driver twin (the quantizer trainers' means) runs the same sequence
+      val twin = Dec.exactDouble(new java.math.BigDecimal(t).setScale(14))
+      assert(twin == row.getDouble(i), s"driver exactDouble($t) = $twin, not ${row.getDouble(i)}")
     }
+    assert(Dec.exactDouble(v.bigDecimal) == hand, "driver exactDouble past 2^53")
     // seeded regression: `s - floor(s)` types as DECIMAL(38,12) in Spark
     // and rounds the fraction at digit 12
     val s = dec.head

@@ -3301,6 +3301,55 @@ class PipelineSpec extends SparkSpec {
     assert(out.toSeq == Seq((0, 24L, 0.0, 0.0)))
   }
 
+  test("residualPqCodebook: a ragged training sample fails with IllegalArgumentException") {
+    // the 6-float vector ranks last in the ':ivfpq' hash order, so the
+    // first sample vector has 4 floats and passes the centroid-length check
+    def rank(id: Long): Long = {
+      val h = java.security.MessageDigest.getInstance("MD5")
+        .digest(s"$id:ivfpq".getBytes("UTF-8")).map(b => f"$b%02x").mkString
+      java.lang.Long.parseLong(h.take(15), 16)
+    }
+    val ragged = (0L until 10L).maxBy(rank)
+    val d = (0L until 10L).map { i =>
+      (i, if (i == ragged) Seq.fill(6)(1.0f) else Seq(i.toFloat, 1f, 2f, 3f))
+    }.toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException] {
+      Similarity.residualPqCodebook(d, Seq(0L -> Array(1.0, 1.0, 1.0, 1.0)), 2, 2)
+    }
+    assert(e.getMessage.contains("ragged embedding lengths"), e.getMessage)
+  }
+
+  test("exactMeans: each dimension is COALESCE(Dec.sumDec(x) / COUNT(*), previous)") {
+    import graft.util.Dec
+    val (nan, inf) = (Double.NaN, Double.PositiveInfinity)
+    // centroid 0: dimension 0 sums to 0.99999999999999 (all 14 digits);
+    // dimension 1 has one element with an image beside NaN and ±Inf;
+    // dimension 2 has none (1e30f is past DECIMAL(38,14)). Centroid 1 has
+    // one member, centroid 2 none.
+    val vs = Array(
+      Array(0.5, 1.25, nan),
+      Array(0.49999999999999, nan, inf),
+      Array(0.0, inf, -inf),
+      Array(0.0, -inf, 1e30f.toDouble),
+      Array(0.1, 0.2, 0.3))
+    val assign = Array(0, 0, 0, 0, 1)
+    val old = Array(Array(7.0, 8.0, 9.0), Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0))
+    val got = Similarity.exactMeans(vs, assign, old, new graft.operators.ExactSum.Memo)
+    val sql = (for (vi <- vs.indices; i <- 0 until 3) yield (assign(vi), i, vs(vi)(i)))
+      .toDF("c", "i", "x").groupBy("c", "i")
+      .agg((Dec.sumDec(col("x")) / count(lit(1))).as("m"))
+      .collect().map(r => (r.getInt(0), r.getInt(1)) -> Option(r.get(2))).toMap
+    for (c <- old.indices; i <- 0 until 3) {
+      val want = sql.get((c, i)).flatten.fold(old(c)(i))(_.asInstanceOf[Double])
+      assert(java.lang.Double.compare(got(c)(i), want) == 0,
+        s"centroid $c dim $i: ${got(c)(i)} != $want")
+    }
+    assert(got(0)(0) == 0.99999999999999 / 4)
+    assert(got(0)(1) == 1.25 / 4)
+    assert(got(0)(2) == 9.0)
+    assert(got(2).toSeq == old(2).toSeq)
+  }
+
   test("cumBeforeCounts matches a window cumsum on every partitioning") {
     import org.apache.spark.sql.expressions.Window
     val rnd = new scala.util.Random(7)
